@@ -1,31 +1,43 @@
 package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** DataFrame-native synchronous graph algorithms (fixed-round BSP).
   *
   * Each round is one co-partitioned shuffle join + aggregation on the
-  * vertex id — the pattern that scales to 1000 executors: the edge list is
-  * deduped and persisted once, every round reuses its partitioning, and
-  * no data ever reaches the driver. Rank sums go through exact decimals so
-  * results are shuffle-order-independent (see graft.ops.OpsUtil).
+  * vertex key — the pattern that scales to 1000 executors: the edge list
+  * is materialized once, every round reuses it, and no data ever reaches
+  * the driver. Rank sums go through exact decimals so results are
+  * shuffle-order-independent (see graft.ops.OpsUtil). Semantics match
+  * graft.graph.GraphAlgs (GraphX/Pregel) round for round; GraphSpec
+  * asserts agreement on micro-graphs.
   *
-  * Iteration discipline: each round's state is LOCAL-CHECKPOINTED —
-  * materialized and its LOGICAL lineage truncated to an RDD scan.
-  * persist() alone is not enough: the physical data dedups, but every
-  * downstream action still re-ANALYZES the full k-round join tree on the
-  * driver, which dominates wall time (measured ~35 s of pure planning
-  * for a fully-cached 6-round BFS at sf0.1 — execution itself was
-  * milliseconds). Truncating the plan per round keeps analysis O(1) per
-  * round; GraphX's Pregel does the equivalent RDD materialization
-  * internally. localCheckpoint is executor-local (fine on local[*] and
-  * for driver-session lifetimes; a long-lived cluster job that must
-  * survive executor loss would use reliable checkpoint() to a
-  * fault-tolerant store instead).
+  * The loops share one skeleton:
   *
-  * Semantics match graft.graph.GraphAlgs (GraphX/Pregel) round for round;
-  * GraphSpec asserts agreement on micro-graphs.
+  *  - [[bspRounds]] drives the eager loops (the relaxation family, PPR,
+  *    k-core). Each round's state is materialized by [[matObserved]]:
+  *    LOCAL-CHECKPOINTED, so its logical lineage is truncated to an RDD
+  *    scan. persist() alone is not enough — every downstream action
+  *    still re-ANALYZES the full k-round join tree on the driver
+  *    (measured ~35 s of pure planning for a fully-cached 6-round BFS at
+  *    sf0.1; execution was milliseconds). The checkpoint job also posts
+  *    the state's row count, which picks the next round's broadcast
+  *    path, and the fixed-point flag that ends the loop early.
+  *  - [[relaxRounds]] adds the frontier join of the relaxation family
+  *    (SSSP, predecessors, multi-source SSSP, components, LPA): state
+  *    broadcast into the edge join when it is small, the shuffle join
+  *    otherwise, hub keys salted when a hub exceeds the budget
+  *    ([[SaltTargetDegConf]]). Each algorithm supplies its initial state,
+  *    its aggregation and its `__chg` update — nothing else.
+  *  - The PageRank family shares one contribution fill ([[contribPlan]])
+  *    and the global ranks one lazy rank recurrence ([[rankRounds]]),
+  *    both keyed by `src`/`id` or `(rel, src)`/`(rel, id)`.
+  *
+  * localCheckpoint is executor-local (fine on local[*] and for
+  * driver-session lifetimes); [[ReliableCheckpointConf]] switches to
+  * reliable checkpoint() for jobs that must survive executor loss.
   */
 object DFGraphAlgs {
 
@@ -42,15 +54,14 @@ object DFGraphAlgs {
 
   /** Conf key: when "true", the BSP loops build their UNTRUNCATED lazy
     * plan — [[mat]] becomes the identity (no checkpoint jobs) and the
-    * sizing `count()` actions behind the broadcast decisions are
-    * skipped (rounds take the shuffle-join path). This exists for PLAN
-    * INSPECTION (PlanSpec's bounded-window sweep — checkpointing
-    * otherwise truncates the inspectable plan to a LogicalRDD scan):
-    * loops also clamp to ≤ 2 rounds under it, because every round is
-    * the same operator shape and the un-truncated k-round tree doubles
-    * per round (state feeds the next round twice), so analyzing the
-    * full-depth plan is exponential for zero extra coverage. Never
-    * EXECUTE under this flag. */
+    * sizing actions behind the broadcast decisions are skipped (rounds
+    * take the shuffle-join path). This exists for PLAN INSPECTION
+    * (PlanSpec's bounded-window sweep — checkpointing otherwise truncates
+    * the inspectable plan to a LogicalRDD scan): loops also clamp to ≤ 2
+    * rounds under it, because every round is the same operator shape and
+    * the un-truncated k-round tree doubles per round (state feeds the
+    * next round twice), so analyzing the full-depth plan is exponential
+    * for zero extra coverage. Never EXECUTE under this flag. */
   val PlanOnlyConf = "spark.graft.bsp.planOnly"
 
   private def planOnly(df: DataFrame): Boolean =
@@ -61,55 +72,39 @@ object DFGraphAlgs {
   private def rounds(df: DataFrame, iters: Int): Int =
     if (planOnly(df)) math.min(iters, 2) else iters
 
-  /** Conf key: target bytes per partition for checkpointed BSP frames
-    * (see [[sizedCoalesce]]). 0 disables the coalesce. */
-  val MatTargetBytesConf = "spark.graft.bsp.matTargetBytes"
+  /** Target bytes per partition of checkpointed/cached frames the rounds
+    * re-scan, measured at the sf0.1/sf1 checkpoints: per-task fixed
+    * overhead (launch, codegen init, block fetch, shuffle-write setup) is
+    * ~100-200 ms in the BSP level joins, so a cached partition under a
+    * few MB is mostly overhead; above it the per-row join work dominates.
+    * 4 MB keeps a 30 MB sf0.1 edge checkpoint at 8 scan tasks (vs 64
+    * inherited from the union lineage) and a 300 MB sf1 one at ~75. */
+  private val MatTargetBytes: Long = 4L << 20
 
-  /** Default [[MatTargetBytesConf]]: measured at the sf0.1/sf1
-    * checkpoints — per-task fixed overhead (launch, codegen init, block
-    * fetch, shuffle-write setup) is ~100-200 ms in the BSP level joins,
-    * so a cached partition under a few MB is mostly overhead; above it
-    * the per-row join work dominates. 4 MB keeps a 30 MB sf0.1 edge
-    * checkpoint at 8 scan tasks (vs 64 inherited from the union lineage)
-    * and a 300 MB sf1 one at ~75 — the rule derives the count from the
-    * materialized size, so it is scale-adaptive, never a local constant. */
-  val MatTargetBytesDefault: Long = 4L << 20
-
-  /** Conf key: minimum bytes per partition under the PARALLELISM FLOOR
-    * of [[sizedCoalesce]]/[[sizedScanView]] (see below). 0 disables the
-    * floor (pure bytes/target sizing). */
-  val MatMinBytesConf = "spark.graft.bsp.matMinBytes"
-
-  /** Default [[MatMinBytesConf]]: 64 KB — a partition that small is
-    * per-task overhead even on a loaded host, so the floor never
-    * resurrects the kilobyte-block waves the byte sizing removed. */
-  val MatMinBytesDefault: Long = 64L << 10
+  /** Minimum bytes per partition under the parallelism floor of
+    * [[sizedParts]]: a 64 KB partition is per-task overhead even on a
+    * loaded host, so the floor never resurrects the kilobyte-block waves
+    * the byte sizing removed. */
+  private val MatMinBytes: Long = 64L << 10
 
   /** Partition count for `bytes` of checkpointed/cached data scanned by
-    * downstream stages: ceil(bytes / target) for throughput, FLOORED at
-    * min(cores, ceil(bytes / minBytes)) so a frame big enough to carry
-    * real per-row work still spreads across the machine. The floor fixes
-    * a measured regression of the pure bytes/target rule (r13): BSP
-    * relaxation joins BROADCAST the small state, so the whole round's
-    * compute fuses into the checkpoint's scan stage — an 11 MB sf0.1
-    * edge checkpoint coalesced to 3-5 partitions ran its rounds at
-    * 3-5-way parallelism on 32 cores (graph_betweenness terms join:
-    * 1.8 s wall for 7.6 s of task time on 5 tasks). With the floor the
-    * same frame keeps 32 × ≥64 KB partitions; a truly tiny frame
-    * (< cores × minBytes) still coalesces to a handful of tasks, and
-    * big frames are untouched (bytes/target already ≥ cores). */
+    * downstream stages: ceil(bytes / [[MatTargetBytes]]) for throughput,
+    * FLOORED at min(cores, ceil(bytes / [[MatMinBytes]])) so a frame big
+    * enough to carry real per-row work still spreads across the machine.
+    * The floor fixes a measured regression of the pure bytes/target rule
+    * (r13): BSP relaxation joins BROADCAST the small state, so the whole
+    * round's compute fuses into the checkpoint's scan stage — an 11 MB
+    * sf0.1 edge checkpoint coalesced to 3-5 partitions ran its rounds at
+    * 3-5-way parallelism on 32 cores (graph_betweenness terms join: 1.8 s
+    * wall for 7.6 s of task time on 5 tasks). With the floor the same
+    * frame keeps 32 × ≥64 KB partitions; a truly tiny frame still
+    * coalesces to a handful of tasks, and big frames are untouched. */
   private def sizedParts(s: org.apache.spark.sql.SparkSession,
       bytes: BigInt, n: Int): Int = {
-    val target = s.conf.getOption(MatTargetBytesConf).map(_.toLong)
-      .getOrElse(MatTargetBytesDefault)
-    if (target <= 0 || bytes <= 0) return n
-    val minBytes = s.conf.getOption(MatMinBytesConf).map(_.toLong)
-      .getOrElse(MatMinBytesDefault)
-    val byThroughput = (bytes + target - 1) / target
-    val floor =
-      if (minBytes <= 0) BigInt(0)
-      else BigInt(s.sparkContext.defaultParallelism)
-        .min((bytes + minBytes - 1) / minBytes)
+    if (bytes <= 0) return n
+    val byThroughput = (bytes + MatTargetBytes - 1) / MatTargetBytes
+    val floor = BigInt(s.sparkContext.defaultParallelism)
+      .min((bytes + MatMinBytes - 1) / MatMinBytes)
     byThroughput.max(floor).min(BigInt(n)).max(BigInt(1)).toInt
   }
 
@@ -121,18 +116,15 @@ object DFGraphAlgs {
     * task launches for kilobyte-sized blocks (measured: ~10 × 64 tiny
     * tasks ≈ 100 s of pure task overhead in one sf0.1 betweenness run).
     * The materialized RDD's cached size is already known to the block
-    * manager (driver metadata — no job), so coalesce to
-    * ceil(bytes / target): big frames keep their parallelism, tiny ones
-    * stop paying per-task overhead. coalesce() is NARROW (no shuffle,
-    * deterministic grouping) and aggregation results are order-
-    * independent (exact decimal sums / min-merges), so outputs are
-    * bit-identical. Reliable checkpoints (cluster durability path) are
-    * not block-manager-cached and pass through untouched. */
+    * manager (driver metadata — no job), so coalesce to [[sizedParts]]:
+    * big frames keep their parallelism, tiny ones stop paying per-task
+    * overhead. coalesce() is NARROW (no shuffle, deterministic grouping)
+    * and aggregation results are order-independent (exact decimal sums /
+    * min-merges), so outputs are bit-identical. Reliable checkpoints
+    * (cluster durability path) are not block-manager-cached and pass
+    * through untouched. */
   private def sizedCoalesce(cp: DataFrame): DataFrame = {
     val s = cp.sparkSession
-    val target = s.conf.getOption(MatTargetBytesConf).map(_.toLong)
-      .getOrElse(MatTargetBytesDefault)
-    if (target <= 0) return cp
     cp.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         val info = s.sparkContext.getRDDStorageInfo.find(_.id == lr.rdd.id)
@@ -158,19 +150,14 @@ object DFGraphAlgs {
     * index once per step): materialize the cache (one count — these
     * frames are warmed anyway), read the materialized size from the
     * InMemoryRelation stats (driver metadata), and coalesce the scan to
-    * ceil(bytes / [[MatTargetBytesConf]]) partitions. The cache itself
-    * is untouched (stats, storage, consumers elsewhere); only this
-    * view's scans launch fewer tasks. coalesce is narrow and
-    * deterministic — values identical. */
+    * [[sizedParts]] partitions. The cache itself is untouched (stats,
+    * storage, consumers elsewhere); only this view's scans launch fewer
+    * tasks. coalesce is narrow and deterministic — values identical. */
   private[graft] def sizedScanView(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val target = s.conf.getOption(MatTargetBytesConf).map(_.toLong)
-      .getOrElse(MatTargetBytesDefault)
-    if (target <= 0) return df
     df.count()
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val n = df.rdd.getNumPartitions
-    val kc = sizedParts(s, bytes, n)
+    val kc = sizedParts(df.sparkSession, bytes, n)
     if (kc < n) df.coalesce(kc) else df
   }
 
@@ -190,90 +177,90 @@ object DFGraphAlgs {
     }
   }
 
-  /** FIXED-POINT EARLY EXIT for the monotone loops (guide §2.4 — remove
-    * work): every loop below computes state_{k+1} = f(state_k) with f
-    * deterministic and independent of the round index, so
-    * state_{k+1} = state_k implies every later round is the identity and
-    * the returned frame equals the full-`iters` run EXACTLY (the oracle
-    * unrolls all rounds; a converged prefix reaches the same fixed
-    * point — bit-identical, re-proven by the full oracle battery).
-    * Mechanics: each round's update carries a `__chg` boolean (did this
-    * row's state change?), the flag rides the round checkpoint, and this
-    * probe is one bounded scan of the just-materialized blocks (limit-1
-    * short-circuit, tens of ms) that decides whether the remaining
-    * rounds — a full relaxation join + aggregation + checkpoint EACH —
-    * still need to run. Fixed-round iteration counts are sized for the
-    * worst graph the contract admits (diameter bounds); real fixtures
-    * converge earlier, and at 100 TB each saved round is a full shuffle
-    * over the edge list. Never consulted under plan-only (no actions);
-    * the PageRank family is excluded (damped ranks never reach an exact
-    * fixed point). */
-  /** [[mat]] + a FREE fixed-point flag for the early-exit loops: the
-    * round update carries a boolean `__chg` column and the checkpoint
-    * action itself collects max(__chg) via observe() — CollectMetrics
-    * is a pass-through plan node and Dataset.localCheckpoint/checkpoint
-    * run under withAction (verified against the Spark 4.1 bytecode), so
-    * the metric is posted by the materialization job the loop already
-    * pays. NO extra probe job per round (the first cut ran a
-    * filter+limit(1) job per round — measured ~0.1 s × rounds of pure
-    * overhead on loops that never converge at fixture scale). Returns
-    * (checkpointed frame WITHOUT the flag, did any row change, row
-    * count). The count rides the same free metric row (r14): the
-    * growing-state loops re-check state size each round before choosing
-    * broadcast, and `count()` on the just-checkpointed frame — cheap
-    * but still one driver-blocking job per round — is the exact number
-    * the checkpoint action already saw. −1 under plan-only (no action;
-    * the broadcast probe is skipped there anyway). */
-  private def matChanged(df: DataFrame): (DataFrame, Boolean, Long) = {
-    if (planOnly(df)) (df.drop("__chg"), true, -1L)
-    else {
-      // NAMED observe, not the Observation helper: Observation() touches
-      // the session's ObservationManager, a non-Serializable lazy field
-      // of classic.SparkSession — once instantiated, ANY later closure
-      // that (transitively) captures the session fails task
-      // serialization. ml_train_eval hit exactly that: its logistic
-      // model's training summary holds the session, the predict UDF
-      // captures the model, and the first bench after the Observation-
-      // based early exit landed failed with "Task not serializable:
-      // ObservationManager" — only when a BSP query had run first. The
-      // named form adds the same pass-through CollectMetrics node and
-      // the metric is read back listener-free from the executed plan
-      // (QueryExecution.observedMetrics — public API), so no session
-      // state is ever created. GraphSpec pins the session's
-      // serializability after an early-exit loop.
-      val observed = df.observe("__graft_chg",
-        max(col("__chg").cast("int")).as("chg"), count(lit(1)).as("n"))
-      val cp = mat(observed)
-      val row = observed.queryExecution.observedMetrics.get("__graft_chg")
-      val v = row.map(_.getAs[Any]("chg")).orNull
-      val n = row.map(_.getAs[Any]("n").asInstanceOf[Number].longValue)
-        .getOrElse(-1L)
-      (cp.drop("__chg"), v != null && v.asInstanceOf[Number].intValue == 1, n)
-    }
+  /** Field `field` of the named observed-metric row `name` posted by the
+    * action that executed `df`, as a Number — read listener-free from the
+    * executed plan (QueryExecution.observedMetrics, public API). None when
+    * no row was posted (the frame never ran) or the aggregate is null
+    * (empty input); the caller picks the fallback.
+    *
+    * Producers use the NAMED observe, never the Observation helper:
+    * Observation() touches the session's ObservationManager, a
+    * non-Serializable lazy field of classic.SparkSession — once
+    * instantiated, ANY later closure that (transitively) captures the
+    * session fails task serialization (ml_train_eval's predict UDF
+    * captures a model whose training summary holds the session).
+    * GraphSpec pins the session's serializability after a BSP loop. */
+  private[graft] def observedNum(df: DataFrame, name: String,
+      field: String): Option[Number] =
+    df.queryExecution.observedMetrics.get(name)
+      .flatMap(r => Option(r.getAs[Number](field)))
+
+  /** [[mat]] that collects, in the checkpoint job the round already pays
+    * (CollectMetrics is a pass-through plan node and localCheckpoint /
+    * checkpoint run under withAction), the state's row count and — when
+    * `df` carries a fixed-point loop's boolean `__chg` column — whether
+    * any row changed. Returns the checkpointed frame without the flag,
+    * the flag (None without a `__chg` column) and the count. A metric
+    * that was not posted reads as count −1 and "changed": a missing read
+    * costs the broadcast path and the early exit, never a result. Under
+    * plan-only: the identity, "changed", −1. */
+  private def matObserved(df: DataFrame): (DataFrame, Option[Boolean], Long) = {
+    val flagged = df.columns.contains("__chg")
+    val (cp, n, chg) =
+      if (planOnly(df)) (df, -1L, None)
+      else {
+        val flag = if (flagged) Seq(max(col("__chg").cast("int")).as("chg")) else Nil
+        val observed = df.observe("__graft_bsp", count(lit(1)).as("n"), flag: _*)
+        val cp = mat(observed)
+        def read(field: String) = observedNum(observed, "__graft_bsp", field)
+        (cp, read("n").map(_.longValue).getOrElse(-1L), if (flagged) read("chg") else None)
+      }
+    if (!flagged) (cp, None, n)
+    else (cp.drop("__chg"), Some(chg.map(_.intValue == 1).getOrElse(n != 0)), n)
   }
 
-  /** [[mat]] + a free row count collected by the checkpoint action
-    * itself (named observe, read from the executed plan — see
-    * [[matChanged]] for why not Observation()). For loop states with no
-    * convergence flag (PPR's dense rank rows) whose next round still
-    * needs the size for its broadcast decision. −1 under plan-only. */
-  private def matCounted(df: DataFrame): (DataFrame, Long) = {
-    if (planOnly(df)) (df, -1L)
-    else {
-      val observed = df.observe("__graft_cnt", count(lit(1)).as("n"))
-      val cp = mat(observed)
-      val n = observed.queryExecution.observedMetrics.get("__graft_cnt")
-        .map(_.getAs[Any]("n").asInstanceOf[Number].longValue)
-        .getOrElse(-1L)
-      (cp, n)
-    }
-  }
-
-  /** Rounds the LAST early-exit loop on this JVM actually executed —
+  /** Rounds the last [[bspRounds]] loop on this JVM actually executed —
     * test-only telemetry (GraphSpec pins that a converged loop stops
     * early AND returns the full-iters result); never read by query
     * code. */
   private[graft] val lastRoundsRun = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** THE round driver. Materializes `init`, then runs up to `iters`
+    * rounds (2 under plan-only): `round(state, small)` builds the next
+    * state, `small` saying whether the current state's row count is
+    * within the broadcast limit, and [[matObserved]] materializes it. The
+    * count comes back from each checkpoint and is carried to the next
+    * round only when it was posted, so a missing read keeps the last
+    * known size; growing states (multi-source SSSP, PPR) thereby re-check
+    * broadcast every round without a count() job.
+    *
+    * FIXED-POINT EARLY EXIT: every loop computes state_{k+1} = f(state_k)
+    * with f deterministic and independent of the round index, so
+    * state_{k+1} = state_k makes every later round the identity and the
+    * returned frame equals the full-`iters` run EXACTLY (the oracle
+    * unrolls all rounds). The loop stops when the round's `__chg` flag
+    * says no row changed or — `sameSizeIsFixedPoint`, for a state that
+    * only loses rows (k-core) — when its row count did not change. Round
+    * counts are sized for the worst graph the contract admits; real
+    * fixtures converge earlier, and at 100 TB each saved round is a full
+    * shuffle over the edge list. Loops with neither signal (PPR — damped
+    * ranks never reach an exact fixed point) run every round. */
+  private def bspRounds(init: DataFrame, iters: Int,
+      sameSizeIsFixedPoint: Boolean = false)(
+      round: (DataFrame, Boolean) => DataFrame): DataFrame = {
+    var (st, _, n) = matObserved(init)
+    var changing = true
+    lastRoundsRun.set(0)
+    for (_ <- 1 to rounds(st, iters) if changing) {
+      val small = !planOnly(st) && n >= 0 && n <= bcastLimit(st)
+      val (next, chg, m) = matObserved(round(st, small))
+      changing = chg.getOrElse(!sameSizeIsFixedPoint || m < 0 || m != n)
+      st = next
+      if (m >= 0) n = m
+      lastRoundsRun.incrementAndGet()
+    }
+    st
+  }
 
   /** Vertex-state row count below which per-round state/message frames are
     * broadcast into the edge joins instead of shuffled. localCheckpoint
@@ -296,10 +283,10 @@ object DFGraphAlgs {
     df.sparkSession.conf.getOption(StateBroadcastLimitConf)
       .map(_.toLong).getOrElse(StateBroadcastLimit)
 
-  /** Conf key: out-degree budget per (src, salt) sub-key in the BFS/SSSP
-    * relaxation join's SHUFFLE path. A γ≈3.4 power-law hub (the
-    * reference graph's shape) can carry millions of out-edges on one
-    * join key; when rounds shuffle (state too big to broadcast), that
+  /** Conf key: out-degree budget per (src, salt) sub-key in the
+    * relaxation and contribution joins' SHUFFLE path. A γ≈3.4 power-law
+    * hub (the reference graph's shape) can carry millions of out-edges on
+    * one join key; when rounds shuffle (state too big to broadcast), that
     * key serializes one task per round. Edges of a hub with out-degree
     * d split across ceil(d / target) ≤ [[MaxSalt]] salt sub-keys
     * (deterministic: salt = hash(dst) mod n_salts), and each round the
@@ -393,26 +380,69 @@ object DFGraphAlgs {
   private def maybeBcast(df: DataFrame, small: Boolean): DataFrame =
     if (small) broadcast(df) else df
 
+  /** State ⋈ out-edges on src = id, restricted to the state's `live`
+    * (message-sending) rows: the plain join of `e` — with the state
+    * broadcast when `small` — or, when the state is too big to broadcast
+    * and a hub exceeds the salt budget, the salted join against `salt`'s
+    * (fanout, (src, __salt)-keyed edge) pair, the state fanned out to
+    * match so a hub's work spreads over __ns tasks instead of
+    * serializing on one key. */
+  private def frontier(e: DataFrame, salt: Option[(DataFrame, DataFrame)],
+      st: DataFrame, small: Boolean, live: Option[Column] = None): DataFrame =
+    salt match {
+      case Some((ns, eS)) if !small =>
+        val stS = fanOutState(live.fold(st)(st.filter), ns)
+        eS.join(stS, eS("src") === stS("id") && eS("__salt") === stS("__sl"))
+      case _ =>
+        val joined = e.join(maybeBcast(st, small), e("src") === st("id"))
+        live.fold(joined)(joined.filter)
+    }
+
+  /** [[bspRounds]] for the relaxation family over a materialized edge
+    * list `e` (src, dst, …): each round hands `step` the state, its
+    * [[frontier]] join and a hint that broadcasts a state-sized frame on
+    * the broadcast path; `step` aggregates the frontier and returns the
+    * next state carrying its `__chg` flag. `bcast = false` keeps every
+    * round on the shuffle path (LPA). */
+  private def relaxRounds(e: DataFrame, init: DataFrame, iters: Int,
+      knownMaxDeg: Option[Long], live: Option[Column] = None,
+      bcast: Boolean = true)(
+      step: (DataFrame, DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame = {
+    val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
+    bspRounds(init, iters) { (st, fits) =>
+      val small = bcast && fits
+      step(st, frontier(e, salt, st, small, live), maybeBcast(_, small))
+    }
+  }
+
+  /** The weighted edge list (src, dst, w), w null → 1, materialized. */
+  private def weighted(edges: DataFrame): DataFrame =
+    mat(edges.select(col("src"), col("dst"), coalesce(col("w"), lit(1.0)).as("w")))
+
+  /** Distinct endpoints (prefix…, id) of an edge list (prefix…, src, dst). */
+  private def vertices(e: DataFrame, prefix: Seq[String] = Nil): DataFrame = {
+    val p = prefix.map(col)
+    e.select(p :+ col("src").as("id"): _*)
+      .union(e.select(p :+ col("dst").as("id"): _*)).distinct()
+  }
+
   /** Fixed-iteration PageRank over a directed edge list (src, dst):
     * r0 = 1; r_{k+1} = 0.15 + 0.85 * Σ_in r_k(src)/outdeg(src).
-    * Returns (id, rank). Ref data_processor.py:56-78 (damping 0.85).
-    *
-    * Loop-carried frames are persist()ed CO-PARTITIONED on their join
-    * keys, not localCheckpoint'ed: persist preserves outputPartitioning
-    * (checkpointing truncates to a bare RDD scan and loses it), so each
-    * round's contrib⋈rank join and the final nodes⋈msgs join are
-    * exchange-free and only the message aggregation shuffles — one
-    * exchange per round over the edge list instead of three. rank stays
-    * a LINEAR recurrence (each round reads the previous rank once), so
-    * the loop remains ONE lazy plan; measured ~2× over the checkpointed
-    * inputs at sf0.1, and the shuffle-count argument scales. */
+    * Returns (id, rank). Ref data_processor.py:56-78 (damping 0.85). */
   def pageRank(edges: DataFrame, iters: Int,
       knownMaxDeg: Option[Long] = None,
       prebuiltContrib: Option[DataFrame] = None): DataFrame =
     usableContrib(edges, knownMaxDeg, prebuiltContrib) match {
-      case Some(pc) => pageRankPrebuilt(pc, iters)
+      case Some(pc) =>
+        // The loop frames key to the PREBUILT frame's partition count
+        // (its fill derived it from the same size rule), and nodes derive
+        // from the contribution rows themselves (identical row set: the
+        // deg window keeps every edge row), so the edge list is never
+        // re-checkpointed or re-exchanged per query.
+        val k = math.max(1, pc.rdd.getNumPartitions)
+        rankRounds(pc, rankNodes(pc, Nil, Some(k)), Nil, None, iters)
       case None =>
-        pageRankLoop(mat(edges.select(col("src"), col("dst"))), iters, knownMaxDeg)
+        pageRankLoop(mat(edges.select(col("src"), col("dst"))), Nil, iters, knownMaxDeg)
     }
 
   /** A caller-supplied [[contribFrame]] is usable iff the hub probe is
@@ -428,8 +458,7 @@ object DFGraphAlgs {
 
   /** The unsalted loops' per-round join input — (src, dst, deg), hash-
     * partitioned and SORTED on src at the size-derived loop count (the
-    * exact fill [[pageRankLoop]] and [[personalizedPageRank]] build
-    * internally; see the fill comments there) — exposed so the query
+    * exact fill [[pageRank]] builds internally) — exposed so the query
     * layer can session-cache ONE fill for the whole pagerank/ppr
     * family: each of those queries otherwise pays its own |E| exchange
     * + sort + window per run for an identical frame. The caller
@@ -438,40 +467,7 @@ object DFGraphAlgs {
     * [[usableContrib]] proves the salted path off. */
   private[graft] def contribFrame(edges: DataFrame): DataFrame = {
     val e = mat(edges.select(col("src"), col("dst")))
-    val kP = loopParts(e)
-    kP.map(k => e.repartition(k, col("src")))
-      .getOrElse(e.repartition(col("src")))
-      .sortWithinPartitions(col("src"))
-      .withColumn("deg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-  }
-
-  /** [[pageRankLoop]]'s unsalted body over a caller-persisted
-    * [[contribFrame]]: same rounds, same decimal message sums, same
-    * co-partitioned joins — the loop frames key to the PREBUILT frame's
-    * partition count (its fill derived it from the same size rule), and
-    * nodes derive from the contribution rows themselves (identical row
-    * set: the deg window keeps every edge row), so the edge list is
-    * never re-checkpointed or re-exchanged per query. */
-  private def pageRankPrebuilt(contrib: DataFrame, iters: Int): DataFrame = {
-    val k = math.max(1, contrib.rdd.getNumPartitions)
-    val nodes = contrib.select(col("src").as("id"))
-      .union(contrib.select(col("dst").as("id"))).distinct()
-      .repartition(k, col("id"))
-      .sortWithinPartitions(col("id")).persist()
-    var rank = nodes.select(col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to iters) {
-      val joined = contrib.join(rank, contrib("src") === rank("id"))
-      val msgs = joined
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("m"))
-        .groupBy(col("id")).agg(rsum(col("m")).as("msum"))
-      rank = nodes.join(msgs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(0.15) + lit(0.85) * coalesce(col("msum"), lit(0.0))).as("rank"))
-    }
-    val out = mat(rank)
-    nodes.unpersist(false)
-    out
+    degFill(e, Seq("src"), loopParts(e))
   }
 
   /** Loop-frame partition count, inherited from the mat'ed edge frame:
@@ -483,94 +479,125 @@ object DFGraphAlgs {
   private def loopParts(e: DataFrame): Option[Int] =
     if (planOnly(e)) None else Some(math.max(1, e.rdd.getNumPartitions))
 
-  /** [[pageRank]]'s loop body. `e` must be cheap to rescan — either
-    * materialized or a narrow projection over a materialized frame (the
-    * packed multi-view path passes the latter: re-running a when-chain +
-    * bit-pack per scan beats checkpoint-copying the projection). It is
-    * scanned ~3× at fill (contrib, nodes union). */
-  private def pageRankLoop(e: DataFrame, iters: Int,
-      knownMaxDeg: Option[Long]): DataFrame = {
-    // Hub salting (see [[SaltTargetDegConf]]): the contribution join is
-    // exchange-free by co-partitioning, but a power-law hub still lands
-    // all its out-edges in ONE persisted partition — one task per round.
-    // When a hub exceeds the budget, contrib co-partitions on
-    // (src, __salt) instead and the rank state fans out to match; the
-    // message sum is a decimal aggregate, so results are bit-identical.
-    // The probe is max(deg) over the persisted OUT-DEGREE frame — one
-    // distinct-source row per vertex, not the edge volume (the r9 probe
-    // over the persisted contribution frame re-read the whole edge
-    // cache per query: ~2 s at the sf1 checkpoint). Both branches then
-    // reuse the cached aggregate in their contribution join, so the
-    // probe's fill is work the main job no longer repeats.
-    lazy val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val salt = saltPlanFromDeg(outdeg, "deg", Seq("src"), e,
-      target => knownMaxDeg.getOrElse(maxDegOf(outdeg)) > target)
-    // Cached SORTED on the join keys, not just co-partitioned: the
-    // in-memory relation advertises its outputOrdering, so each round's
-    // sort-merge join re-sorts only the |V|-row rank side — without the
-    // sortWithinPartitions every round re-sorted the full edge-sized
-    // contribution cache (iters × |E| log |E| wasted on identical data).
-    // One sort at cache-fill time amortizes over all rounds.
-    //
-    // The unsalted fill computes deg as a WINDOW count over the already
-    // key-sorted partitions instead of an aggregate + self-join: one
-    // |E| exchange + one sort total, where the join form paid the
-    // aggregation exchange, the join's own exchanges, AND a redundant
-    // user repartition the planner does not elide (measured ~2 s of the
-    // 12 s sf1 query). The salted fill keeps the join form — a window
-    // over (src) would straddle the salt sub-keys the repartition just
-    // split apart. deg semantics identical: every e row keeps its
-    // source's out-edge count.
-    // kP: loop-frame partition count, size-derived — see loopParts.
-    val kP = loopParts(e)
-    val contrib = (salt match {
-      case Some((_, eS)) =>
-        val keyed = eS.join(outdeg, "src")
-          .select(col("src"), col("dst"), col("deg"), col("__salt"))
-        kP.map(k => keyed.repartition(k, col("src"), col("__salt")))
-          .getOrElse(keyed.repartition(col("src"), col("__salt")))
-          .sortWithinPartitions(col("src"), col("__salt"))
-      case None =>
-        kP.map(k => e.repartition(k, col("src")))
-          .getOrElse(e.repartition(col("src")))
-          .sortWithinPartitions(col("src"))
-          .withColumn("deg", count(lit(1)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-    }).persist()
-    // nodes keeps an explicit sized hash partitioning on id so each
-    // round's msgs exchange and the final join co-partition at kP (the
-    // unsized form rode distinct's hash(id, shuffle.partitions) layout).
-    val nodesRaw = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    val nodes = kP.map(k => nodesRaw.repartition(k, col("id")))
-      .getOrElse(nodesRaw)
-      .sortWithinPartitions(col("id")).persist()
-    var rank = nodes.select(col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to iters) {
-      val joined = salt match {
-        case Some((ns, _)) =>
-          val rk = fanOutState(rank, ns)
-          contrib.join(rk,
-            contrib("src") === rk("id") && contrib("__salt") === rk("__sl"))
-        case None => contrib.join(rank, contrib("src") === rank("id"))
-      }
-      val msgs = joined
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("m"))
-        .groupBy(col("id")).agg(rsum(col("m")).as("msum"))
-      rank = nodes.join(msgs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(0.15) + lit(0.85) * coalesce(col("msum"), lit(0.0))).as("rank"))
-    }
-    val out = mat(rank)
-    contrib.unpersist(false); nodes.unpersist(false)
-    out
+  /** `df` hash-partitioned on `keys` (at `kP` partitions, else the
+    * session default) and sorted within partitions on them. */
+  private def sortedOn(df: DataFrame, keys: Seq[String], kP: Option[Int]): DataFrame = {
+    val ks = keys.map(col)
+    kP.map(k => df.repartition(k, ks: _*)).getOrElse(df.repartition(ks: _*))
+      .sortWithinPartitions(ks: _*)
   }
 
-  /** Largest `deg` value of a persisted degree frame (cache-read probe;
-    * empty edge list → no hub). */
+  /** The unsalted contribution fill: `e` sorted on its source `keys`
+    * (see [[sortedOn]]) with each row's out-degree `deg` as a WINDOW
+    * count over the already key-sorted partitions — one |E| exchange +
+    * one sort total, where an aggregate + self-join paid the aggregation
+    * exchange, the join's own exchanges AND a redundant user repartition
+    * the planner does not elide (measured ~2 s of a 12 s sf1 query). */
+  private def degFill(e: DataFrame, keys: Seq[String], kP: Option[Int]): DataFrame =
+    sortedOn(e, keys, kP).withColumn("deg",
+      count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+
+  /** The PageRank family's per-round join input over a cheap-to-rescan
+    * edge frame `e` (keys…, dst) — (keys…, dst, deg[, __salt]), persisted
+    * SORTED on its join keys, not just co-partitioned: the in-memory
+    * relation advertises its outputOrdering, so each round's sort-merge
+    * join re-sorts only the |V|-row rank side (one fill-time sort instead
+    * of iters × |E| log |E| on identical data). Returned with the salt
+    * plan. Hub salting (see [[SaltTargetDegConf]]): a power-law hub
+    * still lands all its out-edges in ONE partition — one task per
+    * round — so when a hub exceeds the budget the frame keys on
+    * (keys…, __salt) instead; the message sum is a decimal aggregate, so
+    * results are bit-identical. The salted fill joins the out-degree
+    * aggregate (a window over the source key would straddle the salt
+    * sub-keys the repartition just split apart). The hub probe is
+    * max(deg) over that same |V|-row aggregate unless `knownMaxDeg`
+    * bounds it driver-side. */
+  private def contribPlan(e: DataFrame, keys: Seq[String], kP: Option[Int],
+      knownMaxDeg: Option[Long]): (DataFrame, Option[(DataFrame, DataFrame)]) = {
+    lazy val outdeg = e.groupBy(keys.map(col): _*).agg(count(lit(1)).as("deg"))
+    val salt = saltPlanFromDeg(outdeg, "deg", keys, e,
+      target => knownMaxDeg.getOrElse(maxDegOf(outdeg)) > target)
+    val contrib = salt match {
+      case Some((_, eS)) =>
+        sortedOn(eS.join(outdeg, keys)
+          .select((keys ++ Seq("dst", "deg", "__salt")).map(col): _*),
+          keys :+ "__salt", kP)
+      case None => degFill(e, keys, kP)
+    }
+    (contrib.persist(), salt)
+  }
+
+  /** Largest `deg` value of a degree frame (empty edge list → no hub). */
   private def maxDegOf(deg: DataFrame): Long =
     Option(deg.agg(max(col("deg"))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
+
+  /** The rank vertices (prefix…, id) of a contribution or edge frame,
+    * persisted hash-partitioned on them at `kP` partitions (so each
+    * round's message exchange and node join co-partition) and sorted. */
+  private def rankNodes(src: DataFrame, prefix: Seq[String], kP: Option[Int]): DataFrame = {
+    val ids = (prefix :+ "id").map(col)
+    val raw = vertices(src, prefix)
+    kP.map(k => raw.repartition(k, ids: _*)).getOrElse(raw)
+      .sortWithinPartitions(ids: _*).persist()
+  }
+
+  /** [[pageRank]]'s self-building loop over a cheap-to-rescan edge frame
+    * `e` (prefix…, src, dst) — materialized, or a narrow projection over
+    * a materialized frame (the packed multi-view path passes the latter:
+    * re-running a when-chain + bit-pack per scan beats checkpoint-copying
+    * the projection). `prefix` is empty for the single graph and
+    * Seq("rel") for the composite multi-view keys. */
+  private def pageRankLoop(e: DataFrame, prefix: Seq[String], iters: Int,
+      knownMaxDeg: Option[Long]): DataFrame = {
+    val kP = loopParts(e)
+    val (contrib, salt) = contribPlan(e, prefix :+ "src", kP, knownMaxDeg)
+    val out = rankRounds(contrib, rankNodes(e, prefix, kP), prefix,
+      salt.map(_._1), iters)
+    contrib.unpersist(false)
+    out
+  }
+
+  /** The global rank recurrence over a persisted contribution frame and
+    * its persisted `nodes`, keyed by (prefix…, id). Loop-carried frames
+    * are persist()ed CO-PARTITIONED on their join keys, not
+    * checkpointed: persist preserves outputPartitioning (checkpointing
+    * truncates to a bare RDD scan and loses it), so each round's
+    * contrib⋈rank join and the nodes⋈msgs join are exchange-free and only
+    * the message aggregation shuffles — one exchange per round over the
+    * edge list instead of three (with composite (rel, id) keys the
+    * avoided re-shuffles are 2× the whole multi-view edge list per
+    * round). rank stays a LINEAR recurrence (each round reads the
+    * previous rank once), so the loop is ONE lazy plan, materialized at
+    * the end; measured ~2× over checkpointed inputs at sf0.1. With a
+    * salt fanout `ns`, the rank state fans out to the contribution
+    * frame's (keys…, __salt) keying. Unpersists `nodes`. */
+  private def rankRounds(contrib: DataFrame, nodes: DataFrame,
+      prefix: Seq[String], ns: Option[DataFrame], iters: Int): DataFrame = {
+    val ids = prefix :+ "id"
+    val keyMap = prefix.map(k => k -> k) :+ ("id" -> "src")
+    def on(st: DataFrame): Column =
+      keyMap.map { case (sk, ck) => contrib(ck) === st(sk) }.reduce(_ && _)
+    var rank = nodes.select(ids.map(col) :+ lit(1.0).as("rank"): _*)
+    for (_ <- 1 to iters) {
+      val joined = ns match {
+        case Some(n) =>
+          val rk = fanOutState(rank, n, keyMap)
+          contrib.join(rk, on(rk) && contrib("__salt") === rk("__sl"))
+        case None => contrib.join(rank, on(rank))
+      }
+      val msgs = joined
+        .select(prefix.map(k => contrib(k).as(k)) ++ Seq(col("dst").as("id"),
+          (col("rank") / col("deg")).as("m")): _*)
+        .groupBy(ids.map(col): _*).agg(rsum(col("m")).as("msum"))
+      rank = nodes.join(msgs, ids, "left")
+        .select(ids.map(col) :+
+          (lit(0.15) + lit(0.85) * coalesce(col("msum"), lit(0.0))).as("rank"): _*)
+    }
+    val out = mat(rank)
+    nodes.unpersist(false)
+    out
+  }
 
   /** Per-relation ("multi-view") PageRank in ONE BSP job: vertices are
     * (rel, id) composite keys, so all relation subgraphs iterate together
@@ -635,7 +662,7 @@ object DFGraphAlgs {
           def pack(c: Column) = shiftleft(c, bits).bitwiseOR(col("__ri"))
           val enc = e.withColumn("__ri", relIdx)
             .select(pack(col("src")).as("src"), pack(col("dst")).as("dst"))
-          val pr = pageRankLoop(enc, iters, knownMaxDeg)
+          val pr = pageRankLoop(enc, Nil, iters, knownMaxDeg)
           val mask = (1L << bits) - 1L
           val relBack = rels.zipWithIndex.tail
             .foldLeft(when(col("id").bitwiseAND(lit(mask)) === lit(0L),
@@ -647,64 +674,7 @@ object DFGraphAlgs {
         }
       }
     }
-    if (packed.isDefined) return packed.get
-    lazy val outdeg = e.groupBy(col("rel"), col("src"))
-      .agg(count(lit(1)).as("deg"))
-    // Co-partitioned persists, one exchange per round — see pageRank.
-    // With composite (rel, id) keys the avoided re-shuffles are 2× the
-    // whole multi-view edge list per round, which is exactly where the
-    // round-2 regression came from.
-    // Hub salting on the composite (rel, src) key; probe over the
-    // persisted out-degree frame — see pageRank.
-    val salt = saltPlanFromDeg(outdeg, "deg", Seq("rel", "src"), e,
-      target => knownMaxDeg.getOrElse(maxDegOf(outdeg)) > target)
-    // Sorted-on-key caches — see pageRank: one fill-time sort saves
-    // iters × full-cache re-sorts in the rounds' sort-merge joins; the
-    // unsalted fill is the one-exchange window form (see pageRank).
-    // Sized loop-frame partitioning — see pageRank/loopParts.
-    val kP = loopParts(e)
-    val contrib = (salt match {
-      case Some((_, eS)) =>
-        val keyed = eS.join(outdeg, Seq("rel", "src"))
-          .select(col("rel"), col("src"), col("dst"), col("deg"), col("__salt"))
-        kP.map(k => keyed.repartition(k, col("rel"), col("src"), col("__salt")))
-          .getOrElse(keyed.repartition(col("rel"), col("src"), col("__salt")))
-          .sortWithinPartitions(col("rel"), col("src"), col("__salt"))
-      case None =>
-        kP.map(k => e.repartition(k, col("rel"), col("src")))
-          .getOrElse(e.repartition(col("rel"), col("src")))
-          .sortWithinPartitions(col("rel"), col("src"))
-          .withColumn("deg", count(lit(1)).over(org.apache.spark.sql
-            .expressions.Window.partitionBy(col("rel"), col("src"))))
-    }).persist()
-    val nodesRaw = e.select(col("rel"), col("src").as("id"))
-      .union(e.select(col("rel"), col("dst").as("id"))).distinct()
-    val nodes = kP.map(k => nodesRaw.repartition(k, col("rel"), col("id")))
-      .getOrElse(nodesRaw)
-      .sortWithinPartitions(col("rel"), col("id")).persist()
-    // Linear recurrence — one lazy plan, single job (see pageRank).
-    var rank = nodes.select(col("rel"), col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to iters) {
-      val joined = salt match {
-        case Some((ns, _)) =>
-          val rk = fanOutState(rank, ns, Seq("rel" -> "rel", "id" -> "src"))
-          contrib.join(rk,
-            contrib("rel") === rk("rel") && contrib("src") === rk("id") &&
-              contrib("__salt") === rk("__sl"))
-        case None => contrib.join(rank,
-          contrib("rel") === rank("rel") && contrib("src") === rank("id"))
-      }
-      val msgs = joined
-        .select(contrib("rel").as("rel"), col("dst").as("id"),
-          (col("rank") / col("deg")).as("m"))
-        .groupBy(col("rel"), col("id")).agg(rsum(col("m")).as("msum"))
-      rank = nodes.join(msgs, Seq("rel", "id"), "left")
-        .select(col("rel"), col("id"),
-          (lit(0.15) + lit(0.85) * coalesce(col("msum"), lit(0.0))).as("rank"))
-    }
-    val out = mat(rank)
-    contrib.unpersist(false); nodes.unpersist(false)
-    out
+    packed.getOrElse(pageRankLoop(e, Seq("rel"), iters, knownMaxDeg))
   }
 
   /** Multi-seed personalized PageRank (random-walk-with-restart) — the
@@ -720,78 +690,39 @@ object DFGraphAlgs {
     * PPR-for-every-user feasible at 100 TB — a million seeds iterate in
     * one job, state proportional to touched mass only, one exchange per
     * round on (seed, id).
+    *
+    * EAGER rounds through [[bspRounds]] (r14, measured: the "one lazy
+    * plan" form ran graph_ppr 9.0 s vs 7.5 s eager at sf0.1/32 cores —
+    * PPR state is DENSE per round, so each lazy round stacked two wide
+    * exchanges whose AQE re-planning and un-coalesced state cost more
+    * than the eager form's per-round checkpoint).
     * Input: edges (src, dst), seeds (seed). Returns (seed, id, rank). */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
       knownMaxDeg: Option[Long] = None,
       prebuiltContrib: Option[DataFrame] = None): DataFrame = {
     // With a usable prebuilt contribution frame (see usableContrib) the
-    // edge list is never touched: no per-query checkpoint, no fill —
-    // the session-cached frame is the per-round join input directly.
+    // edge list is never touched: no per-query checkpoint, no fill.
     val (contrib, salt, ownContrib) =
       usableContrib(edges, knownMaxDeg, prebuiltContrib) match {
         case Some(pc) => (pc, None, false)
         case None =>
-          val e = mat(edges.select(col("src"), col("dst")))
-          // Hub salting for the shuffle path (big seed sets); probe over
-          // the persisted out-degree frame — see pageRank.
-          lazy val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          val s = saltPlanFromDeg(outdeg, "deg", Seq("src"), e,
-            target => knownMaxDeg.getOrElse(maxDegOf(outdeg)) > target)
-          // Sorted-on-key cache — free for the broadcast-state path (hash
-          // join ignores ordering; one fill-time sort) and saves per-round
-          // re-sorts on the big-seed-set shuffle path — see pageRank. The
-          // unsalted fill is the one-exchange window form (see pageRank).
-          val c = (s match {
-            case Some((_, eS)) =>
-              eS.join(outdeg, "src")
-                .select(col("src"), col("dst"), col("deg"), col("__salt"))
-                .repartition(col("src"), col("__salt"))
-                .sortWithinPartitions(col("src"), col("__salt"))
-            case None =>
-              e.repartition(col("src")).sortWithinPartitions(col("src"))
-                .withColumn("deg", count(lit(1)).over(
-                  org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-          }).persist()
+          val (c, s) = contribPlan(mat(edges.select(col("src"), col("dst"))),
+            Seq("src"), None, knownMaxDeg)
           (c, s, true)
       }
-    // The restart rows: (seed, seed, 0.15) — tiny, broadcast into every
+    // The restart rows: (seed, seed, 0.15) — tiny, folded into every
     // round's re-aggregation via the union (no shuffle contribution).
     val restart = mat(seeds.select(col("seed"), col("seed").as("id"),
       lit(0.15).cast("double").as("part")))
-    // State size rides each round's checkpoint metric (see matCounted);
-    // only the seed frame pays an explicit count, once.
-    var (rank, nState) = matCounted(seeds.select(col("seed"),
-      col("seed").as("id"), lit(1.0).cast("double").as("rank")))
-    // EAGER per-round discipline on BOTH paths (r14 note, guide §1.1:
-    // measure first — an A/B of the "one lazy plan" form of this loop,
-    // which the betweenness knownDists rework proved out for its level
-    // joins, measured graph_ppr 9.0 s vs 7.5 s eager at sf0.1/32 cores
-    // on a calibration-equal host: PPR state is DENSE per round — every
-    // (seed, reached-id) row — so each lazy round stacked two wide
-    // exchanges whose AQE re-planning and un-coalesced state carried
-    // more cost than the 2 driver-blocking jobs per round the eager
-    // form pays; the checkpoint also sizedCoalesces each round's state).
-    for (_ <- 1 to rounds(rank, iters)) {
-      val small = !planOnly(rank) && nState >= 0 && nState <= bcastLimit(rank)
-      val joined =
-        if (small || salt.isEmpty)
-          contrib.join(maybeBcast(rank, small), contrib("src") === rank("id"))
-        else {
-          val (ns, _) = salt.get
-          val rk = fanOutState(rank, ns)
-          contrib.join(rk,
-            contrib("src") === rk("id") && contrib("__salt") === rk("__sl"))
-        }
-      val msgs = joined
-        .select(col("seed"), col("dst").as("id"),
-          (col("rank") / col("deg")).as("m"))
+    val contribSalt = salt.map { case (ns, _) => (ns, contrib) }
+    val rank = bspRounds(seeds.select(col("seed"), col("seed").as("id"),
+        lit(1.0).cast("double").as("rank")), iters) { (rank, small) =>
+      frontier(contrib, contribSalt, rank, small)
+        .select(col("seed"), col("dst").as("id"), (col("rank") / col("deg")).as("m"))
         .groupBy(col("seed"), col("id")).agg(rsum(col("m")).as("msum"))
-      val (r2, n2) = matCounted(msgs.select(col("seed"), col("id"),
-          (lit(0.85) * col("msum")).as("part"))
+        .select(col("seed"), col("id"), (lit(0.85) * col("msum")).as("part"))
         .union(restart)
-        .groupBy(col("seed"), col("id")).agg(rsum(col("part")).as("rank")))
-      rank = r2
-      nState = n2
+        .groupBy(col("seed"), col("id")).agg(rsum(col("part")).as("rank"))
     }
     if (ownContrib) contrib.unpersist(false)
     rank
@@ -799,49 +730,23 @@ object DFGraphAlgs {
 
   /** Fixed-round min-plus relaxation over weighted edges (src, dst, w)
     * from one source. Returns (id, dist) with unreached = null.
-    * With w ≡ 1 this is BFS hop count. Ref bfs.py:91-147.
-    * `dist` is read twice per round (relaxation + least-merge), so each
-    * round's state is cached — see the iteration-discipline note above. */
+    * With w ≡ 1 this is BFS hop count. Ref bfs.py:91-147. */
   def shortestPaths(edges: DataFrame, source: Long, iters: Int,
       knownMaxDeg: Option[Long] = None): DataFrame = {
-    val e = mat(edges.select(col("src"), col("dst"),
-      coalesce(col("w"), lit(1.0)).as("w")))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    var dist = mat(nodes.select(col("id"),
-      when(col("id") === source, lit(0.0)).otherwise(lit(null).cast("double")).as("dist")))
-    val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
-    val small = !planOnly(dist) && dist.count() <= bcastLimit(dist)
-    var changing = true
-    lastRoundsRun.set(0)
-    for (_ <- 1 to rounds(dist, iters) if changing) {
-      val frontier =
-        if (small || salt.isEmpty)
-          e.join(maybeBcast(dist, small), e("src") === dist("id"))
-            .filter(col("dist").isNotNull)
-        else {
-          // Shuffle path with hub salting: reached state fans out over
-          // its vertices' salt sub-keys, edges carry a precomputed
-          // (src, __salt) — the hub's relaxation work spreads across
-          // __ns tasks instead of serializing on one key.
-          val (ns, eS) = salt.get
-          val stS = fanOutState(dist.filter(col("dist").isNotNull), ns)
-          eS.join(stS, eS("src") === stS("id") && eS("__salt") === stS("__sl"))
-        }
-      val relaxed = frontier
-        .groupBy(col("dst").as("id")).agg(min(col("dist") + col("w")).as("reach"))
-      // __chg: this round strictly improved the row (first reach or a
-      // shorter path) — no row with __chg anywhere ⟹ fixed point.
-      val (upd, chg, _) = matChanged(
-        dist.join(maybeBcast(relaxed, small), Seq("id"), "left")
+    val e = weighted(edges)
+    val init = vertices(e).select(col("id"),
+      when(col("id") === source, lit(0.0)).otherwise(lit(null).cast("double")).as("dist"))
+    relaxRounds(e, init, iters, knownMaxDeg, live = Some(col("dist").isNotNull)) {
+      (dist, frontier, hint) =>
+        val relaxed = frontier
+          .groupBy(col("dst").as("id")).agg(min(col("dist") + col("w")).as("reach"))
+        // __chg: this round strictly improved the row (first reach or a
+        // shorter path).
+        dist.join(hint(relaxed), Seq("id"), "left")
           .select(col("id"), least(col("dist"), col("reach")).as("dist"),
             coalesce(col("reach") < col("dist"),
-              col("dist").isNull && col("reach").isNotNull).as("__chg")))
-      lastRoundsRun.incrementAndGet()
-      changing = chg
-      dist = upd
+              col("dist").isNull && col("reach").isNotNull).as("__chg"))
     }
-    dist
   }
 
   /** Sampled-source Brandes betweenness dependencies (Brandes 2001;
@@ -1067,47 +972,20 @@ object DFGraphAlgs {
       knownMaxDeg: Option[Long] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = mat(edges.select(col("src"), col("dst"),
-      coalesce(col("w"), lit(1.0)).as("w")))
-    var dist = mat(sources.toDF("s0")
-      .select(col("s0"), col("s0").as("id"), lit(0.0).as("dist")))
-    // State size, carried between rounds by the checkpoint's own metric
-    // row (see matChanged) — the initial state is one row per source, a
-    // driver-side fact. Saves one count() job per round.
-    var nState = sources.size.toLong
-    val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
-    var changing = true
-    lastRoundsRun.set(0)
-    for (_ <- 1 to rounds(dist, iters) if changing) {
-      // State grows round over round (up to sources × reached) — re-check
-      // the carried size each round before choosing broadcast.
-      val small = !planOnly(dist) && nState <= bcastLimit(dist)
-      val frontier =
-        if (small || salt.isEmpty)
-          e.join(maybeBcast(dist, small), e("src") === dist("id"))
-        else {
-          // Shuffle path with hub salting — see shortestPaths.
-          val (ns, eS) = salt.get
-          val stS = fanOutState(dist, ns)
-          eS.join(stS, eS("src") === stS("id") && eS("__salt") === stS("__sl"))
-        }
+    val init = sources.toDF("s0")
+      .select(col("s0"), col("s0").as("id"), lit(0.0).as("dist"))
+    relaxRounds(weighted(edges), init, iters, knownMaxDeg) { (dist, frontier, _) =>
       val relaxed = frontier
         .groupBy(col("s0"), col("dst").as("id"))
         .agg(min(col("dist") + col("w")).as("reach"))
       // __chg: a newly reached (s0, id) (full-join right side) or a
-      // strictly shorter path — see stillChanging. Rows never leave the
-      // state, so "no row changed" ⟹ the multiset is the fixed point.
-      val (upd, chg, n) = matChanged(
-        dist.join(relaxed, Seq("s0", "id"), "full")
-          .select(col("s0"), col("id"), least(col("dist"), col("reach")).as("dist"),
-            coalesce(col("reach") < col("dist"),
-              col("dist").isNull && col("reach").isNotNull).as("__chg")))
-      lastRoundsRun.incrementAndGet()
-      changing = chg
-      dist = upd
-      if (n >= 0) nState = n
+      // strictly shorter path. Rows never leave the state, so "no row
+      // changed" ⟹ the multiset is the fixed point.
+      dist.join(relaxed, Seq("s0", "id"), "full")
+        .select(col("s0"), col("id"), least(col("dist"), col("reach")).as("dist"),
+          coalesce(col("reach") < col("dist"),
+            col("dist").isNull && col("reach").isNotNull).as("__chg"))
     }
-    dist
   }
 
   /** Fixed-round SSSP with PREDECESSOR tracking — the path-recovery form
@@ -1120,52 +998,31 @@ object DFGraphAlgs {
     * Returns (id, dist, pred); pred is null for the source/unreached. */
   def shortestPathsWithPred(edges: DataFrame, source: Long, iters: Int,
       knownMaxDeg: Option[Long] = None): DataFrame = {
-    val e = mat(edges.select(col("src"), col("dst"),
-      coalesce(col("w"), lit(1.0)).as("w")))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    var st = mat(nodes.select(col("id"),
+    val e = weighted(edges)
+    val init = vertices(e).select(col("id"),
       when(col("id") === source, lit(0.0)).otherwise(lit(null).cast("double")).as("dist"),
-      lit(null).cast("long").as("pred")))
-    val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
-    val small = !planOnly(st) && st.count() <= bcastLimit(st)
-    var changing = true
-    lastRoundsRun.set(0)
-    for (_ <- 1 to rounds(st, iters) if changing) {
-      // Lexicographic min over (nd, pred) as a struct-min hash aggregate:
-      // same deterministic tie-break as a (nd, pred) sort-window, but with
-      // map-side partial aggregation and no per-partition sort.
-      val frontier =
-        if (small || salt.isEmpty)
-          e.join(maybeBcast(st, small), e("src") === st("id"))
-            .filter(col("dist").isNotNull)
-        else {
-          // Shuffle path with hub salting — see shortestPaths.
-          val (ns, eS) = salt.get
-          val stS = fanOutState(st.filter(col("dist").isNotNull), ns)
-          eS.join(stS, eS("src") === stS("id") && eS("__salt") === stS("__sl"))
-        }
-      val cand = frontier
-        .select(col("dst").as("id"),
-          struct((col("dist") + col("w")).as("nd"),
-            col("src").as("cand_pred")).as("c"))
-        .groupBy(col("id")).agg(min(col("c")).as("c"))
-        .select(col("id"), col("c.nd").as("nd"), col("c.cand_pred").as("cand_pred"))
-      val better = col("nd").isNotNull && (col("dist").isNull || col("nd") < col("dist"))
-      // __chg: the strict-improvement predicate itself (an equal-dist
-      // rediscovery never replaces the incumbent, so `better` false
-      // everywhere ⟹ dist AND pred both at their fixed point).
-      val (upd, chg, _) = matChanged(
-        st.join(maybeBcast(cand, small), Seq("id"), "left")
+      lit(null).cast("long").as("pred"))
+    relaxRounds(e, init, iters, knownMaxDeg, live = Some(col("dist").isNotNull)) {
+      (st, frontier, hint) =>
+        // Lexicographic min over (nd, pred) as a struct-min hash aggregate:
+        // same deterministic tie-break as a (nd, pred) sort-window, but
+        // with map-side partial aggregation and no per-partition sort.
+        val cand = frontier
+          .select(col("dst").as("id"),
+            struct((col("dist") + col("w")).as("nd"),
+              col("src").as("cand_pred")).as("c"))
+          .groupBy(col("id")).agg(min(col("c")).as("c"))
+          .select(col("id"), col("c.nd").as("nd"), col("c.cand_pred").as("cand_pred"))
+        val better = col("nd").isNotNull && (col("dist").isNull || col("nd") < col("dist"))
+        // __chg: the strict-improvement predicate itself (an equal-dist
+        // rediscovery never replaces the incumbent, so `better` false
+        // everywhere ⟹ dist AND pred both at their fixed point).
+        st.join(hint(cand), Seq("id"), "left")
           .select(col("id"),
             when(better, col("nd")).otherwise(col("dist")).as("dist"),
             when(better, col("cand_pred")).otherwise(col("pred")).as("pred"),
-            coalesce(better, lit(false)).as("__chg")))
-      lastRoundsRun.incrementAndGet()
-      changing = chg
-      st = upd
+            coalesce(better, lit(false)).as("__chg"))
     }
-    st
   }
 
   /** Fixed-round min-label propagation connected components over a
@@ -1177,35 +1034,15 @@ object DFGraphAlgs {
   def connectedComponents(edges: DataFrame, iters: Int,
       knownMaxDeg: Option[Long] = None): DataFrame = {
     val e = mat(edges.select(col("src"), col("dst")))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    var comp = mat(nodes.select(col("id"), col("id").as("comp")))
-    val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
-    val small = !planOnly(comp) && comp.count() <= bcastLimit(comp)
-    var changing = true
-    lastRoundsRun.set(0)
-    for (_ <- 1 to rounds(comp, iters) if changing) {
-      val frontier =
-        if (small || salt.isEmpty)
-          e.join(maybeBcast(comp, small), e("src") === comp("id"))
-        else {
-          // Shuffle path with hub salting — see shortestPaths.
-          val (ns, eS) = salt.get
-          eS.join(fanOutState(comp, ns),
-            eS("src") === col("id") && eS("__salt") === col("__sl"))
-        }
+    relaxRounds(e, vertices(e).select(col("id"), col("id").as("comp")), iters,
+        knownMaxDeg) { (comp, frontier, hint) =>
       val better = frontier
         .groupBy(col("dst").as("id")).agg(min(col("comp")).as("ncomp"))
-      // __chg: a strictly smaller neighbor label — see stillChanging.
-      val (upd, chg, _) = matChanged(
-        comp.join(maybeBcast(better, small), Seq("id"), "left")
-          .select(col("id"), least(col("comp"), col("ncomp")).as("comp"),
-            coalesce(col("ncomp") < col("comp"), lit(false)).as("__chg")))
-      lastRoundsRun.incrementAndGet()
-      changing = chg
-      comp = upd
+      // __chg: a strictly smaller neighbor label.
+      comp.join(hint(better), Seq("id"), "left")
+        .select(col("id"), least(col("comp"), col("ncomp")).as("comp"),
+          coalesce(col("ncomp") < col("comp"), lit(false)).as("__chg"))
     }
-    comp
   }
 
   /** Triangle count over a CANONICAL undirected edge list (x < y, one
@@ -1228,28 +1065,16 @@ object DFGraphAlgs {
     * neighbors (ties broken by the SMALLEST label — a total,
     * engine-agnostic order; plain LPA's random tie-break is what makes
     * it non-reproducible). Isolated-in-round vertices keep their label.
-    * Fixed rounds, same BSP discipline as the rest of the family; the
-    * oracle unrolls the identical recurrence. Returns (id, lbl). */
+    * Rounds always shuffle (no broadcast leg). The oracle unrolls the
+    * identical recurrence. Returns (id, lbl). */
   def labelPropagation(edges: DataFrame, iters: Int,
       knownMaxDeg: Option[Long] = None): DataFrame = {
     val e = mat(edges.select(col("src"), col("dst")))
-    val nodes = e.select(col("src").as("id")).distinct()
-    var lbl = mat(nodes.select(col("id"), col("id").as("lbl")))
-    val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
-    var changing = true
-    lastRoundsRun.set(0)
-    for (_ <- 1 to rounds(lbl, iters) if changing) {
+    val init = e.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("lbl"))
+    relaxRounds(e, init, iters, knownMaxDeg, bcast = false) { (lbl, frontier, _) =>
       // argmax by (count desc, label asc) as a struct-max hash aggregate:
       // map-side combinable, no per-vertex sort window.
-      val frontier =
-        if (salt.isEmpty) e.join(lbl, e("src") === lbl("id"))
-        else {
-          // LPA always shuffles (no broadcast leg) — salt hubs the same
-          // way as the BFS relaxation join.
-          val (ns, eS) = salt.get
-          eS.join(fanOutState(lbl, ns),
-            eS("src") === col("id") && eS("__salt") === col("__sl"))
-        }
       val best = frontier
         .groupBy(col("dst"), col("lbl"))
         .agg(count(lit(1)).as("n"))
@@ -1258,18 +1083,13 @@ object DFGraphAlgs {
         .groupBy(col("id")).agg(max(col("c")).as("c"))
         .select(col("id"), (-col("c.neg")).as("nlbl"))
       // __chg: the most-frequent neighbor label differs from the current
-      // one. LPA may oscillate forever (then every round runs, as
-      // before); a pointwise-identical round is still a true fixed point
-      // of the deterministic update — see stillChanging.
-      val (upd, chg, _) = matChanged(
-        lbl.join(best, Seq("id"), "left")
-          .select(col("id"), coalesce(col("nlbl"), col("lbl")).as("lbl"),
-            coalesce(col("nlbl") =!= col("lbl"), lit(false)).as("__chg")))
-      lastRoundsRun.incrementAndGet()
-      changing = chg
-      lbl = upd
+      // one. LPA may oscillate forever (then every round runs); a
+      // pointwise-identical round is still a true fixed point of the
+      // deterministic update.
+      lbl.join(best, Seq("id"), "left")
+        .select(col("id"), coalesce(col("nlbl"), col("lbl")).as("lbl"),
+          coalesce(col("nlbl") =!= col("lbl"), lit(false)).as("__chg"))
     }
-    lbl
   }
 
   /** Fixed-round k-core peel over a SYMMETRIC edge list (src, dst): each
@@ -1280,41 +1100,18 @@ object DFGraphAlgs {
     * oracle unrolls the identical recurrence). Returns the surviving
     * symmetric edges. Each round is one hash aggregation + two semi
     * joins on the vertex key — shuffle-bounded by the shrinking edge
-    * list, nothing global. */
-  def kcore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
-    var e = mat(edges.select(col("src"), col("dst")))
-    // Fixed-point early exit (see [[matChanged]]): the state here is the
-    // edge list itself and rounds only REMOVE rows, so a row count
-    // unchanged from the previous round ⟺ no vertex was peeled ⟹ every
-    // later round is the identity. The count is collected by observe()
-    // on the round's own checkpoint job — no probe job, no upfront
-    // count (a loop already converged at round 1 pays one confirming
-    // round, same as the flag-carrying loops).
-    var prevN = -1L
-    var changing = true
-    lastRoundsRun.set(0)
-    for (_ <- 1 to rounds(e, iters) if changing) {
+    * list, nothing global. Rounds only REMOVE rows, so an unchanged row
+    * count ends the loop (see [[bspRounds]]). */
+  def kcore(edges: DataFrame, k: Int, iters: Int): DataFrame =
+    bspRounds(edges.select(col("src"), col("dst")), iters,
+        sameSizeIsFixedPoint = true) { (e, _) =>
       // Undirected degree = out-degree on the symmetric list.
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("dg"))
         .filter(col("dg") >= k).select(col("src").as("v"))
-      val next = e.join(keep.select(col("v").as("src")), Seq("src"), "left_semi")
+      e.join(keep.select(col("v").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("v").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-      if (planOnly(e)) e = mat(next)
-      else {
-        // Named observe, not Observation() — see matChanged (the helper
-        // instantiates the session's non-serializable ObservationManager).
-        val observed = next.observe("__graft_n", count(lit(1)).as("n"))
-        e = mat(observed)
-        val n = observed.queryExecution.observedMetrics("__graft_n")
-          .getAs[Any]("n").asInstanceOf[Number].longValue
-        changing = n != prevN
-        prevN = n
-      }
-      lastRoundsRun.incrementAndGet()
     }
-    e
-  }
 
   /** Local clustering coefficient per vertex over a CANONICAL undirected
     * edge list (x < y): lcc(v) = 2·tri(v) / (deg(v)·(deg(v)−1)) for

@@ -39,8 +39,8 @@ object DFCache {
     * launch per block (measured ~100-200 ms each under load; the graph
     * caches are re-scanned 3-10× per query). sizedScanView materializes
     * the cache once (its first access — Bench charges that to the warm
-    * pass as before) and coalesces the returned view to
-    * ceil(bytes / spark.graft.bsp.matTargetBytes) partitions. The
+    * pass as before) and coalesces the returned view to ~4 MB
+    * partitions (DFGraphAlgs.sizedScanView). The
     * Repartition node passes the child's stats through, so broadcast
     * planning is unchanged; coalesce is narrow and deterministic, so
     * values are identical. Caches deliberately carry NO key clustering

@@ -899,10 +899,9 @@ object GraphPack {
       // broadcast build per half-step (4 per query) for a scalar the
       // materialization job already saw. Same double, same division,
       // bit-identical scores.
-      def maxOf(df: org.apache.spark.sql.DataFrame, m: String): Column = {
-        val v = df.queryExecution.observedMetrics(m).getAs[Any]("m")
-        if (v == null) lit(null).cast("double") else lit(v.asInstanceOf[Double])
-      }
+      def maxOf(df: org.apache.spark.sql.DataFrame, m: String): Column =
+        DFGraphAlgs.observedNum(df, m, "m").map(v => lit(v.doubleValue))
+          .getOrElse(lit(null).cast("double"))
       for (_ <- 1 to HitsIters) {
         // sizedCheckpoint = localCheckpoint + size-derived coalesce
         // (DFGraphAlgs): each round's |V|-row aggregate is rescanned by

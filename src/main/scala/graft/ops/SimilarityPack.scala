@@ -422,16 +422,6 @@ object SimilarityPack {
     * k-means). Session-cached like the other fitted artifacts. */
   private[graft] def semCells(s: SparkSession, d: String): DataFrame =
     DFCache.cached(s, s"sim.semcells:$d") {
-      // Stage timers (spark.graft.profile=true): the fit is a chain of
-      // eager checkpoints, so wall-clock per stage is directly readable.
-      val prof = s.conf.get("spark.graft.profile", "false").toBoolean
-      def stage[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime()
-        val r = f
-        if (prof) System.err.println(
-          f"[semcells] $tag%-14s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-        r
-      }
       val k = semK(Tables.embeddings(s, d).count())
       val g = semG(k)
       val ranked = Tables.embeddings(s, d)
@@ -451,36 +441,28 @@ object SimilarityPack {
       // don't matter: every small frame is joined under an explicit
       // broadcast() hint. Superseded rounds are freed by ContextCleaner
       // once the var is reassigned (k×dim frames — tiny).
-      val supComps = stage("supComps") {
-        comps(s, d)
-          .join(broadcast(supers), col("vec_id") === col("sid"))
-          .select(col("sid"), col("pos"), col("v").as("sv"))
-          .repartition(1)
-          .localCheckpoint(true)
-      }
+      val supComps = comps(s, d)
+        .join(broadcast(supers), col("vec_id") === col("sid"))
+        .select(col("sid"), col("pos"), col("v").as("sv"))
+        .repartition(1)
+        .localCheckpoint(true)
       val packSup = supComps.groupBy(col("sid"))
         .agg(array_sort(collect_list(struct(col("pos"), col("sv")))).as("ps"))
         .select(col("sid"), expr("transform(ps, x -> x.sv)").as("svec"))
       // The one n·g ranking — materialized once for the whole fit (every
       // Lloyd round and the final assignment probe through it).
-      val vsup = stage("vsup") {
-        vecSupers(s, d, packSup, supComps).localCheckpoint(true)
-      }
-      var cent = stage("seed cent") {
-        comps(s, d)
-          .join(broadcast(seeds), col("vec_id") === col("cid"))
-          .select(col("cid"), col("pos"), col("v").as("cv"))
+      val vsup = vecSupers(s, d, packSup, supComps).localCheckpoint(true)
+      var cent = comps(s, d)
+        .join(broadcast(seeds), col("vec_id") === col("cid"))
+        .select(col("cid"), col("pos"), col("v").as("cv"))
+        .repartition(1)
+        .localCheckpoint(true)
+      for (_ <- 1 to SemIters) {
+        cent = comps(s, d).join(assignCells(s, d, cent, vsup, supComps), "vec_id")
+          .groupBy(col("cid"), col("pos"))
+          .agg((psum(col("v")) / count(lit(1))).as("cv"))
           .repartition(1)
           .localCheckpoint(true)
-      }
-      for (r <- 1 to SemIters) {
-        cent = stage(s"round $r") {
-          comps(s, d).join(assignCells(s, d, cent, vsup, supComps), "vec_id")
-            .groupBy(col("cid"), col("pos"))
-            .agg((psum(col("v")) / count(lit(1))).as("cv"))
-            .repartition(1)
-            .localCheckpoint(true)
-        }
       }
       // The cached ASSIGNMENT is the fitted artifact (unlike
       // kmeansCentroids, whose centroid frame is what consumers join);

@@ -210,6 +210,51 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("composite pageRankByRel loop (struct rel) equals per-relation pageRank, salted too") {
+    // A struct-typed rel cannot be bit-packed into one long id, so this
+    // reaches the composite (rel, id) loop the packed path otherwise
+    // hides — on the default path and under forced full salting.
+    val relEdges = Seq(
+      ("x", 1L, 2L), ("x", 2L, 1L), ("x", 2L, 3L), ("x", 3L, 2L),
+      ("y", 1L, 2L), ("y", 2L, 3L), ("y", 3L, 1L))
+      .toDF("r", "src", "dst").select(struct($"r").as("rel"), $"src", $"dst")
+    def multi(): Map[(String, Long), Double] =
+      DFGraphAlgs.pageRankByRel(relEdges, 4).collect()
+        .map(r => (r.getStruct(0).getString(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val single = Seq("x", "y").flatMap { rel =>
+      DFGraphAlgs.pageRank(relEdges.filter($"rel.r" === rel).select($"src", $"dst"), 4)
+        .collect().map(r => (rel, r.getLong(0)) -> r.getDouble(1))
+    }.toMap
+    assert(multi() == single, "composite loop diverged from per-relation runs")
+    spark.conf.set(DFGraphAlgs.StateBroadcastLimitConf, "0")
+    spark.conf.set(DFGraphAlgs.SaltTargetDegConf, "1")
+    try assert(multi() == single, "salted composite loop diverged")
+    finally {
+      spark.conf.unset(DFGraphAlgs.StateBroadcastLimitConf)
+      spark.conf.unset(DFGraphAlgs.SaltTargetDegConf)
+    }
+  }
+
+  test("a prebuilt contribution frame gives bit-identical pageRank and PPR") {
+    // The query layer session-caches contribFrame and hands it back with
+    // its memoized max out-degree; within the salt budget both loops
+    // must then skip their own fill and still return the self-building
+    // loops' exact doubles. Max out-degree of the micro graph is 3.
+    val contrib = DFGraphAlgs.contribFrame(edgeDF).persist()
+    val seeds = Seq(1L, 4L).toDF("seed")
+    try {
+      def pr(pc: Option[org.apache.spark.sql.DataFrame]) =
+        DFGraphAlgs.pageRank(edgeDF, 5, knownMaxDeg = Some(3L), prebuiltContrib = pc)
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      def ppr(pc: Option[org.apache.spark.sql.DataFrame]) =
+        DFGraphAlgs.personalizedPageRank(edgeDF, seeds, 4, knownMaxDeg = Some(3L),
+            prebuiltContrib = pc)
+          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      assert(pr(Some(contrib)) == pr(None), "prebuilt pageRank diverged")
+      assert(ppr(Some(contrib)) == ppr(None), "prebuilt PPR diverged")
+    } finally contrib.unpersist(false)
+  }
+
   test("hub-salted shuffle rounds give identical distances (single and multi source)") {
     // VERDICT r8 stretch: force the shuffle path (broadcast limit 0) with
     // every key salted (target degree 1, fanout = min(deg, 32)) — the
