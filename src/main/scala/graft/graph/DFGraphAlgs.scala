@@ -6,16 +6,21 @@ import org.apache.spark.sql.functions._
 
 /** DataFrame-native synchronous graph algorithms (fixed-round BSP).
   *
-  * Each round is one co-partitioned shuffle join + aggregation on the
-  * vertex key — the pattern that scales to 1000 executors: the edge list
-  * is materialized once, every round reuses it, and no data ever reaches
-  * the driver. Rank sums go through exact decimals so results are
-  * shuffle-order-independent (see graft.ops.OpsUtil). Semantics match
-  * graft.graph.GraphAlgs (GraphX/Pregel) round for round; GraphSpec
-  * asserts agreement on micro-graphs.
+  * Each round is a join of the state into the edge list plus an
+  * aggregation on the vertex key — the pattern that scales to 1000
+  * executors: every round reuses the same materialized edge list, and no
+  * data ever reaches the driver. Rank sums go through exact decimals so
+  * results are shuffle-order-independent (see graft.ops.OpsUtil).
+  * Semantics match graft.graph.GraphAlgs (GraphX/Pregel) round for
+  * round; GraphSpec asserts agreement on micro-graphs.
   *
   * The loops share one skeleton:
   *
+  *  - [[mat]] materializes the edge list a loop re-scans — once, and
+  *    only when it is not in memory already: an input that is only
+  *    narrow projections / filters / coalesces over a persisted,
+  *    DFCache or checkpointed frame ([[inMemory]]) is used IN PLACE, so
+  *    a serving session's cached edge list is never copied per call.
   *  - [[bspRounds]] drives the eager loops (the relaxation family, PPR,
   *    k-core). Each round's state is materialized by [[matObserved]]:
   *    LOCAL-CHECKPOINTED, so its logical lineage is truncated to an RDD
@@ -31,6 +36,13 @@ import org.apache.spark.sql.functions._
   *    otherwise, hub keys salted when a hub exceeds the budget
   *    ([[SaltTargetDegConf]]). Each algorithm supplies its initial state,
   *    its aggregation and its `__chg` update — nothing else.
+  *  - Single- and multi-source shortest paths share one SPARSE body
+  *    ([[relaxReached]]): the state holds only reached (keys…, id) rows,
+  *    never a |V|-row frame, and each round is ONE shuffle — state rows
+  *    and frontier candidates meet in a single union-aggregate instead
+  *    of an aggregate joined back to the state. PPR's state is sparse
+  *    the same way (nonzero-mass rows only) and its round is one
+  *    aggregation over messages ∪ restart rows.
   *  - The PageRank family shares one contribution fill ([[contribPlan]])
   *    and the global ranks one lazy rank recurrence ([[rankRounds]]),
   *    both keyed by `src`/`id` or `(rel, src)`/`(rel, id)`.
@@ -41,8 +53,10 @@ import org.apache.spark.sql.functions._
   */
 object DFGraphAlgs {
 
-  private def rsum(c: Column): Column =
-    sum(c.cast("decimal(28,15)")).cast("double")
+  /** The exact type rank sums fold in. */
+  private val Dec = "decimal(28,15)"
+
+  private def rsum(c: Column): Column = sum(c.cast(Dec)).cast("double")
 
   /** Conf key opting BSP rounds into RELIABLE checkpoints: set it to
     * "true" AND set a sparkContext checkpoint dir on a fault-tolerant
@@ -161,15 +175,40 @@ object DFGraphAlgs {
     if (kc < n) df.coalesce(kc) else df
   }
 
+  /** Whether `df` already reads materialized data: its plan, with cached
+    * data substituted, is only deterministic Project / Filter /
+    * non-shuffle Repartition nodes over InMemoryRelation (a persisted or
+    * DFCache frame) or checkpointed LogicalRDD leaves (a LogicalRDD over
+    * an RDD that is neither checkpointed nor persisted is a lineage, not
+    * data). Re-scanning such a frame costs a narrow pass over blocks
+    * already held, so [[mat]] uses it in place instead of checkpointing
+    * a copy of it. */
+  private def inMemory(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Repartition}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def narrow(p: LogicalPlan): Boolean = p match {
+      case _: InMemoryRelation => true
+      case r: LogicalRDD =>
+        r.rdd.isCheckpointed || r.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
+      case Project(list, child) => list.forall(_.deterministic) && narrow(child)
+      case Filter(cond, child) => cond.deterministic && narrow(child)
+      case Repartition(_, false, child) => narrow(child)
+      case _ => false
+    }
+    narrow(df.queryExecution.withCachedData)
+  }
+
   /** Materialize a frame and truncate its logical lineage —
     * localCheckpoint by default, reliable checkpoint() when
     * [[ReliableCheckpointConf]] is set and a checkpoint dir exists;
-    * identity under [[PlanOnlyConf]]. Local checkpoints are then
-    * [[sizedCoalesce]]d so per-round scans don't pay task overhead
-    * proportional to the lineage's partition count. */
+    * identity under [[PlanOnlyConf]] and for a frame that is already
+    * [[inMemory]] (a cached edge list is never copied per call). Local
+    * checkpoints are then [[sizedCoalesce]]d so per-round scans don't
+    * pay task overhead proportional to the lineage's partition count. */
   private def mat(df: DataFrame): DataFrame = {
     val s = df.sparkSession
-    if (planOnly(df)) df
+    if (planOnly(df) || inMemory(df)) df
     else {
       val reliable = s.conf.getOption(ReliableCheckpointConf).contains("true") &&
         s.sparkContext.getCheckpointDir.isDefined
@@ -226,9 +265,21 @@ object DFGraphAlgs {
   private[graft] val lastRoundsRun = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** THE round driver. Materializes `init`, then runs up to `iters`
-    * rounds (2 under plan-only): `round(state, small)` builds the next
-    * state, `small` saying whether the current state's row count is
-    * within the broadcast limit, and [[matObserved]] materializes it. The
+    * rounds (2 under plan-only) — see [[roundsFrom]]. Returns the final
+    * state and its last posted row count (−1 when none was posted). */
+  private def bspRounds(init: DataFrame, iters: Int,
+      sameSizeIsFixedPoint: Boolean = false)(
+      round: (DataFrame, Boolean) => DataFrame): (DataFrame, Long) = {
+    val (st, _, n) = matObserved(init)
+    roundsFrom(st, n, iters, sameSizeIsFixedPoint)(round)
+  }
+
+  /** The rounds of [[bspRounds]] from an already materialized state `st`
+    * of `n` rows (a caller that derives more than the loop from its
+    * initial state materializes it once, via [[matObserved]]):
+    * `round(state, small)` builds the next state, `small` saying whether
+    * the current state's row count is within the broadcast limit, and
+    * [[matObserved]] materializes it. The
     * count comes back from each checkpoint and is carried to the next
     * round only when it was posted, so a missing read keeps the last
     * known size; growing states (multi-source SSSP, PPR) thereby re-check
@@ -245,10 +296,10 @@ object DFGraphAlgs {
     * fixtures converge earlier, and at 100 TB each saved round is a full
     * shuffle over the edge list. Loops with neither signal (PPR — damped
     * ranks never reach an exact fixed point) run every round. */
-  private def bspRounds(init: DataFrame, iters: Int,
+  private def roundsFrom(st0: DataFrame, n0: Long, iters: Int,
       sameSizeIsFixedPoint: Boolean = false)(
-      round: (DataFrame, Boolean) => DataFrame): DataFrame = {
-    var (st, _, n) = matObserved(init)
+      round: (DataFrame, Boolean) => DataFrame): (DataFrame, Long) = {
+    var (st, n) = (st0, n0)
     var changing = true
     lastRoundsRun.set(0)
     for (_ <- 1 to rounds(st, iters) if changing) {
@@ -259,7 +310,7 @@ object DFGraphAlgs {
       if (m >= 0) n = m
       lastRoundsRun.incrementAndGet()
     }
-    st
+    (st, n)
   }
 
   /** Vertex-state row count below which per-round state/message frames are
@@ -403,11 +454,11 @@ object DFGraphAlgs {
     * [[frontier]] join and a hint that broadcasts a state-sized frame on
     * the broadcast path; `step` aggregates the frontier and returns the
     * next state carrying its `__chg` flag. `bcast = false` keeps every
-    * round on the shuffle path (LPA). */
+    * round on the shuffle path (LPA). Returns what [[bspRounds]] does. */
   private def relaxRounds(e: DataFrame, init: DataFrame, iters: Int,
       knownMaxDeg: Option[Long], live: Option[Column] = None,
       bcast: Boolean = true)(
-      step: (DataFrame, DataFrame, DataFrame => DataFrame) => DataFrame): DataFrame = {
+      step: (DataFrame, DataFrame, DataFrame => DataFrame) => DataFrame): (DataFrame, Long) = {
     val salt = saltPlan(e, knownMaxDeg = knownMaxDeg)
     bspRounds(init, iters) { (st, fits) =>
       val small = bcast && fits
@@ -620,21 +671,26 @@ object DFGraphAlgs {
     // struct row). Conditions (else the composite loop below): an
     // atomic non-null rel type (the dictionary is a driver-side
     // when-chain — bounded by the multi-view contract, ~44 relations
-    // in the reference), and ids small enough that vertex << bits(rel)
-    // cannot overflow. knownMaxDeg stays a valid upper bound for the
+    // in the reference), and integral ids small enough that
+    // vertex << bits(rel) cannot overflow (packed as longs, decoded back
+    // to the input's id type). knownMaxDeg stays a valid upper bound for the
     // packed graph's hub probe (per-(rel,src) degree ≤ total degree).
     // Skipped under plan-only (the dictionary probe is an action; the
     // inspectable shape is the composite loop's).
     val packed: Option[DataFrame] = if (planOnly(e)) None else {
-      val atomic = {
+      val packable = {
         import org.apache.spark.sql.types._
-        edges.schema("rel").dataType match {
+        val atomicRel = edges.schema("rel").dataType match {
           case _: StructType | _: ArrayType | _: MapType |
                _: UserDefinedType[_] => false
           case _ => true
         }
+        atomicRel && Seq("src", "dst").forall(c => e.schema(c).dataType match {
+          case ByteType | ShortType | IntegerType | LongType => true
+          case _ => false
+        })
       }
-      if (!atomic) None
+      if (!packable) None
       else {
         // ONE probe action over the materialized edge list: the rel
         // dictionary (collect_set — order is irrelevant, the same
@@ -649,9 +705,8 @@ object DFGraphAlgs {
         val rels: Array[Any] = probe.getSeq[Any](0).toArray
         val bits = 64 - java.lang.Long.numberOfLeadingZeros(
           math.max(rels.length - 1, 1).toLong)
-        val maxId = Option(probe.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L)
-        val minId = Option(probe.get(2)).map(_.asInstanceOf[Long]).getOrElse(0L)
-        val nNull = Option(probe.get(3)).map(_.asInstanceOf[Long]).getOrElse(0L)
+        def num(i: Int) = Option(probe.getAs[Number](i)).map(_.longValue).getOrElse(0L)
+        val (maxId, minId, nNull) = (num(1), num(2), num(3))
         if (rels.isEmpty || nNull > 0L || minId < 0L ||
             maxId > (Long.MaxValue >> bits)) None
         else {
@@ -659,7 +714,7 @@ object DFGraphAlgs {
             .foldLeft(when(col("rel") === lit(rels.head), lit(0L))) {
               case (w, (r, i)) => w.when(col("rel") === lit(r), lit(i.toLong))
             }
-          def pack(c: Column) = shiftleft(c, bits).bitwiseOR(col("__ri"))
+          def pack(c: Column) = shiftleft(c.cast("long"), bits).bitwiseOR(col("__ri"))
           val enc = e.withColumn("__ri", relIdx)
             .select(pack(col("src")).as("src"), pack(col("dst")).as("dst"))
           val pr = pageRankLoop(enc, Nil, iters, knownMaxDeg)
@@ -670,7 +725,8 @@ object DFGraphAlgs {
                 w.when(col("id").bitwiseAND(lit(mask)) === lit(i.toLong), lit(r))
             }
           Some(pr.select(relBack.as("rel"),
-            shiftrightunsigned(col("id"), bits).as("id"), col("rank")))
+            shiftrightunsigned(col("id"), bits).cast(vertices(e).schema("id").dataType)
+              .as("id"), col("rank")))
         }
       }
     }
@@ -691,11 +747,14 @@ object DFGraphAlgs {
     * one job, state proportional to touched mass only, one exchange per
     * round on (seed, id).
     *
-    * EAGER rounds through [[bspRounds]] (r14, measured: the "one lazy
+    * EAGER rounds through [[roundsFrom]] (r14, measured: the "one lazy
     * plan" form ran graph_ppr 9.0 s vs 7.5 s eager at sf0.1/32 cores —
-    * PPR state is DENSE per round, so each lazy round stacked two wide
+    * PPR state is DENSE per round, so each lazy round stacked wide
     * exchanges whose AQE re-planning and un-coalesced state cost more
-    * than the eager form's per-round checkpoint).
+    * than the eager form's per-round checkpoint). The edge list is
+    * materialized with [[mat]] (a cached one is read in place) and the
+    * restart rows are a projection of the materialized initial state,
+    * so a call pays no checkpoint job for either.
     * Input: edges (src, dst), seeds (seed). Returns (seed, id, rank). */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
       knownMaxDeg: Option[Long] = None,
@@ -710,43 +769,83 @@ object DFGraphAlgs {
             Seq("src"), None, knownMaxDeg)
           (c, s, true)
       }
-    // The restart rows: (seed, seed, 0.15) — tiny, folded into every
-    // round's re-aggregation via the union (no shuffle contribution).
-    val restart = mat(seeds.select(col("seed"), col("seed").as("id"),
-      lit(0.15).cast("double").as("part")))
+    val (init, _, n) = matObserved(seeds.select(col("seed"), col("seed").as("id"),
+      lit(1.0).cast("double").as("rank")))
+    // The restart rows (seed, seed, r = 0.15): a projection of the
+    // materialized initial state, one row per seed row.
+    val nul = lit(null).cast("double")
+    val restart = init.select(col("seed"), col("id"), nul.as("m"),
+      lit(0.15).cast("double").as("r"))
     val contribSalt = salt.map { case (ns, _) => (ns, contrib) }
-    val rank = bspRounds(seeds.select(col("seed"), col("seed").as("id"),
-        lit(1.0).cast("double").as("rank")), iters) { (rank, small) =>
+    // ONE aggregation per round over messages ∪ restart rows. It folds
+    // the exact decimals the two-step form (Σ messages, then Σ over
+    // {0.85·msum, restart}) folded: each side cast to DECIMAL(28,15), an
+    // absent side 0, one exact decimal add, one cast to double.
+    def dec(c: Column): Column = coalesce(c.cast(Dec), lit(0).cast(Dec))
+    val (rank, _) = roundsFrom(init, n, iters) { (rank, small) =>
       frontier(contrib, contribSalt, rank, small)
-        .select(col("seed"), col("dst").as("id"), (col("rank") / col("deg")).as("m"))
-        .groupBy(col("seed"), col("id")).agg(rsum(col("m")).as("msum"))
-        .select(col("seed"), col("id"), (lit(0.85) * col("msum")).as("part"))
+        .select(col("seed"), col("dst").as("id"), (col("rank") / col("deg")).as("m"),
+          nul.as("r"))
         .union(restart)
-        .groupBy(col("seed"), col("id")).agg(rsum(col("part")).as("rank"))
+        .groupBy(col("seed"), col("id"))
+        .agg(rsum(col("m")).as("msum"), sum(col("r").cast(Dec)).as("rsum"))
+        .select(col("seed"), col("id"),
+          (dec(lit(0.85) * col("msum")) + dec(col("rsum"))).cast("double").as("rank"))
     }
     if (ownContrib) contrib.unpersist(false)
     rank
   }
 
+  /** Min-plus relaxation over the REACHED-SET state (keys…, id, dist) —
+    * only rows with a distance exist — from `init` over the weighted
+    * edge list `e`. One shuffle per round: the state rows (old = dist)
+    * and the frontier's candidates (reach = dist + w) meet in ONE
+    * union-aggregate on (keys…, id), where a min-aggregate followed by a
+    * join back to the state paid a second exchange or broadcast stage.
+    * __chg: a newly reached row or a strictly shorter path; rows never
+    * leave the state, so "no row changed" is the fixed point. Returns
+    * the state and its last posted row count. */
+  private def relaxReached(e: DataFrame, init: DataFrame, keys: Seq[String],
+      iters: Int, knownMaxDeg: Option[Long]): (DataFrame, Long) = {
+    val ks = keys.map(col)
+    val nul = lit(null).cast("double")
+    relaxRounds(e, init, iters, knownMaxDeg) { (dist, frontier, _) =>
+      dist.select(ks ++ Seq(col("id"), col("dist").as("old"), nul.as("reach")): _*)
+        .union(frontier.select(ks ++ Seq(col("dst").as("id"), nul.as("old"),
+          (col("dist") + col("w")).as("reach")): _*))
+        .groupBy(ks :+ col("id"): _*)
+        .agg(min(col("old")).as("old"), min(col("reach")).as("reach"))
+        .select(ks ++ Seq(col("id"), least(col("old"), col("reach")).as("dist"),
+          coalesce(col("reach") < col("old"),
+            col("old").isNull && col("reach").isNotNull).as("__chg")): _*)
+    }
+  }
+
   /** Fixed-round min-plus relaxation over weighted edges (src, dst, w)
     * from one source. Returns (id, dist) with unreached = null.
-    * With w ≡ 1 this is BFS hop count. Ref bfs.py:91-147. */
+    * With w ≡ 1 this is BFS hop count. Ref bfs.py:91-147.
+    *
+    * The rounds run on the reached set ([[relaxReached]]), never a
+    * |V|-row state. The null rows of the unreached vertices are a lazy
+    * anti-join branch of the result: a caller filtering
+    * `dist IS NOT NULL` prunes it at plan time and never pays for it.
+    * The source keeps its own 0.0 row iff it is a vertex — known
+    * without a job when the state grew past that one row (the source
+    * then has an out-edge). */
   def shortestPaths(edges: DataFrame, source: Long, iters: Int,
       knownMaxDeg: Option[Long] = None): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
     val e = weighted(edges)
-    val init = vertices(e).select(col("id"),
-      when(col("id") === source, lit(0.0)).otherwise(lit(null).cast("double")).as("dist"))
-    relaxRounds(e, init, iters, knownMaxDeg, live = Some(col("dist").isNotNull)) {
-      (dist, frontier, hint) =>
-        val relaxed = frontier
-          .groupBy(col("dst").as("id")).agg(min(col("dist") + col("w")).as("reach"))
-        // __chg: this round strictly improved the row (first reach or a
-        // shorter path).
-        dist.join(hint(relaxed), Seq("id"), "left")
-          .select(col("id"), least(col("dist"), col("reach")).as("dist"),
-            coalesce(col("reach") < col("dist"),
-              col("dist").isNull && col("reach").isNotNull).as("__chg"))
-    }
+    val v = vertices(e)
+    val init = Seq(source).toDF("id").select(col("id"), lit(0.0).as("dist"))
+    val (st, n) = relaxReached(e, init, Nil, iters, knownMaxDeg)
+    val isVertex = n > 1 || planOnly(st) ||
+      e.filter(col("src") === source || col("dst") === source).limit(1).count() > 0
+    val reached = (if (isVertex) st else st.filter(col("id") =!= source))
+      .select(col("id").cast(v.schema("id").dataType).as("id"), col("dist"))
+    reached.union(v.join(reached, Seq("id"), "left_anti")
+      .select(col("id"), lit(null).cast("double").as("dist")))
   }
 
   /** Sampled-source Brandes betweenness dependencies (Brandes 2001;
@@ -966,7 +1065,8 @@ object DFGraphAlgs {
     * source, one multi-target Dijkstra per source, process pool). Here
     * the state is the REACHED set of (s0, id, dist) triples — sparse in
     * early rounds and never nodes×sources — and all sources advance in
-    * the same synchronous rounds: one job, no driver loop, no pool.
+    * the same synchronous rounds ([[relaxReached]] keyed (s0, id)): one
+    * job, no driver loop, no pool.
     * Input: weighted edges (src, dst, w). Returns (s0, id, dist). */
   def multiSourceShortestPaths(edges: DataFrame, sources: Seq[Long], iters: Int,
       knownMaxDeg: Option[Long] = None): DataFrame = {
@@ -974,18 +1074,7 @@ object DFGraphAlgs {
     import spark.implicits._
     val init = sources.toDF("s0")
       .select(col("s0"), col("s0").as("id"), lit(0.0).as("dist"))
-    relaxRounds(weighted(edges), init, iters, knownMaxDeg) { (dist, frontier, _) =>
-      val relaxed = frontier
-        .groupBy(col("s0"), col("dst").as("id"))
-        .agg(min(col("dist") + col("w")).as("reach"))
-      // __chg: a newly reached (s0, id) (full-join right side) or a
-      // strictly shorter path. Rows never leave the state, so "no row
-      // changed" ⟹ the multiset is the fixed point.
-      dist.join(relaxed, Seq("s0", "id"), "full")
-        .select(col("s0"), col("id"), least(col("dist"), col("reach")).as("dist"),
-          coalesce(col("reach") < col("dist"),
-            col("dist").isNull && col("reach").isNotNull).as("__chg"))
-    }
+    relaxReached(weighted(edges), init, Seq("s0"), iters, knownMaxDeg)._1
   }
 
   /** Fixed-round SSSP with PREDECESSOR tracking — the path-recovery form
@@ -1022,7 +1111,7 @@ object DFGraphAlgs {
             when(better, col("nd")).otherwise(col("dist")).as("dist"),
             when(better, col("cand_pred")).otherwise(col("pred")).as("pred"),
             coalesce(better, lit(false)).as("__chg"))
-    }
+    }._1
   }
 
   /** Fixed-round min-label propagation connected components over a
@@ -1042,7 +1131,7 @@ object DFGraphAlgs {
       comp.join(hint(better), Seq("id"), "left")
         .select(col("id"), least(col("comp"), col("ncomp")).as("comp"),
           coalesce(col("ncomp") < col("comp"), lit(false)).as("__chg"))
-    }
+    }._1
   }
 
   /** Triangle count over a CANONICAL undirected edge list (x < y, one
@@ -1089,7 +1178,7 @@ object DFGraphAlgs {
       lbl.join(best, Seq("id"), "left")
         .select(col("id"), coalesce(col("nlbl"), col("lbl")).as("lbl"),
           coalesce(col("nlbl") =!= col("lbl"), lit(false)).as("__chg"))
-    }
+    }._1
   }
 
   /** Fixed-round k-core peel over a SYMMETRIC edge list (src, dst): each
@@ -1111,7 +1200,7 @@ object DFGraphAlgs {
       e.join(keep.select(col("v").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("v").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-    }
+    }._1
 
   /** Local clustering coefficient per vertex over a CANONICAL undirected
     * edge list (x < y): lcc(v) = 2·tri(v) / (deg(v)·(deg(v)−1)) for

@@ -195,6 +195,108 @@ class GraphSpec extends SparkSpec {
     assert(got(5L).isEmpty && got(6L).isEmpty)
   }
 
+  private def distMap(df: org.apache.spark.sql.DataFrame): Map[Long, Option[Double]] = {
+    val rows = df.collect()
+    val out = rows.map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
+    assert(out.size == rows.length, "one row per vertex")
+    out
+  }
+
+  test("shortestPaths: a source outside the graph gives every vertex a null row") {
+    val got = distMap(DFGraphAlgs.shortestPaths(edgeDF, 99L, 6))
+    assert(got.keySet == Set(1L, 2L, 3L, 4L, 5L, 6L))
+    assert(got.values.forall(_.isEmpty))
+  }
+
+  test("shortestPaths: a source with in-edges only keeps its own 0.0 row") {
+    val directed = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 2L, 1.0), (3L, 4L, 1.0))
+      .toDF("src", "dst", "w")
+    val got = distMap(DFGraphAlgs.shortestPaths(directed, 4L, 6))
+    assert(got == Map(1L -> None, 2L -> None, 3L -> None, 4L -> Some(0.0)))
+  }
+
+  test("shortestPaths: a dist IS NOT NULL filter prunes the unreached branch at plan time") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Union}
+    def branches(p: LogicalPlan) = (
+      p.collect { case u: Union => u }.size,
+      p.collect { case j: Join if j.joinType == LeftAnti => j }.size)
+    val sp = DFGraphAlgs.shortestPaths(edgeDF, 1L, 6)
+    val (unions, antis) = branches(sp.queryExecution.optimizedPlan)
+    assert(unions > 0 && antis > 0,
+      "the unfiltered result carries the null rows as an anti-join union branch")
+    val reached = sp.filter($"dist".isNotNull)
+    assert(branches(reached.queryExecution.optimizedPlan) == (0, 0),
+      s"the filter must prune the branch:\n${reached.queryExecution.optimizedPlan}")
+    assert(distMap(reached) == Map(1L -> Some(0.0), 2L -> Some(1.0), 3L -> Some(3.0),
+      4L -> Some(4.0)))
+  }
+
+  test("contribFrame over a persisted edge list copies nothing") {
+    // A persisted (or DFCache) edge list is already materialized: the
+    // fill must read it in place, not checkpoint a second copy of it.
+    val p = edgeDF.select($"src", $"dst").persist()
+    try {
+      assert(p.count() == 10L)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val contrib = DFGraphAlgs.contribFrame(p)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        "contribFrame persisted a copy of an in-memory edge list")
+      assert(contrib.count() == 10L)
+    } finally p.unpersist(false)
+  }
+
+  test("pageRankByRel on int ids gives the long-id ranks") {
+    val ints = Seq(("a", 1, 2), ("a", 2, 1), ("b", 2, 3), ("b", 3, 2)).toDF("rel", "src", "dst")
+    val longs = ints.select($"rel", $"src".cast("long").as("src"), $"dst".cast("long").as("dst"))
+    def ranks(df: org.apache.spark.sql.DataFrame) = DFGraphAlgs.pageRankByRel(df, 3)
+      .collect().map(r => (r.getString(0), r.getAs[Number](1).longValue) -> r.getDouble(2)).toMap
+    val got = ranks(ints)
+    assert(got.size == 4)
+    assert(got == ranks(longs))
+    assert(DFGraphAlgs.pageRankByRel(ints, 3).schema("id").dataType ==
+      org.apache.spark.sql.types.IntegerType, "ids come back in the input's type")
+  }
+
+  /** PPR as the two-aggregation round: Σ of messages per (seed, id),
+    * then Σ over {0.85·msum} ∪ the restart rows, both exact
+    * DECIMAL(28,15) sums cast to double — the independent replay the
+    * one-aggregation round must match bit for bit. */
+  private def pprTwoAggregations(edges: org.apache.spark.sql.DataFrame,
+      seeds: org.apache.spark.sql.DataFrame, iters: Int): Map[(Long, Long), Double] = {
+    def rsum(c: org.apache.spark.sql.Column) = sum(c.cast("decimal(28,15)")).cast("double")
+    val e = edges.select($"src", $"dst")
+    val contrib = e.join(e.groupBy($"src").agg(count(lit(1)).as("deg")), "src")
+    val restart = seeds.select($"seed", $"seed".as("id"), lit(0.15).as("part"))
+    var rank = seeds.select($"seed", $"seed".as("id"), lit(1.0).as("rank"))
+    for (_ <- 1 to iters) {
+      rank = contrib.join(rank, contrib("src") === rank("id"))
+        .select($"seed", $"dst".as("id"), ($"rank" / $"deg").as("m"))
+        .groupBy($"seed", $"id").agg(rsum($"m").as("msum"))
+        .select($"seed", $"id", (lit(0.85) * $"msum").as("part"))
+        .union(restart)
+        .groupBy($"seed", $"id").agg(rsum($"part").as("rank"))
+        .localCheckpoint()
+    }
+    rank.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+  }
+
+  test("personalizedPageRank equals the two-aggregation round bit for bit") {
+    val seeds = Seq(1L, 3L, 4L, 5L).toDF("seed")
+    val want = pprTwoAggregations(edgeDF, seeds, 4)
+    def got() = DFGraphAlgs.personalizedPageRank(edgeDF, seeds, 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(want.size > seeds.count())
+    assert(got() === want)
+    spark.conf.set(DFGraphAlgs.StateBroadcastLimitConf, "0")
+    spark.conf.set(DFGraphAlgs.SaltTargetDegConf, "1")
+    try assert(got() === want, "salted shuffle rounds diverged")
+    finally {
+      spark.conf.unset(DFGraphAlgs.StateBroadcastLimitConf)
+      spark.conf.unset(DFGraphAlgs.SaltTargetDegConf)
+    }
+  }
+
   test("composite-key pageRankByRel equals per-relation pageRank runs") {
     val relEdges = Seq(
       ("x", 1L, 2L), ("x", 2L, 1L), ("x", 2L, 3L), ("x", 3L, 2L),
