@@ -1,8 +1,12 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, Decimal, DoubleType, IntegerType,
+  LongType, ShortType, StructField, StructType}
 
 /** DataFrame-native synchronous graph algorithms (fixed-round BSP).
   *
@@ -46,6 +50,21 @@ import org.apache.spark.sql.functions._
   *  - The PageRank family shares one contribution fill ([[contribPlan]])
   *    and the global ranks one lazy rank recurrence ([[rankRounds]]),
   *    both keyed by `src`/`id` or `(rel, src)`/`(rel, id)`.
+  *
+  * The serving-time calls, [[shortestPaths]] and [[personalizedPageRank]],
+  * have a second configuration of the same rounds: the ONE-TASK path
+  * ([[oneTask]]). When the edge list, once per source (per seed-row
+  * estimate for PPR), fits `spark.sql.autoBroadcastJoinThreshold` — the
+  * rule Spark itself uses to ship a relation whole — outside plan-only
+  * mode and with integral ids, the edge list (and the seeds) move into one
+  * partition and a single `mapPartitions` task runs every round over a
+  * dense vertex index and a CSR adjacency: one Spark job per request
+  * instead of one checkpoint job per round. The result is a lazy frame
+  * with the BSP result's rows, bits and schema (GraphSpec runs every value
+  * case on both paths); above the threshold, under plan-only and with
+  * `spark.sql.autoBroadcastJoinThreshold=-1` the BSP loop runs.
+  * No data reaches the driver on either path: the task runs on an
+  * executor.
   *
   * localCheckpoint is executor-local (fine on local[*] and for
   * driver-session lifetimes); [[ReliableCheckpointConf]] switches to
@@ -466,9 +485,12 @@ object DFGraphAlgs {
     }
   }
 
-  /** The weighted edge list (src, dst, w), w null → 1, materialized. */
-  private def weighted(edges: DataFrame): DataFrame =
-    mat(edges.select(col("src"), col("dst"), coalesce(col("w"), lit(1.0)).as("w")))
+  /** The weighted edge list (src, dst, w), w null → 1. */
+  private def weightedCols(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), coalesce(col("w"), lit(1.0)).as("w"))
+
+  /** [[weightedCols]], materialized. */
+  private def weighted(edges: DataFrame): DataFrame = mat(weightedCols(edges))
 
   /** Distinct endpoints (prefix…, id) of an edge list (prefix…, src, dst). */
   private def vertices(e: DataFrame, prefix: Seq[String] = Nil): DataFrame = {
@@ -685,10 +707,7 @@ object DFGraphAlgs {
                _: UserDefinedType[_] => false
           case _ => true
         }
-        atomicRel && Seq("src", "dst").forall(c => e.schema(c).dataType match {
-          case ByteType | ShortType | IntegerType | LongType => true
-          case _ => false
-        })
+        atomicRel && Seq("src", "dst").forall(c => integral(e.schema(c).dataType))
       }
       if (!packable) None
       else {
@@ -754,46 +773,57 @@ object DFGraphAlgs {
     * than the eager form's per-round checkpoint). The edge list is
     * materialized with [[mat]] (a cached one is read in place) and the
     * restart rows are a projection of the materialized initial state,
-    * so a call pays no checkpoint job for either.
+    * so a call pays no checkpoint job for either. A serving-sized call
+    * runs all rounds in one task instead ([[oneTask]]).
     * Input: edges (src, dst), seeds (seed). Returns (seed, id, rank). */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
       knownMaxDeg: Option[Long] = None,
       prebuiltContrib: Option[DataFrame] = None): DataFrame = {
-    // With a usable prebuilt contribution frame (see usableContrib) the
-    // edge list is never touched: no per-query checkpoint, no fill.
-    val (contrib, salt, ownContrib) =
-      usableContrib(edges, knownMaxDeg, prebuiltContrib) match {
-        case Some(pc) => (pc, None, false)
-        case None =>
-          val (c, s) = contribPlan(mat(edges.select(col("src"), col("dst"))),
-            Seq("src"), None, knownMaxDeg)
-          (c, s, true)
-      }
-    val (init, _, n) = matObserved(seeds.select(col("seed"), col("seed").as("id"),
-      lit(1.0).cast("double").as("rank")))
-    // The restart rows (seed, seed, r = 0.15): a projection of the
-    // materialized initial state, one row per seed row.
+    val init0 = seeds.select(col("seed"), col("seed").as("id"),
+      lit(1.0).cast("double").as("rank"))
+    val ids = Seq(edges.schema("src"), edges.schema("dst"), seeds.schema("seed"))
+    if (oneTask(edges, ids.map(_.dataType))(rowEstimate(seeds)))
+      oneTaskPpr(edges, seeds, init0, iters)
+    else {
+      // With a usable prebuilt contribution frame (see usableContrib) the
+      // edge list is never touched: no per-query checkpoint, no fill.
+      val (contrib, salt, ownContrib) =
+        usableContrib(edges, knownMaxDeg, prebuiltContrib) match {
+          case Some(pc) => (pc, None, false)
+          case None =>
+            val (c, s) = contribPlan(mat(edges.select(col("src"), col("dst"))),
+              Seq("src"), None, knownMaxDeg)
+            (c, s, true)
+        }
+      val (init, _, n) = matObserved(init0)
+      val contribSalt = salt.map { case (ns, _) => (ns, contrib) }
+      val (rank, _) = roundsFrom(init, n, iters)(pprRound(contrib, contribSalt, init))
+      if (ownContrib) contrib.unpersist(false)
+      rank
+    }
+  }
+
+  /** One PPR round from the state `rank` over the contribution frame
+    * (src, dst, deg): ONE aggregation over messages ∪ the restart rows
+    * (seed, seed, r = 0.15) — a projection of the initial state `init`,
+    * one row per seed row. It folds the exact decimals the two-step form
+    * (Σ messages, then Σ over {0.85·msum, restart}) folded: each side
+    * cast to DECIMAL(28,15), an absent side 0, one exact decimal add, one
+    * cast to double. */
+  private def pprRound(contrib: DataFrame, salt: Option[(DataFrame, DataFrame)],
+      init: DataFrame)(rank: DataFrame, small: Boolean): DataFrame = {
     val nul = lit(null).cast("double")
     val restart = init.select(col("seed"), col("id"), nul.as("m"),
       lit(0.15).cast("double").as("r"))
-    val contribSalt = salt.map { case (ns, _) => (ns, contrib) }
-    // ONE aggregation per round over messages ∪ restart rows. It folds
-    // the exact decimals the two-step form (Σ messages, then Σ over
-    // {0.85·msum, restart}) folded: each side cast to DECIMAL(28,15), an
-    // absent side 0, one exact decimal add, one cast to double.
     def dec(c: Column): Column = coalesce(c.cast(Dec), lit(0).cast(Dec))
-    val (rank, _) = roundsFrom(init, n, iters) { (rank, small) =>
-      frontier(contrib, contribSalt, rank, small)
-        .select(col("seed"), col("dst").as("id"), (col("rank") / col("deg")).as("m"),
-          nul.as("r"))
-        .union(restart)
-        .groupBy(col("seed"), col("id"))
-        .agg(rsum(col("m")).as("msum"), sum(col("r").cast(Dec)).as("rsum"))
-        .select(col("seed"), col("id"),
-          (dec(lit(0.85) * col("msum")) + dec(col("rsum"))).cast("double").as("rank"))
-    }
-    if (ownContrib) contrib.unpersist(false)
-    rank
+    frontier(contrib, salt, rank, small)
+      .select(col("seed"), col("dst").as("id"), (col("rank") / col("deg")).as("m"),
+        nul.as("r"))
+      .union(restart)
+      .groupBy(col("seed"), col("id"))
+      .agg(rsum(col("m")).as("msum"), sum(col("r").cast(Dec)).as("rsum"))
+      .select(col("seed"), col("id"),
+        (dec(lit(0.85) * col("msum")) + dec(col("rsum"))).cast("double").as("rank"))
   }
 
   /** Min-plus relaxation over the REACHED-SET state (keys…, id, dist) —
@@ -831,21 +861,248 @@ object DFGraphAlgs {
     * `dist IS NOT NULL` prunes it at plan time and never pays for it.
     * The source keeps its own 0.0 row iff it is a vertex — known
     * without a job when the state grew past that one row (the source
-    * then has an out-edge). */
+    * then has an out-edge). A serving-sized call runs all rounds in one
+    * task instead ([[oneTask]]). */
   def shortestPaths(edges: DataFrame, source: Long, iters: Int,
       knownMaxDeg: Option[Long] = None): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = weighted(edges)
-    val v = vertices(e)
-    val init = Seq(source).toDF("id").select(col("id"), lit(0.0).as("dist"))
-    val (st, n) = relaxReached(e, init, Nil, iters, knownMaxDeg)
-    val isVertex = n > 1 || planOnly(st) ||
-      e.filter(col("src") === source || col("dst") === source).limit(1).count() > 0
-    val reached = (if (isVertex) st else st.filter(col("id") =!= source))
-      .select(col("id").cast(v.schema("id").dataType).as("id"), col("dist"))
-    reached.union(v.join(reached, Seq("id"), "left_anti")
-      .select(col("id"), lit(null).cast("double").as("dist")))
+    val w = weightedCols(edges)
+    if (w.schema("w").dataType == DoubleType &&
+        oneTask(edges, Seq(w.schema("src").dataType, w.schema("dst").dataType))(1))
+      oneTaskShortestPaths(w, source, iters)
+    else {
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val e = mat(w)
+      val v = vertices(e)
+      val init = Seq(source).toDF("id").select(col("id"), lit(0.0).as("dist"))
+      val (st, n) = relaxReached(e, init, Nil, iters, knownMaxDeg)
+      val isVertex = n > 1 || planOnly(st) ||
+        e.filter(col("src") === source || col("dst") === source).limit(1).count() > 0
+      val reached = (if (isVertex) st else st.filter(col("id") =!= source))
+        .select(col("id").cast(v.schema("id").dataType).as("id"), col("dist"))
+      reached.union(v.join(reached, Seq("id"), "left_anti")
+        .select(col("id"), lit(null).cast("double").as("dist")))
+    }
+  }
+
+  // ---- The one-task path (see the header) ----
+
+  private def integral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** Whether a call runs on the one-task path: outside plan-only mode,
+    * with integral `ids`, when `sources` copies of the edge list's
+    * optimized-plan size estimate fit spark.sql.autoBroadcastJoinThreshold
+    * (−1 turns the path off). `sources` is only evaluated when the other
+    * tests pass. */
+  private def oneTask(edges: DataFrame, ids: Seq[DataType])(sources: => BigInt): Boolean =
+    !planOnly(edges) && ids.forall(integral) &&
+      sources * edges.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+
+  /** A frame's plan-stats row estimate: its row count, else bytes / 8. */
+  private def rowEstimate(df: DataFrame): BigInt = {
+    val st = df.queryExecution.optimizedPlan.stats
+    st.rowCount.getOrElse(st.sizeInBytes / 8)
+  }
+
+  /** `df` in one partition: a narrow coalesce over data already in
+    * memory ([[inMemory]]), a one-partition shuffle over a lineage. */
+  private def onePartition(df: DataFrame, narrow: Boolean): DataFrame =
+    if (narrow) df.coalesce(1) else df.repartition(1)
+
+  /** [[shortestPaths]] as one task over the weighted edge list `w`. The
+    * schema is the BSP result's: the vertex id column, a nullable dist. */
+  private def oneTaskShortestPaths(w: DataFrame, source: Long, iters: Int): DataFrame = {
+    val schema = StructType(Seq(vertices(w).schema("id"), StructField("dist", DoubleType)))
+    val idType = schema("id").dataType
+    val in = w.select(col("src").cast("long"), col("dst").cast("long"), col("w"))
+    onePartition(in, inMemory(in))
+      .mapPartitions(ssspTask(_, source, iters, idType))(Encoders.row(schema))
+  }
+
+  /** [[personalizedPageRank]] as one task over the edge list and the seed
+    * rows, tagged into one frame (t = 0: an edge (a, b); t = 1: a seed a).
+    * The schema is the BSP result's — one round's over `init0`, or
+    * `init0`'s without rounds — read off the lazy plan (analysis only). */
+  private def oneTaskPpr(edges: DataFrame, seeds: DataFrame, init0: DataFrame,
+      iters: Int): DataFrame = {
+    val schema = if (iters < 1) init0.schema else pprRound(
+      edges.select(col("src"), col("dst"), lit(1L).as("deg")), None, init0)(init0, false).schema
+    val (seedType, idType) = (schema("seed").dataType, schema("id").dataType)
+    val e = edges.select(lit(0).as("t"), col("src").cast("long").as("a"),
+      col("dst").cast("long").as("b"))
+    val s = seeds.select(lit(1).as("t"), col("seed").cast("long").as("a"),
+      lit(null).cast("long").as("b"))
+    onePartition(e.union(s), inMemory(e))
+      .mapPartitions(pprTask(_, iters, seedType, idType))(Encoders.row(schema))
+  }
+
+  /** A one-task call's graph. Ids map to dense slots 0..n−1 in first-seen
+    * order; a null id gets a slot of its own (a null endpoint or seed is
+    * a vertex of the BSP's frames too, one no join key ever matches).
+    * [[seal]] lays the edges out in CSR form: the out-edges of slot u are
+    * the positions [[out]](u) of `dst` and `w`. */
+  private final class TaskGraph {
+    private val slots = new mutable.LongMap[Int]
+    private val ids = mutable.ArrayBuffer.empty[Long]
+    private var nullSlot = -1
+    private val (es, ed, ew) =
+      (mutable.ArrayBuilder.make[Int], mutable.ArrayBuilder.make[Int],
+        mutable.ArrayBuilder.make[Double])
+    private var off: Array[Int] = _
+    var dst: Array[Int] = _
+    var w: Array[Double] = _
+
+    def n: Int = ids.length
+
+    /** The slot of column `i` of `r` (a long, or null). */
+    def slot(r: Row, i: Int): Int =
+      if (r.isNullAt(i)) {
+        if (nullSlot < 0) { nullSlot = n; ids += 0L }
+        nullSlot
+      } else {
+        val id = r.getLong(i)
+        slots.getOrElseUpdate(id, { ids += id; n - 1 })
+      }
+
+    /** The slot of a non-null id, −1 when it is not a vertex. */
+    def find(id: Long): Int = slots.getOrElse(id, -1)
+
+    def isNull(u: Int): Boolean = u == nullSlot
+
+    /** Slot `u`'s id as a value of the integral type `t`. */
+    def id(u: Int, t: DataType): Any =
+      if (isNull(u)) null
+      else t match {
+        case ByteType => ids(u).toByte
+        case ShortType => ids(u).toShort
+        case IntegerType => ids(u).toInt
+        case _ => ids(u)
+      }
+
+    /** An edge from a non-null source (a null source never joins a state row). */
+    def edge(s: Int, d: Int, wt: Double): Unit = { es += s; ed += d; ew += wt }
+
+    def seal(): Unit = {
+      val (s, d, wt) = (es.result(), ed.result(), ew.result())
+      off = new Array[Int](n + 1)
+      s.foreach(u => off(u + 1) += 1)
+      for (u <- 1 to n) off(u) += off(u - 1)
+      val fill = off.clone()
+      dst = new Array[Int](s.length)
+      w = new Array[Double](s.length)
+      for (i <- s.indices) {
+        val p = fill(s(i))
+        fill(s(i)) += 1
+        dst(p) = d(i)
+        w(p) = wt(i)
+      }
+    }
+
+    def out(u: Int): Range = off(u) until off(u + 1)
+  }
+
+  /** [[shortestPaths]]'s rounds over (src, dst, w) rows: the synchronous
+    * min-plus rounds of [[relaxReached]] in Spark's double order (NaN
+    * greatest) — each round relaxes the out-edges of the rows the last
+    * round changed from their values before the round, a row changes when
+    * it is newly reached or strictly shorter — up to `iters` rounds or the
+    * first round that changes nothing. Rows: every reached vertex with its
+    * distance (the source only if it is a vertex), then every other vertex
+    * with a null — and the null vertex with a null always, as the BSP's
+    * anti-join never matches a null key. */
+  private def ssspTask(rows: Iterator[Row], source: Long, iters: Int,
+      idType: DataType): Iterator[Row] = {
+    val g = new TaskGraph
+    rows.foreach { r =>
+      val (s, d) = (g.slot(r, 0), g.slot(r, 1))
+      if (!r.isNullAt(0)) g.edge(s, d, r.getDouble(2))
+    }
+    g.seal()
+    val dist = new Array[Double](g.n)
+    val seen = new Array[Boolean](g.n)
+    val s0 = g.find(source)
+    if (s0 >= 0) {
+      seen(s0) = true
+      val stamp = Array.fill(g.n)(-1)
+      var frontier = Array(s0)
+      var k = 0
+      while (k < iters && frontier.nonEmpty) {
+        val from = frontier.map(dist(_))
+        val changed = mutable.ArrayBuffer.empty[Int]
+        for (i <- frontier.indices; e <- g.out(frontier(i))) {
+          val (t, c) = (g.dst(e), from(i) + g.w(e))
+          if (!seen(t) || SQLOrderingUtil.compareDoubles(c, dist(t)) < 0) {
+            seen(t) = true
+            dist(t) = c
+            if (stamp(t) != k) { stamp(t) = k; changed += t }
+          }
+        }
+        frontier = changed.toArray
+        k += 1
+      }
+    }
+    (0 until g.n).iterator.filter(seen(_)).map(u => Row(g.id(u, idType), dist(u))) ++
+      (0 until g.n).iterator.filter(u => !seen(u) || g.isNull(u))
+        .map(u => Row(g.id(u, idType), null))
+  }
+
+  /** CAST(x AS DECIMAL(28,15)) through the class Spark's Cast uses. */
+  private def dec15(x: Double): Decimal = {
+    val d = Decimal(x)
+    if (!d.changePrecision(28, 15)) throw new ArithmeticException(s"$x overflows $Dec")
+    d
+  }
+
+  /** [[personalizedPageRank]]'s rounds over the tagged rows of
+    * [[oneTaskPpr]]. A (seed, id) key never mixes two seeds, so each
+    * distinct seed runs its own rounds; a seed listed k times has k
+    * initial and k restart rows, as in the BSP. A round is the BSP round
+    * on Spark's own Decimal: a row exists iff a message or a restart
+    * arrived, and rank = double(D(0.85 · double(Σ D(m))) + Σ D(0.15)),
+    * D = [[dec15]], an absent side left out. */
+  private def pprTask(rows: Iterator[Row], iters: Int, seedType: DataType,
+      idType: DataType): Iterator[Row] = {
+    val g = new TaskGraph
+    val mult = mutable.LinkedHashMap.empty[Int, Int]
+    rows.foreach { r =>
+      if (r.getInt(0) == 1) {
+        val s = g.slot(r, 1)
+        mult(s) = mult.getOrElse(s, 0) + 1
+      } else {
+        val (s, d) = (g.slot(r, 1), g.slot(r, 2))
+        if (!r.isNullAt(1)) g.edge(s, d, 0.0)
+      }
+    }
+    g.seal()
+    val acc = new Array[Decimal](g.n)
+    mult.iterator.flatMap { case (s, k) =>
+      val restart = Iterator.fill(k)(dec15(0.15)).reduce(_ + _)
+      var ids = Array.fill(k)(s)
+      var ranks = Array.fill(k)(1.0)
+      for (_ <- 1 to iters) {
+        val hit = mutable.ArrayBuffer(s)
+        for (j <- ids.indices; deg = g.out(ids(j)).size if deg > 0) {
+          val m = dec15(ranks(j) / deg)
+          for (e <- g.out(ids(j))) {
+            val t = g.dst(e)
+            if (acc(t) == null) { acc(t) = m; if (t != s) hit += t }
+            else acc(t) = acc(t) + m
+          }
+        }
+        ranks = hit.map { t =>
+          val msg = Option(acc(t)).map(a => dec15(0.85 * a.toDouble))
+          (msg ++ Option.when(t == s)(restart)).reduce(_ + _).toDouble
+        }.toArray
+        hit.foreach(acc(_) = null)
+        ids = hit.toArray
+      }
+      val seed = g.id(s, seedType)
+      ids.iterator.zip(ranks.iterator).map { case (t, r) => Row(seed, g.id(t, idType), r) }
+    }
   }
 
   /** Sampled-source Brandes betweenness dependencies (Brandes 2001;

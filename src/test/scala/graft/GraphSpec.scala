@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
 import org.apache.spark.sql.functions._
 import graft.graph.{DFGraphAlgs, GraphAlgs}
 
@@ -22,6 +25,42 @@ class GraphSpec extends SparkSpec {
     fwd.union(fwd.select($"dst".as("src"), $"src".as("dst"), $"w"))
   }
 
+  /** Spark's ship-it-whole limit; -1 turns the one-task path of
+    * shortestPaths / personalizedPageRank off (see DFGraphAlgs). */
+  private val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** `body` with the one-task path off: the BSP loop runs. */
+  private def onBsp[T](body: => T): T = {
+    val before = spark.conf.getOption(BroadcastThreshold)
+    spark.conf.set(BroadcastThreshold, "-1")
+    try body
+    finally before.fold(spark.conf.unset(BroadcastThreshold))(spark.conf.set(BroadcastThreshold, _))
+  }
+
+  private def oneTaskPlan(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst { case m: MapPartitions => m }.isDefined
+
+  /** The rows of `df` as a multiset, doubles by their bits. */
+  private def bag(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => ("double", java.lang.Double.doubleToLongBits(d))
+      case x => x
+    }).groupBy(identity).map { case (k, v) => k -> v.size }
+
+  /** `run` on the default path, which takes the one-task path on these
+    * micro graphs, and on the BSP loop: the same schema and the same rows,
+    * double for double. Returns the default path's frame. */
+  private def bothPaths(run: => DataFrame): DataFrame = {
+    val one = run
+    onBsp {
+      val bsp = run
+      assert(oneTaskPlan(one) && !oneTaskPlan(bsp), "expected one one-task and one BSP plan")
+      assert(one.schema == bsp.schema, s"schema ${one.schema} != BSP ${bsp.schema}")
+      assert(bag(one) == bag(bsp), "the one-task rows differ from the BSP rows")
+    }
+    one
+  }
+
   test("fixed-point early exit: converged loops stop early and return the full-iters result") {
     // Path 1-2-3-4 (diameter 3): every monotone loop reaches its fixed
     // point within ≤ 4 rounds, so a 40-round request must (a) return the
@@ -41,10 +80,12 @@ class GraphSpec extends SparkSpec {
     assert(DFGraphAlgs.lastRoundsRun.get() <= 5,
       s"CC ran ${DFGraphAlgs.lastRoundsRun.get()} of 40 rounds")
 
-    val sp6 = m(DFGraphAlgs.shortestPaths(sym, 1L, 6))
-    val sp40 = m(DFGraphAlgs.shortestPaths(sym, 1L, 40))
-    assert(sp40 === sp6)
-    assert(DFGraphAlgs.lastRoundsRun.get() <= 5)
+    onBsp {
+      val sp6 = m(DFGraphAlgs.shortestPaths(sym, 1L, 6))
+      val sp40 = m(DFGraphAlgs.shortestPaths(sym, 1L, 40))
+      assert(sp40 === sp6)
+      assert(DFGraphAlgs.lastRoundsRun.get() <= 5)
+    }
 
     val ms = m(DFGraphAlgs.multiSourceShortestPaths(sym, Seq(1L, 4L), 40))
     assert(ms === m(DFGraphAlgs.multiSourceShortestPaths(sym, Seq(1L, 4L), 6)))
@@ -172,6 +213,7 @@ class GraphSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set(DFGraphAlgs.ReliableCheckpointConf, "true")
+    spark.conf.set(BroadcastThreshold, "-1")
     try {
       val got = DFGraphAlgs.shortestPaths(edgeDF, 1L, 3)
         .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double]))
@@ -180,11 +222,14 @@ class GraphSpec extends SparkSpec {
       assert(new java.io.File(dir).listFiles != null &&
         new java.io.File(dir).listFiles.nonEmpty,
         "reliable checkpoint must write to the checkpoint dir")
-    } finally spark.conf.unset(DFGraphAlgs.ReliableCheckpointConf)
+    } finally {
+      spark.conf.unset(DFGraphAlgs.ReliableCheckpointConf)
+      spark.conf.unset(BroadcastThreshold)
+    }
   }
 
   test("shortestPaths: hand-computed weighted distances from vertex 1") {
-    val got = DFGraphAlgs.shortestPaths(edgeDF, 1L, 6)
+    val got = bothPaths(DFGraphAlgs.shortestPaths(edgeDF, 1L, 6))
       .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double]))
       .toMap
     // 1->2 = 1; 1->3 = min(4, 1+2) = 3; 1->4 = 3+1 = 4; 5,6 unreachable
@@ -203,7 +248,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("shortestPaths: a source outside the graph gives every vertex a null row") {
-    val got = distMap(DFGraphAlgs.shortestPaths(edgeDF, 99L, 6))
+    val got = distMap(bothPaths(DFGraphAlgs.shortestPaths(edgeDF, 99L, 6)))
     assert(got.keySet == Set(1L, 2L, 3L, 4L, 5L, 6L))
     assert(got.values.forall(_.isEmpty))
   }
@@ -211,7 +256,7 @@ class GraphSpec extends SparkSpec {
   test("shortestPaths: a source with in-edges only keeps its own 0.0 row") {
     val directed = Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (3L, 2L, 1.0), (3L, 4L, 1.0))
       .toDF("src", "dst", "w")
-    val got = distMap(DFGraphAlgs.shortestPaths(directed, 4L, 6))
+    val got = distMap(bothPaths(DFGraphAlgs.shortestPaths(directed, 4L, 6)))
     assert(got == Map(1L -> None, 2L -> None, 3L -> None, 4L -> Some(0.0)))
   }
 
@@ -221,15 +266,17 @@ class GraphSpec extends SparkSpec {
     def branches(p: LogicalPlan) = (
       p.collect { case u: Union => u }.size,
       p.collect { case j: Join if j.joinType == LeftAnti => j }.size)
-    val sp = DFGraphAlgs.shortestPaths(edgeDF, 1L, 6)
-    val (unions, antis) = branches(sp.queryExecution.optimizedPlan)
-    assert(unions > 0 && antis > 0,
-      "the unfiltered result carries the null rows as an anti-join union branch")
-    val reached = sp.filter($"dist".isNotNull)
-    assert(branches(reached.queryExecution.optimizedPlan) == (0, 0),
-      s"the filter must prune the branch:\n${reached.queryExecution.optimizedPlan}")
-    assert(distMap(reached) == Map(1L -> Some(0.0), 2L -> Some(1.0), 3L -> Some(3.0),
-      4L -> Some(4.0)))
+    onBsp {
+      val sp = DFGraphAlgs.shortestPaths(edgeDF, 1L, 6)
+      val (unions, antis) = branches(sp.queryExecution.optimizedPlan)
+      assert(unions > 0 && antis > 0,
+        "the unfiltered result carries the null rows as an anti-join union branch")
+      val reached = sp.filter($"dist".isNotNull)
+      assert(branches(reached.queryExecution.optimizedPlan) == (0, 0),
+        s"the filter must prune the branch:\n${reached.queryExecution.optimizedPlan}")
+      assert(distMap(reached) == Map(1L -> Some(0.0), 2L -> Some(1.0), 3L -> Some(3.0),
+        4L -> Some(4.0)))
+    }
   }
 
   test("contribFrame over a persisted edge list copies nothing") {
@@ -278,23 +325,128 @@ class GraphSpec extends SparkSpec {
         .groupBy($"seed", $"id").agg(rsum($"part").as("rank"))
         .localCheckpoint()
     }
-    rank.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    rank.collect().map(r =>
+      (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue) -> r.getDouble(2)).toMap
   }
 
   test("personalizedPageRank equals the two-aggregation round bit for bit") {
     val seeds = Seq(1L, 3L, 4L, 5L).toDF("seed")
     val want = pprTwoAggregations(edgeDF, seeds, 4)
-    def got() = DFGraphAlgs.personalizedPageRank(edgeDF, seeds, 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    def ranks(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    def got() = ranks(DFGraphAlgs.personalizedPageRank(edgeDF, seeds, 4))
     assert(want.size > seeds.count())
-    assert(got() === want)
+    assert(ranks(bothPaths(DFGraphAlgs.personalizedPageRank(edgeDF, seeds, 4))) === want)
     spark.conf.set(DFGraphAlgs.StateBroadcastLimitConf, "0")
     spark.conf.set(DFGraphAlgs.SaltTargetDegConf, "1")
+    spark.conf.set(BroadcastThreshold, "-1")
     try assert(got() === want, "salted shuffle rounds diverged")
     finally {
       spark.conf.unset(DFGraphAlgs.StateBroadcastLimitConf)
       spark.conf.unset(DFGraphAlgs.SaltTargetDegConf)
+      spark.conf.unset(BroadcastThreshold)
     }
+  }
+
+  test("personalizedPageRank: duplicated, outside and in-edge-only seeds on int ids") {
+    // Directed int-id graph: 4 has in-edges only, 99 is not a vertex, and
+    // seed 1 is listed twice (once through a frame derived from the edge
+    // list itself) — two initial and two restart rows, as in the oracle.
+    val e = Seq((1, 2), (2, 3), (3, 1), (1, 3), (3, 4), (2, 4)).toDF("src", "dst")
+    val seeds = e.filter($"src" === 1).select($"src".as("seed")).limit(1)
+      .union(Seq(1, 3, 4, 99).toDF("seed"))
+    val want = pprTwoAggregations(e, seeds, 4)
+    val got = bothPaths(DFGraphAlgs.personalizedPageRank(e, seeds, 4))
+    assert(got.schema.map(_.dataType) == Seq(org.apache.spark.sql.types.IntegerType,
+      org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.DoubleType))
+    assert(got.collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong) -> r.getDouble(2))
+      .toMap == want)
+    assert(want((99L, 99L)) == 0.15 && want.keySet.count(_._1 == 99L) == 1)
+  }
+
+  test("shortestPaths: null, infinite and NaN weights and int ids agree on both paths") {
+    // Round 1 reaches 2 at 1.0 (a null weight is 1) and 3 at NaN. Spark
+    // orders NaN above every number, so round 2's 3.0 via 2 replaces it;
+    // 4 gets ∞ via 2 in round 2, then 4.0 via 3 in round 3. 5 is only
+    // reached through a NaN weight; 6 at ∞ and 7 at ∞ + −∞ = NaN; 5→1 at
+    // −∞ offers 1 a NaN, which never beats its 0.0; 8, 9 are unreachable.
+    val w = Seq[(Int, Int, java.lang.Double)]((1, 2, null), (1, 3, Double.NaN),
+      (2, 3, 2.0), (2, 4, Double.PositiveInfinity), (3, 4, 1.0), (4, 5, Double.NaN),
+      (5, 1, Double.NegativeInfinity), (4, 6, Double.PositiveInfinity),
+      (6, 7, Double.NegativeInfinity), (8, 9, 1.0))
+      .toDF("src", "dst", "w")
+    val got = bothPaths(DFGraphAlgs.shortestPaths(w, 1L, 6))
+    assert(got.schema("id").dataType == org.apache.spark.sql.types.IntegerType)
+    val d = got.collect().map(r => r.getInt(0) -> Option(r.get(1)).map(_.asInstanceOf[Double]))
+      .toMap
+    assert(d(1).contains(0.0) && d(2).contains(1.0) && d(3).contains(3.0) && d(4).contains(4.0))
+    assert(d(5).exists(_.isNaN) && d(6).contains(Double.PositiveInfinity) && d(7).exists(_.isNaN))
+    assert(d(8).isEmpty && d(9).isEmpty)
+    // Zero rounds: the source's own row and null rows, on both paths.
+    assert(bothPaths(DFGraphAlgs.shortestPaths(w, 1L, 0)).filter($"dist".isNotNull)
+      .count() == 1L)
+  }
+
+  test("null ids and zero rounds agree on both paths") {
+    // A null endpoint is a vertex no join key matches: reached through
+    // 2→null it gets a distance row AND a null row (the anti-join never
+    // matches a null); a null seed keeps only its restart mass.
+    val e = Seq[(java.lang.Long, java.lang.Long, Double)]((1L, 2L, 1.0), (2L, null, 1.0),
+      (null, 3L, 1.0), (2L, 3L, 2.0)).toDF("src", "dst", "w")
+    val sp = bothPaths(DFGraphAlgs.shortestPaths(e, 1L, 6)).collect().toSeq
+      .map(r => (Option(r.get(0)), Option(r.get(1))))
+    assert(sp.count(_ == ((None, Some(2.0)))) == 1 && sp.count(_ == ((None, None))) == 1)
+    val seeds = Seq[java.lang.Long](1L, null, 1L).toDF("seed")
+    val ppr = bothPaths(DFGraphAlgs.personalizedPageRank(e, seeds, 3)).collect()
+    assert(ppr.exists(r => r.isNullAt(0) && r.isNullAt(1) && r.getDouble(2) == 0.15))
+    assert(ppr.exists(r => !r.isNullAt(0) && r.isNullAt(1)), "a message reaches the null id")
+    assert(bothPaths(DFGraphAlgs.personalizedPageRank(e, seeds, 0)).count() == 3L)
+  }
+
+  /** Spark jobs `body` starts, counted by a listener under a job group of
+    * its own. A marker job in a second group follows: listener events
+    * arrive in order, so once its start is seen every job of `body` is. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-job-count-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == group) jobs.incrementAndGet()
+          else if (g == s"$group-marker") marked.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a serving-sized path or PPR call over a persisted edge list is one Spark job") {
+    val p = edgeDF.persist()
+    try {
+      assert(p.count() == 10L)
+      val seed = spark.range(1).select(lit(1L).as("seed"))
+      def path(): Unit = DFGraphAlgs.shortestPaths(p, 1L, 6).filter($"dist".isNotNull)
+        .orderBy($"dist", $"id").limit(20).collect()
+      def ppr(): Unit = DFGraphAlgs.personalizedPageRank(p, seed, 4).collect()
+      assert(jobsOf(path()) == 1)
+      assert(jobsOf(ppr()) == 1)
+      onBsp {
+        assert(jobsOf(path()) > 1)
+        assert(jobsOf(ppr()) > 1)
+      }
+    } finally p.unpersist(false)
   }
 
   test("composite-key pageRankByRel equals per-relation pageRank runs") {
@@ -344,6 +496,7 @@ class GraphSpec extends SparkSpec {
     // loops' exact doubles. Max out-degree of the micro graph is 3.
     val contrib = DFGraphAlgs.contribFrame(edgeDF).persist()
     val seeds = Seq(1L, 4L).toDF("seed")
+    spark.conf.set(BroadcastThreshold, "-1")
     try {
       def pr(pc: Option[org.apache.spark.sql.DataFrame]) =
         DFGraphAlgs.pageRank(edgeDF, 5, knownMaxDeg = Some(3L), prebuiltContrib = pc)
@@ -354,7 +507,10 @@ class GraphSpec extends SparkSpec {
           .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
       assert(pr(Some(contrib)) == pr(None), "prebuilt pageRank diverged")
       assert(ppr(Some(contrib)) == ppr(None), "prebuilt PPR diverged")
-    } finally contrib.unpersist(false)
+    } finally {
+      contrib.unpersist(false)
+      spark.conf.unset(BroadcastThreshold)
+    }
   }
 
   test("hub-salted shuffle rounds give identical distances (single and multi source)") {
@@ -369,6 +525,7 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     spark.conf.set(DFGraphAlgs.StateBroadcastLimitConf, "0")
     spark.conf.set(DFGraphAlgs.SaltTargetDegConf, "1")
+    spark.conf.set(BroadcastThreshold, "-1")
     try {
       val salted = DFGraphAlgs.shortestPaths(edgeDF, 1L, 6)
         .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double]))
@@ -380,6 +537,7 @@ class GraphSpec extends SparkSpec {
     } finally {
       spark.conf.unset(DFGraphAlgs.StateBroadcastLimitConf)
       spark.conf.unset(DFGraphAlgs.SaltTargetDegConf)
+      spark.conf.unset(BroadcastThreshold)
     }
   }
 
@@ -434,10 +592,12 @@ class GraphSpec extends SparkSpec {
     val base = all()
     spark.conf.set(DFGraphAlgs.StateBroadcastLimitConf, "0")
     spark.conf.set(DFGraphAlgs.SaltTargetDegConf, "1")
+    spark.conf.set(BroadcastThreshold, "-1")
     try assert(all() === base)
     finally {
       spark.conf.unset(DFGraphAlgs.StateBroadcastLimitConf)
       spark.conf.unset(DFGraphAlgs.SaltTargetDegConf)
+      spark.conf.unset(BroadcastThreshold)
     }
   }
 
@@ -446,7 +606,7 @@ class GraphSpec extends SparkSpec {
     val multi = DFGraphAlgs.multiSourceShortestPaths(edgeDF, sources, 6)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     sources.foreach { s0 =>
-      val single = DFGraphAlgs.shortestPaths(edgeDF, s0, 6)
+      val single = bothPaths(DFGraphAlgs.shortestPaths(edgeDF, s0, 6))
         .filter($"dist".isNotNull)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val mine = multi.collect { case ((s, id), dd) if s == s0 => id -> dd }.toMap
@@ -455,7 +615,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("BFS hops: w=1 shortestPaths gives hop counts") {
-    val got = DFGraphAlgs.shortestPaths(edgeDF.withColumn("w", lit(1.0)), 1L, 6)
+    val got = bothPaths(DFGraphAlgs.shortestPaths(edgeDF.withColumn("w", lit(1.0)), 1L, 6))
       .filter($"dist".isNotNull)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got == Map(1L -> 0.0, 2L -> 1.0, 3L -> 1.0, 4L -> 2.0))
@@ -480,7 +640,7 @@ class GraphSpec extends SparkSpec {
     val g = GraphAlgs.fromEdgeDF(edgeDF)
     val gx = GraphAlgs.sssp(g, 1L, 6).filter(_._2 < Double.PositiveInfinity)
       .collect().toMap
-    val df = DFGraphAlgs.shortestPaths(edgeDF, 1L, 6).filter($"dist".isNotNull)
+    val df = bothPaths(DFGraphAlgs.shortestPaths(edgeDF, 1L, 6)).filter($"dist".isNotNull)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(gx == df)
   }
@@ -497,7 +657,7 @@ class GraphSpec extends SparkSpec {
   test("GraphX BFS agrees with DataFrame hop counts") {
     val g = GraphAlgs.fromEdgeDF(edgeDF)
     val gx = GraphAlgs.bfs(g, 1L, 6).collect().toMap
-    val df = DFGraphAlgs.shortestPaths(edgeDF.withColumn("w", lit(1.0)), 1L, 6)
+    val df = bothPaths(DFGraphAlgs.shortestPaths(edgeDF.withColumn("w", lit(1.0)), 1L, 6))
       .filter($"dist".isNotNull)
       .collect().map(r => r.getLong(0) -> r.getDouble(1).toInt).toMap
     assert(gx == df)
@@ -602,7 +762,7 @@ class GraphSpec extends SparkSpec {
     val e = path.toDF("src", "dst")
     val sym = e.union(e.select($"dst".as("src"), $"src".as("dst")))
     val seeds = Seq(1L, 4L).toDF("seed")
-    val r = DFGraphAlgs.personalizedPageRank(sym, seeds, 4)
+    val r = bothPaths(DFGraphAlgs.personalizedPageRank(sym, seeds, 4))
       .collect().map(x => ((x.getLong(0), x.getLong(1)), x.getDouble(2))).toMap
     assert(math.abs(r((1L, 2L)) - r((4L, 3L))) < 1e-12, "mirror symmetry broken")
     assert(math.abs(r((1L, 1L)) - r((4L, 4L))) < 1e-12)
