@@ -66,24 +66,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // bounded O(k·n) form instead of the full O(n²) DP (see
     // BoundedLevenshteinRule).
     ext.injectOptimizerRule(_ => BoundedLevenshteinRule)
-    // Optimizer rule: an edit-distance θ-join with no equi-key becomes a
-    // segment-signature equi-join — banded prefilter + exact verify (see
-    // LevenshteinJoinRule). Runs after the bound rewrite in the same
+    // Optimizer rule: a thresholded fuzzy θ-join (edit distance,
+    // Jaro-Winkler, WRatio) with no equi-key becomes a sound
+    // candidate-key equi-join with the predicate as exact verify (see
+    // FuzzyJoinRule). Runs after the bound rewrite in the same
     // fixed-point batch, so it only needs to match the bounded form.
-    ext.injectOptimizerRule(_ => LevenshteinJoinRule)
-    // Optimizer rule: a thresholded Jaro-Winkler θ-join gains a sound
-    // geometric length-bucket equi-key (content signatures are unsound
-    // for JW — see JaroWinklerJoinRule's analysis).
-    ext.injectOptimizerRule(_ => JaroWinklerJoinRule)
-    // Optimizer rule: a thresholded WRatio θ-join above the partial-leg
-    // ceiling (t > 90) gains the same length-scale equi-key — the
-    // dispatch's own damping is what makes it sound (see WRatioJoinRule).
-    ext.injectOptimizerRule(_ => WRatioJoinRule)
-    // Optimizer rule: thresholded WRatio θ-joins AT OR BELOW the 90
-    // ceiling — the reference's cutoff-60 regime — become an exact
-    // bucket-join ∪ PassJoin-segment-join union when the condition also
-    // carries literal length caps on both operands (see
-    // WRatioCapJoinRule's soundness derivation).
-    ext.injectOptimizerRule(_ => WRatioCapJoinRule)
+    ext.injectOptimizerRule(_ => FuzzyJoinRule)
   }
 }

@@ -5,15 +5,17 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.types._
 
-/** Shared machinery of the geometric LENGTH-SCALE bucket rewrites
-  * ([[JaroWinklerJoinRule]], [[WRatioJoinRule]]): when a thresholded
-  * similarity predicate implies `min(|a|,|b|) ≥ α·max(|a|,|b|)`, a
-  * qualifying pair's geometric length buckets (base 1/α) differ by at
-  * most 1 (±2 carried for floating-point slop at boundaries), so the
-  * θ-join becomes: explode the left side into its 5 candidate buckets
-  * (constant fanout, distinct values) and equi-join on the bucket,
-  * keeping the original predicate as the exact verify — never worse
-  * than the nested loop it replaces.
+/** Shared machinery of [[FuzzyJoinRule]]'s geometric LENGTH-SCALE
+  * bucket rewrites (Jaro-Winkler, WRatio above 90, and the bucket-near
+  * branch of [[WRatioCapJoin]]): when a thresholded similarity predicate
+  * implies `min(|a|,|b|) ≥ α·max(|a|,|b|)`, a qualifying pair's
+  * geometric length buckets (base 1/α) differ by at most 1 (±2 carried
+  * for floating-point slop at boundaries), so the θ-join becomes:
+  * explode the left side into its 5 candidate buckets (constant fanout,
+  * distinct values) and equi-join on the bucket, keeping the original
+  * predicate as the exact verify — never worse than the nested loop it
+  * replaces. On a fixed-length corpus every row lands in one bucket and
+  * the join degenerates to the scan it replaced, with fanout 5.
   */
 private[ext] object LengthScaleRewrite {
 
@@ -40,20 +42,16 @@ private[ext] object LengthScaleRewrite {
     * as an equi-conjunct, `pred` stays as the exact verify. Returns
     * None when α is non-positive or degenerate (caller keeps the
     * original join). */
-  def rewrite(j: Join, left: LogicalPlan, right: LogicalPlan,
-      a: Expression, b: Expression, alpha: Double,
-      pred: Expression, conjuncts: Seq[Expression],
-      attrName: String): Option[LogicalPlan] = {
+  def rewrite(s: FuzzySite, alpha: Double, attrName: String): Option[LogicalPlan] = {
     if (alpha <= 0.0 || math.log(1.0 / alpha) < MinLogAlpha) None
     else {
-      val residual = conjuncts.filterNot(_ eq pred)
       val bk = AttributeReference(attrName, LongType, nullable = false)()
-      val cands = (-2 to 2).map(d => Add(bucket(a, alpha), Literal(d.toLong)))
+      val cands = (-2 to 2).map(d => Add(bucket(s.a, alpha), Literal(d.toLong)))
       val leftG = Generate(Explode(CreateArray(cands)),
-        Nil, outer = false, None, Seq(bk), left)
+        Nil, outer = false, None, Seq(bk), s.left)
       val newCond = (Seq(
-        EqualTo(bk, bucket(b, alpha)), pred) ++ residual).reduce(And)
-      Some(Project(j.output, Join(leftG, right, Inner, Some(newCond), JoinHint.NONE)))
+        EqualTo(bk, bucket(s.b, alpha)), s.pred) ++ s.residual).reduce(And)
+      Some(Project(s.j.output, Join(leftG, s.right, Inner, Some(newCond), JoinHint.NONE)))
     }
   }
 }

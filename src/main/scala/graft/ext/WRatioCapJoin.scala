@@ -1,28 +1,24 @@
 package graft.ext
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
+import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
-import graft.functions.WRatio
 
-/** Optimizer rule: thresholded WRatio θ-joins AT OR BELOW the 90.0
-  * partial-leg ceiling — the reference's actual operating regime
-  * (fuzzy_search.py:57 scores WRatio at cutoff 60) — become an EXACT
-  * two-branch candidate union when the join condition also carries
-  * literal length caps on both operands:
+/** The capped WRatio family of [[FuzzyJoinRule]]: thresholded WRatio
+  * θ-joins AT OR BELOW the 90.0 partial-leg ceiling — the reference's
+  * actual operating regime (fuzzy_search.py:57 scores WRatio at cutoff
+  * 60) — become an EXACT two-branch candidate union when the join
+  * condition also carries literal length caps on both operands:
   *
   *   A join B on wratio(a, b) >= t AND length(a) <= La AND length(b) <= Lb
   *
-  * [[WRatioJoinRule]] (t > 90) relies on the dispatch damping alone;
-  * below the ceiling a 0.9-damped partial window reaches t on an
-  * unbounded length ratio, so no single length-scale key is sound. The
-  * length caps are what that rule's scaladoc documented as the
-  * extension path: they bound the partial-leg window count, and the
-  * PassJoin-style pigeonhole machinery applies. The rewrite decomposes
-  * the join into two DISJOINT branches whose union is the exact join:
+  * The family above 90 relies on the dispatch damping alone; below the
+  * ceiling a 0.9-damped partial window reaches t on an unbounded length
+  * ratio, so no single length-scale key is sound. The length caps bound
+  * the partial-leg window count, and the PassJoin-style pigeonhole
+  * machinery applies. The rewrite decomposes the join into two DISJOINT
+  * branches whose union is the exact join:
   *
   * BRANCH 1 — bucket-near pairs (|Δbucket| ≤ 2 under the geometric
   * length buckets of [[LengthScaleRewrite]], α = t/100). All pairs
@@ -72,21 +68,14 @@ import graft.functions.WRatio
   * can replay the same construction without cross-engine float-boundary
   * risk.
   *
-  * DECLINES (and leaves the nested loop) when: t outside (45, 90]
-  * (above → [[WRatioJoinRule]]'s regime; below 45 the segments shrink
-  * toward 2-grams and the candidate join degenerates), either cap is
-  * missing or beyond 512, or the slot budget (pMax > 16) would blow up
-  * the static expression tree. Fires only on the native [[WRatio]]
-  * node; disable with `spark.graft.wratiocapjoin.enabled=false`.
+  * Fires for t ∈ (45, 90] (above → the length-bucket family; below 45
+  * the segments shrink toward 2-grams and the candidate join
+  * degenerates). DECLINES (and leaves the nested loop) when either cap
+  * is missing or beyond 512, or the slot budget (pMax > 16) would blow
+  * up the static expression tree.
   */
-object WRatioCapJoinRule extends Rule[LogicalPlan] with PredicateHelper {
+private[ext] object WRatioCapJoin extends PredicateHelper {
 
-  private def enabled: Boolean =
-    SQLConf.get.getConfString("spark.graft.wratiocapjoin.enabled", "true").toBoolean
-
-  /** Fire range: (TLo, THi]. THi hands off to [[WRatioJoinRule]]. */
-  private val TLo = 45.0
-  private val THi = 90.0
   /** Static-slot budget per form (segments per row ≤ 2·PMaxBudget). */
   private val PMaxBudget = 16
   /** Largest accepted length cap — beyond this the lo-side substring
@@ -95,19 +84,6 @@ object WRatioCapJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
   /** A predicate possibly bounding the (alias-resolved) operand `x`. */
   private case class CapWitness(cond: Expression, x: Expression)
-
-  private case class Trigger(a: Expression, b: Expression, t: Double, pred: Expression)
-  private def trigger(e: Expression): Option[Trigger] = e match {
-    case p @ GreaterThanOrEqual(WRatio(a, b), Literal(t: Double, DoubleType)) =>
-      Some(Trigger(a, b, t, p))
-    case p @ GreaterThan(WRatio(a, b), Literal(t: Double, DoubleType)) =>
-      Some(Trigger(a, b, t, p))
-    case p @ LessThanOrEqual(Literal(t: Double, DoubleType), WRatio(a, b)) =>
-      Some(Trigger(a, b, t, p))
-    case p @ LessThan(Literal(t: Double, DoubleType), WRatio(a, b)) =>
-      Some(Trigger(a, b, t, p))
-    case _ => None
-  }
 
   private def litInt(e: Expression): Option[Int] = e match {
     case Literal(v: Int, IntegerType) => Some(v)
@@ -139,18 +115,6 @@ object WRatioCapJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     case LessThanOrEqual(l, r) if isLenOf(r, x) => litInt(l)
     case LessThan(l, r) if isLenOf(r, x)        => litInt(l).map(_ + 1)
     case _ => None
-  }
-
-  private def sideEqui(c: Expression, left: LogicalPlan, right: LogicalPlan): Boolean = {
-    def split(l: Expression, r: Expression): Boolean =
-      l.references.nonEmpty && r.references.nonEmpty &&
-        ((canEvaluate(l, left) && canEvaluate(r, right)) ||
-          (canEvaluate(l, right) && canEvaluate(r, left)))
-    c match {
-      case EqualTo(l, r)       => split(l, r)
-      case EqualNullSafe(l, r) => split(l, r)
-      case _                   => false
-    }
   }
 
   // ---- expression builders (all constructed resolved; no analyzer) ----
@@ -224,77 +188,47 @@ object WRatioCapJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     ArrayDistinct(Concat(perLen))
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
-    plan.transform {
-      case j @ Join(left, right, jt, Some(cond), _) if jt == Inner || jt == Cross =>
-        rewriteJoin(j, left, right, cond).getOrElse(j)
-    }
-  }
-
-  private def rewriteJoin(j: Join, left: LogicalPlan, right: LogicalPlan,
-      cond: Expression): Option[LogicalPlan] = {
-    val conjuncts = splitConjunctivePredicates(cond)
-    if (conjuncts.exists(sideEqui(_, left, right))) return None
-    val trig = conjuncts.iterator.flatMap { c =>
-      trigger(c).flatMap { t =>
-        val oriented =
-          if (canEvaluate(t.a, left) && canEvaluate(t.b, right)) Some((t.a, t.b))
-          else if (canEvaluate(t.b, left) && canEvaluate(t.a, right)) Some((t.b, t.a))
-          else None
-        oriented.collect {
-          case (a, b) if t.t > TLo && t.t <= THi &&
-              a.deterministic && b.deterministic &&
-              a.dataType == StringType && b.dataType == StringType =>
-            (a, b, t.t, c)
+  def rewrite(s: FuzzySite, t: Double): Option[LogicalPlan] = {
+    // The caps are usually NOT in the join condition by the time this
+    // rule runs: they are single-side predicates, so
+    // PushDownPredicates has already moved them into the children.
+    // Harvest bounds from the remaining conjuncts AND from each
+    // side's Filter nodes (where they are GUARANTEES — every row
+    // below already satisfies them).
+    // Walk Project/Filter chains, rewriting the tracked operand
+    // through Project aliases so a cap below a rename still matches.
+    def harvest(plan: LogicalPlan, x: Expression): Seq[CapWitness] = plan match {
+      case Project(projList, child) =>
+        val m = projList.collect {
+          case al: Alias => al.toAttribute.exprId -> al.child
+        }.toMap
+        val x2 = x.transformUp {
+          case ar: AttributeReference if m.contains(ar.exprId) => m(ar.exprId)
         }
-      }
-    }.nextOption()
-    trig.flatMap { case (a, b, t, pred) =>
-      // The caps are usually NOT in the join condition by the time this
-      // rule runs: they are single-side predicates, so
-      // PushDownPredicates has already moved them into the children.
-      // Harvest bounds from the remaining conjuncts AND from each
-      // side's Filter nodes (where they are GUARANTEES — every row
-      // below already satisfies them).
-      // Walk Project/Filter chains, rewriting the tracked operand
-      // through Project aliases so a cap below a rename still matches.
-      def harvest(plan: LogicalPlan, x: Expression): Seq[CapWitness] = plan match {
-        case Project(projList, child) =>
-          val m = projList.collect {
-            case al: Alias => al.toAttribute.exprId -> al.child
-          }.toMap
-          val x2 = x.transformUp {
-            case ar: AttributeReference if m.contains(ar.exprId) => m(ar.exprId)
-          }
-          harvest(child, x2)
-        case Filter(fc, child) =>
-          splitConjunctivePredicates(fc).map(CapWitness(_, x)) ++ harvest(child, x)
-        case _ => Nil
-      }
-      def bounds(side: LogicalPlan, x: Expression): (Option[Int], Int) = {
-        val cs = conjuncts.map(CapWitness(_, x)) ++ harvest(side, x)
-        (cs.flatMap(w => capOn(w.cond, w.x)).reduceOption(_ min _),
-          math.max(1, cs.flatMap(w => minOn(w.cond, w.x)).reduceOption(_ max _)
-            .getOrElse(1)))
-      }
-      val (sideA, sideB) =
-        if (canEvaluate(a, left)) (left, right) else (right, left)
-      val (capA, minA) = bounds(sideA, a)
-      val (capB, minB) = bounds(sideB, b)
-      (capA, capB) match {
-        case (Some(la), Some(lb))
-            if la >= 1 && lb >= 1 && la <= MaxCap && lb <= MaxCap =>
-          build(j, left, right, a, b, t, pred, conjuncts, la, lb, minA, minB)
-        case _ => None
-      }
+        harvest(child, x2)
+      case Filter(fc, child) =>
+        splitConjunctivePredicates(fc).map(CapWitness(_, x)) ++ harvest(child, x)
+      case _ => Nil
+    }
+    def bounds(side: LogicalPlan, x: Expression): (Option[Int], Int) = {
+      val cs = s.conjuncts.map(CapWitness(_, x)) ++ harvest(side, x)
+      (cs.flatMap(w => capOn(w.cond, w.x)).reduceOption(_ min _),
+        math.max(1, cs.flatMap(w => minOn(w.cond, w.x)).reduceOption(_ max _)
+          .getOrElse(1)))
+    }
+    val (capA, minA) = bounds(s.left, s.a)
+    val (capB, minB) = bounds(s.right, s.b)
+    (capA, capB) match {
+      case (Some(la), Some(lb))
+          if la >= 1 && lb >= 1 && la <= MaxCap && lb <= MaxCap =>
+        build(s, t, la, lb, minA, minB)
+      case _ => None
     }
   }
 
-  private def build(j: Join, left: LogicalPlan, right: LogicalPlan,
-      a: Expression, b: Expression, t: Double, pred: Expression,
-      conjuncts: Seq[Expression], la: Int, lb: Int,
+  private def build(s: FuzzySite, t: Double, la: Int, lb: Int,
       minA: Int, minB: Int): Option[LogicalPlan] = {
+    import s.{a, b, pred}
     val alpha = t / 100.0
     // Loosest window bound across the partial legs (0.9·0.95 = 0.855
     // damping; the ≥8× 0.6 scale demands a HIGHER window score, so it
@@ -309,8 +243,8 @@ object WRatioCapJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     if (math.max(pMaxL, pMaxR) > PMaxBudget) return None
 
     // Branch 1: the shared bucket equi-join (exact verify = pred).
-    val b1 = LengthScaleRewrite.rewrite(j, left, right, a, b, alpha,
-      pred, conjuncts, "__graft_wrbk").getOrElse(return None)
+    val b1 = LengthScaleRewrite.rewrite(s, alpha, "__graft_wrbk")
+      .getOrElse(return None)
 
     val bkA = LengthScaleRewrite.bucket(a, alpha)
     val bkB = LengthScaleRewrite.bucket(b, alpha)
@@ -321,7 +255,7 @@ object WRatioCapJoinRule extends Rule[LogicalPlan] with PredicateHelper {
         if (shOnLeft) (a, b, lshL, minA, pMaxL) else (b, a, lshR, minB, pMaxR)
       if (lsh < 1 || lshMin > lsh || pMax < 1) return None
       val lens = segLengths(lshMin, lsh, c)
-      val (shPlan, loPlan) = if (shOnLeft) (left, right) else (right, left)
+      val (shPlan, loPlan) = if (shOnLeft) (s.left, s.right) else (s.right, s.left)
 
       // sh side: project the token-sorted form once, then posexplode
       // the 2·pMax static candidate slots (null = slot beyond this
@@ -377,14 +311,13 @@ object WRatioCapJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
       val direction = LessThanOrEqual(
         Multiply(Literal(3), Length(sh)), Multiply(Literal(2), Length(lo)))
-      val residual = conjuncts.filterNot(_ eq pred)
       val cond2 = (Seq(
         EqualTo(segAttr, subAttr),
         direction, far,
         EqualTo(posAttr, firstMatch),
-        pred) ++ residual).reduce(And)
+        pred) ++ s.residual).reduce(And)
       val (l2, r2) = if (shOnLeft) (shGen, loGen) else (loGen, shGen)
-      Some(Project(j.output, Join(l2, r2, Inner, Some(cond2), JoinHint.NONE)))
+      Some(Project(s.j.output, Join(l2, r2, Inner, Some(cond2), JoinHint.NONE)))
     }
 
     val branches = Seq(Some(b1), branch2(shOnLeft = true),

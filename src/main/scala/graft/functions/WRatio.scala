@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Being ONE Catalyst node is what makes the θ-join rewrite possible:
   * `A join B on wratio(a,b) >= t` is a matchable predicate for
-  * [[graft.ext.WRatioJoinRule]], where the composed Column spelling is
+  * [[graft.ext.FuzzyJoinRule]], where the composed Column spelling is
   * an anonymous expression tree no rule can recognize. All string
   * operations run on UTF8String (Spark's own levenshtein / substring /
   * regex-split routines), so scores agree with the Column form on any

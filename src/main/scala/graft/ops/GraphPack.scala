@@ -23,9 +23,9 @@ import TextHash.{h28, h28Sql}
   * Iterative algorithms run a FIXED number of synchronous rounds as pure
   * DataFrame join+agg programs — the driver-facing, oracle-checkable
   * form; the oracle SQL is generated by unrolling the same recurrence
-  * into chained CTEs. graft.graph.GraphAlgs holds the GraphX/Pregel
-  * equivalents (same semantics, RDD execution); the ScalaTest suite
-  * asserts both agree on micro-graphs.
+  * into chained CTEs. The test suite's GraphX/Pregel twins
+  * (graft.graph.GraphAlgs, test scope) assert the same semantics on
+  * micro-graphs.
   *
   * Scale notes: the edge list is built once per query, deduplicated, and
   * persisted across rounds; every round shuffles on the vertex id only
@@ -443,7 +443,7 @@ object GraphPack {
     // G8 — fixed-iteration PageRank: r0 = 1; r_{k+1} = 0.15 + 0.85 *
     // Σ_in r_k(src)/outdeg(src), 5 synchronous rounds
     // (ref data_processor.py:56-78, damping 0.85). DFGraphAlgs holds the
-    // BSP loop; GraphAlgs is the GraphX/Pregel twin.
+    // BSP loop; GraphSpec checks it against a GraphX/Pregel twin.
     "graph_pagerank" -> ((s, d) => {
       DFGraphAlgs.pageRank(edges(s, d), PrIters, hubBound(s, d),
         prebuiltContrib = Some(prContrib(s, d)))

@@ -177,7 +177,7 @@ object SearchPack {
 
     // The auto-derived form of the blocked sim-join: the query spells the
     // NATURAL theta-join — no hand blocking — and graft.ext
-    // .LevenshteinJoinRule rewrites it into a signature equi-join
+    // .FuzzyJoinRule rewrites it into a signature equi-join
     // (k=1: deletion-neighborhood signatures — skew-proof on this
     // corpus's shared "customer#" prefix, where positional segments
     // collapse to one hot key; k>=2: PassJoin segments), then verifies
@@ -198,7 +198,7 @@ object SearchPack {
     // a SHORT query over the threshold against a longer text). The
     // query spells the natural θ-join of interior 12-grams (probes)
     // against the short-document corpus; the length bounds on both
-    // sides are what let graft.ext.WRatioCapJoinRule decompose it into
+    // sides are what let graft.ext.FuzzyJoinRule decompose it into
     // the exact bucket-join ∪ PassJoin-segment-join union instead of a
     // nested loop. Every hit rides a partial leg (probe 12 chars vs
     // texts ≥ 19 — bucket-far), so the segment branch does the work:

@@ -1,13 +1,42 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The SparkSessionExtensions surface: injected functions and the
+/** The SparkSessionExtensions surface: injected functions, the
   * bounded-levenshtein optimizer rule (predicate rewritten to the
-  * short-circuiting 3-arg form, results unchanged).
+  * short-circuiting 3-arg form, results unchanged) and the fuzzy θ-join
+  * rule (results equal to the nested loop it replaces).
   */
 class ExtensionsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Nested-loop ground truth: `collect(q)` with graft.ext.FuzzyJoinRule
+    * appended to `spark.sql.optimizer.excludedRules`. The excluded plan
+    * must carry no `__graft_` attribute and must hold a nested-loop join
+    * — a misspelt rule name would otherwise compare the rule with
+    * itself. */
+  private def groundTruth[T](q: => DataFrame)(collect: DataFrame => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, (prev.toSeq :+ "graft.ext.FuzzyJoinRule").mkString(","))
+    try {
+      val df = q
+      val optimized = df.queryExecution.optimizedPlan.toString
+      assert(!optimized.contains("__graft_"),
+        s"excluded rule still rewrote the join:\n$optimized")
+      val phys = df.queryExecution.sparkPlan.toString
+      assert(phys.contains("BroadcastNestedLoopJoin") || phys.contains("CartesianProduct"),
+        s"ground truth is not a nested-loop join:\n$phys")
+      collect(df)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  private def pairSeq(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
   private val names = Seq(
     (1L, "customer#01"), (2L, "customer#02"), (3L, "customer#11"),
@@ -94,15 +123,12 @@ class ExtensionsSpec extends SparkSpec {
     assert(!phys.contains("BroadcastNestedLoopJoin") &&
       !phys.contains("CartesianProduct"),
       s"still a nested-loop join:\n$phys")
-    // forced segment strategy produces the positional-segment shape
-    spark.conf.set("spark.graft.levjoin.strategy", "segment")
-    try {
-      val seg = a.join(b, col("i") < col("j") &&
-          levenshtein(col("na"), col("nb")) <= 1)
-        .queryExecution.optimizedPlan.toString
-      assert(seg.contains("__graft_lseg"),
-        s"strategy=segment ignored:\n$seg")
-    } finally spark.conf.unset("spark.graft.levjoin.strategy")
+    // k=2 takes the positional-segment (PassJoin) shape
+    val seg = a.join(b, col("i") < col("j") &&
+        levenshtein(col("na"), col("nb")) <= 2)
+      .queryExecution.optimizedPlan.toString
+    assert(seg.contains("__graft_lseg"),
+      s"k=2 should use positional segments:\n$seg")
   }
 
   test("signature rewrite keeps exact results and multiplicity") {
@@ -111,14 +137,11 @@ class ExtensionsSpec extends SparkSpec {
     val withDup = names.union(Seq((6L, "customer#02")).toDF("id", "nm"))
     val a = withDup.select(col("id").as("i"), col("nm").as("na"))
     val b = withDup.select(col("id").as("j"), col("nm").as("nb"))
-    def run(): Seq[(Long, Long)] = a.join(b, col("i") < col("j") &&
+    def q() = a.join(b, col("i") < col("j") &&
         levenshtein(col("na"), col("nb")) <= 1)
-      .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1)))
-      .toSeq.sorted
-    val viaRule = run()
-    spark.conf.set("spark.graft.levjoin.enabled", "false")
-    val ground = try run() finally
-      spark.conf.set("spark.graft.levjoin.enabled", "true")
+      .select("i", "j")
+    val viaRule = pairSeq(q())
+    val ground = groundTruth(q())(pairSeq)
     assert(viaRule == ground, s"rule changed results:\n$viaRule\nvs\n$ground")
     assert(viaRule.size == viaRule.distinct.size, "duplicate pairs emitted")
     assert(viaRule.contains((2L, 6L)) && viaRule.contains((1L, 6L)))
@@ -132,24 +155,19 @@ class ExtensionsSpec extends SparkSpec {
     }
     val rows = (1L to 60L).map(id => (id, randStr()))
     val df = rows.toDF("id", "nm")
-    // k=1 under both strategies (auto = deletion neighborhood, forced
-    // segment) and k=2 (segment); a low-alphabet corpus with empty and
-    // near-equal strings stresses run-start dedup and shift handling.
-    for ((k, strat) <- Seq((1, "auto"), (1, "segment"), (2, "auto"))) {
+    // k=1 (deletion neighborhood) and k=2 (segments); a low-alphabet
+    // corpus with empty and near-equal strings stresses run-start dedup
+    // and shift handling.
+    for (k <- Seq(1, 2)) {
       val a = df.select(col("id").as("i"), col("nm").as("na"))
       val b = df.select(col("id").as("j"), col("nm").as("nb"))
-      def run(): Seq[(Long, Long)] = a.join(b, col("i") < col("j") &&
+      def q() = a.join(b, col("i") < col("j") &&
           levenshtein(col("na"), col("nb")) <= k)
-        .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1)))
-        .toSeq.sorted
-      spark.conf.set("spark.graft.levjoin.strategy", strat)
-      val viaRule = try run() finally
-        spark.conf.unset("spark.graft.levjoin.strategy")
-      spark.conf.set("spark.graft.levjoin.enabled", "false")
-      val ground = try run() finally
-        spark.conf.set("spark.graft.levjoin.enabled", "true")
+        .select("i", "j")
+      val viaRule = pairSeq(q())
+      val ground = groundTruth(q())(pairSeq)
       assert(viaRule == ground,
-        s"k=$k strat=$strat mismatch: missing=${ground.toSet -- viaRule.toSet} " +
+        s"k=$k mismatch: missing=${ground.toSet -- viaRule.toSet} " +
           s"extra=${viaRule.toSet -- ground.toSet} " +
           s"dupes=${viaRule.diff(viaRule.distinct).distinct}")
     }
@@ -187,7 +205,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("jaro-winkler theta-join gains the length-bucket equi-key") {
     // Length-diverse micro corpus: the sound pruning dimension for JW
-    // (content signatures are unsound — see JaroWinklerJoinRule).
+    // (content signatures are unsound — see FuzzyJoinRule's jw family).
     val people = Seq(
       (1L, "ann"), (2L, "anne"), (3L, "annette"),
       (4L, "a completely different much longer string"),
@@ -209,9 +227,7 @@ class ExtensionsSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaRule = pairs(q())
-    spark.conf.set("spark.graft.jwjoin.enabled", "false")
-    val direct = try pairs(q())
-    finally spark.conf.unset("spark.graft.jwjoin.enabled")
+    val direct = groundTruth(q())(pairs)
     assert(viaRule == direct)
     assert(viaRule.contains((1L, 5L)), "identical strings score 1.0")
     assert(viaRule.contains((1L, 2L)), "ann/anne is 0.9417 with the boost")
@@ -253,8 +269,8 @@ class ExtensionsSpec extends SparkSpec {
     // WRatio's own damping caps the partial legs at 90.0, so every
     // qualifying pair comes from the full or token-sort legs — both
     // length-ratio-bounded — and the geometric length-bucket equi-key
-    // is sound WITHOUT a length-cap conjunct (WRatioJoinRule scaladoc
-    // carries the derivation).
+    // is sound WITHOUT a length-cap conjunct (FuzzyJoinRule's wratio
+    // family carries the derivation).
     val people = Seq(
       (1L, "ann barton"), (2L, "barton ann"),
       (3L, "the ann barton foundation"),
@@ -277,9 +293,7 @@ class ExtensionsSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaRule = pairs(q(92.0))
-    spark.conf.set("spark.graft.wratiojoin.enabled", "false")
-    val direct = try pairs(q(92.0))
-    finally spark.conf.unset("spark.graft.wratiojoin.enabled")
+    val direct = groundTruth(q(92.0))(pairs)
     assert(viaRule == direct)
     assert(viaRule.contains((1L, 5L)), "identical strings score 100")
     assert(viaRule.contains((1L, 2L)),
@@ -320,7 +334,7 @@ class ExtensionsSpec extends SparkSpec {
     // The VERDICT r7 stretch contract: the hand-built top-k query and
     // its natural θ-join spelling (customer × 1-row query frame on
     // jw ≥ t, then top-k) must agree row for row — with the θ-join
-    // planning through JaroWinklerJoinRule's equi-key, not a scan-less
+    // planning through FuzzyJoinRule's jw equi-key, not a scan-less
     // nested loop.
     val topk = graft.ops.SearchPack.queries("search_jw_topk")(spark, sf())
       .collect().map(r => (r.getLong(0), r.getDouble(2)))
@@ -343,10 +357,10 @@ class ExtensionsSpec extends SparkSpec {
   test("wratio theta-join at t<=90 with length caps becomes the exact two-branch union") {
     // VERDICT r9 item 3 — the reference's ACTUAL operating regime
     // (cutoff ≤ 90, fuzzy_search.py:57): with literal length caps on
-    // both operands, WRatioCapJoinRule decomposes the θ-join into the
-    // bucket-near branch ∪ the PassJoin-segment branch (disjoint by the
-    // |Δbucket| > 2 conjunct, deduped by the first-match-rank
-    // predicate) — exact results, no nested loop.
+    // both operands, FuzzyJoinRule's capped wratio family decomposes the
+    // θ-join into the bucket-near branch ∪ the PassJoin-segment branch
+    // (disjoint by the |Δbucket| > 2 conjunct, deduped by the
+    // first-match-rank predicate) — exact results, no nested loop.
     val people = Seq(
       (1L, "ann barton"), (2L, "barton ann"), (3L, "ann barton"),
       (4L, "golden lace"),
@@ -383,12 +397,8 @@ class ExtensionsSpec extends SparkSpec {
     // Exact multiset agreement with the un-rewritten nested loop — the
     // first-match dedup must keep each qualifying pair EXACTLY once
     // (row 6 contains the probe twice and several segments match).
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    val viaRule = rows(q(80.0, caps = true))
-    spark.conf.set("spark.graft.wratiocapjoin.enabled", "false")
-    val direct = try rows(q(80.0, caps = true))
-    finally spark.conf.unset("spark.graft.wratiocapjoin.enabled")
+    val viaRule = pairSeq(q(80.0, caps = true))
+    val direct = groundTruth(q(80.0, caps = true))(pairSeq)
     assert(viaRule == direct, s"rewrite changed results:\n$viaRule\nvs\n$direct")
     assert(viaRule.distinct == viaRule, "duplicate pairs leaked through the dedup")
     assert(viaRule.contains((1L, 3L)), "identical strings (bucket branch)")
@@ -402,11 +412,54 @@ class ExtensionsSpec extends SparkSpec {
     val noCaps = q(80.0, caps = false).queryExecution.optimizedPlan.toString
     assert(!noCaps.contains("__graft_wrseg") && !noCaps.contains("__graft_wrbk"),
       s"capless join must not be rewritten at t ≤ 90:\n$noCaps")
-    assert(rows(q(80.0, caps = false)) == viaRule)
+    assert(pairSeq(q(80.0, caps = false)) == viaRule)
     // Below the firing floor (t ≤ 45) the segments degenerate — decline.
     val low = q(42.0, caps = true).queryExecution.optimizedPlan.toString
     assert(!low.contains("__graft_wrseg"),
       s"t below the floor must decline:\n$low")
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
+
+  test("fuzzy families are tried in a fixed order: lev, jw, wratio above 90, capped wratio") {
+    // Each join carries two fuzzy conjuncts, the later family's written
+    // first: the family order decides the rewrite, not the conjunct
+    // order, and a family whose range excludes its conjunct (k = 3)
+    // hands the join to the next family.
+    val people = Seq(
+      (1L, "ann barton"), (2L, "anne barton"), (3L, "barton ann"),
+      (4L, "ann barton"), (5L, "ann bartons x"), (6L, "golden lace"),
+      (7L, "golden lace chocolate cream"))
+      .toDF("id", "nm")
+    val a = people.select(col("id").as("i"), col("nm").as("na"))
+    val b = people.select(col("id").as("j"), col("nm").as("nb"))
+    val jw = call_function("jaro_winkler", col("na"), col("nb")) >= lit(0.93)
+    def wr(t: Double) = call_function("wratio", col("na"), col("nb")) >= lit(t)
+    def check(q: () => DataFrame, takes: String, not: Seq[String]): Unit = {
+      val optimized = q().queryExecution.optimizedPlan.toString
+      assert(optimized.contains(takes), s"expected $takes in:\n$optimized")
+      not.foreach(n => assert(!optimized.contains(n), s"unexpected $n in:\n$optimized"))
+      val viaRule = pairSeq(q())
+      assert(viaRule.nonEmpty, "vacuous pin: no qualifying pairs")
+      assert(viaRule == groundTruth(q())(pairSeq), s"$takes changed results")
+    }
+    check(() => a.join(b, col("i") < col("j") && jw &&
+        levenshtein(col("na"), col("nb")) <= 1).select("i", "j"),
+      "__graft_lsig", Seq("__graft_jwbk"))
+    check(() => a.join(b, col("i") < col("j") && jw &&
+        levenshtein(col("na"), col("nb")) <= 3).select("i", "j"),
+      "__graft_jwbk", Seq("__graft_lsig", "__graft_lseg"))
+    // Capped inputs (as in the two-branch test, with ConvertToLocalRelation
+    // excluded so the cap filters survive): the capped family could fire
+    // on wratio >= 60, but the > 90 family comes first.
+    spark.conf.set("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    try {
+      def capped(c: org.apache.spark.sql.Column) = a.filter(length(col("na")) <= lit(64))
+        .join(b.filter(length(col("nb")) <= lit(64)), col("i") < col("j") && c)
+        .select("i", "j")
+      assert(capped(wr(60.0)).queryExecution.optimizedPlan.toString
+        .contains("__graft_wrseg"), "alone, wratio >= 60 takes the capped rewrite")
+      check(() => capped(wr(60.0) && wr(95.0)), "__graft_wrbk", Seq("__graft_wrseg"))
     } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 

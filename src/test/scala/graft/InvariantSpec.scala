@@ -463,7 +463,7 @@ class InvariantSpec extends SparkSpec {
   }
 
   test("native wratio equals the composed Column WRatio stage for stage") {
-    // The WRatioJoinRule trigger only exists because wratio is ONE
+    // FuzzyJoinRule's wratio trigger only exists because wratio is ONE
     // Catalyst node; its scores must be value-identical to the composed
     // Column form (api/Search.fuzzyScoreWith) every user-facing query
     // computes - same rounding stages, same NaN arithmetic, same

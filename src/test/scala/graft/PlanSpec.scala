@@ -231,13 +231,13 @@ class PlanSpec extends SparkSpec {
     assert(!p3.contains("CartesianProduct") && !p3.contains("BroadcastNestedLoopJoin"),
       "blocked sim join must never plan an all-pairs product")
     // The auto-derived sim-join: the query is a natural theta-join, so
-    // only LevenshteinJoinRule's segment-signature rewrite keeps a
+    // only FuzzyJoinRule's deletion-signature rewrite keeps a
     // nested-loop out of the plan.
     val p4 = planOf(graft.ops.SearchPack.queries("search_lev_autojoin")(spark, sf()))
     assert(!p4.contains("CartesianProduct") && !p4.contains("BroadcastNestedLoopJoin"),
       "the edit-distance theta-join must be rewritten to an equi-join")
-    // The capped WRatio theta-join at t ≤ 90: WRatioCapJoinRule's
-    // two-branch union (bucket key + tagged segment key), no nested
+    // The capped WRatio theta-join at t ≤ 90: FuzzyJoinRule's capped
+    // family, a two-branch union (bucket key + tagged segment key), no nested
     // loop anywhere in the plan.
     val q5 = graft.ops.SearchPack.queries("search_wratio_autojoin")(spark, sf())
     val o5 = q5.queryExecution.optimizedPlan.toString

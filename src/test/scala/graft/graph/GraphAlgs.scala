@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** GraphX implementations of the reference's graph queries (SURVEY.md §2.7)
-  * — the RDD/Pregel scale path behind the DataFrame programs in
+  * — the RDD/Pregel oracle for the DataFrame programs in
   * [[graft.ops.GraphPack]]. Semantics are identical by construction
   * (synchronous rounds, same recurrences); GraphSpec asserts agreement.
   *
