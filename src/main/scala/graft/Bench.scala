@@ -86,7 +86,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus
     // QUIET-HOST GATE: a bench taken at load-average 13 (round 7's
     // driver capture) measures the host, not the engine — min-of-2 and
     // the skew counter contain the damage but the official artifact
@@ -129,39 +129,7 @@ object Bench {
     // All three /proc/loadavg figures ship in the artifact.
     val loadLineAtGate = loadLine().split(" ").take(3).mkString(" ")
     val loadAtGate = startLoad()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // UTC pin: events.ts is naive TIMESTAMP(MICROS) (timestamp_ntz) —
-      // OpsUtil.tsMicros' epoch conversion and DuckDB's epoch_ns agree
-      // only when the session clock is UTC.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fixture-sized scan splits — see Tables.scanSplitBytes. The open
-      // cost must drop with the split size: its default (4 MB) models an
-      // HDFS open, and any file whose padded cost reaches the split size
-      // gets a partition of its own — which turned the 2000-file ETL
-      // landing scan into 2000 tasks (etl_sparql_* 3× slower) the moment
-      // splits shrank below 4 MB. 64 KB keeps small files packing ~40 to
-      // a split on a local FS where open is cheap.
-      .config("spark.sql.files.maxPartitionBytes",
-        graft.tables.Tables.scanSplitBytes(sfDir, cpus.toInt))
-      .config("spark.sql.files.openCostInBytes", 64L * 1024)
-      // Local-mode heartbeats are in-process, so the 120 s default
-      // timeout protects nothing — it's only a kill switch. The r13 sf30
-      // spot died from it: a ~3-minute whole-JVM stall (host CPU steal)
-      // starved the heartbeat thread, HeartbeatReceiver "removed" the
-      // only executor, BlockManager re-registration then spun on the
-      // CoarseGrainedScheduler endpoint (which doesn't exist under
-      // LocalSchedulerBackend), and 60 failed heartbeats later the
-      // executor killed the JVM (exit 56) mid-capture, shredding the
-      // live shuffle dirs. Generous values make a stall cost only its
-      // own wall time.
-      .config("spark.network.timeout", "900s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .getOrCreate()
+    val spark = Session(sfDir, cpus)
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen/shuffle warmup on throwaway data so the first measured
     // query isn't charged ~5 s of class loading and codegen compilation.

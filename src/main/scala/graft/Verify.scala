@@ -1,35 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Legacy-fixture compat: if events.parquet stores TIMESTAMP(NANOS)
-      // (no native Spark type), read it as epoch-nanos long; the current
-      // fixtures store naive TIMESTAMP(MICROS) (timestamp_ntz), which
-      // OpsUtil.tsMicros converts under the UTC session pin above.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fixture-sized scan splits — see Tables.scanSplitBytes; open cost
-      // lowered with it so many-small-file scans (the ETL landing) still
-      // pack files into shared splits (rationale in Bench)
-      .config("spark.sql.files.maxPartitionBytes",
-        graft.tables.Tables.scanSplitBytes(sfDir, cpus.toInt))
-      .config("spark.sql.files.openCostInBytes", 64L * 1024)
-      // Stall-proofing (rationale in Bench): local-mode heartbeats are
-      // in-process; the default 120 s timeout only adds a kill switch
-      // that a host-steal stall can trip mid-sweep.
-      .config("spark.network.timeout", "900s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .getOrCreate()
+    val spark = Session(sfDir)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (the driver never sets it): run only queries

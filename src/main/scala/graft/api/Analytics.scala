@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.OpsUtil
 
 /** Generic analytics operators — the skew-safe and imputation primitives
   * behind `graft.ops.AnalyticsPack`'s driver queries, over arbitrary
@@ -203,11 +204,10 @@ object Analytics {
     * engines. */
   def correlationMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, "correlationMatrix needs at least two columns")
-    def msum(c: Column) = sum(c.cast("decimal(38,10)")).cast("double")
     val aggs = count(lit(1)).as("n") +:
-      cols.map(c => msum(col(c)).as(s"s_$c")) ++:
+      cols.map(c => OpsUtil.msum(col(c)).as(s"s_$c")) ++:
       (for (i <- cols.indices; j <- i until cols.size) yield
-        msum(col(cols(i)) * col(cols(j))).as(s"s_${cols(i)}_${cols(j)}"))
+        OpsUtil.msum(col(cols(i)) * col(cols(j))).as(s"s_${cols(i)}_${cols(j)}"))
     val a = df.agg(aggs.head, aggs.tail: _*)
     def r(x: String, y: String) = {
       val (sx, sy) = (col(s"s_$x"), col(s"s_$y"))

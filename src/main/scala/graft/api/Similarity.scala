@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.OpsUtil.rsum
 import graft.ops.TextHash.h28
 
 /** Generic similarity-search operators over ANY embedding frame —
@@ -18,9 +19,6 @@ import graft.ops.TextHash.h28
   *    partitionings (what oracle-checked reports use).
   */
 object Similarity {
-
-  private def psum(c: Column): Column =
-    sum(c.cast("decimal(28,15)")).cast("double")
 
   /** Exact decimal dot product of two numeric ARRAY columns as a
     * MAP-SIDE fold: each product term is computed in double
@@ -59,7 +57,7 @@ object Similarity {
 
   /** Per-vector L2 norms (exact decimal sum of squares). */
   def norms(components: DataFrame): DataFrame =
-    components.groupBy(col("vec_id")).agg(sqrt(psum(col("v") * col("v"))).as("nrm"))
+    components.groupBy(col("vec_id")).agg(sqrt(rsum(col("v") * col("v"))).as("nrm"))
 
   /** Brute-force cosine top-k against one query vector, via the native
     * expression — the exact baseline every ANN variant is measured
@@ -92,7 +90,7 @@ object Similarity {
   def lshBuckets(components: DataFrame, planes: DataFrame): DataFrame =
     components.join(broadcast(planes), "pos")
       .groupBy(col("vec_id"), col("j"))
-      .agg(psum(col("v") * col("r")).as("dot"))
+      .agg(rsum(col("v") * col("r")).as("dot"))
       .groupBy(col("vec_id"))
       .agg(sum(when(col("dot") > 0, pow(lit(2), col("j")).cast("long")).otherwise(0L))
         .as("bucket"))
@@ -119,7 +117,7 @@ object Similarity {
       .join(components.as("x"), col("i") === col("x.vec_id"))
       .join(components.as("y"), col("j") === col("y.vec_id") && col("x.pos") === col("y.pos"))
       .groupBy(col("i"), col("j"))
-      .agg(psum(col("x.v") * col("y.v")).as("dot"))
+      .agg(rsum(col("x.v") * col("y.v")).as("dot"))
       .join(n.select(col("vec_id").as("i"), col("nrm").as("ni")), "i")
       .join(n.select(col("vec_id").as("j"), col("nrm").as("nj")), "j")
       .select(col("i"), col("j"),
@@ -201,7 +199,7 @@ object Similarity {
       // vanish (standard Lloyd), ids stay the seed ids for determinism.
       val cm = components(emb, id, vec).join(assign, "vec_id")
         .groupBy(col("cid"), col("pos"))
-        .agg((psum(col("v")) / count(lit(1))).as("cv"))
+        .agg((rsum(col("v")) / count(lit(1))).as("cv"))
         .groupBy(col("cid"))
         .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("pc"))
         .select(col("cid").as("pivot_id"),

@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.OpsUtil.rsum
 import graft.ops.TextHash._
 
 /** Generic text-analysis operators over ANY corpus frame — the
@@ -221,8 +222,7 @@ object Text {
       .agg(sum(col("c")).as("n_tokens"),
         round(
           log(sum(col("c")).cast("double")) -
-            sum((col("c") * log(col("c").cast("double")))
-              .cast("decimal(28,15)")).cast("double") /
+            rsum(col("c") * log(col("c").cast("double"))) /
               sum(col("c")).cast("double"),
           6).as("entropy"))
 
@@ -426,7 +426,7 @@ object Text {
              (col("nraw") + buckets))).as("lr"))
     docB.join(broadcast(table), "b")
       .groupBy(col("doc_id"))
-      .agg(round(graft.ops.OpsUtil.rsum(col("c") * col("lr")), 6)
+      .agg(round(rsum(col("c") * col("lr")), 6)
         .as("dsir_score"))
   }
 
@@ -468,7 +468,7 @@ object Text {
         log((col("n2") + 1) / (col("n1") + col("v"))).as("lp"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
-        round(sum(col("lp").cast("decimal(28,15)")).cast("double") /
+        round(rsum(col("lp")) /
           count(lit(1)), 6).as("lm_score"))
   }
 
@@ -717,14 +717,12 @@ object Text {
       // Bounded window: the frame is the topK rows just materialized.
       .withColumn("rank", row_number().over(
         Window.orderBy(col("freq").desc, col("w").asc)))
-    def dsum15(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(28,15)")).cast("double")
     top
       .select(log(col("rank").cast("double")).as("x"),
         log(col("freq").cast("double")).as("y"))
-      .agg(count(lit(1)).as("n"), dsum15(col("x")).as("sx"),
-        dsum15(col("y")).as("sy"), dsum15(col("x") * col("y")).as("sxy"),
-        dsum15(col("x") * col("x")).as("sxx"))
+      .agg(count(lit(1)).as("n"), rsum(col("x")).as("sx"),
+        rsum(col("y")).as("sy"), rsum(col("x") * col("y")).as("sxy"),
+        rsum(col("x") * col("x")).as("sxx"))
       .select(col("n"),
         round((col("n") * col("sxy") - col("sx") * col("sy")) /
           (col("n") * col("sxx") - col("sx") * col("sx")), 6).as("slope"),

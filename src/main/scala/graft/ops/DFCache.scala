@@ -18,10 +18,12 @@ import scala.collection.concurrent.TrieMap
   * (deserialized, spillable) and keyed by (session, logical-key, input
   * dir); the WeakHashMap drops a session's entries when the session is
   * collected, and a fresh session never sees another session's frames.
+  * The same per-session map holds scalar memos ([[memo]]), so every
+  * value reused across queries lives — and dies — with its session.
   */
 object DFCache {
   private val caches =
-    new java.util.WeakHashMap[SparkSession, TrieMap[String, DataFrame]]()
+    new java.util.WeakHashMap[SparkSession, TrieMap[String, Any]]()
 
   /** Default: persist(), returned as a SIZE-COALESCED scan view. The
     * InMemoryRelation carries ACCURATE size stats, which is what lets
@@ -57,11 +59,10 @@ object DFCache {
     * inherited partitioning dominates any scan-stage compute. */
   def cached(s: SparkSession, key: String, sized: Boolean)
       (build: => DataFrame): DataFrame = {
-    val m = cacheMap(s)
-    m.getOrElseUpdate(key, {
+    memo(s, key) {
       val p = build.persist(StorageLevel.MEMORY_AND_DISK)
       if (sized) graft.graph.DFGraphAlgs.sizedScanView(p) else p
-    })
+    }
   }
 
   /** Lineage-truncating variant (lazy localCheckpoint) for caches whose
@@ -74,15 +75,20 @@ object DFCache {
     * here: the frames are tiny and their consumers re-shuffle anyway.
     * Same truncation discipline as DFGraphAlgs.mat between BSP rounds;
     * a reliable checkpoint dir is the production durability knob. */
-  def cachedTruncated(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val m = cacheMap(s)
-    m.getOrElseUpdate(key, build.localCheckpoint(false))
-  }
+  def cachedTruncated(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    memo(s, key)(build.localCheckpoint(false))
 
-  private def cacheMap(s: SparkSession): TrieMap[String, DataFrame] =
+  /** Session-scoped memo: `compute` runs once per (session, key) and the
+    * value is reused by every later call in that session; a new session
+    * (`newSession()` included) computes its own. Keys share one
+    * namespace with the frame caches above. */
+  def memo[T](s: SparkSession, key: String)(compute: => T): T =
+    cacheMap(s).getOrElseUpdate(key, compute).asInstanceOf[T]
+
+  private def cacheMap(s: SparkSession): TrieMap[String, Any] =
     synchronized {
       var c = caches.get(s)
-      if (c == null) { c = TrieMap.empty[String, DataFrame]; caches.put(s, c) }
+      if (c == null) { c = TrieMap.empty[String, Any]; caches.put(s, c) }
       c
     }
 }

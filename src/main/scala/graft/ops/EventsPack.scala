@@ -189,7 +189,7 @@ object EventsPack {
           exp((col("ts_us") - col("mx")).cast("double") / DecayTauUs).as("wgt"))
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
-          round(sum(col("wgt").cast("decimal(28,15)")).cast("double"), 6)
+          round(OpsUtil.rsum(col("wgt")), 6)
             .as("decay_score"))
         .orderBy(col("user_id"))
     }),

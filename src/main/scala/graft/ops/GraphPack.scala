@@ -72,30 +72,21 @@ object GraphPack {
     }
 
   /** Max out-degree of the symmetric co-purchase graph, memoized per
-    * fixture dir: one aggregate over the session-cached edge list,
-    * charged to Bench's explicit shared-warmup stage (Warm). Every BSP
-    * input in this pack is this graph, a filtered subgraph of it, or a
-    * per-relation split of it, so this one number upper-bounds the hub
-    * probe for all of them — an upper bound can only over-salt, which
-    * is bit-identical (GraphSpec pins forced salting). Passing it turns
-    * each query's hub probe into driver-side arithmetic; every measured
-    * per-query alternative cost a job (see DFGraphAlgs.saltPlanFromDeg).
-    *
-    * Keyed on the DIR ALONE: the value is a pure function of the
-    * on-disk data, so it is shared across sessions in one JVM (the old
-    * (identityHashCode(session), dir) key grew without bound across
-    * sessions and could alias a GC'd session's slot). Invariant:
-    * REGENERATING a fixture dir in-process requires clearing the memo
-    * ([[clearMaxCoDegMemo]] — tools/ScaleUp runs out-of-process, so
-    * only tests that rewrite fixtures in-JVM need it). */
-  private val maxDegMemo = scala.collection.concurrent.TrieMap.empty[String, Long]
-  private[graft] def clearMaxCoDegMemo(): Unit = maxDegMemo.clear()
+    * (session, fixture dir) in [[DFCache.memo]]: one aggregate over the
+    * session-cached edge list, charged to Bench's explicit shared-warmup
+    * stage (Warm). Every BSP input in this pack is this graph, a
+    * filtered subgraph of it, or a per-relation split of it, so this one
+    * number upper-bounds the hub probe for all of them — an upper bound
+    * can only over-salt, which is bit-identical (GraphSpec pins forced
+    * salting). Passing it turns each query's hub probe into driver-side
+    * arithmetic; every measured per-query alternative cost a job (see
+    * DFGraphAlgs.saltPlanFromDeg). */
   private[ops] def maxCoDeg(s: SparkSession, d: String): Long =
-    maxDegMemo.getOrElseUpdate(d, {
+    DFCache.memo(s, s"graph.maxdeg:$d") {
       Option(edges(s, d).groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .agg(max(col("deg"))).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
-    })
+    }
 
   /** [[maxCoDeg]] as the BSP loops' knownMaxDeg argument — None under
     * plan-only (the memo fill is an ACTION; plan sweeps must stay
@@ -553,17 +544,16 @@ object GraphPack {
     // sums go through DECIMAL(38,10) so r is bit-identical across
     // engines (deg² sums overflow 13 integer digits at scale).
     "graph_assortativity" -> ((s, d) => {
-      def msum(c: Column) = sum(c.cast("decimal(38,10)")).cast("double")
       val e = edges(s, d)
       val degs = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val ed = e.join(degs, "src")
         .withColumnRenamed("deg", "dx")
         .join(degs.select(col("src").as("dst"), col("deg").as("dy")), "dst")
       val a = ed.agg(count(lit(1)).as("n"),
-        msum(col("dx")).as("sx"), msum(col("dy")).as("sy"),
-        msum(col("dx") * col("dx")).as("sxx"),
-        msum(col("dy") * col("dy")).as("syy"),
-        msum(col("dx") * col("dy")).as("sxy"))
+        OpsUtil.msum(col("dx")).as("sx"), OpsUtil.msum(col("dy")).as("sy"),
+        OpsUtil.msum(col("dx") * col("dx")).as("sxx"),
+        OpsUtil.msum(col("dy") * col("dy")).as("syy"),
+        OpsUtil.msum(col("dx") * col("dy")).as("sxy"))
       a.select(col("n").as("n_edges"),
         round((col("n") * col("sxy") - col("sx") * col("sy")) /
           sqrt((col("n") * col("sxx") - col("sx") * col("sx")) *

@@ -24,6 +24,10 @@ object OpsUtil {
     * and similarity scores where DECIMAL(28,4) would truncate. */
   def rsum(c: Column): Column = sum(c.cast("decimal(28,15)")).cast("double")
 
+  /** Exact sum of moment terms (squares and cross products of measures),
+    * whose integer part overflows DECIMAL(28,15)'s 13 digits at scale. */
+  def msum(c: Column): Column = sum(c.cast("decimal(38,10)")).cast("double")
+
   /** Exact average: decimal sum divided (in double space) by count. */
   def davg(c: Column): Column = sum(c.cast(Dec)).cast("double") / count(lit(1))
 

@@ -25,23 +25,18 @@ object ScaleGuard {
   private val WarnKey = "spark.graft.quadraticWarnRows"
   private val FailKey = "spark.graft.quadraticFailRows"
 
-  /** Sizing counts memoized per fixture key (r12 advice: an eager
-    * count() inside query CONSTRUCTION taxed plan-only callers with a
-    * full table scan per build). Fixture tables are immutable per dir,
-    * so a (table, dir)-keyed memo is sound; first builder still pays
-    * one bounded count — same class as the self-sizing LSH derivation. */
-  private val sized = scala.collection.concurrent.TrieMap.empty[String, Long]
-
   /** Check an n-row input against the quadratic guard thresholds.
     * `op` names the operator, `key` identifies the sized input (e.g.
     * "documents:<dir>") so repeat builds reuse the count, `n` is the
-    * BY-NAME sizing count (evaluated at most once per key), `linearAlt`
-    * the adjacent linear twin the message steers to. */
+    * BY-NAME sizing count (evaluated at most once per session and key, in
+    * [[DFCache.memo]] — an eager count() inside query CONSTRUCTION would
+    * otherwise tax plan-only callers with a full scan per build),
+    * `linearAlt` the adjacent linear twin the message steers to. */
   def quadratic(s: SparkSession, op: String, key: String, n: => Long,
       linearAlt: String): Unit = {
     val warnAt = s.conf.get(WarnKey, "100000").toLong
     val failAt = s.conf.get(FailKey, Long.MaxValue.toString).toLong
-    val rows = sized.getOrElseUpdate(key, n)
+    val rows = DFCache.memo(s, s"quadratic.rows:$key")(n)
     if (rows > failAt) throw new IllegalStateException(
       s"$op is an exact-recall QUADRATIC operator (documented contract) and " +
         s"its input has $rows rows > $FailKey=$failAt; use $linearAlt at scale, " +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 import graft.tables.Tables
+import OpsUtil.rsum
 import TextHash.{h28Sql, h28}
 
 /** Similarity-search pack over the `embeddings` table (64-dim float
@@ -121,11 +122,9 @@ object SimilarityPack {
     * the two can't drift (r12 advice). */
   private val SweepThresholds = Seq(0.6, 0.5, 0.45, 0.4)
 
-  /** Exact order-independent sum at unit scale: products of normalized
-    * embedding components need 15 fractional digits (OpsUtil.dsum's
-    * money-scale DECIMAL(28,4) would truncate them). */
-  private def psum(c: Column): Column =
-    sum(c.cast("decimal(28,15)")).cast("double")
+  /** [[OpsUtil.rsum]]'s scale in SQL: products of normalized embedding
+    * components need 15 fractional digits (OpsUtil.dsum's money-scale
+    * DECIMAL(28,4) would truncate them). */
   private val PsumCast = "DECIMAL(28,15)"
 
   /** Exact squared L2 distance of two numeric ARRAY columns as a
@@ -133,7 +132,7 @@ object SimilarityPack {
     * (bit-identical to the exploded form's (v−cv)² over double
     * components), cast to DECIMAL(28,15), and summed with an exact
     * decimal fold. Decimal addition is exact, so the value equals the
-    * posexplode + [[psum]] form — and the twin's SUM(CAST(… AS
+    * posexplode + [[OpsUtil.rsum]] form — and the twin's SUM(CAST(… AS
     * DECIMAL(28,15))) — in ANY order, WITHOUT materializing n·dim rows
     * or shuffling the component cache: the r12 sf10 profile measured
     * the quantizer fit at 41.9 s of which most was six 12.8M-row comps
@@ -241,7 +240,7 @@ object SimilarityPack {
   private def nearestCell(c: DataFrame, cent: DataFrame): DataFrame =
     c.join(cent, "pos")
       .groupBy(col("vec_id"), col("cid"))
-      .agg(psum((col("v") - col("cv")) * (col("v") - col("cv"))).as("d2"))
+      .agg(rsum((col("v") - col("cv")) * (col("v") - col("cv"))).as("d2"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("d2").asc, col("cid").asc)))
       .filter(col("rn") === 1)
@@ -263,7 +262,7 @@ object SimilarityPack {
         val a = nearestCell(c, cent)
         val next = c.join(a, "vec_id")
           .groupBy(col("cid"), col("pos"))
-          .agg((psum(col("v")) / count(lit(1))).as("cv"))
+          .agg((rsum(col("v")) / count(lit(1))).as("cv"))
           // Materialize each Lloyd round (k·dim rows — tiny): without
           // this the unrolled lineage recomputes round i inside round
           // i+1, doubling the work per extra iteration. Same BSP-round
@@ -377,7 +376,7 @@ object SimilarityPack {
       vsup: DataFrame, supComps: DataFrame): DataFrame = {
     val csup = cent.join(broadcast(supComps), "pos")
       .groupBy(col("cid"), col("sid"))
-      .agg(psum((col("cv") - col("sv")) * (col("cv") - col("sv"))).as("d2"))
+      .agg(rsum((col("cv") - col("sv")) * (col("cv") - col("sv"))).as("d2"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("cid")).orderBy(col("d2").asc, col("sid").asc)))
       .filter(col("rn") === 1)
@@ -460,7 +459,7 @@ object SimilarityPack {
       for (_ <- 1 to SemIters) {
         cent = comps(s, d).join(assignCells(s, d, cent, vsup, supComps), "vec_id")
           .groupBy(col("cid"), col("pos"))
-          .agg((psum(col("v")) / count(lit(1))).as("cv"))
+          .agg((rsum(col("v")) / count(lit(1))).as("cv"))
           .repartition(1)
           .localCheckpoint(true)
       }
@@ -495,7 +494,7 @@ object SimilarityPack {
   private def pqNearest(c: DataFrame, cent: DataFrame): DataFrame =
     c.join(cent, Seq("sub", "pos"))
       .groupBy(col("vec_id"), col("sub"), col("cid"))
-      .agg(psum((col("nv") - col("cv")) * (col("nv") - col("cv"))).as("d2"))
+      .agg(rsum((col("nv") - col("cv")) * (col("nv") - col("cv"))).as("d2"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("vec_id"), col("sub"))
           .orderBy(col("d2").asc, col("cid").asc)))
@@ -516,7 +515,7 @@ object SimilarityPack {
         val a = pqNearest(c, cent)
         val next = c.join(a, Seq("vec_id", "sub"))
           .groupBy(col("cid"), col("sub"), col("pos"))
-          .agg((psum(col("nv")) / count(lit(1))).as("cv"))
+          .agg((rsum(col("nv")) / count(lit(1))).as("cv"))
           // Per-round persist — same recompute-truncation and
           // single-partition rationale as kmeansCentroids above.
           .repartition(1)
@@ -749,7 +748,7 @@ object SimilarityPack {
         .select(col("label"), col("pos"), col("v").cast("double").as("v"))
         .groupBy(col("label"), col("pos"))
         .agg(count(lit(1)).as("n_vecs"),
-          round(psum(col("v")) / count(lit(1)), 6).as("centroid_v"))
+          round(rsum(col("v")) / count(lit(1)), 6).as("centroid_v"))
         .orderBy(col("label"), col("pos"))
     }),
 
@@ -774,7 +773,7 @@ object SimilarityPack {
       val assign = ivfAssign(s, d)
       val qcells = c.filter(col("vec_id") === QueryVec).join(cent, "pos")
         .groupBy(col("cid"))
-        .agg(psum((col("v") - col("cv")) * (col("v") - col("cv"))).as("d2"))
+        .agg(rsum((col("v") - col("cv")) * (col("v") - col("cv"))).as("d2"))
         // unpartitioned window over the CENTROID set (k = 8 rows), never
         // over data-scale rows
         .withColumn("rn", row_number().over(
@@ -806,7 +805,7 @@ object SimilarityPack {
       val cent = kmeansCentroids(s, d)
       val qcells = c.filter(col("vec_id") === QueryVec).join(cent, "pos")
         .groupBy(col("cid"))
-        .agg(psum((col("v") - col("cv")) * (col("v") - col("cv"))).as("d2"))
+        .agg(rsum((col("v") - col("cv")) * (col("v") - col("cv"))).as("d2"))
         .withColumn("rn", row_number().over(
           Window.orderBy(col("d2").asc, col("cid").asc)))
         .filter(col("rn") <= NProbe).select(col("cid"))
@@ -839,11 +838,11 @@ object SimilarityPack {
       val lut = c.filter(col("vec_id") === QueryVec)
         .join(cent, Seq("sub", "pos"))
         .groupBy(col("sub"), col("cid"))
-        .agg(psum(col("nv") * col("cv")).as("pdot"))
+        .agg(rsum(col("nv") * col("cv")).as("pdot"))
       val adc = codes.filter(col("vec_id") =!= QueryVec)
         .join(broadcast(lut), Seq("sub", "cid"))
         .groupBy(col("vec_id"))
-        .agg(psum(col("pdot")).as("adc"))
+        .agg(rsum(col("pdot")).as("adc"))
       val cand = adc
         .orderBy(col("adc").desc, col("vec_id").asc)
         .limit(PqOverfetch)
@@ -874,7 +873,7 @@ object SimilarityPack {
         .join(broadcast(sqStats(s, d)), "pos")
         .join(broadcast(q), "pos")
         .groupBy(col("vec_id"))
-        .agg(psum(col("qv") * (col("mn") +
+        .agg(rsum(col("qv") * (col("mn") +
           (col("code") + lit(0.5)) * (col("mx") - col("mn")) / SqLevels)).as("adc"))
       val cand = adc
         .orderBy(col("adc").desc, col("vec_id").asc)

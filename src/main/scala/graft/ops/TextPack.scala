@@ -195,7 +195,7 @@ object TextPack {
             (col("tf") + lit(Bm25K1) *
               (lit(1.0) - lit(Bm25B) + lit(Bm25B) * col("dl") / col("avgdl"))))
         .groupBy(col("doc_id"))
-        .agg(round(sum(col("contrib").cast("decimal(28,15)")).cast("double"), 6).as("bm25"))
+        .agg(round(OpsUtil.rsum(col("contrib")), 6).as("bm25"))
         .orderBy(col("bm25").desc, col("doc_id").asc)
         .limit(20)
     }),

@@ -26,28 +26,19 @@ object StreamOps {
   def eventsSchema(s: SparkSession, dir: String): StructType =
     s.read.parquet(s"$dir/events.parquet").schema
 
-  /** Conf: explicit state/shuffle partition count for the run-to-
-    * completion streaming queries (production knob — a real 100 TB/day
-    * feed sets this to its provisioned parallelism). Unset → derived. */
-  val StatePartitionsConf = "spark.graft.stream.statePartitions"
-
-  /** Conf: target source bytes per state partition for the DERIVED
-    * count (default [[StatePartitionBytesDefault]]). */
-  val StatePartitionBytesConf = "spark.graft.stream.statePartitionBytes"
-
   /** Every stateful streaming operator instantiates one state store per
     * shuffle partition per store (a stream-stream join keeps FOUR), and
     * each store pays per-micro-batch fixed cost (provider init, state
     * scan, delta commit) regardless of rows. Measured at sf0.1:
     * stream_interval_join spent ~150 s of task time across 128 store
     * instances producing 0 output rows — 13.5 s wall at 32 partitions
-    * vs 4.2 s at 8 ON FEWER CORES. The derived count is
-    * ceil(sourceBytes / target), CLAMPED to the session's
+    * vs 4.2 s at 8 ON FEWER CORES. The state partition count is
+    * ceil(sourceBytes / StatePartitionBytes), CLAMPED to the session's
     * shuffle.partitions — it only ever lowers the count when the
     * source is small relative to the session's parallelism, so a
     * cluster session with thousands of partitions and a TB feed is
-    * untouched. */
-  val StatePartitionBytesDefault: Long = 1L << 20
+    * untouched (it follows the deployment's parallelism, no knob). */
+  private val StatePartitionBytes: Long = 1L << 20
 
   /** Largest staged source size per session, registered by the stream
     * builders ([[eventsStream]] et al.) and consumed by the run-to-
@@ -66,13 +57,10 @@ object StreamOps {
     * (streaming queries capture the conf at start), then restore. */
   private def withSizedStatePartitions[T](s: SparkSession)(body: => T): T = {
     val cur = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val k = s.conf.getOption(StatePartitionsConf).map(_.toInt).getOrElse {
-      val target = s.conf.getOption(StatePartitionBytesConf).map(_.toLong)
-        .getOrElse(StatePartitionBytesDefault)
-      val bytes = Option(sourceBytes.get(s)).map(_.longValue).getOrElse(0L)
-      if (bytes <= 0L || target <= 0L) cur
-      else math.min(cur.toLong, math.max(1L, (bytes + target - 1) / target)).toInt
-    }
+    val bytes = Option(sourceBytes.get(s)).map(_.longValue).getOrElse(0L)
+    val k = if (bytes <= 0L) cur
+      else math.min(cur.toLong,
+        math.max(1L, (bytes + StatePartitionBytes - 1) / StatePartitionBytes)).toInt
     if (k == cur) body
     else {
       s.conf.set("spark.sql.shuffle.partitions", k)

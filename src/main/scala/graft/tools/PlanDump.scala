@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
   * the plan-evidence artifacts for optimization rounds (plans/rNN/).
   * Builds each query's DataFrame (no action — plans only, cheap) under
-  * the same session config as Bench so Exchange counts / join choices /
-  * PushedFilters match what the bench actually runs.
+  * [[graft.Session]], the config Bench runs, so Exchange counts / join
+  * choices / PushedFilters match what the bench actually runs.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [nameRegex] [sfDir]
   *   e.g. runMain graft.tools.PlanDump plans/r13 before "graph_pagerank|ml_train" /root/testdata/sf0.1
@@ -19,18 +17,7 @@ object PlanDump {
     val suffix = if (args.length > 1) args(1) else "before"
     val rx = (if (args.length > 2) args(2) else ".*").r
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        graft.tables.Tables.scanSplitBytes(sfDir, cpus.toInt))
-      .config("spark.sql.files.openCostInBytes", 64L * 1024)
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.Session(sfDir)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val sel = graft.SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -15,29 +14,15 @@ import scala.collection.mutable
   * clock to specific exchanges, sorts, and cache fills.
   *
   * Usage: runMain graft.tools.ProfileQuery <query> [sfDir]
+  * A/B a conf variant without a recompile through a JVM property, which
+  * [[graft.Session]] lets win over its defaults:
+  *   set run / javaOptions += "-Dspark.sql.autoBroadcastJoinThreshold=-1"
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: ProfileQuery <query> [sfDir]"))
     val sfDir = if (args.length > 1) args(1) else "/root/repo/testdata_sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // A/B knob: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" applies arbitrary conf
-    // pairs to the profiled session (e.g. spark.graft.* sizing rules), so
-    // candidate-fix measurements don't need a recompile per variant.
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "").split(";")
-      .filter(_.contains("=")).map { kv =>
-        val i = kv.indexOf('='); (kv.take(i).trim, kv.drop(i + 1).trim) }
-    val spark = extra.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        graft.tables.Tables.scanSplitBytes(sfDir, cpus.toInt))
-      .config("spark.sql.files.openCostInBytes", 64L * 1024)
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-    ) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    val spark = graft.Session(sfDir)
     spark.sparkContext.setLogLevel("WARN")
 
     final case class Row(id: Int, nameLine: String, wallMs: Long, taskMs: Long,

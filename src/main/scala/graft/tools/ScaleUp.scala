@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
 
@@ -140,18 +140,9 @@ object ScaleUp {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val dst = if (args.length > 1) args(1) else "/root/repo/testdata_sf1"
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Stall-proofing (rationale in Bench): sf100-class generation runs
-      // long enough to hit a host-steal stall; don't let the heartbeat
-      // kill switch shred a half-written fixture.
-      .config("spark.network.timeout", "900s")
-      .config("spark.executor.heartbeatInterval", "60s")
-      .getOrCreate()
+    // Fixed shuffle width (not the core count): the output layout must
+    // not depend on the host that generates the fixture.
+    val spark = graft.Session(src, overrides = Seq("spark.sql.shuffle.partitions" -> "8"))
     spark.sparkContext.setLogLevel("WARN")
 
     val reps = spark.range(0, replicas).select(col("id").as("__r"))
@@ -193,7 +184,7 @@ object ScaleUp {
       // construction; the checkpoint should test the splittable-scan
       // path the engine would actually run on a cluster (sessions pair
       // this with a fixture-sized spark.sql.files.maxPartitionBytes —
-      // see Bench.scanSplitBytes).
+      // see Tables.scanSplitBytes).
       df.coalesce(1).write.mode(SaveMode.Overwrite)
         .option("parquet.block.size", 4 * 1024 * 1024)
         .parquet(tmp)

@@ -4,7 +4,8 @@ package graft
   * the quiet-host gate reads max(1-min, 5-min) — not the gameable
   * 1-minute figure alone — the calibration probe returns a positive,
   * repeatable host-speed number, and a filtered spot run warms only
-  * the cache entries its queries consume. */
+  * the cache entries its queries consume. Also guards the one session
+  * factory ([[Session]]) against drift. */
 class BenchContractSpec extends SparkSpec {
 
   test("gateLoad is max(1-min, 5-min) — the r12 sf10 gaming case trips it") {
@@ -101,5 +102,39 @@ class BenchContractSpec extends SparkSpec {
     // text_contamination shares the dedup shingle pass (cross-pack edge).
     assert(neededEntries(spark, d, Some(Set("text_contamination")))
       === Seq("dedup.shingles"))
+  }
+
+  test("one session factory: the only session builder in src/ is graft.Session") {
+    val needle = "SparkSession" + ".builder"
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val src = new java.io.File("src")
+    assert(src.isDirectory, s"run from the repository root (cwd ${src.getAbsoluteFile})")
+    val sites = files(src).filter(_.getName.endsWith(".scala")).filter { f =>
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains(needle)
+    }.map(_.getPath)
+    assert(sites === Seq("src/main/scala/graft/Session.scala"))
+  }
+
+  test("the test session runs the factory's settings, key for key") {
+    val conf = spark.sparkContext.getConf
+    Session.settings(SparkSpec.sf(), SparkSpec.Cpus).foreach { case (k, v) =>
+      assert(conf.getOption(k) === Some(v), s"test session drifted on $k")
+    }
+  }
+
+  test("a spark.* system property wins over the factory default and the override") {
+    val d = SparkSpec.sf()
+    val base = Session.settings(d, 4, props = Map.empty).toMap
+    assert(base("spark.master") === "local[4]")
+    assert(base("spark.sql.shuffle.partitions") === "4")
+    val over = Seq("spark.sql.shuffle.partitions" -> "8", "spark.app.name" -> "t")
+    val props = Map("spark.sql.shuffle.partitions" -> "7", "spark.network.timeout" -> "5s")
+    val got = Session.settings(d, 4, over, props)
+    assert(got.map(_._1).distinct === got.map(_._1), "one entry per key")
+    assert(got.toMap === base ++ Map("spark.sql.shuffle.partitions" -> "7",
+      "spark.network.timeout" -> "5s", "spark.app.name" -> "t"))
+    assert(Session.settings(d, 4, over, Map.empty).toMap
+      .apply("spark.sql.shuffle.partitions") === "8")
   }
 }

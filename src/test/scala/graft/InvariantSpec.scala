@@ -82,6 +82,18 @@ class InvariantSpec extends SparkSpec {
     assert(evals === 1, "second build must reuse the cached count")
   }
 
+  test("ScaleGuard: sizing count is memoized per session, not per JVM") {
+    var evals = 0
+    def build(s: org.apache.spark.sql.SparkSession): Unit =
+      graft.ops.ScaleGuard.quadratic(s, "memo_op", "memo-session-key",
+        { evals += 1; 10L }, "memo_alt")
+    build(spark); build(spark)
+    assert(evals === 1)
+    val fresh = spark.newSession()
+    build(fresh); build(fresh)
+    assert(evals === 2, "a new session counts its input again, exactly once")
+  }
+
   test("percentile_approx (t-digest) is close to the exact percentile") {
     // ana_quantiles documents percentile_approx as the 100 TB form of its
     // exact interpolated percentile — pin that the approximation actually

@@ -7,20 +7,18 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local SparkSession for all specs (one JVM, reused session). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
-  def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+  def sf(dir: String = "sf0.001"): String = SparkSpec.sf(dir)
 }
 
 object SparkSpec {
+  def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** Bench's configuration at a fixed 4 cores, so the suite does not
+    * change with the host's core count. */
+  val Cpus = 4
+
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .getOrCreate()
+    val s = Session(sf(), Cpus)
     s.sparkContext.setLogLevel("WARN")
     s
   }
