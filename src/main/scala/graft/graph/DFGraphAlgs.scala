@@ -173,11 +173,6 @@ object DFGraphAlgs {
     }
   }
 
-  /** [[mat]] for callers outside the BSP loops (GraphPack's HITS
-    * rounds): eager localCheckpoint + [[sizedCoalesce]]. */
-  private[graft] def sizedCheckpoint(df: DataFrame): DataFrame =
-    sizedCoalesce(df.localCheckpoint(true))
-
   /** Size-coalesced SCAN VIEW of a persisted cache that downstream code
     * re-scans many times (the walk corpora probe the full neighbor
     * index once per step): materialize the cache (one count — these
@@ -224,8 +219,12 @@ object DFGraphAlgs {
     * identity under [[PlanOnlyConf]] and for a frame that is already
     * [[inMemory]] (a cached edge list is never copied per call). Local
     * checkpoints are then [[sizedCoalesce]]d so per-round scans don't
-    * pay task overhead proportional to the lineage's partition count. */
-  private def mat(df: DataFrame): DataFrame = {
+    * pay task overhead proportional to the lineage's partition count.
+    * The ONE materializer of the graph family: the BSP loops, HITS,
+    * the walk corpora, triPairs and ml_train_eval's feature frame all
+    * go through it (BenchContractSpec guards that no other checkpoint
+    * call appears in DFGraphAlgs, GraphPack or DFCache). */
+  private[graft] def mat(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     if (planOnly(df) || inMemory(df)) df
     else {
@@ -1108,17 +1107,16 @@ object DFGraphAlgs {
   /** Sampled-source Brandes betweenness dependencies (Brandes 2001;
     * Brandes-Pich 2007 pivot sampling — the estimator scales by source
     * COUNT, not graph size, exactly like the landmark harmonic
-    * centrality next to it). One composite-key (s0, id) BSP job for all
+    * centrality next to it). One composite-key (s0, id) job for all
     * sources:
     *
     *  - FORWARD, level-synchronous unweighted BFS accumulating σ(s, v)
-    *    (shortest-path counts): level-k vertices are first reached at
-    *    round k, σ = Σ of predecessor σ over same-round discoveries —
-    *    an equi-join + sum per round, new vertices found by anti-join
-    *    (each vertex enters the state exactly once, so state is
-    *    monotone and O(sources × reached) like the six-degrees runs).
-    *    σ is exact DECIMAL(38,0): path counts multiply through hubs
-    *    and overflow int64 within a few levels at power-law degrees.
+    *    (shortest-path counts): level-k vertices are those at hop
+    *    distance k, σ = Σ of predecessor σ over level k−1 — an
+    *    equi-join + sum per level, semi-joined with the level's
+    *    membership. σ is exact DECIMAL(38,0): path counts multiply
+    *    through hubs and overflow int64 within a few levels at
+    *    power-law degrees.
     *  - BACKWARD, the dependency recurrence δ(s,v) = Σ_{v→w, d(w)=d(v)+1}
     *    (σv/σw)·(1+δw) processed one level per round from the deepest:
     *    in an unweighted BFS DAG every shortest-path edge spans exactly
@@ -1130,20 +1128,16 @@ object DFGraphAlgs {
     * betweenness is the caller's Σ_s δ(s, v) over v ≠ s. Rounds clamp
     * under [[PlanOnlyConf]] like every loop here.
     *
-    * `knownDists` (r13, guide §2.4 — remove work): a precomputed
-    * multi-source BFS frame (s0, id, dist) over the SAME sources, edges
-    * and ≥ `iters` unweighted rounds (GraphPack passes its warmed
-    * landmark run). The forward σ-counting BFS then needs no discovery
-    * state of its own: level-k membership is exactly {(s0,id) :
-    * dist = k} (a vertex is first reached at round k iff its hop
-    * distance is k), so the per-round anti-join against a growing
-    * `seen` union becomes a semi-join against a filter of the given
-    * frame, σ sums run over the identical predecessor rows
-    * (bit-identical decimals), and the forward recurrence turns LINEAR
-    * (each level references only the level below). With the chain
-    * linear, level frames are lazy persists instead of eager per-round
-    * checkpoints and the whole forward+backward DAG executes as ONE
-    * job (profiled at sf0.1: the eager form was latency-bound — ~40
+    * Level membership always comes from a multi-source BFS frame
+    * (s0, id, dist) over the SAME sources, edges and ≥ `iters`
+    * unweighted rounds: a vertex is first reached at round k iff its
+    * hop distance is k, so level k is exactly {(s0, id) : dist = k}.
+    * `knownDists` supplies that frame (GraphPack passes its warmed
+    * landmark run); without it, [[multiSourceShortestPaths]] computes it
+    * over the edge list materialized here. Each level then references
+    * only the level below (a LINEAR chain), so level frames are lazy
+    * persists and the whole forward pass executes as ONE job (profiled
+    * at sf0.1: eager per-level checkpoints were latency-bound — ~40
     * dependent stages of 100-900 ms wall for 87 s of task time, 2.7 s
     * of ideal 32-core work). */
   def betweennessDeltas(edges: DataFrame, sources: Seq[Long], iters: Int,
@@ -1160,131 +1154,89 @@ object DFGraphAlgs {
     // sorts, while the sorted fills are. Keep the bare checkpoint and
     // let AQE do per-level runtime replanning.
     val e = mat(edges.select(col("src"), col("dst")))
-    // Per-LEVEL frames, each (s0, id, sigma) mat'ed once — a vertex
-    // enters exactly one level, so the full state is a flat union of
-    // the level frames and no round ever re-checkpoints earlier levels
-    // (the growing-state loops above rewrite O(rounds × state); here
-    // checkpoint volume is O(state) total).
+    // The unit-weight projection of the checkpoint is in memory, so the
+    // BFS reads `e` in place instead of materializing a second copy.
+    val dists = knownDists.getOrElse(
+      multiSourceShortestPaths(e.withColumn("w", lit(1.0)), sources, iters))
+    // Per-LEVEL frames (s0, id, sigma), each persisted once and released
+    // after the union checkpoint below.
     val released = scala.collection.mutable.Buffer.empty[DataFrame]
-    def keep(df: DataFrame): DataFrame =
-      knownDists match {
-        case Some(_) => val p = df.persist(); released += p; p
-        case None    => mat(df)
-      }
+    def keep(df: DataFrame): DataFrame = { val p = df.persist(); released += p; p }
     var levs = Vector(keep(sources.toDF("s0").select(col("s0"),
       col("s0").as("id"), lit(1L).cast("decimal(38,0)").as("sigma"))))
     val n = rounds(levs.head, iters)
-    // EXACT per-level sizes from the given distances (r14): one tiny
-    // aggregate over the warmed cache (≤ iters+1 rows to the driver).
-    // Level frames and membership filters are slices of the known
-    // distance partition, so their row counts are knowable BEFORE any
-    // level computes — the same measured-size broadcast discipline as
-    // the BSP loops (localCheckpoint/persist lineage hides sizes from
-    // the planner's estimates; AQE only converts to broadcast at
-    // runtime AFTER the edge side's exchange map output is written,
-    // ~10 MB × 2 joins × levels at sf0.1). A level within the
-    // broadcast limit gets an explicit hint: the level joins then plan
-    // as BroadcastHashJoin over the edge checkpoint scan directly — no
-    // edge exchange at all. Levels past the limit (the 1B-vertex
-    // shape) stay unhinted and AQE decides as before; plan-only skips
+    // EXACT per-level sizes from the distances: one tiny aggregate
+    // (≤ iters+1 rows to the driver). Level frames and membership
+    // filters are slices of the distance partition, so their row counts
+    // are knowable BEFORE any level computes — the same measured-size
+    // broadcast discipline as the BSP loops (localCheckpoint/persist
+    // lineage hides sizes from the planner's estimates; AQE only
+    // converts to broadcast at runtime AFTER the edge side's exchange
+    // map output is written, ~10 MB × 2 joins × levels at sf0.1). A
+    // level within the broadcast limit gets an explicit hint: the level
+    // joins then plan as BroadcastHashJoin over the edge checkpoint scan
+    // directly — no edge exchange at all. Levels past the limit (the
+    // 1B-vertex shape) stay unhinted and AQE decides; plan-only skips
     // the probe (no actions) and keeps the unhinted shape.
-    val lvlSized = knownDists.isDefined && !planOnly(e)
+    val lvlSized = !planOnly(e)
     val lvlSizes: Map[Int, Long] =
       if (!lvlSized) Map.empty
-      else knownDists.get.groupBy(col("dist")).count().collect()
+      else dists.groupBy(col("dist")).count().collect()
         .map(r => r.getDouble(0).toInt -> r.getLong(1)).toMap
-    def lvlBcast(df: DataFrame, k: Int): DataFrame =
-      if (lvlSized && lvlSizes.getOrElse(k, 0L) <= bcastLimit(df)) broadcast(df)
-      else df
-    // Running discovered-vertex union, replaced (not re-derived) each
-    // round: the anti-join probe at round k reads ONE cached frame of
-    // |seen_k| rows instead of a k-way union over every level frame —
-    // O(state) probe input per round and a constant number of stage
-    // inputs, where the re-union form's plan width grew with k.
-    // Superseded unions are released once the next one is materialized
-    // by the level checkpoint that consumes it. (Discovery state exists
-    // only on the self-discovering path — with knownDists the level
-    // membership is a filter of the given frame and `seen` never
-    // exists.)
-    var seen: DataFrame =
-      if (knownDists.isEmpty) levs.head.select(col("s0"), col("id")).persist()
-      else null
+    def small(k: Int): Boolean = lvlSized && lvlSizes.getOrElse(k, 0L) <= bcastLimit(e)
+    def lvlBcast(df: DataFrame, k: Int): DataFrame = if (small(k)) broadcast(df) else df
     for (k <- 1 to n) {
       val prev = levs(k - 1)
         .select(col("s0"), col("id").as("pid"), col("sigma").as("psig"))
-      def cand = e.join(prev, e("src") === prev("pid"))
-        .groupBy(col("s0"), col("dst").as("id"))
+      // First-discovered-at-round-k ⟺ hop distance k: semi-join the
+      // candidate sums with the level membership. When the level fits
+      // the broadcast limit, the membership semi-join moves BELOW the σ
+      // aggregation: the aggregation then only folds candidate rows
+      // whose head is actually at level k — the discarded groups (edges
+      // from level k−1 into already-seen vertices, most of the
+      // candidate volume on a dense graph) never pay the exact-decimal
+      // partial sum or its exchange. Whole groups are kept or discarded
+      // identically either side of the aggregation (the semi key IS the
+      // group key), so surviving sums fold the same rows — bit-identical.
+      val memK = dists.filter(col("dist") === lit(k.toDouble))
+        .select(col("s0").as("ms0"), col("id").as("mid"))
+      def sigma(df: DataFrame): DataFrame = df.groupBy(col("s0"), col("dst").as("id"))
         .agg(sum(col("psig")).cast("decimal(38,0)").as("sigma"))
-      val lev = knownDists match {
-        case Some(dists) =>
-          // First-discovered-at-round-k ⟺ hop distance k: semi-join
-          // the candidate sums with the known level membership — the
-          // same row set, the same decimal sums, no growing state.
-          // When the level fits the broadcast limit, the membership
-          // semi-join moves BELOW the σ aggregation (r14): the
-          // aggregation then only folds candidate rows whose head is
-          // actually at level k — the discarded groups (edges from
-          // level k−1 into already-seen vertices, most of the
-          // candidate volume on a dense graph) never pay the exact-
-          // decimal partial sum or its exchange. Whole groups are kept
-          // or discarded identically either side of the aggregation
-          // (the semi key IS the group key), so surviving sums fold
-          // the same rows — bit-identical.
-          val memK = dists.filter(col("dist") === lit(k.toDouble))
-            .select(col("s0").as("ms0"), col("id").as("mid"))
-          if (lvlSized && lvlSizes.getOrElse(k, 0L) <= bcastLimit(e))
-            keep(e.join(lvlBcast(prev, k - 1), e("src") === prev("pid"))
-              .join(broadcast(memK),
-                col("s0") === col("ms0") && e("dst") === col("mid"),
-                "left_semi")
-              .groupBy(col("s0"), col("dst").as("id"))
-              .agg(sum(col("psig")).cast("decimal(38,0)").as("sigma")))
-          else
-            keep(cand.join(memK,
-              col("s0") === col("ms0") && col("id") === col("mid"),
-              "left_semi"))
-        case None =>
-          mat(cand.join(seen, Seq("s0", "id"), "left_anti"))
-      }
-      levs = levs :+ lev
-      if (knownDists.isEmpty && k < n) {
-        val grown = seen.unionByName(lev.select(col("s0"), col("id"))).persist()
-        released += seen
-        seen = grown
-      }
+      val lev =
+        if (small(k))
+          sigma(e.join(lvlBcast(prev, k - 1), e("src") === prev("pid"))
+            .join(broadcast(memK),
+              col("s0") === col("ms0") && e("dst") === col("mid"), "left_semi"))
+        else
+          sigma(e.join(prev, e("src") === prev("pid")))
+            .join(memK, col("s0") === col("ms0") && col("id") === col("mid"), "left_semi")
+      levs = levs :+ keep(lev)
     }
-    if (seen != null) released += seen
     // The backward sweep references each level frame TWICE (as the
     // upper level's v-side and as the base of its own δ join), so the
     // levels it reads must be plan-truncated or the analyzed tree blows
-    // up combinatorially. The self-discovering path checkpointed each
-    // level eagerly (6 jobs); the knownDists path materializes ALL
-    // levels in ONE job — a union of the lazy linear forward chain,
-    // checkpointed once — and hands the sweep per-level filter slices
-    // of that LogicalRDD (measured at sf0.1: lazy levels fed straight
-    // into the sweep re-planned the deep trees and ran 17.9 s; the
-    // union checkpoint keeps the forward pass one job AND the sweep's
-    // inputs one-node plans).
-    val levSlices: Int => DataFrame = knownDists match {
-      case Some(_) =>
-        val all = mat(levs.zipWithIndex.map { case (l, k) =>
-          l.withColumn("__lvl", lit(k)) }.reduce(_ unionByName _))
-        released.foreach(_.unpersist(false)); released.clear()
-        k => all.filter(col("__lvl") === k).drop("__lvl")
-      case None => k => levs(k)
-    }
+    // up combinatorially. ALL levels materialize in ONE job — a union of
+    // the lazy linear forward chain, checkpointed once — and the sweep
+    // reads per-level filter slices of that LogicalRDD (measured at
+    // sf0.1: lazy levels fed straight into the sweep re-planned the
+    // deep trees and ran 17.9 s; the union checkpoint keeps the forward
+    // pass one job AND the sweep's inputs one-node plans).
+    val all = mat(levs.zipWithIndex.map { case (l, k) =>
+      l.withColumn("__lvl", lit(k)) }.reduce(_ unionByName _))
+    released.foreach(_.unpersist(false)); released.clear()
+    def level(k: Int): DataFrame = all.filter(col("__lvl") === k).drop("__lvl")
     // Backward sweep, one level per step from the deepest. Each level
     // frame references the one above it exactly ONCE, so the plan depth
     // is linear — lazy persist (not checkpoint) is enough: the final
     // action computes every level once and reuses the cached blocks.
-    var del = levSlices(n).select(col("s0"), col("id"), col("sigma"),
+    var del = level(n).select(col("s0"), col("id"), col("sigma"),
       lit(0.0).as("delta")).persist()
     released += del
     var acc = del.withColumn("dist", lit(n))
     for (k <- (n - 1) to 0 by -1) {
       val wside = del.select(col("s0").as("ws0"), col("id").as("wid"),
         col("sigma").as("sw"), col("delta").as("dw"))
-      val vside = levSlices(k)
+      val vside = level(k)
         .select(col("s0").as("vs0"), col("id").as("vid"), col("sigma").as("sv"))
       // Level sides hinted by their known exact sizes (see lvlBcast):
       // both joins then build hash relations over the level frames and
@@ -1298,7 +1250,7 @@ object DFGraphAlgs {
         .agg(sum(((col("sv").cast("double") / col("sw").cast("double")) *
             (lit(1.0) + col("dw"))).cast("decimal(28,15)"))
           .cast("double").as("dsum"))
-      del = levSlices(k).select(col("s0"), col("id"), col("sigma"))
+      del = level(k).select(col("s0"), col("id"), col("sigma"))
         .join(lvlBcast(terms, k), Seq("s0", "id"), "left")
         .select(col("s0"), col("id"), col("sigma"),
           coalesce(col("dsum"), lit(0.0)).as("delta"))
@@ -1306,11 +1258,11 @@ object DFGraphAlgs {
       released += del
       acc = acc.unionByName(del.withColumn("dist", lit(k)))
     }
-    // Materialize the result, then release every persisted per-level /
-    // per-step frame — repeated invocations in one session otherwise
-    // accumulate cached blocks with no release path (the mat'ed level
-    // frames are localCheckpoint blocks, freed by the ContextCleaner
-    // when their RDDs go out of scope, same as every BSP loop here).
+    // Materialize the result, then release every persisted per-step
+    // frame — repeated invocations in one session otherwise accumulate
+    // cached blocks with no release path (the checkpointed frames are
+    // localCheckpoint blocks, freed by the ContextCleaner when their
+    // RDDs go out of scope, same as every BSP loop here).
     val out = mat(acc.select(col("s0"), col("id"), col("dist"), col("delta")))
     released.foreach(_.unpersist(false))
     out

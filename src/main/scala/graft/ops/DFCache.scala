@@ -20,6 +20,15 @@ import scala.collection.concurrent.TrieMap
   * collected, and a fresh session never sees another session's frames.
   * The same per-session map holds scalar memos ([[memo]]), so every
   * value reused across queries lives — and dies — with its session.
+  *
+  * Two kinds of shared frame:
+  *  - [[cached]] persists a frame consumers JOIN (accurate size stats,
+  *    see below).
+  *  - A frame whose LOGICAL PLAN is enormous relative to its data (the
+  *    walk corpora embed per-step joins into the whole neighbour index)
+  *    is built ending in `DFGraphAlgs.mat`, which truncates its lineage,
+  *    and kept with [[memo]] — one materialized copy, no second
+  *    checkpoint on top.
   */
 object DFCache {
   private val caches =
@@ -64,19 +73,6 @@ object DFCache {
       if (sized) graft.graph.DFGraphAlgs.sizedScanView(p) else p
     }
   }
-
-  /** Lineage-truncating variant (lazy localCheckpoint) for caches whose
-    * LOGICAL PLAN is enormous relative to their data — the walk corpora
-    * embed per-step joins into the whole neighbor index, and every
-    * consumer re-ran Catalyst over that tree per action (measured at
-    * sf1: a cached 2 000-row corpus count spent 80 ms executing and
-    * ~1.9 s PLANNING; the skip-gram self-join, which embeds the tree
-    * twice, ~5 s → 0.5 s truncated). The lost size stats don't matter
-    * here: the frames are tiny and their consumers re-shuffle anyway.
-    * Same truncation discipline as DFGraphAlgs.mat between BSP rounds;
-    * a reliable checkpoint dir is the production durability knob. */
-  def cachedTruncated(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    memo(s, key)(build.localCheckpoint(false))
 
   /** Session-scoped memo: `compute` runs once per (session, key) and the
     * value is reused by every later call in that session; a new session

@@ -154,62 +154,80 @@ object GraphPack {
     * uniform first-order pick, steps 2.. use the p/q bias). */
   private val N2vSteps = 4
 
+  /** What a walk step probes: the size-coalesced neighbour index view
+    * (src, rn, dst) and its per-source degrees (src, deg). */
+  private final case class WalkIndex(nbr: DataFrame, degs: DataFrame) {
+    /** The uniform first-order pick of walk step `t`: neighbour
+      * rn = h28(prefix?_root_walk_t_node) % deg + 1 of each frontier
+      * row's node, joined on (src, rn). Returns the frontier's columns
+      * plus `dst`, the picked neighbour. */
+    def uniform(frontier: DataFrame, t: Int, prefix: Option[String]): DataFrame = {
+      val key = prefix.map(lit).toSeq ++
+        Seq(col("root"), col("walk"), lit(t), col("node"))
+      frontier.join(degs, col("node") === col("src"))
+        .withColumn("pick", h28(concat_ws("_", key: _*)) % col("deg") + 1)
+        .drop("src", "deg")
+        .join(nbr.select(col("src").as("nsrc"), col("rn"), col("dst")),
+          col("node") === col("nsrc") && col("rn") === col("pick"))
+        .drop("nsrc", "rn", "pick")
+    }
+  }
+
+  /** The one step loop of the walk corpora — (root, walk, step, node)
+    * for RwWalks walks from every root ≤ RwRootMax over `len` steps.
+    * `step(ix, frontier, t)` maps the step-t frontier (root, walk,
+    * node, plus whatever the corpus carries) to the step-(t+1) one.
+    *
+    * Every step re-scans the full neighbour index, so the loop reads a
+    * size-coalesced scan view of it (at the cache's inherited 64 tiny
+    * partitions those scans were nearly all task-launch overhead — the
+    * build measured ~flat from sf0.1 to sf1). The degree frame is
+    * persisted so the per-step plans read it as a tiny cached frame
+    * instead of re-aggregating the index once per unrolled step. Each
+    * step's frontier (≤ |roots|·RwWalks rows) is persisted in ONE
+    * partition: the persist truncates the step-t lineage so step t+1
+    * does not replay steps 0..t, and the single partition keeps the
+    * corpus at len+1 blocks instead of len·shuffle.partitions mostly
+    * empty ones. The corpus is then [[DFGraphAlgs.mat]]erialized — its
+    * logical plan embeds every step's joins into the whole index, and
+    * consumers re-planned that tree per action (measured at sf1: a
+    * cached 2 000-row corpus count spent 80 ms executing and ~1.9 s
+    * planning) — and the per-step scaffolding is released. */
+  private def walkCorpus(s: SparkSession, d: String, len: Int)(
+      step: (WalkIndex, DataFrame, Int) => DataFrame): DataFrame = {
+    val nbr = DFGraphAlgs.sizedScanView(nbrIndex(s, d))
+    val ix = WalkIndex(nbr, nbr.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val roots = edges(s, d).select(col("src").as("root")).distinct()
+      .filter(col("root") <= RwRootMax)
+    val walks = s.range(0, RwWalks).select(col("id").as("walk"))
+    var frontier = roots.crossJoin(broadcast(walks))   // constant fanout
+      .select(col("root"), col("walk"), col("root").as("node"))
+    val stepFrames = Seq.newBuilder[DataFrame]
+    val parts = Seq.newBuilder[DataFrame]
+    parts += frontier.select(col("root"), col("walk"), lit(0).as("step"), col("node"))
+    for (t <- 0 until len) {
+      frontier = step(ix, frontier, t).repartition(1)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      stepFrames += frontier
+      parts += frontier.select(col("root"), col("walk"), lit(t + 1).as("step"), col("node"))
+    }
+    val corpus = DFGraphAlgs.mat(parts.result().reduce(_ union _))
+    stepFrames.result().foreach(_.unpersist(false))
+    ix.degs.unpersist(false)
+    corpus
+  }
+
   /** The deterministic walk corpus shared by graph_rw_corpus and
     * graph_rw_skipgram — (root, walk, step, node); see the corpus query
-    * for the full design rationale. Session-cached: the skip-gram pairs
-    * are a second aggregation over the same frame. */
+    * for the full design rationale. Session-memoized: the skip-gram
+    * pairs are a second aggregation over the same frame. */
   private[ops] def rwCorpus(s: SparkSession, d: String): DataFrame =
-    DFCache.cachedTruncated(s, s"graph.rwcorpus:$d") {
-      // sizedScanView: every walk step re-scans the full neighbor index
-      // (broadcast-frontier join); at the cache's inherited 64 tiny
-      // partitions those scans were nearly all task-launch overhead
-      // (the build measured ~flat from sf0.1 to sf1 — fixed cost, not
-      // data). The view coalesces scans to a size-derived count.
-      val nbr = DFGraphAlgs.sizedScanView(nbrIndex(s, d))
-      // One row per src — persisted so the per-step plans read it as a
-      // tiny cached frame instead of re-aggregating the full neighbor
-      // index once per unrolled step (the steps' lineages would
-      // otherwise make the degree agg O(RwLen) full passes).
-      val degs = nbr.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val roots = edges(s, d).select(col("src").as("root")).distinct()
-        .filter(col("root") <= RwRootMax)
-      val walks = s.range(0, RwWalks).select(col("id").as("walk"))
-      var frontier = roots.crossJoin(broadcast(walks))   // constant fanout
-        .select(col("root"), col("walk"), col("root").as("node"))
-      val steps = Seq.newBuilder[DataFrame]
-      val stepFrames = Seq.newBuilder[DataFrame]
-      steps += frontier.select(col("root"), col("walk"),
-        lit(0).as("step"), col("node"))
-      for (t <- 0 until RwLen) {
-        val pick = h28(concat_ws("_",
-          col("root"), col("walk"), lit(t), col("node"))) % col("deg") + 1
-        frontier = frontier
-          .join(degs, col("node") === col("src"))
-          .withColumn("pick", pick)
-          .select(col("root"), col("walk"), col("node"), col("pick"))
-          .join(nbr.select(col("src").as("nsrc"), col("rn"), col("dst")),
-            col("node") === col("nsrc") && col("rn") === col("pick"))
+    DFCache.memo(s, s"graph.rwcorpus:$d") {
+      walkCorpus(s, d, RwLen) { (ix, frontier, t) =>
+        ix.uniform(frontier, t, None)
           .select(col("root"), col("walk"), col("dst").as("node"))
-          // Per-step persist (≤ |roots|·RwWalks rows): truncates the
-          // step-t lineage so step t+1 does not replay steps 0..t.
-          // repartition(1) first — one real partition per step keeps
-          // the unioned corpus cache at RwLen+1 partitions instead of
-          // RwLen·shuffle.partitions mostly-empty ones, which every
-          // corpus consumer would otherwise pay a task for.
-          .repartition(1)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        stepFrames += frontier
-        steps += frontier.select(col("root"), col("walk"),
-          lit(t + 1).as("step"), col("node"))
       }
-      // Materialize the corpus eagerly, then release the per-step
-      // scaffolding — otherwise every corpus build in a session leaves
-      // RwLen persisted frontier frames (plus degs) cached forever.
-      val corpus = steps.result().reduce(_ union _).localCheckpoint(true)
-      stepFrames.result().foreach(_.unpersist(false))
-      degs.unpersist(false)
-      corpus
     }
 
   /** node2vec (Grover & Leskovec 2016) second-order walk corpus —
@@ -226,74 +244,38 @@ object GraphPack {
     * distributed node2vec implementation, e.g. Spark's graph libraries).
     */
   private[ops] def node2vecCorpus(s: SparkSession, d: String): DataFrame =
-    DFCache.cachedTruncated(s, s"graph.n2vcorpus:$d") {
-      // Size-coalesced scan view — see rwCorpus.
-      val nbr = DFGraphAlgs.sizedScanView(nbrIndex(s, d))
-      // Persisted for the same per-step lineage-truncation reason as
-      // rwCorpus above.
-      val degs = nbr.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    DFCache.memo(s, s"graph.n2vcorpus:$d") {
       val adj = DFGraphAlgs.sizedScanView(edges(s, d))
         .select(col("src").as("psrc"), col("dst").as("pdst"))
         .withColumn("adjflag", lit(1))
-      val roots = edges(s, d).select(col("src").as("root")).distinct()
-        .filter(col("root") <= RwRootMax)
-      val walks = s.range(0, RwWalks).select(col("id").as("walk"))
-      val w0 = roots.crossJoin(broadcast(walks))   // constant fanout
-        .select(col("root"), col("walk"), col("root").as("node"))
-      val steps = Seq.newBuilder[DataFrame]
-      val stepFrames = Seq.newBuilder[DataFrame]
-      steps += w0.select(col("root"), col("walk"), lit(0).as("step"), col("node"))
-      // Step 1: uniform first-order pick (no previous node yet).
-      var frontier = w0.join(degs, col("node") === col("src"))
-        .withColumn("pick", h28(concat_ws("_", lit("n2v"),
-          col("root"), col("walk"), lit(0), col("node"))) % col("deg") + 1)
-        .join(nbr.select(col("src").as("nsrc"), col("rn"), col("dst")),
-          col("node") === col("nsrc") && col("rn") === col("pick"))
-        .select(col("root"), col("walk"), col("node").as("prev"),
-          col("dst").as("node"))
-        // Per-step persist — see rwCorpus.
-        .repartition(1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      stepFrames += frontier
-      steps += frontier.select(col("root"), col("walk"),
-        lit(1).as("step"), col("node"))
-      for (t <- 1 until N2vSteps) {
-        val inst = Window.partitionBy(col("root"), col("walk"))
-        val cum = inst.orderBy(col("dst"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val stepped = frontier
-          .join(nbr.select(col("src").as("nsrc"), col("dst")),
-            col("node") === col("nsrc"))
-          .join(adj, col("prev") === col("psrc") && col("dst") === col("pdst"),
-            "left")
-          .withColumn("wt",
-            when(col("dst") === col("prev"), lit(0.25))
-              .when(col("adjflag").isNotNull, lit(1.0))
-              .otherwise(lit(4.0)))
-          .withColumn("u", h28(concat_ws("_", lit("n2v"),
-            col("root"), col("walk"), lit(t), col("node"))).cast("double") /
-            lit(268435456.0))
-          .withColumn("cw", sum(col("wt")).over(cum))
-          .withColumn("tot", sum(col("wt")).over(inst))
-        frontier = stepped
-          .filter(col("cw") > col("u") * col("tot") &&
-            col("cw") - col("wt") <= col("u") * col("tot"))
-          .select(col("root"), col("walk"), col("node").as("prev"),
-            col("dst").as("node"))
-          // Per-step persist — see rwCorpus.
-          .repartition(1)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        stepFrames += frontier
-        steps += frontier.select(col("root"), col("walk"),
-          lit(t + 1).as("step"), col("node"))
+      val inst = Window.partitionBy(col("root"), col("walk"))
+      val cum = inst.orderBy(col("dst"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      walkCorpus(s, d, N2vSteps) { (ix, frontier, t) =>
+        if (t == 0)
+          ix.uniform(frontier, 0, Some("n2v"))
+            .select(col("root"), col("walk"), col("node").as("prev"),
+              col("dst").as("node"))
+        else
+          frontier
+            .join(ix.nbr.select(col("src").as("nsrc"), col("dst")),
+              col("node") === col("nsrc"))
+            .join(adj, col("prev") === col("psrc") && col("dst") === col("pdst"),
+              "left")
+            .withColumn("wt",
+              when(col("dst") === col("prev"), lit(0.25))
+                .when(col("adjflag").isNotNull, lit(1.0))
+                .otherwise(lit(4.0)))
+            .withColumn("u", h28(concat_ws("_", lit("n2v"),
+              col("root"), col("walk"), lit(t), col("node"))).cast("double") /
+              lit(268435456.0))
+            .withColumn("cw", sum(col("wt")).over(cum))
+            .withColumn("tot", sum(col("wt")).over(inst))
+            .filter(col("cw") > col("u") * col("tot") &&
+              col("cw") - col("wt") <= col("u") * col("tot"))
+            .select(col("root"), col("walk"), col("node").as("prev"),
+              col("dst").as("node"))
       }
-      // Eager materialize + release the per-step scaffolding — see
-      // rwCorpus.
-      val corpus = steps.result().reduce(_ union _).localCheckpoint(true)
-      stepFrames.result().foreach(_.unpersist(false))
-      degs.unpersist(false)
-      corpus
     }
 
   /** Sparsified co-supply projection — suppliers co-occurring in ≥
@@ -305,10 +287,10 @@ object GraphPack {
     DFCache.cached(s, s"graph.tripairs:$d") {
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("okey"), col("l_suppkey").as("sk"))
-      // Checkpointed once (r14, guide §2.4): the threshold aggregate and
+      // Materialized once (r14, guide §2.4): the threshold aggregate and
       // the filter pass below each re-ran the whole pair build — the
       // fill's cost was 2× the operator. One materialization feeds both.
-      val paired = DFGraphAlgs.sizedCheckpoint(
+      val paired = DFGraphAlgs.mat(
         graft.api.Analytics.cooccurrencePairs(li, "okey", "sk",
           maxPerKey = 32))
       val thr = paired.agg(round(expr("percentile(n_cooc, 0.9)"), 6).as("thr"))
@@ -867,13 +849,13 @@ object GraphPack {
     // The mutual-reinforcement recurrence runs HitsIters unrolled rounds
     // (same fixed-round BSP discipline as pagerank — one equi-join + one
     // hash aggregation per half-step, exact decimal sums so both engines
-    // accumulate identically), each round normalized by the max score (a
-    // 1-row broadcast stat, keeping values in [0,1] without a
+    // accumulate identically), each round normalized by the max score
+    // (observed by the round's own job; keeps values in [0,1] without a
     // sum-of-squares sqrt that would not replay exactly). Output: top-10
     // of each side with full tie-breaks.
     "graph_hits" -> ((s, d) => {
       // Iteration discipline (see DFGraphAlgs): each round's aggregate is
-      // LOCAL-CHECKPOINTED. The lazy chain here is re-evaluated by BOTH
+      // materialized (DFGraphAlgs.mat). The lazy chain here is re-evaluated by BOTH
       // top-k legs AND by every 1-row max broadcast's own job — without
       // materialization the reinforcement DAG re-executes multiplicatively
       // per action (measured 20.2 s → 3.4 s at sf0.1).
@@ -881,33 +863,32 @@ object GraphPack {
         .repartition(col("c")).persist()
       var hub = e.select(col("c")).distinct().withColumn("h", lit(1.0))
       var auth = e.select(col("p")).distinct().withColumn("a", lit(1.0))
-      // Each half-step's max normalizer is collected BY the checkpoint
-      // action itself (named observe on the aggregate, read back from
-      // the executed plan — the free-metric pattern of DFGraphAlgs'
-      // early-exit loops) and inlined as a LITERAL: the crossJoin-a-
-      // broadcast-stats-frame form paid one 1-row aggregate job + one
-      // broadcast build per half-step (4 per query) for a scalar the
-      // materialization job already saw. Same double, same division,
-      // bit-identical scores.
-      def maxOf(df: org.apache.spark.sql.DataFrame, m: String): Column =
-        DFGraphAlgs.observedNum(df, m, "m").map(v => lit(v.doubleValue))
+      // Each half-step: join the other side's scores, exact-decimal sum
+      // per vertex, then divide by the max. The max is collected BY the
+      // materialization action itself (named observe on the aggregate,
+      // read back from the executed plan — the free-metric pattern of
+      // DFGraphAlgs' early-exit loops) and inlined as a LITERAL: the
+      // crossJoin-a-broadcast-stats-frame form paid one 1-row aggregate
+      // job + one broadcast build per half-step (4 per query) for a
+      // scalar the materialization job already saw. Same double, same
+      // division, bit-identical scores. DFGraphAlgs.mat size-coalesces
+      // the |V|-row aggregate, which its max probe, the next half-step's
+      // join AND the top-k legs re-scan — at 32 inherited partitions
+      // those scans were mostly task overhead.
+      def halfStep(from: DataFrame, fromKey: String, fromScore: String,
+          key: String, score: String): DataFrame = {
+        val m = s"__graft_${score}max"
+        val raw = e.join(from, fromKey)
+          .groupBy(col(key)).agg(OpsUtil.rsum(col(fromScore)).as(score))
+          .observe(m, max(col(score)).as("m"))
+        val cp = DFGraphAlgs.mat(raw)
+        val norm = DFGraphAlgs.observedNum(raw, m, "m").map(v => lit(v.doubleValue))
           .getOrElse(lit(null).cast("double"))
+        cp.select(col(key), (col(score) / norm).as(score))
+      }
       for (_ <- 1 to HitsIters) {
-        // sizedCheckpoint = localCheckpoint + size-derived coalesce
-        // (DFGraphAlgs): each round's |V|-row aggregate is rescanned by
-        // its max probe, the next half-step's join AND the top-k legs —
-        // at 32 inherited partitions those scans were mostly task
-        // overhead.
-        val arawObs = e.join(hub, "c")
-          .groupBy(col("p")).agg(OpsUtil.rsum(col("h")).as("a"))
-          .observe("__graft_amax", max(col("a")).as("m"))
-        val araw = DFGraphAlgs.sizedCheckpoint(arawObs)
-        auth = araw.select(col("p"), (col("a") / maxOf(arawObs, "__graft_amax")).as("a"))
-        val hrawObs = e.join(auth, "p")
-          .groupBy(col("c")).agg(OpsUtil.rsum(col("a")).as("h"))
-          .observe("__graft_hmax", max(col("h")).as("m"))
-        val hraw = DFGraphAlgs.sizedCheckpoint(hrawObs)
-        hub = hraw.select(col("c"), (col("h") / maxOf(hrawObs, "__graft_hmax")).as("h"))
+        auth = halfStep(hub, "c", "h", "p", "a")
+        hub = halfStep(auth, "p", "a", "c", "h")
       }
       e.unpersist(false)
       val topA = auth.orderBy(col("a").desc, col("p").asc).limit(10)

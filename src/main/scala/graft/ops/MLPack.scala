@@ -1029,14 +1029,14 @@ object MLPack {
         .withColumn("deg2", log1p(col("deg2")))
       // The feature pipeline above is a wide join DAG that fit/transform/
       // count would otherwise each recompute — materialize it once.
-      // sizedCheckpoint (localCheckpoint + size-derived coalesce): the
+      // DFGraphAlgs.mat (localCheckpoint + size-derived coalesce): the
       // LBFGS fit re-scans this frame once per iteration plus the two
       // evaluator passes (~30 jobs); at the join DAG's inherited 32
       // partitions each of those paid 32 task launches for a few MB of
       // features. Partition-count changes reorder float partial sums in
       // the solver's treeAggregate — within the query's declared
       // non-bit-reproducible contract (rows-checked; MLSpec quality bar).
-      val assembled = graft.graph.DFGraphAlgs.sizedCheckpoint(
+      val assembled = graft.graph.DFGraphAlgs.mat(
         new VectorAssembler()
           .setInputCols(Array("cn", "aa", "deg1", "deg2", "pref")).setOutputCol("features")
           .transform(data))

@@ -9,6 +9,14 @@ package graft.tools
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [nameRegex] [sfDir]
   *   e.g. runMain graft.tools.PlanDump plans/r13 before "graph_pagerank|ml_train" /root/testdata/sf0.1
   * Writes <outDir>/<query>_<suffix>.txt per matching query.
+  *
+  * Plan identity: two runs of the SAME commit are not byte-identical
+  * even after normalizing expression, plan, RDD and codegen ids — the
+  * Expand column order of multi-`countDistinct` aggregates (e.g.
+  * src_table_stats, ml_auc_exact, ml_chi2_features) and AQE stage
+  * statistics (e.g. dedup_containment) vary between runs. A
+  * before/after check therefore needs a same-commit rerun as its
+  * baseline: a difference counts only where the rerun does not show it.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

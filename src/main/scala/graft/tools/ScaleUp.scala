@@ -91,7 +91,8 @@ object ScaleUp {
 
   /** Per-replica a-z bijections: replicas 0-311 are the original affine
     * family (l → a·l + b mod 26; replica 0 = identity) VERBATIM, so any
-    * fixture of ≤ 312 replicas regenerates byte-identical; past them,
+    * fixture of ≤ 312 replicas regenerates row-identical (same rows and
+    * row groups; parquet footer bytes may differ); past them,
     * deterministic seeded Fisher-Yates permutations, each
     * rejection-resampled (bumping its seed salt) until it agrees with
     * every earlier map on ≤ [[MaxAgree]] letters. Generation is

@@ -5,7 +5,8 @@ package graft
   * 1-minute figure alone — the calibration probe returns a positive,
   * repeatable host-speed number, and a filtered spot run warms only
   * the cache entries its queries consume. Also guards the one session
-  * factory ([[Session]]) against drift. */
+  * factory ([[Session]]) and the graph family's one materializer
+  * (`DFGraphAlgs.mat`) against drift. */
 class BenchContractSpec extends SparkSpec {
 
   test("gateLoad is max(1-min, 5-min) — the r12 sf10 gaming case trips it") {
@@ -114,6 +115,28 @@ class BenchContractSpec extends SparkSpec {
       new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains(needle)
     }.map(_.getPath)
     assert(sites === Seq("src/main/scala/graft/Session.scala"))
+  }
+
+  test("one materializer: the graph family checkpoints only inside DFGraphAlgs.mat") {
+    def text(p: String) =
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
+    val algs = "src/main/scala/graft/graph/DFGraphAlgs.scala"
+    val files = Seq(algs, "src/main/scala/graft/ops/GraphPack.scala",
+      "src/main/scala/graft/ops/DFCache.scala")
+    val src = text(algs)
+    val matStart = src.indexOf("def mat(")
+    val matEnd = src.indexOf("\n  }\n", matStart)
+    assert(matStart >= 0 && matEnd > matStart, "DFGraphAlgs.mat not found")
+    for (needle <- Seq("local" + "Checkpoint(", "." + "checkpoint(")) {
+      val sites = files.flatMap { f =>
+        val t = text(f)
+        Iterator.iterate(t.indexOf(needle))(i => t.indexOf(needle, i + 1))
+          .takeWhile(_ >= 0).map(f -> _)
+      }
+      assert(sites.size == 1, s"$needle sites: $sites")
+      val (f, i) = sites.head
+      assert(f == algs && i > matStart && i < matEnd, s"$needle outside DFGraphAlgs.mat")
+    }
   }
 
   test("the test session runs the factory's settings, key for key") {

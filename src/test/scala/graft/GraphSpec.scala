@@ -688,11 +688,11 @@ class GraphSpec extends SparkSpec {
 
   test("betweennessDeltas(knownDists) is row-identical to self-discovery") {
     import spark.implicits._
-    // The r13 optimization: level membership supplied by a precomputed
-    // multi-source BFS instead of the growing seen/anti-join state. The
-    // returned (s0, id, dist, delta) rows must be IDENTICAL — same σ
-    // ratios, same exact-decimal δ sums — on a graph with multiple
-    // shortest paths (the diamond) and a deep path.
+    // Level membership supplied by the caller's multi-source BFS must
+    // give the rows of the BFS betweennessDeltas runs itself when none
+    // is given: IDENTICAL (s0, id, dist, delta) rows — same σ ratios,
+    // same exact-decimal δ sums — on a graph with multiple shortest
+    // paths (the diamond) and a deep path.
     def rows(edges: Seq[(Long, Long)], sources: Seq[Long]) = {
       val sym = (edges ++ edges.map(_.swap)).toDF("src", "dst")
       val self = DFGraphAlgs.betweennessDeltas(sym, sources, 6)
@@ -711,6 +711,66 @@ class GraphSpec extends SparkSpec {
     val (dSelf, dGiven) = rows(Seq(1L -> 2L, 1L -> 3L, 2L -> 4L, 3L -> 4L),
       Seq(1L, 2L, 3L, 4L))
     assert(dSelf == dGiven)
+  }
+
+  /** Depth-truncated Brandes on the driver: for each source, BFS up to
+    * `iters` hops counting shortest paths σ, then the dependency
+    * recurrence δ(v) = Σ_{v→w, d(w)=d(v)+1} σv/σw·(1+δw) from the
+    * deepest level. Returns (s0, id, dist) → δ for every reached vertex. */
+  private def brandes(edges: Seq[(Long, Long)], sources: Seq[Long],
+      iters: Int): Map[(Long, Long, Int), Double] = {
+    val adj = edges.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    sources.flatMap { s =>
+      val dist = scala.collection.mutable.Map(s -> 0)
+      val sigma = scala.collection.mutable.Map(s -> BigInt(1)).withDefaultValue(BigInt(0))
+      val order = scala.collection.mutable.ArrayBuffer(s)
+      var i = 0
+      while (i < order.length) {
+        val v = order(i); i += 1
+        if (dist(v) < iters) adj.getOrElse(v, Nil).foreach { w =>
+          if (!dist.contains(w)) { dist(w) = dist(v) + 1; order += w }
+          if (dist(w) == dist(v) + 1) sigma(w) += sigma(v)
+        }
+      }
+      val delta = scala.collection.mutable.Map.empty[Long, Double].withDefaultValue(0.0)
+      order.reverseIterator.foreach { v =>
+        adj.getOrElse(v, Nil).filter(w => dist.get(w).contains(dist(v) + 1)).foreach { w =>
+          delta(v) += sigma(v).toDouble / sigma(w).toDouble * (1.0 + delta(w))
+        }
+      }
+      order.map(v => (s, v, dist(v)) -> delta(v))
+    }.toMap
+  }
+
+  test("betweennessDeltas matches driver-side Brandes on random graphs, both level joins") {
+    import spark.implicits._
+    val iters = 4
+    def check(seed: Int): Unit = {
+      val rnd = new scala.util.Random(seed)
+      val n = 30
+      val und = Iterator.continually((rnd.nextInt(n).toLong + 1, rnd.nextInt(n).toLong + 1))
+        .filter { case (a, b) => a < b }.distinct.take(40).toSeq
+      val sym = und ++ und.map(_.swap)
+      val sources = rnd.shuffle((1L to n).toList).take(5)
+      val want = brandes(sym, sources, iters)
+      val df = sym.toDF("src", "dst")
+      val dists = DFGraphAlgs.multiSourceShortestPaths(df.withColumn("w", lit(1.0)), sources, iters)
+      for (known <- Seq(None, Some(dists))) {
+        val got = DFGraphAlgs.betweennessDeltas(df, sources, iters, known).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)) -> r.getDouble(3)).toMap
+        val tag = s"seed $seed, knownDists ${known.isDefined}"
+        assert(got.keySet == want.keySet, s"$tag: (s0, id, dist) rows differ")
+        want.foreach { case (k, d) =>
+          assert(math.abs(got(k) - d) <= 1e-9 * math.max(1.0, d), s"$tag: delta at $k ${got(k)} != $d")
+        }
+      }
+    }
+    Seq(1, 2, 3).foreach(check)
+    // A zero broadcast limit leaves every non-empty level unhinted: the
+    // membership semi-join then runs after the σ aggregation.
+    spark.conf.set(DFGraphAlgs.StateBroadcastLimitConf, "0")
+    try Seq(1, 2, 3).foreach(check)
+    finally spark.conf.unset(DFGraphAlgs.StateBroadcastLimitConf)
   }
 
   test("connectedComponents labels the two micro components by min id") {
@@ -752,6 +812,22 @@ class GraphSpec extends SparkSpec {
         case _ =>
       }
     }
+  }
+
+  test("the walk corpus holds one materialized copy per session") {
+    // Checkpointed RDDs that hold blocks. A fresh session rebuilds the
+    // session-memoized corpus; its consumers must not add a second copy.
+    val sc = spark.sparkContext
+    def checkpointed(): Set[Int] = {
+      val held = sc.getRDDStorageInfo.filter(_.numCachedPartitions > 0).map(_.id).toSet
+      sc.getPersistentRDDs.collect { case (id, r) if r.isCheckpointed && held(id) => id }.toSet
+    }
+    val before = checkpointed()
+    val s2 = spark.newSession()
+    Seq("graph_rw_corpus", "graph_rw_skipgram")
+      .foreach(q => graft.ops.GraphPack.queries(q)(s2, sf()).collect())
+    val copies = checkpointed() -- before
+    assert(copies.size == 1, s"corpus checkpoints held: $copies")
   }
 
   test("personalizedPageRank: symmetric seeds get mirror-image ranks") {
