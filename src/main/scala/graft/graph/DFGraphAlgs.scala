@@ -5,8 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, Decimal, DoubleType, IntegerType,
-  LongType, ShortType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, Decimal, DoubleType,
+  IntegerType, LongType, MapType, ShortType, StructField, StructType, UserDefinedType}
 
 /** DataFrame-native synchronous graph algorithms (fixed-round BSP).
   *
@@ -55,13 +55,13 @@ import org.apache.spark.sql.types.{ByteType, DataType, Decimal, DoubleType, Inte
   * have a second configuration of the same rounds: the ONE-TASK path
   * ([[oneTask]]). When the edge list, once per source (per seed-row
   * estimate for PPR), fits `spark.sql.autoBroadcastJoinThreshold` — the
-  * rule Spark itself uses to ship a relation whole — outside plan-only
-  * mode and with integral ids, the edge list (and the seeds) move into one
+  * rule Spark itself uses to ship a relation whole — and the ids are
+  * integral, the edge list (and the seeds) move into one
   * partition and a single `mapPartitions` task runs every round over a
   * dense vertex index and a CSR adjacency: one Spark job per request
   * instead of one checkpoint job per round. The result is a lazy frame
   * with the BSP result's rows, bits and schema (GraphSpec runs every value
-  * case on both paths); above the threshold, under plan-only and with
+  * case on both paths); above the threshold and with
   * `spark.sql.autoBroadcastJoinThreshold=-1` the BSP loop runs.
   * No data reaches the driver on either path: the task runs on an
   * executor.
@@ -84,26 +84,6 @@ object DFGraphAlgs {
     * executor; a long-lived cluster job that must survive executor loss
     * wants the reliable form. */
   val ReliableCheckpointConf = "spark.graft.reliableCheckpoint"
-
-  /** Conf key: when "true", the BSP loops build their UNTRUNCATED lazy
-    * plan — [[mat]] becomes the identity (no checkpoint jobs) and the
-    * sizing actions behind the broadcast decisions are skipped (rounds
-    * take the shuffle-join path). This exists for PLAN INSPECTION
-    * (PlanSpec's bounded-window sweep — checkpointing otherwise truncates
-    * the inspectable plan to a LogicalRDD scan): loops also clamp to ≤ 2
-    * rounds under it, because every round is the same operator shape and
-    * the un-truncated k-round tree doubles per round (state feeds the
-    * next round twice), so analyzing the full-depth plan is exponential
-    * for zero extra coverage. Never EXECUTE under this flag. */
-  val PlanOnlyConf = "spark.graft.bsp.planOnly"
-
-  private def planOnly(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption(PlanOnlyConf).contains("true")
-
-  /** Loop rounds to actually build: full `iters` normally, 2 under
-    * plan-only (identical per-round shape; see [[PlanOnlyConf]]). */
-  private def rounds(df: DataFrame, iters: Int): Int =
-    if (planOnly(df)) math.min(iters, 2) else iters
 
   /** Target bytes per partition of checkpointed/cached frames the rounds
     * re-scan, measured at the sf0.1/sf1 checkpoints: per-task fixed
@@ -216,8 +196,8 @@ object DFGraphAlgs {
   /** Materialize a frame and truncate its logical lineage —
     * localCheckpoint by default, reliable checkpoint() when
     * [[ReliableCheckpointConf]] is set and a checkpoint dir exists;
-    * identity under [[PlanOnlyConf]] and for a frame that is already
-    * [[inMemory]] (a cached edge list is never copied per call). Local
+    * the identity for a frame that is already [[inMemory]] (a cached
+    * edge list is never copied per call). Local
     * checkpoints are then [[sizedCoalesce]]d so per-round scans don't
     * pay task overhead proportional to the lineage's partition count.
     * The ONE materializer of the graph family: the BSP loops, HITS,
@@ -226,7 +206,7 @@ object DFGraphAlgs {
     * call appears in DFGraphAlgs, GraphPack or DFCache). */
   private[graft] def mat(df: DataFrame): DataFrame = {
     val s = df.sparkSession
-    if (planOnly(df) || inMemory(df)) df
+    if (inMemory(df)) df
     else {
       val reliable = s.conf.getOption(ReliableCheckpointConf).contains("true") &&
         s.sparkContext.getCheckpointDir.isDefined
@@ -259,31 +239,22 @@ object DFGraphAlgs {
     * any row changed. Returns the checkpointed frame without the flag,
     * the flag (None without a `__chg` column) and the count. A metric
     * that was not posted reads as count −1 and "changed": a missing read
-    * costs the broadcast path and the early exit, never a result. Under
-    * plan-only: the identity, "changed", −1. */
+    * costs the broadcast path and the early exit, never a result. Each
+    * call posts one `__graft_bsp` observation, so a loop of k rounds
+    * posts k + 1 (GraphSpec counts rounds this way). */
   private def matObserved(df: DataFrame): (DataFrame, Option[Boolean], Long) = {
     val flagged = df.columns.contains("__chg")
-    val (cp, n, chg) =
-      if (planOnly(df)) (df, -1L, None)
-      else {
-        val flag = if (flagged) Seq(max(col("__chg").cast("int")).as("chg")) else Nil
-        val observed = df.observe("__graft_bsp", count(lit(1)).as("n"), flag: _*)
-        val cp = mat(observed)
-        def read(field: String) = observedNum(observed, "__graft_bsp", field)
-        (cp, read("n").map(_.longValue).getOrElse(-1L), if (flagged) read("chg") else None)
-      }
+    val flag = if (flagged) Seq(max(col("__chg").cast("int")).as("chg")) else Nil
+    val observed = df.observe("__graft_bsp", count(lit(1)).as("n"), flag: _*)
+    val cp = mat(observed)
+    def read(field: String) = observedNum(observed, "__graft_bsp", field)
+    val n = read("n").map(_.longValue).getOrElse(-1L)
     if (!flagged) (cp, None, n)
-    else (cp.drop("__chg"), Some(chg.map(_.intValue == 1).getOrElse(n != 0)), n)
+    else (cp.drop("__chg"), Some(read("chg").map(_.intValue == 1).getOrElse(n != 0)), n)
   }
 
-  /** Rounds the last [[bspRounds]] loop on this JVM actually executed —
-    * test-only telemetry (GraphSpec pins that a converged loop stops
-    * early AND returns the full-iters result); never read by query
-    * code. */
-  private[graft] val lastRoundsRun = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** THE round driver. Materializes `init`, then runs up to `iters`
-    * rounds (2 under plan-only) — see [[roundsFrom]]. Returns the final
+    * rounds — see [[roundsFrom]]. Returns the final
     * state and its last posted row count (−1 when none was posted). */
   private def bspRounds(init: DataFrame, iters: Int,
       sameSizeIsFixedPoint: Boolean = false)(
@@ -319,14 +290,12 @@ object DFGraphAlgs {
       round: (DataFrame, Boolean) => DataFrame): (DataFrame, Long) = {
     var (st, n) = (st0, n0)
     var changing = true
-    lastRoundsRun.set(0)
-    for (_ <- 1 to rounds(st, iters) if changing) {
-      val small = !planOnly(st) && n >= 0 && n <= bcastLimit(st)
+    for (_ <- 1 to iters if changing) {
+      val small = n >= 0 && n <= bcastLimit(st)
       val (next, chg, m) = matObserved(round(st, small))
       changing = chg.getOrElse(!sameSizeIsFixedPoint || m < 0 || m != n)
       st = next
       if (m >= 0) n = m
-      lastRoundsRun.incrementAndGet()
     }
     (st, n)
   }
@@ -380,9 +349,7 @@ object DFGraphAlgs {
     * (rel, src) for the composite-key multi-view loops). Returns None
     * when no key exceeds the target (the common case — rounds then skip
     * the per-round fanout join entirely; one probe action at build
-    * time, driver metadata only). Under plan-only the probe is skipped
-    * and salting activates iff target ≤ 1 (how PlanSpec asserts the
-    * salted shape without running jobs). */
+    * time, driver metadata only). */
   private def saltPlan(e: DataFrame, keys: Seq[String] = Seq("src"),
       knownMaxDeg: Option[Long] = None): Option[(DataFrame, DataFrame)] = {
     val kcols = keys.map(col)
@@ -406,14 +373,13 @@ object DFGraphAlgs {
     * contribution frame re-read the whole edge cache, ~2 s; persisting
     * the out-degree frame for the probe made the contribution join
     * WORSE, +2-4 s, because the now-stats-known |V|-row cache planned
-    * as a broadcast). The probe runs only outside plan-only mode; `deg`
-    * is used to build the fanout frame when salting does activate. */
+    * as a broadcast). `deg` is used to build the fanout frame when
+    * salting does activate. */
   private def saltPlanFromDeg(deg: DataFrame, degCol: String,
       keys: Seq[String], e: DataFrame,
       probe: Long => Boolean): Option[(DataFrame, DataFrame)] = {
     val target = saltTarget(e)
-    val active = if (planOnly(e)) target <= 1L else probe(target)
-    if (!active) None
+    if (!probe(target)) None
     else {
       val kcols = keys.map(col)
       val ns = deg.select(kcols :+
@@ -511,8 +477,7 @@ object DFGraphAlgs {
         // from the contribution rows themselves (identical row set: the
         // deg window keeps every edge row), so the edge list is never
         // re-checkpointed or re-exchanged per query.
-        val k = math.max(1, pc.rdd.getNumPartitions)
-        rankRounds(pc, rankNodes(pc, Nil, Some(k)), Nil, None, iters)
+        rankRounds(pc, rankNodes(pc, Nil, Some(loopParts(pc))), Nil, None, iters)
       case None =>
         pageRankLoop(mat(edges.select(col("src"), col("dst"))), Nil, iters, knownMaxDeg)
     }
@@ -521,12 +486,10 @@ object DFGraphAlgs {
     * decidable DRIVER-SIDE as "salting off" (a memoized max out-degree
     * bound within the salt budget): the prebuilt frame carries the
     * unsalted fill's partitioning, and the salted path must keep
-    * building its own (src, __salt)-keyed frame. Plan-only runs ignore
-    * it (the inspectable shape stays the self-building loop's). */
+    * building its own (src, __salt)-keyed frame. */
   private def usableContrib(edges: DataFrame, knownMaxDeg: Option[Long],
       prebuilt: Option[DataFrame]): Option[DataFrame] =
-    prebuilt.filter(_ => !planOnly(edges) &&
-      knownMaxDeg.exists(_ <= saltTarget(edges)))
+    prebuilt.filter(_ => knownMaxDeg.exists(_ <= saltTarget(edges)))
 
   /** The unsalted loops' per-round join input — (src, dst, deg), hash-
     * partitioned and SORTED on src at the size-derived loop count (the
@@ -539,7 +502,7 @@ object DFGraphAlgs {
     * [[usableContrib]] proves the salted path off. */
   private[graft] def contribFrame(edges: DataFrame): DataFrame = {
     val e = mat(edges.select(col("src"), col("dst")))
-    degFill(e, Seq("src"), loopParts(e))
+    degFill(e, Seq("src"), Some(loopParts(e)))
   }
 
   /** Loop-frame partition count, inherited from the mat'ed edge frame:
@@ -547,9 +510,8 @@ object DFGraphAlgs {
     * reusing it keys the per-round co-partitioned joins to data volume
     * instead of spark.sql.shuffle.partitions (32 waves of ~200 ms task
     * overhead per round at small SFs; ~bytes/target partitions at any
-    * scale). planOnly (mat = identity) keeps the session default. */
-  private def loopParts(e: DataFrame): Option[Int] =
-    if (planOnly(e)) None else Some(math.max(1, e.rdd.getNumPartitions))
+    * scale). */
+  private def loopParts(e: DataFrame): Int = math.max(1, e.rdd.getNumPartitions)
 
   /** `df` hash-partitioned on `keys` (at `kP` partitions, else the
     * session default) and sorted within partitions on them. */
@@ -622,7 +584,7 @@ object DFGraphAlgs {
     * Seq("rel") for the composite multi-view keys. */
   private def pageRankLoop(e: DataFrame, prefix: Seq[String], iters: Int,
       knownMaxDeg: Option[Long]): DataFrame = {
-    val kP = loopParts(e)
+    val kP = Some(loopParts(e))
     val (contrib, salt) = contribPlan(e, prefix :+ "src", kP, knownMaxDeg)
     val out = rankRounds(contrib, rankNodes(e, prefix, kP), prefix,
       salt.map(_._1), iters)
@@ -696,56 +658,46 @@ object DFGraphAlgs {
     // vertex << bits(rel) cannot overflow (packed as longs, decoded back
     // to the input's id type). knownMaxDeg stays a valid upper bound for the
     // packed graph's hub probe (per-(rel,src) degree ≤ total degree).
-    // Skipped under plan-only (the dictionary probe is an action; the
-    // inspectable shape is the composite loop's).
-    val packed: Option[DataFrame] = if (planOnly(e)) None else {
-      val packable = {
-        import org.apache.spark.sql.types._
-        val atomicRel = edges.schema("rel").dataType match {
-          case _: StructType | _: ArrayType | _: MapType |
-               _: UserDefinedType[_] => false
-          case _ => true
-        }
-        atomicRel && Seq("src", "dst").forall(c => integral(e.schema(c).dataType))
-      }
-      if (!packable) None
+    val packable = (edges.schema("rel").dataType match {
+      case _: StructType | _: ArrayType | _: MapType | _: UserDefinedType[_] => false
+      case _ => true
+    }) && Seq("src", "dst").forall(c => integral(e.schema(c).dataType))
+    val packed: Option[DataFrame] = if (!packable) None else {
+      // ONE probe action over the materialized edge list: the rel
+      // dictionary (collect_set — order is irrelevant, the same
+      // in-run array drives both encode and decode), the id bounds,
+      // and a null-rel count (collect_set drops nulls; a null rel
+      // routes to the composite loop, which alone carries its
+      // join-semantics).
+      val probe = e.agg(collect_set(col("rel")).as("rels"),
+        max(greatest(col("src"), col("dst"))).as("mx"),
+        min(least(col("src"), col("dst"))).as("mn"),
+        sum(when(col("rel").isNull, 1L).otherwise(0L)).as("nulls")).head()
+      val rels: Array[Any] = probe.getSeq[Any](0).toArray
+      val bits = 64 - java.lang.Long.numberOfLeadingZeros(
+        math.max(rels.length - 1, 1).toLong)
+      def num(i: Int) = Option(probe.getAs[Number](i)).map(_.longValue).getOrElse(0L)
+      val (maxId, minId, nNull) = (num(1), num(2), num(3))
+      if (rels.isEmpty || nNull > 0L || minId < 0L ||
+          maxId > (Long.MaxValue >> bits)) None
       else {
-        // ONE probe action over the materialized edge list: the rel
-        // dictionary (collect_set — order is irrelevant, the same
-        // in-run array drives both encode and decode), the id bounds,
-        // and a null-rel count (collect_set drops nulls; a null rel
-        // routes to the composite loop, which alone carries its
-        // join-semantics).
-        val probe = e.agg(collect_set(col("rel")).as("rels"),
-          max(greatest(col("src"), col("dst"))).as("mx"),
-          min(least(col("src"), col("dst"))).as("mn"),
-          sum(when(col("rel").isNull, 1L).otherwise(0L)).as("nulls")).head()
-        val rels: Array[Any] = probe.getSeq[Any](0).toArray
-        val bits = 64 - java.lang.Long.numberOfLeadingZeros(
-          math.max(rels.length - 1, 1).toLong)
-        def num(i: Int) = Option(probe.getAs[Number](i)).map(_.longValue).getOrElse(0L)
-        val (maxId, minId, nNull) = (num(1), num(2), num(3))
-        if (rels.isEmpty || nNull > 0L || minId < 0L ||
-            maxId > (Long.MaxValue >> bits)) None
-        else {
-          val relIdx = rels.zipWithIndex.tail
-            .foldLeft(when(col("rel") === lit(rels.head), lit(0L))) {
-              case (w, (r, i)) => w.when(col("rel") === lit(r), lit(i.toLong))
-            }
-          def pack(c: Column) = shiftleft(c.cast("long"), bits).bitwiseOR(col("__ri"))
-          val enc = e.withColumn("__ri", relIdx)
-            .select(pack(col("src")).as("src"), pack(col("dst")).as("dst"))
-          val pr = pageRankLoop(enc, Nil, iters, knownMaxDeg)
-          val mask = (1L << bits) - 1L
-          val relBack = rels.zipWithIndex.tail
-            .foldLeft(when(col("id").bitwiseAND(lit(mask)) === lit(0L),
-              lit(rels.head))) { case (w, (r, i)) =>
-                w.when(col("id").bitwiseAND(lit(mask)) === lit(i.toLong), lit(r))
-            }
-          Some(pr.select(relBack.as("rel"),
-            shiftrightunsigned(col("id"), bits).cast(vertices(e).schema("id").dataType)
-              .as("id"), col("rank")))
-        }
+        val relIdx = rels.zipWithIndex.tail
+          .foldLeft(when(col("rel") === lit(rels.head), lit(0L))) {
+            case (w, (r, i)) => w.when(col("rel") === lit(r), lit(i.toLong))
+          }
+        def pack(c: Column) = shiftleft(c.cast("long"), bits).bitwiseOR(col("__ri"))
+        val enc = e.withColumn("__ri", relIdx)
+          .select(pack(col("src")).as("src"), pack(col("dst")).as("dst"))
+        val pr = pageRankLoop(enc, Nil, iters, knownMaxDeg)
+        val mask = (1L << bits) - 1L
+        val relBack = rels.zipWithIndex.tail
+          .foldLeft(when(col("id").bitwiseAND(lit(mask)) === lit(0L),
+            lit(rels.head))) { case (w, (r, i)) =>
+              w.when(col("id").bitwiseAND(lit(mask)) === lit(i.toLong), lit(r))
+          }
+        Some(pr.select(relBack.as("rel"),
+          shiftrightunsigned(col("id"), bits).cast(vertices(e).schema("id").dataType)
+            .as("id"), col("rank")))
       }
     }
     packed.getOrElse(pageRankLoop(e, Seq("rel"), iters, knownMaxDeg))
@@ -875,7 +827,7 @@ object DFGraphAlgs {
       val v = vertices(e)
       val init = Seq(source).toDF("id").select(col("id"), lit(0.0).as("dist"))
       val (st, n) = relaxReached(e, init, Nil, iters, knownMaxDeg)
-      val isVertex = n > 1 || planOnly(st) ||
+      val isVertex = n > 1 ||
         e.filter(col("src") === source || col("dst") === source).limit(1).count() > 0
       val reached = (if (isVertex) st else st.filter(col("id") =!= source))
         .select(col("id").cast(v.schema("id").dataType).as("id"), col("dist"))
@@ -891,13 +843,13 @@ object DFGraphAlgs {
     case _ => false
   }
 
-  /** Whether a call runs on the one-task path: outside plan-only mode,
-    * with integral `ids`, when `sources` copies of the edge list's
+  /** Whether a call runs on the one-task path: with integral `ids`,
+    * when `sources` copies of the edge list's
     * optimized-plan size estimate fit spark.sql.autoBroadcastJoinThreshold
     * (−1 turns the path off). `sources` is only evaluated when the other
     * tests pass. */
   private def oneTask(edges: DataFrame, ids: Seq[DataType])(sources: => BigInt): Boolean =
-    !planOnly(edges) && ids.forall(integral) &&
+    ids.forall(integral) &&
       sources * edges.queryExecution.optimizedPlan.stats.sizeInBytes <=
         edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
 
@@ -1125,8 +1077,7 @@ object DFGraphAlgs {
     *    order-independent (the engines replay identical doubles).
     *
     * Returns the per-source dependency frame (s0, id, dist, delta) —
-    * betweenness is the caller's Σ_s δ(s, v) over v ≠ s. Rounds clamp
-    * under [[PlanOnlyConf]] like every loop here.
+    * betweenness is the caller's Σ_s δ(s, v) over v ≠ s.
     *
     * Level membership always comes from a multi-source BFS frame
     * (s0, id, dist) over the SAME sources, edges and ≥ `iters`
@@ -1164,7 +1115,6 @@ object DFGraphAlgs {
     def keep(df: DataFrame): DataFrame = { val p = df.persist(); released += p; p }
     var levs = Vector(keep(sources.toDF("s0").select(col("s0"),
       col("s0").as("id"), lit(1L).cast("decimal(38,0)").as("sigma"))))
-    val n = rounds(levs.head, iters)
     // EXACT per-level sizes from the distances: one tiny aggregate
     // (≤ iters+1 rows to the driver). Level frames and membership
     // filters are slices of the distance partition, so their row counts
@@ -1176,16 +1126,11 @@ object DFGraphAlgs {
     // level within the broadcast limit gets an explicit hint: the level
     // joins then plan as BroadcastHashJoin over the edge checkpoint scan
     // directly — no edge exchange at all. Levels past the limit (the
-    // 1B-vertex shape) stay unhinted and AQE decides; plan-only skips
-    // the probe (no actions) and keeps the unhinted shape.
-    val lvlSized = !planOnly(e)
-    val lvlSizes: Map[Int, Long] =
-      if (!lvlSized) Map.empty
-      else dists.groupBy(col("dist")).count().collect()
-        .map(r => r.getDouble(0).toInt -> r.getLong(1)).toMap
-    def small(k: Int): Boolean = lvlSized && lvlSizes.getOrElse(k, 0L) <= bcastLimit(e)
-    def lvlBcast(df: DataFrame, k: Int): DataFrame = if (small(k)) broadcast(df) else df
-    for (k <- 1 to n) {
+    // 1B-vertex shape) stay unhinted and AQE decides.
+    val lvlSizes: Map[Int, Long] = dists.groupBy(col("dist")).count().collect()
+      .map(r => r.getDouble(0).toInt -> r.getLong(1)).toMap
+    def small(k: Int): Boolean = lvlSizes.getOrElse(k, 0L) <= bcastLimit(e)
+    for (k <- 1 to iters) {
       val prev = levs(k - 1)
         .select(col("s0"), col("id").as("pid"), col("sigma").as("psig"))
       // First-discovered-at-round-k ⟺ hop distance k: semi-join the
@@ -1204,7 +1149,7 @@ object DFGraphAlgs {
         .agg(sum(col("psig")).cast("decimal(38,0)").as("sigma"))
       val lev =
         if (small(k))
-          sigma(e.join(lvlBcast(prev, k - 1), e("src") === prev("pid"))
+          sigma(e.join(maybeBcast(prev, small(k - 1)), e("src") === prev("pid"))
             .join(broadcast(memK),
               col("s0") === col("ms0") && e("dst") === col("mid"), "left_semi"))
         else
@@ -1229,29 +1174,29 @@ object DFGraphAlgs {
     // frame references the one above it exactly ONCE, so the plan depth
     // is linear — lazy persist (not checkpoint) is enough: the final
     // action computes every level once and reuses the cached blocks.
-    var del = level(n).select(col("s0"), col("id"), col("sigma"),
+    var del = level(iters).select(col("s0"), col("id"), col("sigma"),
       lit(0.0).as("delta")).persist()
     released += del
-    var acc = del.withColumn("dist", lit(n))
-    for (k <- (n - 1) to 0 by -1) {
+    var acc = del.withColumn("dist", lit(iters))
+    for (k <- (iters - 1) to 0 by -1) {
       val wside = del.select(col("s0").as("ws0"), col("id").as("wid"),
         col("sigma").as("sw"), col("delta").as("dw"))
       val vside = level(k)
         .select(col("s0").as("vs0"), col("id").as("vid"), col("sigma").as("sv"))
-      // Level sides hinted by their known exact sizes (see lvlBcast):
+      // Level sides hinted by their known exact sizes (see small):
       // both joins then build hash relations over the level frames and
       // stream the edge checkpoint once per level with NO edge
       // exchange. terms output is ≤ the level-k row count (one group
       // per level-k vertex with successors), so it gets the same hint —
       // the δ-merge left join below then probes it broadcast too.
-      val terms = e.join(lvlBcast(wside, k + 1), e("dst") === wside("wid"))
-        .join(lvlBcast(vside, k), e("src") === col("vid") && col("vs0") === col("ws0"))
+      val terms = e.join(maybeBcast(wside, small(k + 1)), e("dst") === wside("wid"))
+        .join(maybeBcast(vside, small(k)), e("src") === col("vid") && col("vs0") === col("ws0"))
         .groupBy(col("vs0").as("s0"), col("vid").as("id"))
         .agg(sum(((col("sv").cast("double") / col("sw").cast("double")) *
             (lit(1.0) + col("dw"))).cast("decimal(28,15)"))
           .cast("double").as("dsum"))
       del = level(k).select(col("s0"), col("id"), col("sigma"))
-        .join(lvlBcast(terms, k), Seq("s0", "id"), "left")
+        .join(maybeBcast(terms, small(k)), Seq("s0", "id"), "left")
         .select(col("s0"), col("id"), col("sigma"),
           coalesce(col("dsum"), lit(0.0)).as("delta"))
         .persist()

@@ -88,13 +88,6 @@ object GraphPack {
         .map(_.asInstanceOf[Long]).getOrElse(0L)
     }
 
-  /** [[maxCoDeg]] as the BSP loops' knownMaxDeg argument — None under
-    * plan-only (the memo fill is an ACTION; plan sweeps must stay
-    * job-free, and the probe is skipped there anyway). */
-  private def hubBound(s: SparkSession, d: String): Option[Long] =
-    if (s.conf.getOption(DFGraphAlgs.PlanOnlyConf).contains("true")) None
-    else Some(maxCoDeg(s, d))
-
   /** Directed symmetric edge list (src,dst) of the bipartite graph.
     * Session-cached: five queries walk this same graph (§4's
     * "precomputed weights reused across queries"). */
@@ -321,7 +314,7 @@ object GraphPack {
     DFCache.cached(s, s"graph.lmdists:$d") {
       DFGraphAlgs.multiSourceShortestPaths(
         edges(s, d).withColumn("w", lit(1.0)),
-        (1L to HarmonicLandmarkMax), BfsIters, hubBound(s, d))
+        (1L to HarmonicLandmarkMax), BfsIters, Some(maxCoDeg(s, d)))
     }
 
   /** BFS hop distances from the fixed source — shared by the hop
@@ -356,7 +349,7 @@ object GraphPack {
   private[ops] def ssspState(s: SparkSession, d: String): DataFrame =
     DFCache.cached(s, s"graph.ssspPred:$d") {
       DFGraphAlgs.shortestPathsWithPred(weightedEdges(s, d), SourceId, SsspIters,
-        hubBound(s, d))
+        Some(maxCoDeg(s, d)))
     }
 
   // SQL mirroring triPairs() — capped co-occurrence, P90 threshold.
@@ -418,7 +411,7 @@ object GraphPack {
     // (ref data_processor.py:56-78, damping 0.85). DFGraphAlgs holds the
     // BSP loop; GraphSpec checks it against a GraphX/Pregel twin.
     "graph_pagerank" -> ((s, d) => {
-      DFGraphAlgs.pageRank(edges(s, d), PrIters, hubBound(s, d),
+      DFGraphAlgs.pageRank(edges(s, d), PrIters, Some(maxCoDeg(s, d)),
         prebuiltContrib = Some(prContrib(s, d)))
         .select(col("id"), round(col("rank"), 6).as("pagerank"))
         .orderBy(col("id"))
@@ -433,7 +426,7 @@ object GraphPack {
       val cs = relPairs(s, d)
       val rels = cs.select(col("rel"), col("c").as("src"), col("p").as("dst"))
         .union(cs.select(col("rel"), col("p").as("src"), col("c").as("dst")))
-      DFGraphAlgs.pageRankByRel(rels, PrIters, hubBound(s, d))
+      DFGraphAlgs.pageRankByRel(rels, PrIters, Some(maxCoDeg(s, d)))
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("rel")).orderBy(col("rank").desc, col("id").asc)))
         .filter(col("rn") <= 10)
@@ -462,7 +455,7 @@ object GraphPack {
       // rows, broadcast by AQE). Result identical by construction.
       val nbrs = e.select(col("src").as("seed"), col("dst").as("id"))
         .filter(col("seed") <= PprSeedMax)
-      DFGraphAlgs.personalizedPageRank(e, seeds, PprIters, hubBound(s, d),
+      DFGraphAlgs.personalizedPageRank(e, seeds, PprIters, Some(maxCoDeg(s, d)),
         prebuiltContrib = Some(prContrib(s, d)))
         .filter(col("id") =!= col("seed"))
         .join(nbrs, Seq("seed", "id"), "left_anti")
@@ -623,7 +616,7 @@ object GraphPack {
       val sparse = weightedEdges(s, d)
         .filter(col("w") < CcMaxW && col("n") >= CcMinOrders)
         .select(col("src"), col("dst"))
-      DFGraphAlgs.labelPropagation(sparse, LpIters, hubBound(s, d))
+      DFGraphAlgs.labelPropagation(sparse, LpIters, Some(maxCoDeg(s, d)))
         .groupBy(col("lbl")).agg(count(lit(1)).as("n_members"))
         .orderBy(col("n_members").desc, col("lbl").asc)
         .limit(20)
@@ -673,7 +666,7 @@ object GraphPack {
       val sparse = weightedEdges(s, d)
         .filter(col("w") < CcMaxW && col("n") >= CcMinOrders)
         .select(col("src"), col("dst"))
-      val lbl = DFGraphAlgs.labelPropagation(sparse, LpIters, hubBound(s, d))
+      val lbl = DFGraphAlgs.labelPropagation(sparse, LpIters, Some(maxCoDeg(s, d)))
       val e2 = sparse
         .join(lbl.select(col("id").as("src"), col("lbl").as("ls")), "src")
         .join(lbl.select(col("id").as("dst"), col("lbl").as("ld")), "dst")
@@ -1004,7 +997,7 @@ object GraphPack {
       val sparse = weightedEdges(s, d)
         .filter(col("w") < CcMaxW && col("n") >= CcMinOrders)
         .select(col("src"), col("dst"))
-      DFGraphAlgs.connectedComponents(sparse, CcIters, hubBound(s, d))
+      DFGraphAlgs.connectedComponents(sparse, CcIters, Some(maxCoDeg(s, d)))
         .groupBy(col("comp")).agg(count(lit(1)).as("n_nodes"))
         .orderBy(col("n_nodes").desc, col("comp").asc)
         .limit(20)

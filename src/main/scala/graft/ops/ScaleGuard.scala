@@ -30,7 +30,7 @@ object ScaleGuard {
     * "documents:<dir>") so repeat builds reuse the count, `n` is the
     * BY-NAME sizing count (evaluated at most once per session and key, in
     * [[DFCache.memo]] — an eager count() inside query CONSTRUCTION would
-    * otherwise tax plan-only callers with a full scan per build),
+    * otherwise pay a full scan per build),
     * `linearAlt` the adjacent linear twin the message steers to. */
   def quadratic(s: SparkSession, op: String, key: String, n: => Long,
       linearAlt: String): Unit = {

@@ -2,9 +2,14 @@ package graft.tools
 
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
   * the plan-evidence artifacts for optimization rounds (plans/rNN/).
-  * Builds each query's DataFrame (no action — plans only, cheap) under
-  * [[graft.Session]], the config Bench runs, so Exchange counts / join
-  * choices / PushedFilters match what the bench actually runs.
+  * Builds each query's DataFrame under [[graft.Session]], the config
+  * Bench runs, so Exchange counts / join choices / PushedFilters match
+  * what the bench actually runs. The final frame is not executed, but
+  * building it may run actions (BSP rounds checkpoint, sizing probes
+  * count): after the final plan, the file holds the executed plan of
+  * every action that ran while the query was built, in order, each
+  * under a `== action k: <name> ==` header (`localCheckpoint`,
+  * `count`, …), as recorded by [[QueryRecorder]].
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [nameRegex] [sfDir]
   *   e.g. runMain graft.tools.PlanDump plans/r13 before "graph_pagerank|ml_train" /root/testdata/sf0.1
@@ -33,9 +38,11 @@ object PlanDump {
     sel.foreach { case (name, fn) =>
       val plan =
         try {
-          val df = fn(spark, sfDir)
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+          val (df, actions) = QueryRecorder(spark)(fn(spark, sfDir))
+          (("", df.queryExecution) +: actions).zipWithIndex.map { case ((action, qe), k) =>
+            (if (k == 0) "" else s"\n== action $k: $action ==\n") +
+              qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+          }.mkString
         } catch {
           case e: Throwable =>
             s"PLAN BUILD FAILED: ${e.getClass.getName}: ${e.getMessage}\n"

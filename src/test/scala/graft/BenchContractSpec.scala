@@ -5,9 +5,21 @@ package graft
   * 1-minute figure alone — the calibration probe returns a positive,
   * repeatable host-speed number, and a filtered spot run warms only
   * the cache entries its queries consume. Also guards the one session
-  * factory ([[Session]]) and the graph family's one materializer
-  * (`DFGraphAlgs.mat`) against drift. */
+  * factory ([[Session]]), the graph family's one materializer
+  * (`DFGraphAlgs.mat`) and the registry of knobs against drift. */
 class BenchContractSpec extends SparkSpec {
+
+  /** The `.scala` files under `dir`, checked to be run from the repository root. */
+  private def scalaFiles(dir: String): Seq[java.io.File] = {
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+    val root = new java.io.File(dir)
+    assert(root.isDirectory, s"run from the repository root (cwd ${root.getAbsoluteFile})")
+    files(root).filter(_.getName.endsWith(".scala"))
+  }
+
+  private def text(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
 
   test("gateLoad is max(1-min, 5-min) — the r12 sf10 gaming case trips it") {
     // r12's sf10 spot: 1-min dipped to 1.03 while 5/15-min read a busy
@@ -107,29 +119,37 @@ class BenchContractSpec extends SparkSpec {
 
   test("one session factory: the only session builder in src/ is graft.Session") {
     val needle = "SparkSession" + ".builder"
-    def files(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-    val src = new java.io.File("src")
-    assert(src.isDirectory, s"run from the repository root (cwd ${src.getAbsoluteFile})")
-    val sites = files(src).filter(_.getName.endsWith(".scala")).filter { f =>
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains(needle)
-    }.map(_.getPath)
+    val sites = scalaFiles("src").filter(text(_).contains(needle)).map(_.getPath)
     assert(sites === Seq("src/main/scala/graft/Session.scala"))
   }
 
+  test("knob registry: the spark.graft.* keys and SPARK_GRAFT_* variables in src/main") {
+    // Every key or variable a user can set is named here: adding one is a
+    // deliberate edit of this list, not a side effect of a change.
+    val src = scalaFiles("src/main").map(text).mkString("\n")
+    def names(rx: scala.util.matching.Regex) = rx.findAllIn(src).toSet
+    assert(names("""spark\.graft\.[A-Za-z0-9.]*[A-Za-z0-9]""".r) === Set(
+      "spark.graft.reliableCheckpoint", "spark.graft.bsp.stateBroadcastLimit",
+      "spark.graft.bsp.saltTargetDeg", "spark.graft.quadraticWarnRows",
+      "spark.graft.quadraticFailRows", "spark.graft.multimodal.decoder"))
+    assert(names("""SPARK_GRAFT_[A-Z0-9_]*[A-Z0-9]""".r) === Set(
+      "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_BENCH_PASSES", "SPARK_GRAFT_CAL_GATE",
+      "SPARK_GRAFT_CAL_WAIT_MAX", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_LOAD_GATE",
+      "SPARK_GRAFT_LOAD_WAIT_MAX", "SPARK_GRAFT_ONLY", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_SKEW_MAX", "SPARK_GRAFT_SKEW_RETRIES"))
+  }
+
   test("one materializer: the graph family checkpoints only inside DFGraphAlgs.mat") {
-    def text(p: String) =
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
     val algs = "src/main/scala/graft/graph/DFGraphAlgs.scala"
     val files = Seq(algs, "src/main/scala/graft/ops/GraphPack.scala",
       "src/main/scala/graft/ops/DFCache.scala")
-    val src = text(algs)
+    val src = text(new java.io.File(algs))
     val matStart = src.indexOf("def mat(")
     val matEnd = src.indexOf("\n  }\n", matStart)
     assert(matStart >= 0 && matEnd > matStart, "DFGraphAlgs.mat not found")
     for (needle <- Seq("local" + "Checkpoint(", "." + "checkpoint(")) {
       val sites = files.flatMap { f =>
-        val t = text(f)
+        val t = text(new java.io.File(f))
         Iterator.iterate(t.indexOf(needle))(i => t.indexOf(needle, i + 1))
           .takeWhile(_ >= 0).map(f -> _)
       }

@@ -61,13 +61,23 @@ class GraphSpec extends SparkSpec {
     one
   }
 
+  /** `body`'s result and the BSP rounds it ran: every round's
+    * checkpoint and the initial state's post one `__graft_bsp`
+    * observation, so rounds = observations − 1. */
+  private def roundsRun[T](body: => T): (T, Int) = {
+    val (out, actions) = graft.tools.QueryRecorder(spark)(body)
+    val observed = actions.count(_._2.observedMetrics.contains("__graft_bsp"))
+    assert(observed > 0, "no BSP loop ran")
+    (out, observed - 1)
+  }
+
   test("fixed-point early exit: converged loops stop early and return the full-iters result") {
     // Path 1-2-3-4 (diameter 3): every monotone loop reaches its fixed
     // point within ≤ 4 rounds, so a 40-round request must (a) return the
     // frame the full 40-round unrolling would — the recurrences are
     // deterministic, a fixed point is absorbing — and (b) actually stop:
-    // lastRoundsRun counts executed rounds (convergence round + the one
-    // confirming no-change round).
+    // the executed rounds are the convergence round + the one
+    // confirming no-change round.
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
     val sym = path.union(path.select($"dst".as("src"), $"src".as("dst")))
       .withColumn("w", lit(1.0))
@@ -75,35 +85,38 @@ class GraphSpec extends SparkSpec {
       df.collect().map(r => r.toSeq.toList).toSet
 
     val cc4 = m(DFGraphAlgs.connectedComponents(sym, 4))
-    val cc40 = m(DFGraphAlgs.connectedComponents(sym, 40))
+    val (cc40, ccRounds) = roundsRun(m(DFGraphAlgs.connectedComponents(sym, 40)))
     assert(cc40 === cc4)
-    assert(DFGraphAlgs.lastRoundsRun.get() <= 5,
-      s"CC ran ${DFGraphAlgs.lastRoundsRun.get()} of 40 rounds")
+    assert(ccRounds <= 5, s"CC ran $ccRounds of 40 rounds")
 
     onBsp {
       val sp6 = m(DFGraphAlgs.shortestPaths(sym, 1L, 6))
-      val sp40 = m(DFGraphAlgs.shortestPaths(sym, 1L, 40))
+      val (sp40, spRounds) = roundsRun(m(DFGraphAlgs.shortestPaths(sym, 1L, 40)))
       assert(sp40 === sp6)
-      assert(DFGraphAlgs.lastRoundsRun.get() <= 5)
+      assert(spRounds <= 5)
     }
 
-    val ms = m(DFGraphAlgs.multiSourceShortestPaths(sym, Seq(1L, 4L), 40))
+    val (ms, msRounds) = roundsRun(m(DFGraphAlgs.multiSourceShortestPaths(sym, Seq(1L, 4L), 40)))
     assert(ms === m(DFGraphAlgs.multiSourceShortestPaths(sym, Seq(1L, 4L), 6)))
-    assert(DFGraphAlgs.lastRoundsRun.get() <= 5)
+    assert(msRounds <= 5)
 
-    val pp = m(DFGraphAlgs.shortestPathsWithPred(sym, 1L, 40))
+    val (pp, ppRounds) = roundsRun(m(DFGraphAlgs.shortestPathsWithPred(sym, 1L, 40)))
     assert(pp === m(DFGraphAlgs.shortestPathsWithPred(sym, 1L, 6)))
-    assert(DFGraphAlgs.lastRoundsRun.get() <= 5)
+    assert(ppRounds <= 5)
 
+    // Synchronous LPA oscillates with period 2 on this bipartite path,
+    // so the 40-round call runs every round: the bound is on the 6-round
+    // call.
     val lp = m(DFGraphAlgs.labelPropagation(sym, 40))
-    assert(lp === m(DFGraphAlgs.labelPropagation(sym, 6)))
-    assert(DFGraphAlgs.lastRoundsRun.get() <= 7)
+    val (lp6, lpRounds) = roundsRun(m(DFGraphAlgs.labelPropagation(sym, 6)))
+    assert(lp === lp6)
+    assert(lpRounds <= 7)
 
     // kcore: k=2 peels the whole path (cascade 1,4 → then 2,3 → empty);
     // the empty fixed point must stop the loop.
-    val core = DFGraphAlgs.kcore(sym, 2, 40)
-    assert(core.count() === 0L)
-    assert(DFGraphAlgs.lastRoundsRun.get() <= 4)
+    val (coreRows, coreRounds) = roundsRun(DFGraphAlgs.kcore(sym, 2, 40).count())
+    assert(coreRows === 0L)
+    assert(coreRounds <= 4)
   }
 
   test("early-exit probes leave the SparkSession task-serializable") {

@@ -425,22 +425,23 @@ class PlanSpec extends SparkSpec {
   test("BSP shuffle rounds carry the hub-salt equi-key when salting is active") {
     // The salted relaxation join must still be pure equi-join work —
     // (src, __salt) = (id, __sl) — with the fanout as a Generate, never
-    // a cartesian. Asserted on the six-degrees query's un-truncated
-    // plan (plan-only mode; salt target 1 activates salting without a
-    // degree probe, broadcast limit 0 forces the shuffle path).
+    // a cartesian. Asserted on the plans the six-degrees query executes
+    // while it is built (its rounds' checkpoints): salt target 1 salts
+    // every vertex with more than one out-edge, broadcast limit 0 forces
+    // the shuffle path.
     import graft.graph.DFGraphAlgs
-    spark.conf.set(DFGraphAlgs.PlanOnlyConf, "true")
     spark.conf.set(DFGraphAlgs.StateBroadcastLimitConf, "0")
     spark.conf.set(DFGraphAlgs.SaltTargetDegConf, "1")
     try {
-      val p = planOf(graft.ops.EtlPack.queries("etl_sparql_six_degrees")(spark, sf()))
-      assert(p.contains("__salt"), s"salted rounds missing the salt key:\n$p")
-      assert(!p.contains("CartesianProduct") &&
+      val (_, actions) = graft.tools.QueryRecorder(spark)(
+        graft.ops.EtlPack.queries("etl_sparql_six_degrees")(spark, sf()))
+      val plans = actions.map(_._2.executedPlan.toString)
+      assert(plans.exists(p => p.contains("__salt") && p.contains("Generate")),
+        s"no executed round joins on the salt key with a generator fanout:\n${plans.mkString("\n")}")
+      for (p <- plans) assert(!p.contains("CartesianProduct") &&
         !p.contains("BroadcastNestedLoopJoin"),
         s"salted relaxation must stay an equi-join:\n$p")
-      assert(p.contains("Generate"), "state fanout must be a generator, not a join")
     } finally {
-      spark.conf.unset(DFGraphAlgs.PlanOnlyConf)
       spark.conf.unset(DFGraphAlgs.StateBroadcastLimitConf)
       spark.conf.unset(DFGraphAlgs.SaltTargetDegConf)
     }
@@ -526,32 +527,29 @@ class PlanSpec extends SparkSpec {
     }
 
     // Constructing these queries RUNS work (stream sinks, MLlib fits) —
-    // their windows are covered by dedicated specs instead. The BSP
-    // queries (six-degrees included, since r9) are swept under
-    // DFGraphAlgs.PlanOnlyConf, which suppresses the localCheckpoint
-    // rounds that would otherwise truncate the inspectable plan to a
-    // LogicalRDD scan.
+    // their windows are covered by dedicated specs instead. Every other
+    // query is checked on its final plan AND on the plan of every action
+    // that ran while it was built — the BSP rounds' checkpoints among
+    // them, whose truncated lineage the final plan no longer shows.
     val excluded = graft.ops.StreamingPack.queries.keySet ++
       Set("ml_train_eval", "ml_als_recommend")
-    val planOnlyQueries = Set("etl_sparql_six_degrees")
     val offenders = scala.collection.mutable.ArrayBuffer[String]()
+    val bspQueries = scala.collection.mutable.Set[String]()
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, q) =>
       if (!excluded(name)) {
-        val plan =
-          if (planOnlyQueries(name)) {
-            spark.conf.set(graft.graph.DFGraphAlgs.PlanOnlyConf, "true")
-            try q(spark, sf()).queryExecution.sparkPlan
-            finally spark.conf.unset(graft.graph.DFGraphAlgs.PlanOnlyConf)
-          } else q(spark, sf()).queryExecution.sparkPlan
-        plan.foreach {
+        val (df, actions) = graft.tools.QueryRecorder(spark)(q(spark, sf()))
+        if (actions.exists(_._2.observedMetrics.contains("__graft_bsp"))) bspQueries += name
+        (df.queryExecution +: actions.map(_._2)).foreach(_.sparkPlan.foreach {
           case w: WindowExec if w.partitionSpec.isEmpty =>
             if (!bounded(w.child)) offenders += s"$name: $w"
           case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
             if (!bounded(w.child)) offenders += s"$name: $w"
           case _ =>
-        }
+        })
       }
     }
+    assert(bspQueries("etl_sparql_six_degrees"),
+      "the sweep saw no executed BSP round of etl_sparql_six_degrees")
     assert(offenders.isEmpty,
       s"unpartitioned windows over unbounded frames:\n${offenders.mkString("\n")}")
   }
