@@ -89,7 +89,11 @@ object Search {
   /** Fuzzy top-k against one query: score everything, threshold, rank
     * deterministically. Runs as one scan + TakeOrdered (no global sort);
     * the normalized key and its token-sort are projected once so the
-    * score's window lambdas read attributes (see [[fuzzyScoreWith]]). */
+    * score's window lambdas read attributes (see [[fuzzyScoreWith]]).
+    * Not on the serving calls' one-task path (graft.ops.OpsUtil.oneTask):
+    * that path is selected by shipping size, and the per-row WRatio work
+    * here is heavy enough that one interpreted task may lose to this
+    * parallel plan well inside that size. */
   def fuzzyTopK(df: DataFrame, id: String, name: String,
       query: String, minScore: Double, k: Int): DataFrame =
     df.select(col(id), col(name), normalizeKey(col(name)).as("__key"))

@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.OpsUtil.rsum
+import graft.ops.OpsUtil.{oneTaskTopK, rsum}
 import graft.ops.TextHash.h28
 
 /** Generic similarity-search operators over ANY embedding frame —
@@ -61,16 +61,26 @@ object Similarity {
 
   /** Brute-force cosine top-k against one query vector, via the native
     * expression — the exact baseline every ANN variant is measured
-    * against. Returns (vec_id, cosine) ordered desc, id tie-break. */
+    * against. Returns (vec_id, cosine) ordered desc, id tie-break; every
+    * row under the query id is a query vector, an absent id gives no
+    * rows. A serving-sized input with an integral id runs as ONE Spark
+    * task that evaluates these same expressions, interpreted, and keeps
+    * the top k ([[graft.ops.OpsUtil.oneTaskTopK]]): the query id is no
+    * literal of generated code, so a new id compiles nothing. Otherwise,
+    * and with `spark.sql.autoBroadcastJoinThreshold=-1`, the query
+    * vector is broadcast into one scan + TakeOrdered. Both give the same
+    * rows and schema. */
   def bruteForceTopK(emb: DataFrame, id: String, vec: String,
       queryId: Long, k: Int): DataFrame = {
-    val q = emb.filter(col(id) === queryId).select(col(vec).as("qv"))
-    emb.filter(col(id) =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col(id).as("vec_id"),
-        round(call_function("cosine_sim", col(vec), col("qv")), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .limit(k)
+    val in = emb.select(col(id), col(vec))
+    val q = in.filter(col(id) === queryId).select(col(vec).as("qv"))
+    oneTaskTopK(in,
+      in.filter(col(id) =!= queryId)
+        .crossJoin(broadcast(q))
+        .select(col(id).as("vec_id"),
+          round(call_function("cosine_sim", col(vec), col("qv")), 6).as("cosine"))
+        .orderBy(col("cosine").desc, col("vec_id").asc)
+        .limit(k))
   }
 
   /** ±1 random-hyperplane components (deterministic from the md5 hash):

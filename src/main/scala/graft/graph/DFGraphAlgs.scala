@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, Decimal, DoubleType,
   IntegerType, LongType, MapType, ShortType, StructField, StructType, UserDefinedType}
+import graft.ops.OpsUtil.{inMemory, integral, oneTask, onePartition, rowEstimate}
 
 /** DataFrame-native synchronous graph algorithms (fixed-round BSP).
   *
@@ -23,8 +24,9 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, Decimal, Doubl
   *  - [[mat]] materializes the edge list a loop re-scans — once, and
   *    only when it is not in memory already: an input that is only
   *    narrow projections / filters / coalesces over a persisted,
-  *    DFCache or checkpointed frame ([[inMemory]]) is used IN PLACE, so
-  *    a serving session's cached edge list is never copied per call.
+  *    DFCache or checkpointed frame ([[graft.ops.OpsUtil.inMemory]]) is
+  *    used IN PLACE, so a serving session's cached edge list is never
+  *    copied per call.
   *  - [[bspRounds]] drives the eager loops (the relaxation family, PPR,
   *    k-core). Each round's state is materialized by [[matObserved]]:
   *    LOCAL-CHECKPOINTED, so its logical lineage is truncated to an RDD
@@ -52,11 +54,14 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, Decimal, Doubl
   *    both keyed by `src`/`id` or `(rel, src)`/`(rel, id)`.
   *
   * The serving-time calls, [[shortestPaths]] and [[personalizedPageRank]],
-  * have a second configuration of the same rounds: the ONE-TASK path
-  * ([[oneTask]]). When the edge list, once per source (per seed-row
-  * estimate for PPR), fits `spark.sql.autoBroadcastJoinThreshold` — the
-  * rule Spark itself uses to ship a relation whole — and the ids are
-  * integral, the edge list (and the seeds) move into one
+  * have a second configuration of the same rounds: the ONE-TASK path.
+  * The selection rule and the move to one partition are shared with the
+  * vector lookup (api.Similarity.bruteForceTopK) in
+  * [[graft.ops.OpsUtil.oneTask]]: when the edge list, once per source
+  * (per seed-row estimate for PPR), fits
+  * `spark.sql.autoBroadcastJoinThreshold` — the rule Spark itself uses to
+  * ship a relation whole — and the ids are integral, the edge list (and
+  * the seeds) move into one
   * partition and a single `mapPartitions` task runs every round over a
   * dense vertex index and a CSR adjacency: one Spark job per request
   * instead of one checkpoint job per round. The result is a lazy frame
@@ -169,35 +174,12 @@ object DFGraphAlgs {
     if (kc < n) df.coalesce(kc) else df
   }
 
-  /** Whether `df` already reads materialized data: its plan, with cached
-    * data substituted, is only deterministic Project / Filter /
-    * non-shuffle Repartition nodes over InMemoryRelation (a persisted or
-    * DFCache frame) or checkpointed LogicalRDD leaves (a LogicalRDD over
-    * an RDD that is neither checkpointed nor persisted is a lineage, not
-    * data). Re-scanning such a frame costs a narrow pass over blocks
-    * already held, so [[mat]] uses it in place instead of checkpointing
-    * a copy of it. */
-  private def inMemory(df: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Repartition}
-    import org.apache.spark.sql.execution.LogicalRDD
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    def narrow(p: LogicalPlan): Boolean = p match {
-      case _: InMemoryRelation => true
-      case r: LogicalRDD =>
-        r.rdd.isCheckpointed || r.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
-      case Project(list, child) => list.forall(_.deterministic) && narrow(child)
-      case Filter(cond, child) => cond.deterministic && narrow(child)
-      case Repartition(_, false, child) => narrow(child)
-      case _ => false
-    }
-    narrow(df.queryExecution.withCachedData)
-  }
-
   /** Materialize a frame and truncate its logical lineage —
     * localCheckpoint by default, reliable checkpoint() when
     * [[ReliableCheckpointConf]] is set and a checkpoint dir exists;
-    * the identity for a frame that is already [[inMemory]] (a cached
-    * edge list is never copied per call). Local
+    * the identity for a frame that is already
+    * [[graft.ops.OpsUtil.inMemory]] (a cached edge list is never copied
+    * per call). Local
     * checkpoints are then [[sizedCoalesce]]d so per-round scans don't
     * pay task overhead proportional to the lineage's partition count.
     * The ONE materializer of the graph family: the BSP loops, HITS,
@@ -725,7 +707,7 @@ object DFGraphAlgs {
     * materialized with [[mat]] (a cached one is read in place) and the
     * restart rows are a projection of the materialized initial state,
     * so a call pays no checkpoint job for either. A serving-sized call
-    * runs all rounds in one task instead ([[oneTask]]).
+    * runs all rounds in one task instead ([[graft.ops.OpsUtil.oneTask]]).
     * Input: edges (src, dst), seeds (seed). Returns (seed, id, rank). */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
       knownMaxDeg: Option[Long] = None,
@@ -813,7 +795,7 @@ object DFGraphAlgs {
     * The source keeps its own 0.0 row iff it is a vertex — known
     * without a job when the state grew past that one row (the source
     * then has an out-edge). A serving-sized call runs all rounds in one
-    * task instead ([[oneTask]]). */
+    * task instead ([[graft.ops.OpsUtil.oneTask]]). */
   def shortestPaths(edges: DataFrame, source: Long, iters: Int,
       knownMaxDeg: Option[Long] = None): DataFrame = {
     val w = weightedCols(edges)
@@ -837,32 +819,6 @@ object DFGraphAlgs {
   }
 
   // ---- The one-task path (see the header) ----
-
-  private def integral(t: DataType): Boolean = t match {
-    case ByteType | ShortType | IntegerType | LongType => true
-    case _ => false
-  }
-
-  /** Whether a call runs on the one-task path: with integral `ids`,
-    * when `sources` copies of the edge list's
-    * optimized-plan size estimate fit spark.sql.autoBroadcastJoinThreshold
-    * (−1 turns the path off). `sources` is only evaluated when the other
-    * tests pass. */
-  private def oneTask(edges: DataFrame, ids: Seq[DataType])(sources: => BigInt): Boolean =
-    ids.forall(integral) &&
-      sources * edges.queryExecution.optimizedPlan.stats.sizeInBytes <=
-        edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-
-  /** A frame's plan-stats row estimate: its row count, else bytes / 8. */
-  private def rowEstimate(df: DataFrame): BigInt = {
-    val st = df.queryExecution.optimizedPlan.stats
-    st.rowCount.getOrElse(st.sizeInBytes / 8)
-  }
-
-  /** `df` in one partition: a narrow coalesce over data already in
-    * memory ([[inMemory]]), a one-partition shuffle over a lineage. */
-  private def onePartition(df: DataFrame, narrow: Boolean): DataFrame =
-    if (narrow) df.coalesce(1) else df.repartition(1)
 
   /** [[shortestPaths]] as one task over the weighted edge list `w`. The
     * schema is the BSP result's: the vertex id column, a nullable dist. */

@@ -6,7 +6,8 @@ package graft
   * repeatable host-speed number, and a filtered spot run warms only
   * the cache entries its queries consume. Also guards the one session
   * factory ([[Session]]), the graph family's one materializer
-  * (`DFGraphAlgs.mat`) and the registry of knobs against drift. */
+  * (`DFGraphAlgs.mat`), the one one-task rule (`OpsUtil.oneTask`) and
+  * the registry of knobs against drift. */
 class BenchContractSpec extends SparkSpec {
 
   /** The `.scala` files under `dir`, checked to be run from the repository root. */
@@ -157,6 +158,27 @@ class BenchContractSpec extends SparkSpec {
       val (f, i) = sites.head
       assert(f == algs && i > matStart && i < matEnd, s"$needle outside DFGraphAlgs.mat")
     }
+  }
+
+  test("one one-task rule: autoBroadcastJoinThreshold is read only in OpsUtil.oneTask") {
+    // The graph calls and the vector lookup select the one-task path by one
+    // rule; a second read of the threshold would be a second rule.
+    def code(f: java.io.File): Seq[String] = text(f).split("\n").toSeq.map { l =>
+      val t = l.trim
+      if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) "" else l
+    }
+    val needle = "autoBroadcastJoinThreshold"
+    val sites = scalaFiles("src/main").flatMap { f =>
+      code(f).zipWithIndex.collect { case (l, i) if l.contains(needle) => (f.getPath, i) }
+    }
+    val util = "src/main/scala/graft/ops/OpsUtil.scala"
+    val lines = code(new java.io.File(util))
+    val start = lines.indexWhere(_.contains("def oneTask("))
+    val end = lines.indexWhere(_.contains("def "), start + 1)
+    assert(start >= 0 && end > start, "OpsUtil.oneTask not found")
+    assert(sites.size == 1, s"$needle read at $sites")
+    val (f, i) = sites.head
+    assert(f == util && i > start && i < end, s"$needle read outside OpsUtil.oneTask")
   }
 
   test("the test session runs the factory's settings, key for key") {

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
 import org.apache.spark.sql.functions._
 import graft.graph.{DFGraphAlgs, GraphAlgs}
 
@@ -15,7 +13,7 @@ import graft.graph.{DFGraphAlgs, GraphAlgs}
   *   1 -- 2 (w 1.0)   2 -- 3 (w 2.0)   1 -- 3 (w 4.0)   3 -- 4 (w 1.0)
   *   5 isolated-ish: 5 -- 6 (w 1.0)  (disconnected from 1-4)
   */
-class GraphSpec extends SparkSpec {
+class GraphSpec extends SparkSpec with OneTaskPaths {
   import spark.implicits._
 
   private val undirected = Seq(
@@ -23,42 +21,6 @@ class GraphSpec extends SparkSpec {
   private def edgeDF = {
     val fwd = undirected.toDF("src", "dst", "w")
     fwd.union(fwd.select($"dst".as("src"), $"src".as("dst"), $"w"))
-  }
-
-  /** Spark's ship-it-whole limit; -1 turns the one-task path of
-    * shortestPaths / personalizedPageRank off (see DFGraphAlgs). */
-  private val BroadcastThreshold = "spark.sql.autoBroadcastJoinThreshold"
-
-  /** `body` with the one-task path off: the BSP loop runs. */
-  private def onBsp[T](body: => T): T = {
-    val before = spark.conf.getOption(BroadcastThreshold)
-    spark.conf.set(BroadcastThreshold, "-1")
-    try body
-    finally before.fold(spark.conf.unset(BroadcastThreshold))(spark.conf.set(BroadcastThreshold, _))
-  }
-
-  private def oneTaskPlan(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectFirst { case m: MapPartitions => m }.isDefined
-
-  /** The rows of `df` as a multiset, doubles by their bits. */
-  private def bag(df: DataFrame): Map[Seq[Any], Int] =
-    df.collect().toSeq.map(_.toSeq.map {
-      case d: Double => ("double", java.lang.Double.doubleToLongBits(d))
-      case x => x
-    }).groupBy(identity).map { case (k, v) => k -> v.size }
-
-  /** `run` on the default path, which takes the one-task path on these
-    * micro graphs, and on the BSP loop: the same schema and the same rows,
-    * double for double. Returns the default path's frame. */
-  private def bothPaths(run: => DataFrame): DataFrame = {
-    val one = run
-    onBsp {
-      val bsp = run
-      assert(oneTaskPlan(one) && !oneTaskPlan(bsp), "expected one one-task and one BSP plan")
-      assert(one.schema == bsp.schema, s"schema ${one.schema} != BSP ${bsp.schema}")
-      assert(bag(one) == bag(bsp), "the one-task rows differ from the BSP rows")
-    }
-    one
   }
 
   /** `body`'s result and the BSP rounds it ran: every round's
@@ -89,7 +51,7 @@ class GraphSpec extends SparkSpec {
     assert(cc40 === cc4)
     assert(ccRounds <= 5, s"CC ran $ccRounds of 40 rounds")
 
-    onBsp {
+    offOneTask {
       val sp6 = m(DFGraphAlgs.shortestPaths(sym, 1L, 6))
       val (sp40, spRounds) = roundsRun(m(DFGraphAlgs.shortestPaths(sym, 1L, 40)))
       assert(sp40 === sp6)
@@ -279,7 +241,7 @@ class GraphSpec extends SparkSpec {
     def branches(p: LogicalPlan) = (
       p.collect { case u: Union => u }.size,
       p.collect { case j: Join if j.joinType == LeftAnti => j }.size)
-    onBsp {
+    offOneTask {
       val sp = DFGraphAlgs.shortestPaths(edgeDF, 1L, 6)
       val (unions, antis) = branches(sp.queryExecution.optimizedPlan)
       assert(unions > 0 && antis > 0,
@@ -416,35 +378,6 @@ class GraphSpec extends SparkSpec {
     assert(bothPaths(DFGraphAlgs.personalizedPageRank(e, seeds, 0)).count() == 3L)
   }
 
-  /** Spark jobs `body` starts, counted by a listener under a job group of
-    * its own. A marker job in a second group follows: listener events
-    * arrive in order, so once its start is seen every job of `body` is. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-job-count-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val marked = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
-          if (g == group) jobs.incrementAndGet()
-          else if (g == s"$group-marker") marked.countDown()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobGroup(s"$group-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("a serving-sized path or PPR call over a persisted edge list is one Spark job") {
     val p = edgeDF.persist()
     try {
@@ -455,7 +388,7 @@ class GraphSpec extends SparkSpec {
       def ppr(): Unit = DFGraphAlgs.personalizedPageRank(p, seed, 4).collect()
       assert(jobsOf(path()) == 1)
       assert(jobsOf(ppr()) == 1)
-      onBsp {
+      offOneTask {
         assert(jobsOf(path()) > 1)
         assert(jobsOf(ppr()) > 1)
       }
