@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   *
   * Normalization runs through the native `accent_fold` Catalyst
   * expression (registered by graft.ext.GraftExtensions); the fuzzy score
-  * is a WRatio-style max of levenshtein ratio and 0.95-damped token-sort
-  * ratio. Thresholded levenshtein predicates are rewritten to the
+  * is the native `wratio` node (graft.functions.WRatio), the one WRatio
+  * scorer. Thresholded levenshtein predicates are rewritten to the
   * bounded O(k·n) form by graft.ext.BoundedLevenshteinRule — write them
   * the natural way.
   */
@@ -19,66 +19,14 @@ object Search {
   def normalizeKey(c: Column): Column =
     lower(trim(call_function("accent_fold", c)))
 
-  /** 0-100 levenshtein similarity ratio of two (normalized) strings. */
-  def ratio(a: Column, b: Column): Column =
-    round(lit(100.0) * (lit(1.0) -
-      levenshtein(a, b) / greatest(length(a), length(b)).cast("double")), 6)
-
-  /** Token-sort form: split on whitespace, sort, rejoin (word-order-
-    * insensitive matching, WRatio's token_sort component). */
-  def tokenSort(c: Column): Column =
-    concat_ws(" ", array_sort(split(c, " ")))
-
-  /** Partial ratio (RapidFuzz `partial_ratio`, the best-window form): the
-    * shorter string scored against every same-length window of the longer
-    * one, best window wins. Window count is |longer|−|shorter|+1, each
-    * window one bounded levenshtein — O(Δlen · |shorter|²) worst case,
-    * fine for name-length strings; empty input scores 0. */
-  def partialRatio(a: Column, b: Column): Column = {
-    val (la, lb) = (length(a), length(b))
-    val sh = when(la <= lb, a).otherwise(b)
-    val lo = when(la <= lb, b).otherwise(a)
-    val ls = least(la, lb)
-    val nWin = greatest(la, lb) - ls + 1
-    when(ls === 0, 0.0).otherwise(
-      array_max(transform(sequence(lit(0), nWin - 1), i =>
-        round(lit(100.0) * (lit(1.0) -
-          levenshtein(sh, lo.substr(i + 1, ls)) / ls.cast("double")), 6))))
-  }
-
-  /** WRatio fuzzy score of a name column against a query string, with
-    * RapidFuzz's length-ratio dispatch (fuzz.WRatio semantics, ref
-    * fuzzy_search.py:57): similar lengths → max(full ratio, 0.95·token-
-    * sort ratio); length ratio ≥ 1.5 → the partial legs join in, damped
-    * by 0.9 (or 0.6 when the lengths differ ≥ 8×) — the PARTIAL ratio of
-    * the raw strings and, matching RapidFuzz's dispatch, the PARTIAL
-    * token-sort ratio (best window of the token-sorted strings, 0.95-
-    * damped) rather than the full token-sort ratio, so a short query can
-    * hit a long multi-token name through its best-matching window. */
+  /** WRatio fuzzy score (RapidFuzz fuzz.WRatio, ref fuzzy_search.py:57)
+    * of a name column against a query string: the native `wratio` node
+    * (graft.functions.WRatio, registered by GraftExtensions). Similar
+    * lengths → max(full ratio, 0.95·token-sort ratio); length ratio
+    * ≥ 1.5 → the partial legs join in, damped by 0.9 (0.6 when the
+    * lengths differ ≥ 8×). Both strings empty scores 0.0. */
   def fuzzyScore(name: Column, query: String): Column =
-    fuzzyScoreWith(name, tokenSort(name), query)
-
-  /** [[fuzzyScore]] with the token-sorted name supplied as its own
-    * column. Use this form when scoring a large frame: pass a
-    * PRE-PROJECTED token-sort column (`df.withColumn("key_ts",
-    * tokenSort(col("key")))`) so the window lambda of the partial
-    * token-sort leg references a bound attribute — expressions inside
-    * `transform` lambdas get no common-subexpression elimination, so an
-    * inline token-sort subtree is re-split/re-sorted once PER WINDOW of
-    * every row (the same O(len²) trap as inline shingling; measured 6.0 s
-    * → ~1 s at sf0.1 for the short-query dispatch). */
-  def fuzzyScoreWith(name: Column, nameTs: Column, query: String): Column = {
-    val q = lit(query)
-    val qTs = tokenSort(q)
-    val full = ratio(name, q)
-    val tsr = round(ratio(nameTs, qTs) * 0.95, 6)
-    val lenRatio = greatest(length(name), length(q)).cast("double") /
-      greatest(least(length(name), length(q)), lit(1)).cast("double")
-    val scale = when(lenRatio < 8.0, 0.9).otherwise(0.6)
-    when(lenRatio < 1.5, greatest(full, tsr)).otherwise(
-      greatest(full, round(partialRatio(name, q) * scale, 6),
-        round(partialRatio(nameTs, qTs) * 0.95 * scale, 6)))
-  }
+    call_function("wratio", name, lit(query))
 
   /** Inverted index over the normalized key: key → (n_ids, first_id).
     * The group-by IS the index; broadcast it or write it to a KV sink. */
@@ -86,20 +34,17 @@ object Search {
     df.groupBy(normalizeKey(col(name)).as("key"))
       .agg(count(lit(1)).as("n_ids"), min(col(id)).as("first_id"))
 
-  /** Fuzzy top-k against one query: score everything, threshold, rank
-    * deterministically. Runs as one scan + TakeOrdered (no global sort);
-    * the normalized key and its token-sort are projected once so the
-    * score's window lambdas read attributes (see [[fuzzyScoreWith]]).
+  /** Fuzzy top-k against one query: score everything with the native
+    * WRatio ([[fuzzyScore]]) over the normalized name, threshold, rank
+    * deterministically. Runs as one scan + TakeOrdered (no global sort).
     * Not on the serving calls' one-task path (graft.ops.OpsUtil.oneTask):
     * that path is selected by shipping size, and the per-row WRatio work
     * here is heavy enough that one interpreted task may lose to this
     * parallel plan well inside that size. */
   def fuzzyTopK(df: DataFrame, id: String, name: String,
       query: String, minScore: Double, k: Int): DataFrame =
-    df.select(col(id), col(name), normalizeKey(col(name)).as("__key"))
-      .withColumn("__key_ts", tokenSort(col("__key")))
-      .select(col(id), col(name),
-        fuzzyScoreWith(col("__key"), col("__key_ts"), query).as("score"))
+    df.select(col(id), col(name),
+        fuzzyScore(normalizeKey(col(name)), query).as("score"))
       .filter(col("score") >= minScore)
       .orderBy(col("score").desc, col(id).asc)
       .limit(k)

@@ -36,8 +36,8 @@ private[ext] case class FuzzySite(j: Join, conjuncts: Seq[Expression],
   *
   * Runs after [[BoundedLevenshteinRule]] in the same fixed-point batch,
   * so edit distance only needs to match the bounded form. Fires only on
-  * native nodes (`lev_within`, `jaro_winkler`, `wratio`); the composed
-  * Column forms in graft.api.Search are anonymous expression trees no
+  * native nodes (`lev_within`, `jaro_winkler`, `wratio`); the same
+  * scores spelled in Spark built-ins are anonymous expression trees no
   * rule can recognize. Exclude it with
   * `spark.sql.optimizer.excludedRules=graft.ext.FuzzyJoinRule`.
   */

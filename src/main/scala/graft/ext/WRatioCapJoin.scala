@@ -120,7 +120,7 @@ private[ext] object WRatioCapJoin extends PredicateHelper {
   // ---- expression builders (all constructed resolved; no analyzer) ----
 
   /** concat_ws(" ", sort_array(split(c, " "))) — value-identical to
-    * WRatioImpl.tokenSort (PropertySpec pins the Column-form parity). */
+    * WRatioImpl.tokenSort (InvariantSpec pins the built-in parity). */
   private def tokenSort(e: Expression): Expression =
     ConcatWs(Seq(Literal(" "),
       SortArray(StringSplit(e, Literal(" "), Literal(-1)), Literal(true))))

@@ -6,12 +6,13 @@ import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** RapidFuzz-style WRatio (fuzz.WRatio, ref fuzzy_search.py:57) as a
-  * native Catalyst expression — the same semantics as the composed
-  * Column form `graft.api.Search.fuzzyScoreWith` (the API scoring path,
-  * `api.Search.fuzzyTopK`), value-identical stage by stage (PropertySpec
-  * pins parity on random strings). The driver top-k queries score
-  * through THIS node: one codegen'd JVM call per row, where the Column
-  * form's partial legs are interpreted higher-order lambdas:
+  * native Catalyst expression — the one WRatio scorer: the `search_*`
+  * queries, `graft.api.Search.fuzzyScore` / `fuzzyTopK` and
+  * [[graft.ext.FuzzyJoinRule]] all score through THIS node, one
+  * codegen'd JVM call per row. Its stages are value-identical to the
+  * same WRatio composed from Spark built-ins (levenshtein, substr,
+  * split/array_sort, round), which the test suite keeps as its parity
+  * oracle (InvariantSpec pins parity on random strings):
   *
   *  - full  = round(100·(1 − lev(a,b)/max(|a|,|b|)), 6)
   *  - tsr   = round(full-ratio of the token-sorted strings · 0.95, 6)
@@ -25,11 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.ext.FuzzyJoinRule]], where the composed Column spelling is
   * an anonymous expression tree no rule can recognize. All string
   * operations run on UTF8String (Spark's own levenshtein / substring /
-  * regex-split routines), so scores agree with the Column form on any
-  * input, not just ASCII.
+  * regex-split routines), so scores agree with the built-in spelling on
+  * any input, not just ASCII.
   *
   * Cost: O(Δlen · min²) worst case per pair (the partial legs'
-  * window sweep) — the same work the Column form compiles to.
+  * window sweep).
   */
 case class WRatio(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes {
@@ -53,7 +54,7 @@ case class WRatio(left: Expression, right: Expression)
 }
 
 /** Shared JVM routine for interpreted eval and codegen. Every stage
-  * mirrors the Spark built-ins the Column form composes: UTF8String
+  * mirrors a Spark built-in: UTF8String
   * levenshtein, numChars lengths, substringSQL windows, regex-split
   * token sort (empty tokens preserved — split/rejoin on a single space
   * is length-preserving), scala BigDecimal HALF_UP rounding (Spark's
@@ -72,9 +73,9 @@ object WRatioImpl {
   private def gmax(a: Double, b: Double): Double = math.max(a, b)
 
   /** round(100·(1 − lev/maxlen), 6). Callers guard the both-empty case
-    * ([[score]] returns 0.0 there — the composed Column form's 0/0
-    * raises under ANSI, so the native node is strictly more total; the
-    * two agree on every input the Column form accepts). */
+    * ([[score]] returns 0.0 there — the built-in spelling's 0/0 raises
+    * under ANSI, so the native node is strictly more total; the two
+    * agree on every input the built-in spelling accepts). */
   private def ratio(a: UTF8String, b: UTF8String): Double = {
     val maxLen = math.max(a.numChars(), b.numChars()).toDouble
     r6(100.0 * (1.0 - a.levenshteinDistance(b) / maxLen))

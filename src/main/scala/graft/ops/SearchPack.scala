@@ -13,9 +13,9 @@ import graft.tables.Tables
   * Normalization runs through the native accent_fold Catalyst expression
   * (graft.functions.AccentFold, injected by graft.ext.GraftExtensions) —
   * codegen'd, no UDF. The fuzzy score is the reference's WRatio
-  * re-expressed in built-ins: levenshtein ratio vs token-sort ratio, max
-  * with RapidFuzz's 0.95 token-sort damping (fuzzy_search.py:54-94), plus
-  * the reference's re-rank bonuses (+20 prefix, +10 substring, −30 short).
+  * (fuzzy_search.py:54-94) through the native wratio node
+  * (graft.functions.WRatio, the one WRatio scorer), plus the reference's
+  * re-rank bonuses (+20 prefix, +10 substring, −30 short).
   */
 object SearchPack {
   type Q = (SparkSession, String) => DataFrame
@@ -27,21 +27,21 @@ object SearchPack {
     * cutoff against the 18-char names. */
   private val PartialQuery = "custoner#42"
 
-  // Column builders live in the user-facing API (graft.api.Search); the
-  // *Sql twins here mirror them for the DuckDB oracle.
+  // Column builders live in the user-facing API (graft.api.Search) and
+  // the native nodes (graft.functions); the *Sql twins here mirror them
+  // for the DuckDB oracle.
   private def norm(c: Column): Column = graft.api.Search.normalizeKey(c)
   private def normSql(e: String): String = s"lower(trim(strip_accents($e)))"
 
-  private def ratio(a: Column, b: Column): Column = graft.api.Search.ratio(a, b)
   private def ratioSql(a: String, b: String): String =
     s"round(100.0 * (1.0 - levenshtein($a, $b) / CAST(greatest(length($a), length($b)) AS DOUBLE)), 6)"
 
   private def tokenSortSql(e: String): String =
     s"array_to_string(list_sort(string_split($e, ' ')), ' ')"
 
-  /** DuckDB twin of graft.api.Search.partialRatio: best same-length
-    * window of the longer string vs the shorter, list-transform over the
-    * window starts. */
+  /** DuckDB twin of graft.functions.WRatioImpl's partial leg: best
+    * same-length window of the longer string vs the shorter,
+    * list-transform over the window starts. */
   private def partialRatioSql(a: String, b: String): String = {
     val ls = s"least(length($a), length($b))"
     val sh = s"CASE WHEN length($a) <= length($b) THEN $a ELSE $b END"
@@ -52,8 +52,8 @@ object SearchPack {
       s"/ CAST($ls AS DOUBLE)), 6))) END"
   }
 
-  /** DuckDB twin of graft.api.Search.fuzzyScore (WRatio dispatch, incl.
-    * the partial token-sort leg in the length-ratio ≥ 1.5 branch). */
+  /** DuckDB twin of graft.functions.WRatioImpl.score (WRatio dispatch,
+    * incl. the partial token-sort leg in the length-ratio ≥ 1.5 branch). */
   private def wratioSql(key: String, q: String): String = {
     val full = ratioSql(key, q)
     val tsr = s"round(${ratioSql(tokenSortSql(key), tokenSortSql(q))} * 0.95, 6)"
@@ -89,13 +89,9 @@ object SearchPack {
     // dispatch, inert here — query and names are same-length) over all
     // normalized names with the reference's re-rank bonuses, threshold
     // 60, deterministic top-10 (ref fuzzy_search.py:54-94; settings.py:46
-    // cutoff 60). Scored through the NATIVE wratio expression (one
-    // codegen'd JVM call per row) rather than the composed Column form —
-    // value-identical stage by stage (PropertySpec pins parity), but the
-    // Column form's partial legs are interpreted higher-order lambdas
-    // the scan pays per row; the switch also puts the native node under
-    // the DuckDB oracle directly. The Column form stays the API path
-    // (api.Search.fuzzyTopK) and keeps its parity pin.
+    // cutoff 60). Scored through the native wratio expression (one
+    // codegen'd JVM call per row), the scorer api.Search.fuzzyTopK uses
+    // too; this query puts it under the DuckDB oracle directly.
     "search_fuzzy_topk" -> ((s, d) => {
       val key = col("__key")
       val base = call_function("wratio", key, lit(FuzzyQuery))

@@ -6,8 +6,9 @@ package graft
   * repeatable host-speed number, and a filtered spot run warms only
   * the cache entries its queries consume. Also guards the one session
   * factory ([[Session]]), the graph family's one materializer
-  * (`DFGraphAlgs.mat`), the one one-task rule (`OpsUtil.oneTask`) and
-  * the registry of knobs against drift. */
+  * (`DFGraphAlgs.mat`), the one one-task rule (`OpsUtil.oneTask`), the
+  * one WRatio scorer (the native `wratio` node) and the registry of
+  * knobs against drift. */
 class BenchContractSpec extends SparkSpec {
 
   /** The `.scala` files under `dir`, checked to be run from the repository root. */
@@ -21,6 +22,12 @@ class BenchContractSpec extends SparkSpec {
 
   private def text(f: java.io.File): String =
     new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
+  /** The lines of `f`, comment lines blanked (line numbers kept). */
+  private def code(f: java.io.File): Seq[String] = text(f).split("\n").toSeq.map { l =>
+    val t = l.trim
+    if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) "" else l
+  }
 
   test("gateLoad is max(1-min, 5-min) — the r12 sf10 gaming case trips it") {
     // r12's sf10 spot: 1-min dipped to 1.03 while 5/15-min read a busy
@@ -163,10 +170,6 @@ class BenchContractSpec extends SparkSpec {
   test("one one-task rule: autoBroadcastJoinThreshold is read only in OpsUtil.oneTask") {
     // The graph calls and the vector lookup select the one-task path by one
     // rule; a second read of the threshold would be a second rule.
-    def code(f: java.io.File): Seq[String] = text(f).split("\n").toSeq.map { l =>
-      val t = l.trim
-      if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) "" else l
-    }
     val needle = "autoBroadcastJoinThreshold"
     val sites = scalaFiles("src/main").flatMap { f =>
       code(f).zipWithIndex.collect { case (l, i) if l.contains(needle) => (f.getPath, i) }
@@ -179,6 +182,24 @@ class BenchContractSpec extends SparkSpec {
     assert(sites.size == 1, s"$needle read at $sites")
     val (f, i) = sites.head
     assert(f == util && i > start && i < end, s"$needle read outside OpsUtil.oneTask")
+  }
+
+  test("one WRatio scorer: src/main scores WRatio only through the native wratio node") {
+    // The composed Column WRatio lives in test scope (FuzzyOracle) as the
+    // parity oracle; a second scorer in src/main would drift from it.
+    def sites(files: Seq[java.io.File], rx: scala.util.matching.Regex): Seq[String] =
+      files.flatMap { f =>
+        code(f).zipWithIndex.collect {
+          case (l, i) if rx.findFirstIn(l).isDefined => s"${f.getPath}:${i + 1}"
+        }
+      }
+    val composed = sites(scalaFiles("src/main"), """\b(fuzzyScoreWith|partialRatio)\b""".r)
+    assert(composed.isEmpty, s"composed WRatio in src/main at $composed")
+    val search = new java.io.File("src/main/scala/graft/api/Search.scala")
+    val lev = sites(Seq(search), """\blevenshtein\(""".r)
+    assert(lev.isEmpty, s"Column-level levenshtein at $lev")
+    assert(code(search).exists(_.contains("call_function(\"wratio\"")),
+      "Search scores through wratio")
   }
 
   test("the test session runs the factory's settings, key for key") {

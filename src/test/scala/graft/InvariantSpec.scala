@@ -293,7 +293,7 @@ class InvariantSpec extends SparkSpec {
   }
 
   test("partialRatio matches a plain-Scala best-window reference on random strings") {
-    // The window arithmetic (api/Search.scala partialRatio: substr is
+    // The window arithmetic (FuzzyOracle.partialRatio: substr is
     // 1-based, nWin = Δlen+1, denominator = |shorter|) mirrored in
     // straightforward Scala: the shorter string against every
     // same-length window of the longer, best levenshtein ratio wins.
@@ -326,7 +326,7 @@ class InvariantSpec extends SparkSpec {
         ("ab", "ba"), ("abc", "abcd"), ("a", "a a a"), (" ", "  "))
     val got = cases.toDF("x", "y")
       .select(col("x"), col("y"),
-        graft.api.Search.partialRatio(col("x"), col("y")).as("pr"))
+        FuzzyOracle.partialRatio(col("x"), col("y")).as("pr"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
     cases.foreach { case (x, y) =>
       assert(got((x, y)) == ref(x, y),
@@ -340,8 +340,8 @@ class InvariantSpec extends SparkSpec {
       Seq.fill(rng.nextInt(10))(alphabet(rng.nextInt(4))).mkString,
       Seq.fill(rng.nextInt(10))(alphabet(rng.nextInt(4))).mkString))
     val rows = pairs.toDF("x", "y")
-      .select(graft.api.Search.partialRatio(col("x"), col("y")).as("xy"),
-        graft.api.Search.partialRatio(col("y"), col("x")).as("yx"))
+      .select(FuzzyOracle.partialRatio(col("x"), col("y")).as("xy"),
+        FuzzyOracle.partialRatio(col("y"), col("x")).as("yx"))
       .collect()
     rows.foreach { r =>
       val (xy, yx) = (r.getDouble(0), r.getDouble(1))
@@ -477,8 +477,8 @@ class InvariantSpec extends SparkSpec {
   test("native wratio equals the composed Column WRatio stage for stage") {
     // FuzzyJoinRule's wratio trigger only exists because wratio is ONE
     // Catalyst node; its scores must be value-identical to the composed
-    // Column form (api/Search.fuzzyScoreWith) every user-facing query
-    // computes - same rounding stages, same NaN arithmetic, same
+    // Column form (FuzzyOracle.fuzzyScoreWith, Spark built-ins) - same
+    // rounding stages, same NaN arithmetic, same
     // token-sort/partial dispatch - on random strings spanning every
     // dispatch branch (lenRatio < 1.5, [1.5, 8), >= 8, empties,
     // multi-space runs).
@@ -494,8 +494,8 @@ class InvariantSpec extends SparkSpec {
     for (q <- queries) {
       val rows = names.toDF("name")
         .select(col("name"),
-          graft.api.Search.fuzzyScoreWith(col("name"),
-            graft.api.Search.tokenSort(col("name")), q).as("composed"),
+          FuzzyOracle.fuzzyScoreWith(col("name"),
+            FuzzyOracle.tokenSort(col("name")), q).as("composed"),
           call_function("wratio", col("name"), lit(q)).as("native"))
         .collect()
       rows.foreach { r =>

@@ -1,14 +1,17 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import graft.api.{Search, Similarity}
 
-/** The serving vector lookup, `Similarity.bruteForceTopK`, on both of its
-  * paths: every value case runs as one task by default and as the
-  * DataFrame plan with the one-task path off, and must give the same
-  * schema and the same rows, double for double (see
-  * graft.ops.OpsUtil.oneTaskTopK). `Search.fuzzyTopK` keeps its
-  * DataFrame plan. */
+/** The serving lookups. The vector lookup, `Similarity.bruteForceTopK`,
+  * on both of its paths: every value case runs as one task by default
+  * and as the DataFrame plan with the one-task path off, and must give
+  * the same schema and the same rows, double for double (see
+  * graft.ops.OpsUtil.oneTaskTopK). The name lookup, `Search.fuzzyTopK`,
+  * keeps its DataFrame plan; its rows must equal a top-k over the
+  * composed Column WRatio ([[FuzzyOracle]]), id, score and order, double
+  * for double. */
 class LookupSpec extends SparkSpec with OneTaskPaths {
   import spark.implicits._
 
@@ -81,6 +84,99 @@ class LookupSpec extends SparkSpec with OneTaskPaths {
       val without = withConf("spark.sql.optimizer.excludedRules", rules.mkString(","))(optimized)
       assert(optimized.sameResult(without), s"a graft rule rewrote:\n$optimized")
     } finally embs.unpersist(false)
+  }
+
+  /** Names for the fuzzy cases, normalized by fuzzyTopK: one key under
+    * three ids (1, 2, 17: a tie), common prefixes and suffixes with the
+    * query at a length ratio in [1.5, 8), a long name (≥ 8× a short
+    * query), accented and non-Latin names, multi-space names, an empty
+    * and an all-space name (both empty once trimmed), a null. */
+  private def people: DataFrame = Seq[(Long, String)](
+    (1L, "Renée Fox"), (2L, "renee fox"), (3L, "Renee Foxx"), (4L, "Ada Lovelace"),
+    (5L, "renee j. k. fox"), (6L, "dr renee fox of london"),
+    (7L, "the quick brown renee fox jumps over the lazy dog"),
+    (8L, "RENÉE  FÖX"), (9L, "  renee   fox  "), (10L, "Zoë Ångström"),
+    (11L, "Рене Фокс"), (12L, "李 小龙"), (13L, "renee 🦊 fox"), (14L, ""),
+    (15L, "   "), (16L, null), (17L, "renee fox"), (18L, "foxes, renee")
+  ).toDF("pid", "pname")
+
+  /** (id, name, score bits) in result order. */
+  private def scored(rows: Seq[Row]): Seq[(Long, String, Long)] =
+    rows.map(r => (r.getLong(0), r.getString(1), java.lang.Double.doubleToLongBits(r.getDouble(2))))
+
+  /** Every row's oracle score, then the top k in Scala: score at least
+    * `minScore`, score descending, id ascending. */
+  private def oracleTopK(df: DataFrame, query: String, minScore: Double, k: Int): Seq[Row] = {
+    val key = Search.normalizeKey(col("pname"))
+    df.select(col("pid"), col("pname"),
+        FuzzyOracle.fuzzyScoreWith(key, FuzzyOracle.tokenSort(key), query).as("score"))
+      .collect().toSeq
+      .filter(r => !r.isNullAt(2) && r.getDouble(2) >= minScore)
+      .sortWith { (a, b) =>
+        if (a.getDouble(2) != b.getDouble(2)) a.getDouble(2) > b.getDouble(2)
+        else a.getLong(0) < b.getLong(0)
+      }
+      .take(k)
+  }
+
+  /** fuzzyTopK's rows, checked equal to the oracle's over the non-null
+    * names (the oracle scores a null name, see the null-name test). */
+  private def fuzzyMatches(df: DataFrame, query: String, minScore: Double, k: Int): Seq[(Long, String, Long)] = {
+    val got = scored(Search.fuzzyTopK(df, "pid", "pname", query, minScore, k).collect().toSeq)
+    assert(got == scored(oracleTopK(df.filter(col("pname").isNotNull), query, minScore, k)),
+      s"fuzzyTopK('$query', $minScore, $k) differs from the oracle")
+    got
+  }
+
+  private def ids(rows: Seq[(Long, String, Long)]): Seq[Long] = rows.map(_._1)
+  private def score(row: (Long, String, Long)): Double = java.lang.Double.longBitsToDouble(row._3)
+
+  test("fuzzyTopK equals the composed oracle across WRatio's length-ratio branches") {
+    // "renee fox" against 5, 6, 7 and 18: ratio in [1.5, 8), common
+    // affixes; "fox" against 7: ratio ≥ 8, the 0.6 branch.
+    for (q <- Seq("renee fox", "fox", "renee", "foxx renee", "lovelace ada"); (minScore, k) <-
+        Seq((0.0, 100), (40.0, 5), (60.0, 3)))
+      fuzzyMatches(people, q, minScore, k)
+    val long = fuzzyMatches(people, "fox", 0.0, 100).find(_._1 == 7L).get
+    assert(score(long) == 60.0, "an exact window hit scores 100 · 0.6 in the ≥ 8× branch")
+  }
+
+  test("fuzzyTopK equals the composed oracle on accented, unicode, multi-space and null names") {
+    for (q <- Seq("renee  fox", "zoe angstrom", "рене фокс", "李小龙", "renee 🦊", " fox ");
+        minScore <- Seq(0.0, 50.0))
+      fuzzyMatches(people, q, minScore, 100)
+    val all = ids(fuzzyMatches(people, "renee fox", 0.0, 100))
+    assert(all.take(3) == Seq(1L, 2L, 17L), "accent folding makes 1 an exact match")
+    // A null name: the native score is null, so fuzzyTopK never returns
+    // it; the oracle scores it 0.0 (greatest and concat_ws skip nulls).
+    assert(!all.contains(16L), "a null name has no score")
+    val nul = oracleTopK(people.filter(col("pid") === 16L), "renee fox", 0.0, 1)
+    assert(nul.map(_.getDouble(2)) == Seq(0.0))
+  }
+
+  test("fuzzyTopK: a score exactly at minScore is kept, ties break by id, k beyond the matches") {
+    val all = fuzzyMatches(people, "renee fox", 0.0, 100)
+    val at = score(all.find(_._1 == 5L).get)
+    val kept = fuzzyMatches(people, "renee fox", at, 100)
+    assert(ids(kept).contains(5L) && kept.map(score).min == at, "the row at minScore is kept")
+    assert(!ids(fuzzyMatches(people, "renee fox", Math.nextUp(at), 100)).contains(5L))
+    // Ids 1, 2 and 17 all score 100: the tie breaks by id.
+    assert(ids(fuzzyMatches(people, "renee fox", 60.0, 2)) == Seq(1L, 2L))
+    val sixty = fuzzyMatches(people, "renee fox", 60.0, 100)
+    assert(sixty.size < 100 && sixty.size == all.count(r => score(r) >= 60.0))
+  }
+
+  test("fuzzyTopK: both-empty name and query score 0.0, kept at minScore 0, dropped at 60") {
+    // Every other non-null name scores 0.0 against the empty query too.
+    val zero = fuzzyMatches(people.filter(col("pid") =!= 14L && col("pid") =!= 15L), "", 0.0, 100)
+    assert(zero.forall(score(_) == 0.0))
+    val got = scored(Search.fuzzyTopK(people, "pid", "pname", "", 0.0, 100).collect().toSeq)
+    assert(ids(got) == (1L to 18L).filter(_ != 16L))
+    assert(got.forall(score(_) == 0.0), "the both-empty rows 14 and 15 score 0.0")
+    assert(Search.fuzzyTopK(people, "pid", "pname", "", 60.0, 100).collect().isEmpty)
+    // The oracle's 0/0 raises under ANSI on exactly those rows.
+    val e = intercept[ArithmeticException](oracleTopK(people.filter(col("pid") === 14L), "", 0.0, 100))
+    assert(e.asInstanceOf[org.apache.spark.SparkThrowable].getCondition == "DIVIDE_BY_ZERO")
   }
 
   test("a serving-sized lookup over a persisted frame is one Spark job") {
