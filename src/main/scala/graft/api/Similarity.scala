@@ -1,8 +1,14 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+  GenericInternalRow, Literal, Round}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import graft.ops.OpsUtil.{oneTaskTopK, rsum}
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
+import graft.functions.CosineSim
+import graft.ops.OpsUtil.{inMemory, oneTask, onePartition, rsum}
 import graft.ops.TextHash.h28
 
 /** Generic similarity-search operators over ANY embedding frame —
@@ -63,24 +69,73 @@ object Similarity {
     * expression — the exact baseline every ANN variant is measured
     * against. Returns (vec_id, cosine) ordered desc, id tie-break; every
     * row under the query id is a query vector, an absent id gives no
-    * rows. A serving-sized input with an integral id runs as ONE Spark
-    * task that evaluates these same expressions, interpreted, and keeps
-    * the top k ([[graft.ops.OpsUtil.oneTaskTopK]]): the query id is no
-    * literal of generated code, so a new id compiles nothing. Otherwise,
-    * and with `spark.sql.autoBroadcastJoinThreshold=-1`, the query
-    * vector is broadcast into one scan + TakeOrdered. Both give the same
-    * rows and schema. */
+    * rows. A serving-sized input with an integral id and a vector type
+    * `cosine_sim` accepts runs as ONE Spark task ([[topKTask]]): it reads
+    * the (id, vector) rows once, scores them with the plan's own
+    * `cosine_sim` and `round` expressions, interpreted — the query id is
+    * no literal of generated code, so a new id compiles nothing — and
+    * keeps the top k; no DataFrame plan of the lookup is built.
+    * Otherwise, with `spark.sql.autoBroadcastJoinThreshold=-1` and for a
+    * negative `k` (whose `limit` raises at analysis), the query vector is
+    * broadcast into one scan + TakeOrdered. Both give the same rows and
+    * schema. */
   def bruteForceTopK(emb: DataFrame, id: String, vec: String,
       queryId: Long, k: Int): DataFrame = {
     val in = emb.select(col(id), col(vec))
-    val q = in.filter(col(id) === queryId).select(col(vec).as("qv"))
-    oneTaskTopK(in,
+    val Array(idField, vecField) = in.schema.fields
+    val vt = vecField.dataType
+    val cosine = CosineSim(BoundReference(0, vt, true), BoundReference(1, vt, true))
+    if (k >= 0 && cosine.checkInputDataTypes().isSuccess &&
+        oneTask(in, Seq(idField.dataType))(1)) {
+      val schema = StructType(Seq(idField.copy(name = "vec_id"), StructField("cosine", DoubleType)))
+      onePartition(in, inMemory(in))
+        .mapPartitions(topKTask(_, queryId, k, vt, Round(cosine, Literal(6))))(Encoders.row(schema))
+    } else {
+      val q = in.filter(col(id) === queryId).select(col(vec).as("qv"))
       in.filter(col(id) =!= queryId)
         .crossJoin(broadcast(q))
         .select(col(id).as("vec_id"),
           round(call_function("cosine_sim", col(vec), col("qv")), 6).as("cosine"))
         .orderBy(col("cosine").desc, col("vec_id").asc)
-        .limit(k))
+        .limit(k)
+    }
+  }
+
+  /** [[bruteForceTopK]]'s kernel over the (id, vector) rows: the query
+    * vectors are the rows under `queryId`, the candidates every other
+    * non-null id (a null id is on neither side), and each candidate is
+    * scored against each query vector by `score` — the plan's
+    * round(cosine_sim(candidate, query), 6), bound to a (candidate,
+    * query) pair. The top k are kept in a bounded heap under the plan's
+    * order — cosine descending in Spark's double order (NaN greatest,
+    * nulls last), then id ascending — and emitted in that order. */
+  private def topKTask(rows: Iterator[Row], queryId: Long, k: Int, vecType: DataType,
+      score: Expression): Iterator[Row] = {
+    final case class Hit(id: Any, key: Long, cosine: Any)
+    val order: Ordering[Hit] = { (a, b) =>
+      val c = (a.cosine, b.cosine) match {
+        case (null, null) => 0
+        case (null, _) => 1
+        case (_, null) => -1
+        case (x: Double, y: Double) => SQLOrderingUtil.compareDoubles(y, x)
+      }
+      if (c != 0) c else java.lang.Long.compare(a.key, b.key)
+    }
+    val toVec = CatalystTypeConverters.createToCatalystConverter(vecType)
+    val (queries, candidates) = rows.filter(!_.isNullAt(0)).toArray
+      .partition(_.getAs[Number](0).longValue == queryId)
+    val qv = queries.map(r => toVec(r.get(1)))
+    val pair = new GenericInternalRow(2)
+    val kept = new java.util.PriorityQueue[Hit](order.reverse)
+    candidates.foreach { r =>
+      pair.update(0, toVec(r.get(1)))
+      qv.foreach { q =>
+        pair.update(1, q)
+        kept.add(Hit(r.get(0), r.getAs[Number](0).longValue, score.eval(pair)))
+        if (kept.size > k) kept.poll()
+      }
+    }
+    kept.toArray(Array.empty[Hit]).sorted(order).iterator.map(h => Row(h.id, h.cosine))
   }
 
   /** ±1 random-hyperplane components (deterministic from the md5 hash):

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, Decimal, DoubleType,
   IntegerType, LongType, MapType, ShortType, StructField, StructType, UserDefinedType}
-import graft.ops.OpsUtil.{inMemory, integral, oneTask, onePartition, rowEstimate}
+import graft.ops.OpsUtil.{inMemory, integral, oneTask, onePartition, rowEstimate, rsum}
 
 /** DataFrame-native synchronous graph algorithms (fixed-round BSP).
   *
@@ -61,12 +61,14 @@ import graft.ops.OpsUtil.{inMemory, integral, oneTask, onePartition, rowEstimate
   * (per seed-row estimate for PPR), fits
   * `spark.sql.autoBroadcastJoinThreshold` — the rule Spark itself uses to
   * ship a relation whole — and the ids are integral, the edge list (and
-  * the seeds) move into one
-  * partition and a single `mapPartitions` task runs every round over a
-  * dense vertex index and a CSR adjacency: one Spark job per request
-  * instead of one checkpoint job per round. The result is a lazy frame
-  * with the BSP result's rows, bits and schema (GraphSpec runs every value
-  * case on both paths); above the threshold and with
+  * the seeds) move into one partition and a single `mapPartitions` task
+  * ([[ssspTask]], [[pprTask]]) runs every round over a dense vertex index
+  * and a CSR adjacency: one Spark job per request instead of one
+  * checkpoint job per round. The result is a lazy frame with the BSP
+  * result's rows, bits and schema; the schema is built from the edge and
+  * seed fields, so the path analyzes no BSP plan (GraphSpec runs every
+  * value case on both paths and compares schemas); above the threshold
+  * and with
   * `spark.sql.autoBroadcastJoinThreshold=-1` the BSP loop runs.
   * No data reaches the driver on either path: the task runs on an
   * executor.
@@ -77,10 +79,8 @@ import graft.ops.OpsUtil.{inMemory, integral, oneTask, onePartition, rowEstimate
   */
 object DFGraphAlgs {
 
-  /** The exact type rank sums fold in. */
+  /** The exact type rank sums fold in ([[graft.ops.OpsUtil.rsum]]'s). */
   private val Dec = "decimal(28,15)"
-
-  private def rsum(c: Column): Column = sum(c.cast(Dec)).cast("double")
 
   /** Conf key opting BSP rounds into RELIABLE checkpoints: set it to
     * "true" AND set a sparkContext checkpoint dir on a fault-tolerant
@@ -712,11 +712,9 @@ object DFGraphAlgs {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
       knownMaxDeg: Option[Long] = None,
       prebuiltContrib: Option[DataFrame] = None): DataFrame = {
-    val init0 = seeds.select(col("seed"), col("seed").as("id"),
-      lit(1.0).cast("double").as("rank"))
     val ids = Seq(edges.schema("src"), edges.schema("dst"), seeds.schema("seed"))
     if (oneTask(edges, ids.map(_.dataType))(rowEstimate(seeds)))
-      oneTaskPpr(edges, seeds, init0, iters)
+      oneTaskPpr(edges, seeds, iters)
     else {
       // With a usable prebuilt contribution frame (see usableContrib) the
       // edge list is never touched: no per-query checkpoint, no fill.
@@ -728,7 +726,8 @@ object DFGraphAlgs {
               Seq("src"), None, knownMaxDeg)
             (c, s, true)
         }
-      val (init, _, n) = matObserved(init0)
+      val (init, _, n) = matObserved(seeds.select(col("seed"), col("seed").as("id"),
+        lit(1.0).cast("double").as("rank")))
       val contribSalt = salt.map { case (ns, _) => (ns, contrib) }
       val (rank, _) = roundsFrom(init, n, iters)(pprRound(contrib, contribSalt, init))
       if (ownContrib) contrib.unpersist(false)
@@ -821,10 +820,14 @@ object DFGraphAlgs {
   // ---- The one-task path (see the header) ----
 
   /** [[shortestPaths]] as one task over the weighted edge list `w`. The
-    * schema is the BSP result's: the vertex id column, a nullable dist. */
+    * schema is the BSP result's: the id column of [[vertices]] — the
+    * wider of the src and dst types, nullable when either is — and a
+    * nullable dist. */
   private def oneTaskShortestPaths(w: DataFrame, source: Long, iters: Int): DataFrame = {
-    val schema = StructType(Seq(vertices(w).schema("id"), StructField("dist", DoubleType)))
-    val idType = schema("id").dataType
+    val (src, dst) = (w.schema("src"), w.schema("dst"))
+    val idType = wider(src.dataType, dst.dataType)
+    val schema = StructType(Seq(StructField("id", idType, src.nullable || dst.nullable),
+      StructField("dist", DoubleType)))
     val in = w.select(col("src").cast("long"), col("dst").cast("long"), col("w"))
     onePartition(in, inMemory(in))
       .mapPartitions(ssspTask(_, source, iters, idType))(Encoders.row(schema))
@@ -832,20 +835,30 @@ object DFGraphAlgs {
 
   /** [[personalizedPageRank]] as one task over the edge list and the seed
     * rows, tagged into one frame (t = 0: an edge (a, b); t = 1: a seed a).
-    * The schema is the BSP result's — one round's over `init0`, or
-    * `init0`'s without rounds — read off the lazy plan (analysis only). */
-  private def oneTaskPpr(edges: DataFrame, seeds: DataFrame, init0: DataFrame,
-      iters: Int): DataFrame = {
-    val schema = if (iters < 1) init0.schema else pprRound(
-      edges.select(col("src"), col("dst"), lit(1L).as("deg")), None, init0)(init0, false).schema
-    val (seedType, idType) = (schema("seed").dataType, schema("id").dataType)
+    * The schema is the BSP result's, from the seed and dst fields: without
+    * rounds the initial state's (the seed twice, a non-null rank); after
+    * a round [[pprRound]]'s, whose id is the union of message targets
+    * (dst) and restart rows (seed) — the wider type, nullable when either
+    * is — and whose rank is an exact decimal sum, nullable only without
+    * ANSI (where a decimal add that overflows gives null). */
+  private def oneTaskPpr(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
+    val (seed, dst) = (seeds.schema("seed"), edges.schema("dst"))
+    val id = if (iters < 1) seed.copy(name = "id")
+      else dst.copy(name = "id", dataType = wider(dst.dataType, seed.dataType),
+        nullable = dst.nullable || seed.nullable)
+    val rankNullable = iters >= 1 && !edges.sparkSession.sessionState.conf.ansiEnabled
+    val schema = StructType(Seq(seed, id, StructField("rank", DoubleType, rankNullable)))
     val e = edges.select(lit(0).as("t"), col("src").cast("long").as("a"),
       col("dst").cast("long").as("b"))
     val s = seeds.select(lit(1).as("t"), col("seed").cast("long").as("a"),
       lit(null).cast("long").as("b"))
     onePartition(e.union(s), inMemory(e))
-      .mapPartitions(pprTask(_, iters, seedType, idType))(Encoders.row(schema))
+      .mapPartitions(pprTask(_, iters, seed.dataType, id.dataType))(Encoders.row(schema))
   }
+
+  /** The wider of two integral types: the type a union of the two takes. */
+  private def wider(a: DataType, b: DataType): DataType =
+    if (a.defaultSize >= b.defaultSize) a else b
 
   /** A one-task call's graph. Ids map to dense slots 0..n−1 in first-seen
     * order; a null id gets a slot of its own (a null endpoint or seed is

@@ -150,6 +150,58 @@ object MLPack {
       |  CROSS JOIN (SELECT unnest(range(1, 6)) AS delta)
       |  WHERE EXISTS (SELECT 1 FROM customer b WHERE b.c_custkey = a.c_custkey + delta))""".stripMargin
 
+  /** The link-prediction feature matrix of ml_train_eval and
+    * ml_train_matrix: the pair sample (c1, c2), labeled 1 when the pair
+    * shares a supplier in half B, with features from half A only (no
+    * leakage) — common neighbours `cn`, Adamic-Adar `aa`, log1p endpoint
+    * degrees `d1`/`d2` and log1p preferential attachment `pref` — and the
+    * 80/20 hash `split` ("train"/"test"). Deterministic: `aa` is an exact
+    * decimal sum (OpsUtil.rsum) and every double feature is rounded to 6
+    * places, so the matrix the fit reads is the one the oracle pins. */
+  private def trainFeatures(s: SparkSession, d: String): DataFrame = {
+    val eA = edgesHalfA(s, d)                          // feature graph
+    val eB = edgesHalfB(s, d)                          // label graph
+    // Labels: existence is checked by joining the SAMPLE against half B —
+    // never by materializing all co-purchase pairs first (that
+    // intermediate is Σ_p deg(p)² ≈ 180M rows at sf0.1 and quadratic in
+    // hub degree at scale; the sample-side join is |sample|·avg-degree).
+    val pairs = pairSample(s, d)
+    val posB = pairs
+      .join(eB.select(col("c").as("c1"), col("p")), "c1")
+      .join(eB.select(col("c").as("c2"), col("p").as("p2")), "c2")
+      .filter(col("p") === col("p2"))
+      .select(col("c1"), col("c2")).distinct()
+      .withColumn("label", lit(1L))
+    val labeled = pairs.join(posB, Seq("c1", "c2"), "left")
+      .na.fill(0L, Seq("label"))
+    // Degrees carry the predictive mass here — a customer active in half
+    // A is active in half B, so endpoint degrees and preferential
+    // attachment predict co-purchase where bare common-neighbor counts
+    // are flat on a uniform co-purchase graph (V1 assembly; Liben-Nowell
+    // feature family incl. preferential attachment).
+    val ewA = eA.join(pdegA(s, d), "p")
+    val cn = labeled.select(col("c1"), col("c2"))
+      .join(ewA.select(col("c").as("c1"), col("p"), col("pdeg")), "c1")
+      .join(ewA.select(col("c").as("c2"), col("p").as("p2")), "c2")
+      .filter(col("p") === col("p2"))
+      .groupBy(col("c1"), col("c2"))
+      .agg(count(lit(1)).as("cn"),
+        round(OpsUtil.rsum(lit(1.0) / log(col("pdeg") + 1)), 6).as("aa"))
+    val cdegA = eA.groupBy(col("c")).agg(count(lit(1)).cast("double").as("cdeg"))
+    labeled.join(cn, Seq("c1", "c2"), "left")
+      .join(cdegA.select(col("c").as("c1"), col("cdeg").as("deg1")), Seq("c1"), "left")
+      .join(cdegA.select(col("c").as("c2"), col("cdeg").as("deg2")), Seq("c2"), "left")
+      .na.fill(0L, Seq("cn")).na.fill(0.0, Seq("aa", "deg1", "deg2"))
+      // log1p-compress the heavy-tailed degree features (the reference
+      // applies the same normalization to its degree/pagerank features,
+      // data_processor.py:92-93) so LBFGS sees comparable scales.
+      .withColumn("pref", round(log1p(col("deg1") * col("deg2")), 6))
+      .withColumn("d1", round(log1p(col("deg1")), 6))
+      .withColumn("d2", round(log1p(col("deg2")), 6))
+      .withColumn("split",
+        when(h28(concat_ws("_", col("c1"), col("c2"))) % 10 < 8, "train").otherwise("test"))
+  }
+
   /** Pair features over a (c1, c2) pair table: common neighbors,
     * Adamic-Adar, preferential attachment, same-nation flag. */
   private def pairFeatures(s: SparkSession, d: String, pairs: DataFrame): DataFrame = {
@@ -932,48 +984,13 @@ object MLPack {
 
     // The DETERMINISTIC PREFIX of ml_train_eval, oracle-checked: the
     // LBFGS fit can never hash-match across engines, but everything
-    // feeding it can — this companion replays the identical feature
-    // matrix (same pair sample, same leak-free half split, same cn / aa
-    // / log1p-degree / preferential-attachment features), the identical
-    // 80/20 hash split, and summarizes per split: row count, label
-    // balance, and each feature column's 6-dp decimal sum. A green row
-    // here pins every input the solver sees; ml_train_eval itself stays
-    // rows-checked with its AUC spec-pinned in MLSpec. Per-pair sums go
-    // through exact decimals (OpsUtil.rsum) and round to 6 — the
-    // deterministic twin of the raw-double features the fit consumes
-    // (identical to 6 dp; the solver keeps its unrounded path).
-    "ml_train_matrix" -> ((s, d) => {
-      val eA = edgesHalfA(s, d)
-      val eB = edgesHalfB(s, d)
-      val pairs = pairSample(s, d)
-      val posB = pairs
-        .join(eB.select(col("c").as("c1"), col("p")), "c1")
-        .join(eB.select(col("c").as("c2"), col("p").as("p2")), "c2")
-        .filter(col("p") === col("p2"))
-        .select(col("c1"), col("c2")).distinct()
-        .withColumn("label", lit(1L))
-      val labeled = pairs.join(posB, Seq("c1", "c2"), "left")
-        .na.fill(0L, Seq("label"))
-      val ewA = eA.join(pdegA(s, d), "p")
-      val cn = labeled.select(col("c1"), col("c2"))
-        .join(ewA.select(col("c").as("c1"), col("p"), col("pdeg")), "c1")
-        .join(ewA.select(col("c").as("c2"), col("p").as("p2")), "c2")
-        .filter(col("p") === col("p2"))
-        .groupBy(col("c1"), col("c2"))
-        .agg(count(lit(1)).as("cn"),
-          round(OpsUtil.rsum(lit(1.0) / log(col("pdeg") + 1)), 6).as("aa"))
-      val cdegA = eA.groupBy(col("c")).agg(count(lit(1)).cast("double").as("cdeg"))
-      val data = labeled.join(cn, Seq("c1", "c2"), "left")
-        .join(cdegA.select(col("c").as("c1"), col("cdeg").as("deg1")), Seq("c1"), "left")
-        .join(cdegA.select(col("c").as("c2"), col("cdeg").as("deg2")), Seq("c2"), "left")
-        .na.fill(0L, Seq("cn")).na.fill(0.0, Seq("aa", "deg1", "deg2"))
-        .withColumn("pref", round(log1p(col("deg1") * col("deg2")), 6))
-        .withColumn("d1", round(log1p(col("deg1")), 6))
-        .withColumn("d2", round(log1p(col("deg2")), 6))
-      data
-        .withColumn("split",
-          when(h28(concat_ws("_", col("c1"), col("c2"))) % 10 < 8, "train")
-            .otherwise("test"))
+    // feeding it can — this companion summarizes the feature matrix the
+    // fit reads ([[trainFeatures]]) per split: row count, label balance,
+    // and each feature column's 6-dp decimal sum. A green row here pins
+    // every input the solver sees; ml_train_eval itself stays
+    // rows-checked with its AUC spec-pinned in MLSpec.
+    "ml_train_matrix" -> ((s, d) =>
+      trainFeatures(s, d)
         .groupBy(col("split"))
         .agg(count(lit(1)).as("n_rows"),
           sum(col("label")).as("n_pos"),
@@ -982,53 +999,11 @@ object MLPack {
           round(OpsUtil.rsum(col("d1")), 6).as("deg1_sum"),
           round(OpsUtil.rsum(col("d2")), 6).as("deg2_sum"),
           round(OpsUtil.rsum(col("pref")), 6).as("pref_sum"))
-        .orderBy(col("split"))
-    }),
+        .orderBy(col("split"))),
 
     "ml_train_eval" -> ((s, d) => {
-      val eA = edgesHalfA(s, d)                          // feature graph
-      val eB = edgesHalfB(s, d)                          // label graph
-      // Labels: pair sample labeled by sharing a supplier in half B.
-      // Existence is checked by joining the SAMPLE against half B — never
-      // by materializing all co-purchase pairs first (that intermediate
-      // is Σ_p deg(p)² ≈ 180M rows at sf0.1 and quadratic in hub degree
-      // at scale; the sample-side join is |sample|·avg-degree).
-      val pairs = pairSample(s, d)
-      val posB = pairs
-        .join(eB.select(col("c").as("c1"), col("p")), "c1")
-        .join(eB.select(col("c").as("c2"), col("p").as("p2")), "c2")
-        .filter(col("p") === col("p2"))
-        .select(col("c1"), col("c2")).distinct()
-        .withColumn("label", lit(1.0))
-      val labeled = pairs.join(posB, Seq("c1", "c2"), "left")
-        .na.fill(0.0, Seq("label"))
-      // Features: computed from half A only (no leakage). Degrees carry
-      // the predictive mass here — a customer active in half A is active
-      // in half B, so endpoint degrees and preferential attachment
-      // predict co-purchase where bare common-neighbor counts are flat
-      // on a uniform co-purchase graph (V1 assembly; Liben-Nowell
-      // feature family incl. preferential attachment).
-      val ewA = eA.join(pdegA(s, d), "p")
-      val cn = labeled.select(col("c1"), col("c2"))
-        .join(ewA.select(col("c").as("c1"), col("p"), col("pdeg")), "c1")
-        .join(ewA.select(col("c").as("c2"), col("p").as("p2")), "c2")
-        .filter(col("p") === col("p2"))
-        .groupBy(col("c1"), col("c2"))
-        .agg(count(lit(1)).cast("double").as("cn"),
-          sum(lit(1.0) / log(col("pdeg") + 1)).as("aa"))
-      val cdegA = eA.groupBy(col("c")).agg(count(lit(1)).cast("double").as("cdeg"))
-      val data = labeled.join(cn, Seq("c1", "c2"), "left")
-        .join(cdegA.select(col("c").as("c1"), col("cdeg").as("deg1")), Seq("c1"), "left")
-        .join(cdegA.select(col("c").as("c2"), col("cdeg").as("deg2")), Seq("c2"), "left")
-        .na.fill(0.0, Seq("cn", "aa", "deg1", "deg2"))
-        // log1p-compress the heavy-tailed degree features (the reference
-        // applies the same normalization to its degree/pagerank features,
-        // data_processor.py:92-93) so LBFGS sees comparable scales.
-        .withColumn("pref", log1p(col("deg1") * col("deg2")))
-        .withColumn("deg1", log1p(col("deg1")))
-        .withColumn("deg2", log1p(col("deg2")))
-      // The feature pipeline above is a wide join DAG that fit/transform/
-      // count would otherwise each recompute — materialize it once.
+      // The feature pipeline is a wide join DAG that fit/transform/count
+      // would otherwise each recompute — materialize it once.
       // DFGraphAlgs.mat (localCheckpoint + size-derived coalesce): the
       // LBFGS fit re-scans this frame once per iteration plus the two
       // evaluator passes (~30 jobs); at the join DAG's inherited 32
@@ -1038,11 +1013,11 @@ object MLPack {
       // non-bit-reproducible contract (rows-checked; MLSpec quality bar).
       val assembled = graft.graph.DFGraphAlgs.mat(
         new VectorAssembler()
-          .setInputCols(Array("cn", "aa", "deg1", "deg2", "pref")).setOutputCol("features")
-          .transform(data))
-      val split = h28(concat_ws("_", col("c1"), col("c2"))) % 10
-      val train = assembled.filter(split < 8)
-      val test = assembled.filter(split >= 8)
+          .setInputCols(Array("cn", "aa", "d1", "d2", "pref")).setOutputCol("features")
+          .transform(trainFeatures(s, d))
+          .select(col("label"), col("features"), col("split")))
+      val train = assembled.filter(col("split") === "train")
+      val test = assembled.filter(col("split") === "test")
       val model = new LogisticRegression()
         .setMaxIter(10).setRegParam(0.01)
         .setLabelCol("label").setFeaturesCol("features")

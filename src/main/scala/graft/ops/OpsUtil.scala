@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType, LongType,
   ShortType, TimestampNTZType, TimestampType}
@@ -78,10 +77,15 @@ object OpsUtil {
   // personalizedPageRank, api.Similarity.bruteForceTopK — runs as ONE
   // Spark task over its input in one partition when the input fits the
   // rule Spark itself uses to ship a relation whole: one job per request,
-  // no per-request planning of the full query. Above the threshold, with
-  // spark.sql.autoBroadcastJoinThreshold=-1 or with non-integral ids, the
-  // call runs its DataFrame plan. The threshold is a shipping size, not a
-  // cost bound: it fits calls whose per-row work is light. Fuzzy scoring
+  // no per-request planning of the full query. Every such call has one
+  // shape: it asks [[oneTask]] first; on the path it runs a hand-written
+  // kernel over [[onePartition]] of its input and builds its result
+  // schema from the input's types; it builds its DataFrame plan only when
+  // it falls back to it — above the threshold, with
+  // spark.sql.autoBroadcastJoinThreshold=-1 or with non-integral ids.
+  // This object holds the selection rule only; each kernel lives next to
+  // its call. The threshold is a shipping size, not a cost bound: it fits
+  // calls whose per-row work is light. Fuzzy scoring
   // (api.Search.fuzzyTopK) is not: its partial-ratio windows cost
   // O(Δlen·min²) per row, and no workload measures where one interpreted
   // task stops beating the parallel generated-code plan.
@@ -136,73 +140,4 @@ object OpsUtil {
     * memory ([[inMemory]]), a one-partition shuffle over a lineage. */
   private[graft] def onePartition(df: DataFrame, narrow: Boolean): DataFrame =
     if (narrow) df.coalesce(1) else df.repartition(1)
-
-  /** `top` — a lookup built over `in`, whose first column is the id —
-    * as ONE task when [[oneTask]] admits `in`; else `top` itself. `top`
-    * is Projects, Filters, hints and cross joins over `in` under one
-    * final `orderBy(…).limit(k)`. The task reads `in`'s rows once and
-    * runs `top`'s own ANALYZED expressions on them, bound and
-    * interpreted — no generated code, so a request's literals never
-    * reach a compiler — then keeps the top k in `top`'s sort order
-    * (Spark's order, doubles included), emitted in that order. The
-    * schema is `top`'s analyzed schema. A plan with any other node or a
-    * nondeterministic expression keeps the DataFrame plan. The rows
-    * equal the DataFrame plan's only while the session's optimizer rules
-    * rewrite no expression of `top` (graft.ext's rules swap
-    * `levenshtein` for native edit-distance nodes and re-plan fuzzy
-    * θ-joins; the task skips both): a caller's plan must be one they
-    * leave alone, as LookupSpec checks for bruteForceTopK. */
-  private[graft] def oneTaskTopK(in: DataFrame, top: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.plans.Cross
-    import org.apache.spark.sql.catalyst.plans.logical._
-    type Rows = Array[InternalRow] => Iterator[InternalRow]
-    val base = in.queryExecution.analyzed
-    def bind(e: Expression, child: LogicalPlan): Expression = BindReferences.bindReference(
-      e.transformDown { case r: RuntimeReplaceable => r.replacement }, child.output)
-    // The rows of `p` from `in`'s rows `xs`. `in` is found by its result,
-    // not its instance: a self-join re-instances the right side's copy.
-    def rows(p: LogicalPlan): Option[Rows] = p match {
-      case _ if p.output.map(_.dataType) == base.output.map(_.dataType) &&
-          p.sameResult(base) => Some(_.iterator)
-      case Project(list, child) => rows(child).map { f =>
-        val es = list.map(bind(_, child))
-        xs => f(xs).map(r => new GenericInternalRow(es.map(_.eval(r)).toArray[Any]))
-      }
-      case Filter(cond, child) => rows(child).map { f =>
-        val c = bind(cond, child)
-        xs => f(xs).filter(c.eval(_) == true)
-      }
-      case ResolvedHint(child, _) => rows(child)
-      case Join(l, r, Cross, None, _) => for (fl <- rows(l); fr <- rows(r)) yield {
-        xs =>
-          val right = fr(xs).toArray
-          fl(xs).flatMap(a => right.iterator.map(b => new JoinedRow(a, b)))
-      }
-      case _ => None
-    }
-    val plan = top.queryExecution.analyzed
-    val task = plan match {
-      case Limit(IntegerLiteral(k), Sort(order, true, child, _))
-          if plan.deterministic && oneTask(in, Seq(in.schema.head.dataType))(1) =>
-        rows(child).map(f =>
-          (f, k, new InterpretedOrdering(order.map(bind(_, child).asInstanceOf[SortOrder]))))
-      case _ => None
-    }
-    task.fold(top) { case (f, k, ord) =>
-      val (inSchema, schema) = (in.schema, top.schema)
-      onePartition(in, inMemory(in)).mapPartitions { it =>
-        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(inSchema)
-        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-        val kept = new java.util.PriorityQueue[InternalRow](ord.reverse)
-        f(it.map(toCatalyst(_).asInstanceOf[InternalRow]).toArray).foreach { r =>
-          kept.add(r)
-          if (kept.size > k) kept.poll()
-        }
-        kept.toArray(Array.empty[InternalRow]).sorted(ord).iterator
-          .map(toRow(_).asInstanceOf[Row])
-      }(Encoders.row(schema))
-    }
-  }
 }

@@ -6,8 +6,9 @@ package graft
   * repeatable host-speed number, and a filtered spot run warms only
   * the cache entries its queries consume. Also guards the one session
   * factory ([[Session]]), the graph family's one materializer
-  * (`DFGraphAlgs.mat`), the one one-task rule (`OpsUtil.oneTask`), the
-  * one WRatio scorer (the native `wratio` node) and the registry of
+  * (`DFGraphAlgs.mat`), the one one-task rule (`OpsUtil.oneTask`) and
+  * its one kind of path (no plan interpreter in OpsUtil), the one WRatio
+  * scorer (the native `wratio` node) and the registry of
   * knobs against drift. */
 class BenchContractSpec extends SparkSpec {
 
@@ -182,6 +183,18 @@ class BenchContractSpec extends SparkSpec {
     assert(sites.size == 1, s"$needle read at $sites")
     val (f, i) = sites.head
     assert(f == util && i > start && i < end, s"$needle read outside OpsUtil.oneTask")
+  }
+
+  test("one kind of one-task path: OpsUtil holds the selection rule, no plan interpreter") {
+    // Each one-task call runs a kernel of its own over its input and
+    // builds its schema from the input's types; walking a lookup's
+    // analyzed plan to run it in one task was a second kind of path.
+    val named = scalaFiles("src/main").filter(f => text(f).contains("oneTaskTopK"))
+    assert(named.isEmpty, s"oneTaskTopK named in $named")
+    val util = code(new java.io.File("src/main/scala/graft/ops/OpsUtil.scala")).mkString("\n")
+    val walking = Seq("BindReferences", "InterpretedOrdering", "queryExecution.analyzed")
+      .filter(util.contains)
+    assert(walking.isEmpty, s"OpsUtil walks plans: $walking")
   }
 
   test("one WRatio scorer: src/main scores WRatio only through the native wratio node") {

@@ -378,6 +378,41 @@ class GraphSpec extends SparkSpec with OneTaskPaths {
     assert(bothPaths(DFGraphAlgs.personalizedPageRank(e, seeds, 0)).count() == 3L)
   }
 
+  test("one-task schemas from the input fields: PPR seeds from spark.range and a nullable int column") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    // spark.range's id is a non-nullable long (linkbench's seed form).
+    val ranged = spark.range(1, 4).select($"id".as("seed"))
+    // A nullable int seed column over long ids: after a round the id is
+    // the union of long message targets and int restart rows.
+    val nullable = Seq[java.lang.Integer](1, 3, null).toDF("seed")
+    for (iters <- Seq(0, 1, 3)) {
+      val r = bothPaths(DFGraphAlgs.personalizedPageRank(edgeDF, ranged, iters)).schema
+      assert(!r("seed").nullable && !r("id").nullable && !r("rank").nullable, s"$r")
+      val n = bothPaths(DFGraphAlgs.personalizedPageRank(edgeDF, nullable, iters)).schema
+      assert(n("seed").dataType == IntegerType && n("seed").nullable && n("id").nullable)
+      assert(n("id").dataType == (if (iters == 0) IntegerType else LongType), s"$n")
+      // Without ANSI a decimal add that overflows gives null, so the
+      // round's rank may be nullable: the one-task schema follows.
+      withConf("spark.sql.ansi.enabled", "false")(
+        bothPaths(DFGraphAlgs.personalizedPageRank(edgeDF, ranged, iters)))
+    }
+  }
+
+  test("one-task schemas from the input fields: shortestPaths on non-nullable long and nullable int ids") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val longs = bothPaths(DFGraphAlgs.shortestPaths(edgeDF, 1L, 6)).schema("id")
+    assert(longs.dataType == LongType && !longs.nullable)
+    val ints = Seq[(java.lang.Integer, java.lang.Integer, Double)]((1, 2, 1.0), (2, null, 1.0),
+      (2, 3, 2.0)).toDF("src", "dst", "w")
+    for (iters <- Seq(0, 6)) {
+      val id = bothPaths(DFGraphAlgs.shortestPaths(ints, 1L, iters)).schema("id")
+      assert(id.dataType == IntegerType && id.nullable)
+    }
+    // An int src and a long dst: the vertex id takes the wider type.
+    val mixed = ints.select($"src", $"dst".cast("long").as("dst"), $"w")
+    assert(bothPaths(DFGraphAlgs.shortestPaths(mixed, 1L, 6)).schema("id").dataType == LongType)
+  }
+
   test("a serving-sized path or PPR call over a persisted edge list is one Spark job") {
     val p = edgeDF.persist()
     try {

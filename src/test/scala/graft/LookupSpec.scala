@@ -6,12 +6,12 @@ import graft.api.{Search, Similarity}
 
 /** The serving lookups. The vector lookup, `Similarity.bruteForceTopK`,
   * on both of its paths: every value case runs as one task by default
-  * and as the DataFrame plan with the one-task path off, and must give
-  * the same schema and the same rows, double for double (see
-  * graft.ops.OpsUtil.oneTaskTopK). The name lookup, `Search.fuzzyTopK`,
-  * keeps its DataFrame plan; its rows must equal a top-k over the
-  * composed Column WRatio ([[FuzzyOracle]]), id, score and order, double
-  * for double. */
+  * (the lookup's own kernel, which builds no DataFrame plan of the
+  * lookup) and as the DataFrame plan with the one-task path off, and must
+  * give the same schema and the same rows, double for double. The name
+  * lookup, `Search.fuzzyTopK`, keeps its DataFrame plan; its rows must
+  * equal a top-k over the composed Column WRatio ([[FuzzyOracle]]), id,
+  * score and order, double for double. */
 class LookupSpec extends SparkSpec with OneTaskPaths {
   import spark.implicits._
 
@@ -56,6 +56,32 @@ class LookupSpec extends SparkSpec with OneTaskPaths {
     assert(rows(bothPaths(topK(ints, 0L, 3))).map(_.head) == Seq(8, 1, 4))
   }
 
+  test("bruteForceTopK: array<double> vectors and ShortType and ByteType ids agree on both paths") {
+    val doubles = vectors.select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
+    val all = rows(bothPaths(topK(doubles, 0L, 100)))
+    assert(all.map(_.head) == Seq(8L, 1L, 4L, 3L, 2L, 9L, 5L, 6L, 7L))
+    for ((t, v) <- Seq("short" -> ((x: Int) => x.toShort), "byte" -> ((x: Int) => x.toByte))) {
+      val narrow = vectors.select($"vec_id".cast(t).as("vec_id"), $"embedding")
+      val top = bothPaths(topK(narrow, 0L, 3))
+      assert(top.schema("vec_id").dataType.typeName == t)
+      assert(rows(top).map(_.head) == Seq(8, 1, 4).map(v))
+    }
+  }
+
+  test("bruteForceTopK: k = 0 and an all-tie candidate set agree on both paths") {
+    assert(rows(bothPaths(topK(vectors, 0L, 0))).isEmpty)
+    // Every candidate scores 1.0 against the query: the id order alone
+    // decides, whatever order the rows arrive in.
+    val ties = Seq(7L, 3L, 11L, 0L, 5L, 2L, 13L, 1L).map(i => (i, Array(3f, 4f, 0f)))
+      .toDF("vec_id", "embedding")
+    assert(rows(bothPaths(topK(ties, 0L, 4))) == Seq(1L, 2L, 3L, 5L).map(Seq(_, 1.0)))
+  }
+
+  test("bruteForceTopK: a negative k raises on both paths") {
+    intercept[org.apache.spark.sql.AnalysisException](topK(vectors, 0L, -1))
+    offOneTask(intercept[org.apache.spark.sql.AnalysisException](topK(vectors, 0L, -1)))
+  }
+
   test("a StringType id or an input over the threshold keeps the DataFrame plan") {
     val sv = vectors.select($"vec_id".cast("string").as("vec_id"), $"embedding")
     val s = topK(sv, 0L, 3)
@@ -69,8 +95,9 @@ class LookupSpec extends SparkSpec with OneTaskPaths {
   }
 
   test("the session's optimizer rules leave bruteForceTopK's plan alone") {
-    // The one task runs the analyzed expressions, so its rows equal the
-    // DataFrame plan's only while no injected rule rewrites that plan.
+    // The one task's kernel scores with the plan's own expressions, so its
+    // rows equal the DataFrame plan's only while no injected rule
+    // rewrites that plan.
     // Each rule GraftExtensions injects is excluded by its own ruleName;
     // the count ties the list to the extension's source.
     val rules = Seq(graft.ext.BoundedLevenshteinRule, graft.ext.FuzzyJoinRule).map(_.ruleName)
