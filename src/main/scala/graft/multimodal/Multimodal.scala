@@ -55,9 +55,6 @@ object Multimodal {
       .as[MediaRow]
   }
 
-  /** Back-compat alias for the default decoder's decode step. */
-  def decodeStub(row: MediaRow): MediaFeatures = StubDecoder.decode(row)
-
   /** The decoder an unconfigured session gets: [[DecoderConfKey]] names
     * an implementation (a class with a no-arg constructor, or a Scala
     * `object` via its `...$` class name); unset falls back to the stub.

@@ -90,17 +90,10 @@ object AnalyticsPack {
     // A9/W6 — degree distribution + CCDF via cumulative window
     // (ref notebook cell 87: value_counts → pdf → 1 - cumsum.shift(1)).
     "ana_degree_ccdf" -> ((s, d) => {
-      val dist = degrees(s, d).groupBy(col("k")).agg(count(lit(1)).as("cnt"))
-      // Unpartitioned window over the DISTRIBUTION (one row per distinct
+      // The CCDF window runs over the DISTRIBUTION (one row per distinct
       // degree — thousands at any corpus scale), never over the raw rows.
-      val w = Window.orderBy(col("k"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      dist
-        .withColumn("cum_prev", coalesce(sum(col("cnt")).over(w), lit(0L)))
-        .withColumn("total", sum(col("cnt")).over(
-          Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .select(col("k"), col("cnt"),
-          (lit(1.0) - col("cum_prev").cast("double") / col("total").cast("double")).as("ccdf"))
+      graft.api.Analytics.ccdf(
+          degrees(s, d).groupBy(col("k")).agg(count(lit(1)).as("cnt")))
         .orderBy(col("k"))
     }),
 
@@ -136,6 +129,8 @@ object AnalyticsPack {
 
     // A6 — min-max normalization + missing indicator (ref data_processor.py:122-139);
     // exact percentile for the median so both engines interpolate identically.
+    // Not api.Analytics.minmaxNormalize: the median rides the same stats
+    // aggregate, where the operator would cost a second scan.
     "ana_minmax_normalize" -> ((s, d) => {
       val o = Tables.orders(s, d)
       val stats = o.agg(
@@ -663,6 +658,8 @@ object AnalyticsPack {
     // and engines; same sampler family as ml_neg_sampling). Urgent
     // orders keep everything, high priority half, the bulk 1-in-10.
     // Pure per-row filter + one aggregation — distributes with the scan.
+    // Not api.Sampling.stratifiedSample: this reports per-stratum counts
+    // of the keep gate, where the operator returns the kept rows only.
     "ana_stratified_sample" -> ((s, d) => {
       val rate = when(col("o_orderpriority").startsWith("1"), 100)
         .when(col("o_orderpriority").startsWith("2"), 50)

@@ -95,12 +95,7 @@ object DedupPack {
     // Exact dedup audit: hash-groupBy over full text (the 100 TB form —
     // never compares strings, only 128-bit digests).
     "dedup_exact_docs" -> ((s, d) => {
-      val h = Tables.documents(s, d).select(col("doc_id"), md5(col("text")).as("h"))
-      h.groupBy(col("h")).agg(count(lit(1)).as("n"))
-        .agg(
-          count(lit(1)).as("n_distinct_texts"),
-          sum(when(col("n") > 1, 1).otherwise(0)).as("n_dup_groups"),
-          sum(col("n") - 1).as("n_redundant_docs"))
+      graft.api.Dedup.exactDupStats(Tables.documents(s, d), "text")
     }),
 
     // MinHash signature summary — per-j minimum over all docs, a compact
@@ -131,24 +126,17 @@ object DedupPack {
         .agg((sum(when(col("si.mh") === col("sj.mh"), 1).otherwise(0)) /
           lit(NumHashes.toDouble)).as("est_jaccard"))
       // Exact verification on candidates only.
-      val ds = shingleRows(s, d)
-      val sz = ds.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val inter = cand
-        .join(ds.as("x"), col("i") === col("x.doc_id"))
-        .join(ds.as("y"), col("j") === col("y.doc_id") && col("x.sh") === col("y.sh"))
-        .groupBy(col("i"), col("j")).agg(count(lit(1)).as("c"))
-      est.join(inter, Seq("i", "j"))
-        .join(sz.select(col("doc_id").as("i"), col("n").as("ni")), "i")
-        .join(sz.select(col("doc_id").as("j"), col("n").as("nj")), "j")
+      est.join(graft.api.Dedup.jaccardOf(shingleRows(s, d), cand), Seq("i", "j"))
         .select(col("i"), col("j"),
           round(col("est_jaccard"), 6).as("est_jaccard"),
-          round(col("c") / (col("ni") + col("nj") - col("c")).cast("double"), 6).as("jaccard"))
+          round(col("jaccard"), 6).as("jaccard"))
         .filter(col("jaccard") >= 0.8)
         .orderBy(col("i"), col("j"))
     }),
 
     // All-pairs n-gram Jaccard (the small-scale oracle of record): every
-    // pair sharing >= 1 shingle, Jaccard >= 0.8.
+    // pair sharing >= 1 shingle, Jaccard >= 0.8. Not api.Dedup.allPairsJaccard:
+    // this reads the cached shingles and filters on the rounded Jaccard.
     "dedup_ngram_jaccard" -> ((s, d) => {
       val ds = shingleRows(s, d)
       val sz = ds.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))

@@ -44,7 +44,8 @@ object EventsPack {
 
   val queries: Map[String, Q] = Map(
     // Tumbling-window counts per event type (the batch twin of
-    // stream_window_counts — StreamingSpec asserts equality).
+    // stream_window_counts — StreamingSpec asserts equality). Not
+    // api.Events.windowCounts: this adds the exact sum of `value`.
     "events_window_counts" -> ((s, d) => {
       withMicros(s, d)
         .groupBy((expr(s"ts_us div $WindowUs") * WindowUs).as("window_start_us"),

@@ -277,11 +277,7 @@ object MLPack {
     // (ref train_model.py:344-402): hash-bucket 80/10/10 on the canonical
     // pair so an edge and its reverse always land in the same split.
     "ml_link_split" -> ((s, d) => {
-      val e = edges(s, d)
-      val bucket = h28(concat_ws("_",
-        least(col("c"), col("p")), greatest(col("c"), col("p")))) % 100
-      e.select(
-          when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test").as("split"))
+      graft.api.Sampling.pairSplit(edges(s, d), col("c"), col("p"))
         .groupBy(col("split")).agg(count(lit(1)).as("n_edges"))
         .orderBy(col("split"))
     }),

@@ -70,9 +70,7 @@ object SearchPack {
     // group-by IS the index; at serving scale it would be broadcast or
     // written to a KV sink (ref fuzzy_search.py:9-27).
     "search_index_build" -> ((s, d) => {
-      Tables.customer(s, d)
-        .groupBy(norm(col("c_name")).as("key"))
-        .agg(count(lit(1)).as("n_ids"), min(col("c_custkey")).as("first_id"))
+      graft.api.Search.indexBuild(Tables.customer(s, d), "c_custkey", "c_name")
         .orderBy(col("key")).limit(1000)
     }),
 
@@ -94,7 +92,7 @@ object SearchPack {
     // too; this query puts it under the DuckDB oracle directly.
     "search_fuzzy_topk" -> ((s, d) => {
       val key = col("__key")
-      val base = call_function("wratio", key, lit(FuzzyQuery))
+      val base = graft.api.Search.fuzzyScore(key, FuzzyQuery)
       val bonus =
         when(length(key) < length(lit(FuzzyQuery)) / 2, -30.0).otherwise(0.0) +
         when(key.startsWith(FuzzyQuery.substring(0, 4)), 20.0).otherwise(0.0) +
@@ -143,7 +141,7 @@ object SearchPack {
       Tables.customer(s, d)
         .select(col("c_custkey"), col("c_name"), norm(col("c_name")).as("__key"))
         .select(col("c_custkey"), col("c_name"),
-          round(call_function("wratio", col("__key"), lit(PartialQuery)), 6)
+          round(graft.api.Search.fuzzyScore(col("__key"), PartialQuery), 6)
             .as("score"))
         .orderBy(col("score").desc, col("c_custkey").asc)
         .limit(10)

@@ -592,6 +592,8 @@ object SimilarityPack {
     // the honest scale design is the balanced exact sweep. For HIGH
     // thresholds (≥ ~0.8) the LSH bucket path (sim_lsh_topk /
     // api.Dedup.lshNearDupPairs) is the sub-quadratic form of record.
+    // Not api.Similarity.cosineNearDups: that operator's all-pairs
+    // product has no block balancing and no ScaleGuard.
     "sim_cosine_neardup" -> ((s, d) => {
       import s.implicits._
       // Quadratic-by-contract exact-recall sweep — ScaleGuard steers
@@ -718,20 +720,16 @@ object SimilarityPack {
     }),
 
     // Brute-force top-k through the native cosine_sim Catalyst expression
-    // (graft.functions.CosineSim) — the hot-path form: one codegen'd pass
-    // per row over the arrays, no explode, broadcast query vector. Must
-    // return exactly what the posexplode/decimal oracle returns after
-    // 6-place rounding (double accumulation is sequential in index order;
-    // TrainingDataSpec pins agreement with the exact form at 1e-9).
+    // (graft.functions.CosineSim) — api.Similarity.bruteForceTopK, the
+    // serving lookup: one task when the (id, vector) input fits the
+    // one-task rule, else one codegen'd scan against the broadcast query
+    // vector. Must return exactly what the posexplode/decimal oracle
+    // returns after 6-place rounding (double accumulation is sequential
+    // in index order; TrainingDataSpec pins agreement with the exact form
+    // at 1e-9).
     "sim_native_topk" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val q = e.filter(col("vec_id") === QueryVec).select(col("embedding").as("qv"))
-      e.filter(col("vec_id") =!= QueryVec)
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          round(call_function("cosine_sim", col("embedding"), col("qv")), 6).as("cosine"))
-        .orderBy(col("cosine").desc, col("vec_id").asc)
-        .limit(10)
+      graft.api.Similarity.bruteForceTopK(Tables.embeddings(s, d), "vec_id", "embedding",
+        QueryVec, 10)
     }),
 
     // Per-class embedding centroid — the class-prototype operator an

@@ -86,34 +86,21 @@ object TextPack {
     // form so both engines count identically), and the usual chars/4
     // subword estimate.
     "text_token_stats" -> ((s, d) => {
-      val ws = tokens(col("text"))
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          size(ws).as("n_tokens"),
-          size(array_distinct(ws)).as("n_distinct_tokens"),
-          size(regexp_extract_all(col("text"), lit(BpeIshPattern), lit(0)))
-            .as("n_bpe_tokens"),
-          length(col("text")).as("n_chars"),
-          ceil(length(col("text")) / 4.0).cast("long").as("n_subwords_est"),
-          round(length(col("text")) / size(ws).cast("double"), 6).as("avg_token_len"))
+      graft.api.Text.tokenStats(Tables.documents(s, d), "doc_id", "text", BpeIshPattern)
+        .withColumn("avg_token_len",
+          round(col("n_chars") / col("n_tokens").cast("double"), 6))
         .orderBy(col("doc_id"))
     }),
 
     // Quality scoring: stopword ratio, type-token ratio, length band —
     // the heuristics corpus filters gate on.
     "text_quality_score" -> ((s, d) => {
-      val ws = tokens(col("text"))
-      val nTok = size(ws).cast("double")
-      val stopRatio = size(array_intersect(ws, array(Stopwords.map(lit): _*))) / nTok
-      val ttr = size(array_distinct(ws)) / nTok
-      Tables.documents(s, d)
+      graft.api.Text.qualityScore(Tables.documents(s, d), "doc_id", "text", Stopwords)
         .select(col("doc_id"),
-          round(stopRatio, 6).as("stopword_ratio"),
-          round(ttr, 6).as("type_token_ratio"),
-          when(length(col("text")) < 100, "short")
-            .when(length(col("text")) > 400, "long")
-            .otherwise("medium").as("len_band"),
-          round((lit(0.5) * ttr + lit(0.5) * least(stopRatio * 10, lit(1.0))), 6).as("quality"))
+          round(col("stopword_ratio"), 6).as("stopword_ratio"),
+          round(col("type_token_ratio"), 6).as("type_token_ratio"),
+          col("len_band"),
+          round(col("quality"), 6).as("quality"))
         .orderBy(col("doc_id"))
     }),
 
@@ -122,12 +109,8 @@ object TextPack {
     // oracle stays SQL; the text corpus is English-word soup, which the
     // confusion matrix makes visible.)
     "text_lang_id" -> ((s, d) => {
-      val ws = tokens(col("text"))
-      val enRatio = size(array_intersect(ws, array(Stopwords.map(lit): _*))) /
-        size(ws).cast("double")
-      Tables.documents(s, d)
-        .select(col("lang"),
-          when(enRatio >= 0.02, "en").otherwise("unknown").as("predicted"))
+      graft.api.Text.langId(Tables.documents(s, d), "text", Stopwords)
+        .select(col("lang"), col("predicted_lang").as("predicted"))
         .groupBy(col("lang"), col("predicted")).agg(count(lit(1)).as("n"))
         .orderBy(col("lang"), col("predicted"))
     }),
@@ -136,10 +119,7 @@ object TextPack {
     // over the ordered token stream — order-sensitive by design (catches
     // permuted near-dups that bag-of-words hashing misses).
     "text_fingerprint" -> ((s, d) => {
-      val hs = transform(tokens(col("text")), t => h28(t))
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          aggregate(hs, lit(0L), (acc, h) => (acc * B + h) % P).as("fingerprint"))
+      graft.api.Text.fingerprint(Tables.documents(s, d), "doc_id", "text")
         .orderBy(col("doc_id"))
     }),
 
@@ -148,25 +128,14 @@ object TextPack {
     // corpus (one groupBy of the per-doc term table), scores ranked by
     // the rounded value with a term tie-break so the top-3 is a total
     // order both engines agree on. Per-doc ranking is a bounded
-    // partitioned window, never a global sort.
+    // partitioned window, never a global sort; the doc filter sits on
+    // the window's partition key and the join's tf side, so it pushes
+    // down to the scan.
     "text_tfidf_topterms" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       // Spread: the token explode is ~n_tokens rows out per row in
       // (Tables.spread contract).
-      val tf = Tables.spread(Tables.documents(s, d))
-        .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val n = Tables.documents(s, d).agg(count(lit(1)).as("n_docs"))
-      tf.filter(col("doc_id") < 100)
-        .join(df, "term").crossJoin(broadcast(n))
-        .withColumn("tfidf",
-          round(col("tf") * log(col("n_docs").cast("double") / col("df")), 6))
-        .withColumn("rk", row_number().over(Window.partitionBy(col("doc_id"))
-          .orderBy(col("tfidf").desc, col("term").asc)))
-        .filter(col("rk") <= 3)
-        .select(col("doc_id"), col("rk").cast("long").as("rk"),
-          col("term"), col("tf"), col("tfidf"))
+      graft.api.Text.tfidfTopTerms(Tables.spread(Tables.documents(s, d)), "doc_id", "text", 3)
+        .filter(col("doc_id") < 100)
         .orderBy(col("doc_id"), col("rk"))
     }),
 
@@ -232,9 +201,7 @@ object TextPack {
     // Fingerprint-based exact-ordered-dup audit (groups sharing a
     // fingerprint), the scalable "same content, same order" check.
     "text_fingerprint_dups" -> ((s, d) => {
-      val hs = transform(tokens(col("text")), t => h28(t))
-      Tables.documents(s, d)
-        .select(aggregate(hs, lit(0L), (acc, h) => (acc * B + h) % P).as("fingerprint"))
+      graft.api.Text.fingerprint(Tables.documents(s, d), "doc_id", "text")
         .groupBy(col("fingerprint")).agg(count(lit(1)).as("n"))
         .agg(count(lit(1)).as("n_distinct_fp"),
              sum(when(col("n") > 1, 1).otherwise(0)).as("n_dup_groups"))

@@ -21,7 +21,7 @@ import scala.collection.mutable
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: ProfileQuery <query> [sfDir]"))
-    val sfDir = if (args.length > 1) args(1) else "/root/repo/testdata_sf1"
+    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val spark = graft.Session(sfDir)
     spark.sparkContext.setLogLevel("WARN")
 

@@ -8,8 +8,8 @@ package graft
   * factory ([[Session]]), the graph family's one materializer
   * (`DFGraphAlgs.mat`), the one one-task rule (`OpsUtil.oneTask`) and
   * its one kind of path (no plan interpreter in OpsUtil), the one WRatio
-  * scorer (the native `wratio` node) and the registry of
-  * knobs against drift. */
+  * scorer (the native `wratio` node), the registry of knobs and the
+  * registry of api operators the query packs call against drift. */
 class BenchContractSpec extends SparkSpec {
 
   /** The `.scala` files under `dir`, checked to be run from the repository root. */
@@ -213,6 +213,75 @@ class BenchContractSpec extends SparkSpec {
     assert(lev.isEmpty, s"Column-level levenshtein at $lev")
     assert(code(search).exists(_.contains("call_function(\"wratio\"")),
       "Search scores through wratio")
+  }
+
+  /** Public operators of the `graft.api` objects that no query pack or
+    * stream calls, each with the reason. Every other public def must be
+    * called from code in `graft.ops` or `graft.streaming`, so the DuckDB
+    * oracle checks the code users call. */
+  private val userOnly: Map[String, String] = Map(
+    "Analytics.minmaxNormalize" -> "ana_minmax_normalize takes the median in the same stats aggregate",
+    "Dedup.keyedDedup" -> "no fixture query keeps one row per key",
+    "Dedup.allPairsJaccard" -> "dedup_ngram_jaccard reads the cached shingles and filters on the rounded Jaccard",
+    "Dedup.lshNearDupPairs" -> "dedup_minhash_lsh verifies the session-cached candidates and reports the MinHash estimate",
+    "Dedup.bloomPositions" -> "the position column of bloomBitset and bloomProbe, which the queries call",
+    "Events.windowCounts" -> "events_window_counts also sums value",
+    "Sampling.mixPair" -> "the queries map pair mixes onto index spaces past 10^6, so they use mixPairWide",
+    "Sampling.mixPairWide" -> "the pick mix of negativePairs, which ml_neg_sampling calls",
+    "Sampling.stratifiedSample" -> "ana_stratified_sample reports per-stratum counts, not the kept rows",
+    "Search.fuzzyTopK" -> "a serving lookup; search_fuzzy_topk adds the reference's re-rank bonuses",
+    "Search.blockedSimJoin" -> "takes a caller's block key; search_blocked_simjoin sizes it from n",
+    "Similarity.ivfAssign" -> "the packs' IVF index assigns to fitted k-means cells (SimilarityPack.ivfAssign)",
+    "Similarity.sizedCells" -> "dedup_semantic keeps the two-level semCells quantizer the oracle replays",
+    "Similarity.semanticDropListSized" -> "sizedCells feeding semanticDropList, which dedup_semantic calls",
+    "Similarity.cosineNearDups" -> "sim_cosine_neardup runs a balanced block sweep under ScaleGuard",
+    "Text.urlRows" -> "the extraction step of urlDomainStats, which text_url_domains calls",
+    "Text.pplBuckets" -> "text_ppl_buckets ranks the session-cached scores through pplBucketsOf")
+
+  test("one implementation per operator: pack code calls each api operator or registers it user-only") {
+    val objects = Seq("Analytics", "Dedup", "Etl", "Events", "Layout", "Sampling",
+      "Search", "Similarity", "Text")
+    val defs = objects.flatMap { o =>
+      code(new java.io.File(s"src/main/scala/graft/api/$o.scala"))
+        .flatMap(l => """^  def (\w+)""".r.findFirstMatchIn(l).map(m => s"$o.${m.group(1)}"))
+    }.distinct
+    val undefined = userOnly.keySet.filterNot(defs.contains)
+    assert(undefined.isEmpty, s"user-only entries name no public api def: $undefined")
+
+    /** A code line with its trailing `//` comment cut (outside string literals). */
+    def uncommented(l: String): String = {
+      var inStr = false
+      var i = 0
+      while (i < l.length && (inStr || !l.startsWith("//", i))) {
+        if (l(i) == '"') inStr = !inStr
+        i += 1
+      }
+      l.substring(0, i)
+    }
+    // A call counts when written `graft.api.O.f`, or `X.f` under
+    // `import graft.api.O` / `import graft.api.{O => X}` — never as a bare
+    // name, which another object may share (SimilarityPack.ivfAssign,
+    // StreamOps.windowCounts).
+    val selector = """(\w+)(?:\s*=>\s*(\w+))?""".r
+    val called = (scalaFiles("src/main/scala/graft/ops") ++
+        scalaFiles("src/main/scala/graft/streaming")).flatMap { f =>
+      val src = code(f).map(uncommented).mkString("\n")
+      val aliases = """import\s+graft\.api\.(\w+|\{[^}]*\})""".r.findAllMatchIn(src)
+        .flatMap(_.group(1).stripPrefix("{").stripSuffix("}").split(",").map(_.trim))
+        .collect { case selector(o, as) => o -> Option(as).getOrElse(o) }.toSeq
+      defs.filter { d =>
+        val Array(o, fn) = d.split('.')
+        (s"graft.api.$o" +: aliases.collect { case (`o`, as) => as }).exists { q =>
+          s"(?<![\\w.])${java.util.regex.Pattern.quote(s"$q.$fn")}(?!\\w)".r
+            .findFirstIn(src).isDefined
+        }
+      }
+    }.toSet
+    val unregistered = defs.filterNot(d => called(d) || userOnly.contains(d))
+    assert(unregistered.isEmpty,
+      s"api operators neither called by graft.ops/graft.streaming code nor user-only: $unregistered")
+    val stale = userOnly.keySet.filter(called).toSeq.sorted
+    assert(stale.isEmpty, s"user-only entries that pack code calls: $stale")
   }
 
   test("the test session runs the factory's settings, key for key") {

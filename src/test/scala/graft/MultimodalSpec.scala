@@ -1,6 +1,6 @@
 package graft
 
-import graft.multimodal.Multimodal
+import graft.multimodal.{Multimodal, StubDecoder}
 import graft.multimodal.Multimodal.{MediaRow, MediaFeatures}
 
 /** Stub-decoder goldens (the rolling frame checksum has no SQL oracle)
@@ -9,14 +9,14 @@ class MultimodalSpec extends SparkSpec {
 
   test("decodeStub: hand-computed golden on a tiny payload") {
     // "abcd" = bytes 97 98 99 100 → one 16-byte frame, sampled.
-    val f = Multimodal.decodeStub(MediaRow(7L, "image", "abcd".getBytes("UTF-8")))
+    val f = StubDecoder.decode(MediaRow(7L, "image", "abcd".getBytes("UTF-8")))
     assert(f == MediaFeatures(7L, "image", 4L, 394L, 98.5, 1, 1,
       ((( (97L*31 + 98) *31 + 99) * 31 + 100) % 1000000007L)))
   }
 
   test("decodeStub: frame sampling takes every 4th frame") {
     val payload = Array.fill(16 * 9 + 1)(1.toByte)    // 10 frames
-    val f = Multimodal.decodeStub(MediaRow(1L, "audio", payload))
+    val f = StubDecoder.decode(MediaRow(1L, "audio", payload))
     assert(f.n_frames == 10)
     assert(f.n_sampled == 3)                           // frames 0, 4, 8
   }
