@@ -158,16 +158,14 @@ object DFGraphAlgs {
     }
   }
 
-  /** Size-coalesced SCAN VIEW of a persisted cache that downstream code
-    * re-scans many times (the walk corpora probe the full neighbor
-    * index once per step): materialize the cache (one count — these
-    * frames are warmed anyway), read the materialized size from the
-    * InMemoryRelation stats (driver metadata), and coalesce the scan to
-    * [[sizedParts]] partitions. The cache itself is untouched (stats,
-    * storage, consumers elsewhere); only this view's scans launch fewer
-    * tasks. coalesce is narrow and deterministic — values identical. */
+  /** Size-coalesced SCAN VIEW of a persisted, already materialized
+    * cache (`DFCache.cached` counts it first): read the materialized
+    * size from the InMemoryRelation stats (driver metadata) and coalesce
+    * the scan to [[sizedParts]] partitions. The cache itself is
+    * untouched (stats, storage, consumers elsewhere); only this view's
+    * scans launch fewer tasks. coalesce is narrow and deterministic —
+    * values identical. */
   private[graft] def sizedScanView(df: DataFrame): DataFrame = {
-    df.count()
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val n = df.rdd.getNumPartitions
     val kc = sizedParts(df.sparkSession, bytes, n)

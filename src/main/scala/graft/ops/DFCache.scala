@@ -23,7 +23,8 @@ import scala.collection.concurrent.TrieMap
   *
   * Two kinds of shared frame:
   *  - [[cached]] persists a frame consumers JOIN (accurate size stats,
-  *    see below).
+  *    see below) and counts it on first access — the one place a cached
+  *    frame is materialized, so a warm pass only calls the accessor.
   *  - A frame whose LOGICAL PLAN is enormous relative to its data (the
   *    walk corpora embed per-step joins into the whole neighbour index)
   *    is built ending in `DFGraphAlgs.mat`, which truncates its lineage,
@@ -48,10 +49,10 @@ object DFCache {
     * whatever its build lineage had — 32-64 partitions of kilobyte
     * blocks at small SFs — and every consumer SCAN then pays one task
     * launch per block (measured ~100-200 ms each under load; the graph
-    * caches are re-scanned 3-10× per query). sizedScanView materializes
-    * the cache once (its first access — Bench charges that to the warm
-    * pass as before) and coalesces the returned view to ~4 MB
-    * partitions (DFGraphAlgs.sizedScanView). The
+    * caches are re-scanned 3-10× per query). The cache is materialized
+    * once (its first access — Bench charges that to the warm pass) and
+    * the returned view coalesced to ~4 MB partitions
+    * (DFGraphAlgs.sizedScanView). The
     * Repartition node passes the child's stats through, so broadcast
     * planning is unchanged; coalesce is narrow and deterministic, so
     * values are identical. Caches deliberately carry NO key clustering
@@ -70,6 +71,7 @@ object DFCache {
       (build: => DataFrame): DataFrame = {
     memo(s, key) {
       val p = build.persist(StorageLevel.MEMORY_AND_DISK)
+      p.count()
       if (sized) graft.graph.DFGraphAlgs.sizedScanView(p) else p
     }
   }

@@ -336,7 +336,7 @@ object EtlPack {
       Etl.nodes(cleaned(s, scale), occupations(s, scale))
     }
 
-  /** Warm hooks for Bench (see [[Warm]]): counting the edge frame
+  /** Warm hooks for Bench (see [[Warm]]): the edge frame's accessor
     * materializes flat + cleaned + edges; the node frame rides the then-
     * cached cleaned stage. */
   private[ops] def warmEdges(s: SparkSession, dir: String): DataFrame =

@@ -171,8 +171,8 @@ object GraphPack {
     * `step(ix, frontier, t)` maps the step-t frontier (root, walk,
     * node, plus whatever the corpus carries) to the step-(t+1) one.
     *
-    * Every step re-scans the full neighbour index, so the loop reads a
-    * size-coalesced scan view of it (at the cache's inherited 64 tiny
+    * Every step re-scans the full neighbour index, so the loop reads the
+    * cache's size-coalesced scan view (at its inherited 64 tiny
     * partitions those scans were nearly all task-launch overhead — the
     * build measured ~flat from sf0.1 to sf1). The degree frame is
     * persisted so the per-step plans read it as a tiny cached frame
@@ -188,7 +188,7 @@ object GraphPack {
     * planning) — and the per-step scaffolding is released. */
   private def walkCorpus(s: SparkSession, d: String, len: Int)(
       step: (WalkIndex, DataFrame, Int) => DataFrame): DataFrame = {
-    val nbr = DFGraphAlgs.sizedScanView(nbrIndex(s, d))
+    val nbr = nbrIndex(s, d)
     val ix = WalkIndex(nbr, nbr.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val roots = edges(s, d).select(col("src").as("root")).distinct()
@@ -238,7 +238,7 @@ object GraphPack {
     */
   private[ops] def node2vecCorpus(s: SparkSession, d: String): DataFrame =
     DFCache.memo(s, s"graph.n2vcorpus:$d") {
-      val adj = DFGraphAlgs.sizedScanView(edges(s, d))
+      val adj = edges(s, d)
         .select(col("src").as("psrc"), col("dst").as("pdst"))
         .withColumn("adjflag", lit(1))
       val inst = Window.partitionBy(col("root"), col("walk"))

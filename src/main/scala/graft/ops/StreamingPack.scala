@@ -102,7 +102,7 @@ object StreamingPack {
     // the batch events_sessionize shape — stream must equal batch.
     "stream_sessionize" -> ((s, d) => {
       val name = s"graft_stream_sess_${counter.incrementAndGet()}"
-      val sess = StreamOps.runToMemoryComplete(s,
+      val sess = StreamOps.runToMemory(s,
         StreamOps.sessionize(StreamOps.eventsStream(s, d)), name)
       StreamOps.sessionRollup(sess, EventsPack.GapUs)
         .orderBy(col("user_id"))
@@ -135,7 +135,7 @@ object StreamingPack {
       val name = s"graft_stream_lead_${counter.incrementAndGet()}"
       val agg = StreamOps.eventsStream(s, d)
         .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-      val res = StreamOps.runToMemoryComplete(s, agg, name)
+      val res = StreamOps.runToMemory(s, agg, name)
       res.orderBy(col("n_events").desc, col("user_id").asc).limit(25)
     }),
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Explicit warm pass over the session-cached intermediates shared
   * across queries (DFCache entries). Bench runs this BEFORE the timed
@@ -26,78 +26,77 @@ object Warm {
     q => p.exists(q.startsWith)
   private def only(names: String*): String => Boolean = names.toSet
 
-  /** A frame entry's builder: count() forces the persist. */
-  private def frame(df: => DataFrame): () => Unit = () => { df.count(); () }
-
-  /** (entry, builder, needs): `needs` says whether a query of that name
-    * consumes the cache. Cross-pack edges: MLPack rides graph.relpairs;
-    * text_contamination rides dedup.shingles; dedup_semantic lives in
-    * SimilarityPack and rides the sim.* caches. */
+  /** (entry, builder, needs): the builder is the cache's accessor, whose
+    * first call materializes it (DFCache.cached counts a frame, the walk
+    * corpora end in `mat`, a scalar memo computes); `needs` says whether
+    * a query of that name consumes the cache. Cross-pack edges: MLPack
+    * rides graph.relpairs; text_contamination rides dedup.shingles;
+    * dedup_semantic lives in SimilarityPack and rides the sim.* caches. */
   private def entries(s: SparkSession, d: String)
-      : Seq[(String, () => Unit, String => Boolean)] = {
+      : Seq[(String, () => Any, String => Boolean)] = {
     val sim = (q: String) => q.startsWith("sim_") || q == "dedup_semantic"
     Seq(
-      ("graph.relpairs", frame(GraphPack.relPairs(s, d)), pfx("graph_", "ml_")),
-      ("graph.edges",    frame(GraphPack.edges(s, d)), pfx("graph_")),
+      ("graph.relpairs", () => GraphPack.relPairs(s, d), pfx("graph_", "ml_")),
+      ("graph.edges",    () => GraphPack.edges(s, d), pfx("graph_")),
       // Shared PageRank/PPR contribution frame (r14): consumed only by
       // the two unsalted-loop queries — see GraphPack.prContrib.
-      ("graph.contrib",  frame(GraphPack.prContrib(s, d)),
+      ("graph.contrib",  () => GraphPack.prContrib(s, d),
         only("graph_pagerank", "graph_ppr")),
-      ("graph.wedges",   frame(GraphPack.weightedEdges(s, d)), pfx("graph_")),
+      ("graph.wedges",   () => GraphPack.weightedEdges(s, d), pfx("graph_")),
       // lmdists BEFORE bfs: graph.bfs is now a derived slice of the
       // landmark run (GraphPack.bfsDists) — warming it first would
       // charge the whole landmark BSP build to the bfs entry.
-      ("graph.lmdists",  frame(GraphPack.landmarkDists(s, d)), pfx("graph_")),
-      ("graph.bfs",      frame(GraphPack.bfsDists(s, d)), pfx("graph_")),
-      ("graph.tripairs", frame(GraphPack.triPairs(s, d)), pfx("graph_")),
-      ("graph.ssspPred", frame(GraphPack.ssspState(s, d)), pfx("graph_")),
-      ("graph.nbridx",   frame(GraphPack.nbrIndex(s, d)),
+      ("graph.lmdists",  () => GraphPack.landmarkDists(s, d), pfx("graph_")),
+      ("graph.bfs",      () => GraphPack.bfsDists(s, d), pfx("graph_")),
+      ("graph.tripairs", () => GraphPack.triPairs(s, d), pfx("graph_")),
+      ("graph.ssspPred", () => GraphPack.ssspState(s, d), pfx("graph_")),
+      ("graph.nbridx",   () => GraphPack.nbrIndex(s, d),
         only("graph_rw_corpus", "graph_node2vec", "graph_rw_skipgram")),
-      ("graph.rwcorpus", frame(GraphPack.rwCorpus(s, d)),
+      ("graph.rwcorpus", () => GraphPack.rwCorpus(s, d),
         only("graph_rw_corpus", "graph_rw_skipgram")),
-      ("graph.n2vcorpus", frame(GraphPack.node2vecCorpus(s, d)), only("graph_node2vec")),
-      ("ml.edges",       frame(MLPack.edges(s, d)), pfx("ml_")),
-      ("ml.edgesA",      frame(MLPack.edgesHalfA(s, d)), pfx("ml_")),
-      ("ml.edgesB",      frame(MLPack.edgesHalfB(s, d)), pfx("ml_")),
-      ("ml.pdegA",       frame(MLPack.pdegA(s, d)), pfx("ml_")),
-      ("ml.aaScored",    frame(MLPack.aaScored(s, d)), pfx("ml_")),
-      ("sim.comps",      frame(SimilarityPack.comps(s, d)), sim),
-      ("sim.buckets",    frame(SimilarityPack.buckets(s, d)), sim),
-      ("sim.ivfcent",    frame(SimilarityPack.kmeansCentroids(s, d)), sim),
-      ("sim.ncomps",     frame(SimilarityPack.ncomps(s, d)), sim),
-      ("sim.pqcent",     frame(SimilarityPack.pqCodebooks(s, d)), sim),
-      ("sim.pqcodes",    frame(SimilarityPack.pqCodes(s, d)), sim),
-      ("sim.ivfassign",  frame(SimilarityPack.ivfAssign(s, d)), sim),
-      ("sim.sqstats",    frame(SimilarityPack.sqStats(s, d)), sim),
-      ("sim.sqcodes",    frame(SimilarityPack.sqCodes(s, d)), sim),
+      ("graph.n2vcorpus", () => GraphPack.node2vecCorpus(s, d), only("graph_node2vec")),
+      ("ml.edges",       () => MLPack.edges(s, d), pfx("ml_")),
+      ("ml.edgesA",      () => MLPack.edgesHalfA(s, d), pfx("ml_")),
+      ("ml.edgesB",      () => MLPack.edgesHalfB(s, d), pfx("ml_")),
+      ("ml.pdegA",       () => MLPack.pdegA(s, d), pfx("ml_")),
+      ("ml.aaScored",    () => MLPack.aaScored(s, d), pfx("ml_")),
+      ("sim.comps",      () => SimilarityPack.comps(s, d), sim),
+      ("sim.buckets",    () => SimilarityPack.buckets(s, d), sim),
+      ("sim.ivfcent",    () => SimilarityPack.kmeansCentroids(s, d), sim),
+      ("sim.ncomps",     () => SimilarityPack.ncomps(s, d), sim),
+      ("sim.pqcent",     () => SimilarityPack.pqCodebooks(s, d), sim),
+      ("sim.pqcodes",    () => SimilarityPack.pqCodes(s, d), sim),
+      ("sim.ivfassign",  () => SimilarityPack.ivfAssign(s, d), sim),
+      ("sim.sqstats",    () => SimilarityPack.sqStats(s, d), sim),
+      ("sim.sqcodes",    () => SimilarityPack.sqCodes(s, d), sim),
       // dedup_semantic is SimilarityPack's (sim caches) — the dedup_
       // prefix must not pull the text-shingle caches for it (measured
       // 15 s of unread warmup in the r13 sf10 spot).
-      ("dedup.shingles",   frame(DedupPack.shingleRows(s, d)),
+      ("dedup.shingles",   () => DedupPack.shingleRows(s, d),
         q => (q.startsWith("dedup_") && q != "dedup_semantic") ||
           q == "text_contamination"),
-      ("dedup.signatures", frame(DedupPack.signatures(s, d)),
+      ("dedup.signatures", () => DedupPack.signatures(s, d),
         q => q.startsWith("dedup_") && q != "dedup_semantic"),
       // LSH band-join candidate pairs (r14): three queries verify the
       // same candidate set — see DedupPack.lshCands.
-      ("dedup.cands",      frame(DedupPack.lshCands(s, d)),
+      ("dedup.cands",      () => DedupPack.lshCands(s, d),
         only("dedup_minhash_lsh", "dedup_containment",
           "dedup_cluster_canonical")),
-      ("dedup.simhash",    frame(DedupPack.simhashFingerprints(s, d)),
+      ("dedup.simhash",    () => DedupPack.simhashFingerprints(s, d),
         pfx("dedup_simhash")),
-      // The SPARQL landing chain caches (EtlPack): counting the edge
-      // frame materializes flat + cleaned + edges; nodes rides the
+      // The SPARQL landing chain caches (EtlPack): the edge frame's
+      // accessor materializes flat + cleaned + edges; nodes rides the
       // then-cached cleaned stage.
-      ("etl.chain",        frame(EtlPack.warmEdges(s, d)), pfx("etl_sparql_")),
-      ("etl.nodes",        frame(EtlPack.warmNodes(s, d)), pfx("etl_sparql_")),
+      ("etl.chain",        () => EtlPack.warmEdges(s, d), pfx("etl_sparql_")),
+      ("etl.nodes",        () => EtlPack.warmNodes(s, d), pfx("etl_sparql_")),
       // Per-doc bigram-LM scores (r14): text_bigram_lm_score and
       // text_ppl_buckets rank the same scored frame.
-      ("text.lmscores",    frame(TextPack.lmScores(s, d)),
+      ("text.lmscores",    () => TextPack.lmScores(s, d),
         only("text_bigram_lm_score", "text_ppl_buckets")),
       // Scalar memo, not a frame: the co-purchase graph's max out-degree
       // (the BSP hub-probe bound every graph query passes in), charged
       // here instead of to whichever graph query runs first.
-      ("graph.maxdeg",     () => { GraphPack.maxCoDeg(s, d); () }, pfx("graph_")))
+      ("graph.maxdeg",     () => GraphPack.maxCoDeg(s, d), pfx("graph_")))
   }
 
   /** Entry names [[sharedIntermediates]] would warm for a query set —

@@ -202,24 +202,6 @@ object StreamOps {
         sum(col("n_events")).as("n_events"),
         max(col("end_us") - col("start_us") - gapUs).as("max_session_us"))
 
-  /** Run a session-window (or other complete-capable stateful) stream
-    * into a memory sink; one AvailableNow batch over a bounded source
-    * emits the final state exactly once. Spark 4 session-window
-    * aggregation allows append/complete but not update; append would
-    * hold every session behind the watermark on a one-shot run. */
-  def runToMemoryComplete(s: SparkSession, streamed: DataFrame, name: String): DataFrame = {
-    withSizedStatePartitions(s) {
-      val q = streamed.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
-  }
-
   /** Watermarked STREAM-STREAM interval join: click events joined to the
     * purchase events that follow within `intervalUs` for the same user —
     * both sides are unbounded streams (two independent file sources
@@ -541,9 +523,11 @@ object StreamOps {
   }
 
   /** Run a streaming frame to completion (AvailableNow) into a memory
-    * sink and return the materialized result. Complete mode: with a
-    * one-shot trigger, append mode would hold every window open behind
-    * the watermark and emit nothing. */
+    * sink and return the materialized result: one batch over a bounded
+    * source emits the final state exactly once. Complete mode: with a
+    * one-shot trigger, append mode would hold every window (or session)
+    * open behind the watermark and emit nothing, and Spark 4
+    * session-window aggregation does not allow update mode. */
   def runToMemory(s: SparkSession, streamed: DataFrame, name: String): DataFrame = {
     withSizedStatePartitions(s) {
       val q = streamed.writeStream

@@ -49,7 +49,7 @@ object ProfileQuery {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    graft.ops.Warm.sharedIntermediates(spark, sfDir)
+    graft.ops.Warm.sharedIntermediates(spark, sfDir, Some(Set(name)))
     val fn = graft.SparkEntry.queries.getOrElse(name, sys.error(s"no query $name"))
     val t1 = System.nanoTime(); fn(spark, sfDir).count()
     System.err.println(f"[profile] pass1 ${(System.nanoTime() - t1) / 1e9}%.2f s")

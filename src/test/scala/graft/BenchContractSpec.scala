@@ -8,8 +8,9 @@ package graft
   * factory ([[Session]]), the graph family's one materializer
   * (`DFGraphAlgs.mat`), the one one-task rule (`OpsUtil.oneTask`) and
   * its one kind of path (no plan interpreter in OpsUtil), the one WRatio
-  * scorer (the native `wratio` node), the registry of knobs and the
-  * registry of api operators the query packs call against drift. */
+  * scorer (the native `wratio` node), MLPack's one link score, the
+  * registry of knobs and the registry of api operators the query packs
+  * call against drift. */
 class BenchContractSpec extends SparkSpec {
 
   /** The `.scala` files under `dir`, checked to be run from the repository root. */
@@ -282,6 +283,47 @@ class BenchContractSpec extends SparkSpec {
       s"api operators neither called by graft.ops/graft.streaming code nor user-only: $unregistered")
     val stale = userOnly.keySet.filter(called).toSeq.sorted
     assert(stale.isEmpty, s"user-only entries that pack code calls: $stale")
+  }
+
+  /** The start offsets of `needle` in the code of `t`: occurrences
+    * that begin inside a string or character literal or a comment do
+    * not count. */
+  private def codeSites(t: String, needle: String): Seq[Int] = {
+    val isCode = new Array[Boolean](t.length)
+    var i = 0
+    def skipTo(end: String, from: Int): Int = {
+      val j = t.indexOf(end, from)
+      if (j < 0) t.length else j + end.length
+    }
+    while (i < t.length) {
+      val next =
+        if (t.startsWith("\"\"\"", i)) skipTo("\"\"\"", i + 3)
+        else if (t(i) == '"') {
+          var j = i + 1
+          while (j < t.length && t(j) != '"' && t(j) != '\n') j += (if (t(j) == '\\') 2 else 1)
+          j + 1
+        }
+        else if (t.startsWith("'\\", i)) skipTo("'", i + 3)
+        else if (t(i) == '\'' && i + 2 < t.length && t(i + 2) == '\'') i + 3
+        else if (t.startsWith("//", i)) skipTo("\n", i)
+        else if (t.startsWith("/*", i)) skipTo("*/", i + 2)
+        else { isCode(i) = true; i + 1 }
+      i = next
+    }
+    Iterator.iterate(t.indexOf(needle))(k => t.indexOf(needle, k + 1))
+      .takeWhile(_ >= 0).filter(isCode).toSeq
+  }
+
+  test("one link score: src/main spells the AA term and the shared-supplier join once") {
+    // MLPack scores customer pairs by the suppliers they share; every
+    // query that does calls its helpers, so the score cannot drift.
+    for (needle <- Seq("log(col(\"pdeg\") + 1)", "filter(col(\"p\") === col(\"p2\"))")) {
+      val sites = scalaFiles("src/main").flatMap { f =>
+        val t = text(f)
+        codeSites(t, needle).map(k => s"${f.getPath}:${t.substring(0, k).count(_ == '\n') + 1}")
+      }
+      assert(sites.size == 1, s"$needle written at $sites")
+    }
   }
 
   test("the test session runs the factory's settings, key for key") {

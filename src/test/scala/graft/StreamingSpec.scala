@@ -28,7 +28,7 @@ class StreamingSpec extends SparkSpec {
   test("session_window stream rollup equals the batch islands sessionization") {
     val batch = EventsPack.queries("events_sessionize")(spark, sf())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val sess = StreamOps.runToMemoryComplete(spark,
+    val sess = StreamOps.runToMemory(spark,
       StreamOps.sessionize(StreamOps.eventsStream(spark, sf())), "spec_sess")
     val streamed = StreamOps.sessionRollup(sess, EventsPack.GapUs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
