@@ -1,7 +1,7 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
   GenericInternalRow, Literal, Round}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
@@ -88,8 +88,8 @@ object Similarity {
     if (k >= 0 && cosine.checkInputDataTypes().isSuccess &&
         oneTask(in, Seq(idField.dataType))(1)) {
       val schema = StructType(Seq(idField.copy(name = "vec_id"), StructField("cosine", DoubleType)))
-      onePartition(in, inMemory(in))
-        .mapPartitions(topKTask(_, queryId, k, vt, Round(cosine, Literal(6))))(Encoders.row(schema))
+      onePartition(in, inMemory(in), schema)(
+        topKTask(_, queryId, k, idField.dataType, Round(cosine, Literal(6))))
     } else {
       val q = in.filter(col(id) === queryId).select(col(vec).as("qv"))
       in.filter(col(id) =!= queryId)
@@ -106,10 +106,11 @@ object Similarity {
     * non-null id (a null id is on neither side), and each candidate is
     * scored against each query vector by `score` — the plan's
     * round(cosine_sim(candidate, query), 6), bound to a (candidate,
-    * query) pair. The top k are kept in a bounded heap under the plan's
-    * order — cosine descending in Spark's double order (NaN greatest,
-    * nulls last), then id ascending — and emitted in that order. */
-  private def topKTask(rows: Iterator[Row], queryId: Long, k: Int, vecType: DataType,
+    * query) pair of Spark's own array values. The top k are kept in a
+    * bounded heap under the plan's order — cosine descending in Spark's
+    * double order (NaN greatest, nulls last), then id ascending — and
+    * emitted in that order. */
+  private def topKTask(rows: Iterator[InternalRow], queryId: Long, k: Int, idType: DataType,
       score: Expression): Iterator[Row] = {
     final case class Hit(id: Any, key: Long, cosine: Any)
     val order: Ordering[Hit] = { (a, b) =>
@@ -121,17 +122,17 @@ object Similarity {
       }
       if (c != 0) c else java.lang.Long.compare(a.key, b.key)
     }
-    val toVec = CatalystTypeConverters.createToCatalystConverter(vecType)
-    val (queries, candidates) = rows.filter(!_.isNullAt(0)).toArray
-      .partition(_.getAs[Number](0).longValue == queryId)
-    val qv = queries.map(r => toVec(r.get(1)))
+    val (queries, candidates) = rows.filter(!_.isNullAt(0)).map(_.copy()).toArray
+      .partition(_.get(0, idType).asInstanceOf[Number].longValue == queryId)
+    val qv = queries.map(_.getArray(1))
     val pair = new GenericInternalRow(2)
     val kept = new java.util.PriorityQueue[Hit](order.reverse)
     candidates.foreach { r =>
-      pair.update(0, toVec(r.get(1)))
+      val id = r.get(0, idType)
+      pair.update(0, r.getArray(1))
       qv.foreach { q =>
         pair.update(1, q)
-        kept.add(Hit(r.get(0), r.getAs[Number](0).longValue, score.eval(pair)))
+        kept.add(Hit(id, id.asInstanceOf[Number].longValue, score.eval(pair)))
         if (kept.size > k) kept.poll()
       }
     }

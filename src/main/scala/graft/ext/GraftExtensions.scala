@@ -8,7 +8,8 @@ import graft.functions.{AccentFold, BitsetAgg, CosineSim, EditDistanceWithin, Hl
 /** Session extensions registering graft's native Catalyst functions.
   * Activate with .config("spark.sql.extensions", "graft.ext.GraftExtensions")
   * — then `call_function("accent_fold", col)` / SQL `accent_fold(x)` work
-  * everywhere, fully codegen'd.
+  * everywhere, fully codegen'd. Also injects the two fuzzy-join optimizer
+  * rules and the physical [[ParamLiteralRule]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -72,5 +73,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // FuzzyJoinRule). Runs after the bound rewrite in the same
     // fixed-point batch, so it only needs to match the bounded form.
     ext.injectOptimizerRule(_ => FuzzyJoinRule)
+    // Physical rule: the constants of generated filters and projections
+    // are read from the generated class's references, so a serving
+    // request that differs from the last one only in its id reuses the
+    // compiled code (see ParamLiteralRule).
+    ext.injectColumnar(_ => ParamLiteralRule.columnar)
   }
 }

@@ -1,7 +1,8 @@
 package graft.graph
 
 import scala.collection.mutable
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,14 +62,16 @@ import graft.ops.OpsUtil.{inMemory, integral, oneTask, onePartition, rowEstimate
   * (per seed-row estimate for PPR), fits
   * `spark.sql.autoBroadcastJoinThreshold` — the rule Spark itself uses to
   * ship a relation whole — and the ids are integral, the edge list (and
-  * the seeds) move into one partition and a single `mapPartitions` task
-  * ([[ssspTask]], [[pprTask]]) runs every round over a dense vertex index
-  * and a CSR adjacency: one Spark job per request instead of one
-  * checkpoint job per round. The result is a lazy frame with the BSP
-  * result's rows, bits and schema; the schema is built from the edge and
-  * seed fields, so the path analyzes no BSP plan (GraphSpec runs every
-  * value case on both paths and compares schemas); above the threshold
-  * and with
+  * the seeds) move into one partition and a single task
+  * ([[ssspTask]], [[pprTask]]) reads them as Spark's own `InternalRow`s
+  * and runs every round over a dense vertex index and a CSR adjacency:
+  * one Spark job per request instead of one checkpoint job per round.
+  * The result is a frame with the BSP result's rows, bits and schema; its
+  * input is planned when it is built, so over an input not held in
+  * memory the one-partition shuffle runs then, as the BSP rounds do. The
+  * schema is built from the edge and seed fields, so the path analyzes
+  * no BSP plan (GraphSpec runs every value case on both paths and
+  * compares schemas); above the threshold and with
   * `spark.sql.autoBroadcastJoinThreshold=-1` the BSP loop runs.
   * No data reaches the driver on either path: the task runs on an
   * executor.
@@ -827,8 +830,7 @@ object DFGraphAlgs {
     val schema = StructType(Seq(StructField("id", idType, src.nullable || dst.nullable),
       StructField("dist", DoubleType)))
     val in = w.select(col("src").cast("long"), col("dst").cast("long"), col("w"))
-    onePartition(in, inMemory(in))
-      .mapPartitions(ssspTask(_, source, iters, idType))(Encoders.row(schema))
+    onePartition(in, inMemory(in), schema)(ssspTask(_, source, iters, idType))
   }
 
   /** [[personalizedPageRank]] as one task over the edge list and the seed
@@ -850,8 +852,7 @@ object DFGraphAlgs {
       col("dst").cast("long").as("b"))
     val s = seeds.select(lit(1).as("t"), col("seed").cast("long").as("a"),
       lit(null).cast("long").as("b"))
-    onePartition(e.union(s), inMemory(e))
-      .mapPartitions(pprTask(_, iters, seed.dataType, id.dataType))(Encoders.row(schema))
+    onePartition(e.union(s), inMemory(e), schema)(pprTask(_, iters, seed.dataType, id.dataType))
   }
 
   /** The wider of two integral types: the type a union of the two takes. */
@@ -877,7 +878,7 @@ object DFGraphAlgs {
     def n: Int = ids.length
 
     /** The slot of column `i` of `r` (a long, or null). */
-    def slot(r: Row, i: Int): Int =
+    def slot(r: InternalRow, i: Int): Int =
       if (r.isNullAt(i)) {
         if (nullSlot < 0) { nullSlot = n; ids += 0L }
         nullSlot
@@ -932,7 +933,7 @@ object DFGraphAlgs {
     * distance (the source only if it is a vertex), then every other vertex
     * with a null — and the null vertex with a null always, as the BSP's
     * anti-join never matches a null key. */
-  private def ssspTask(rows: Iterator[Row], source: Long, iters: Int,
+  private def ssspTask(rows: Iterator[InternalRow], source: Long, iters: Int,
       idType: DataType): Iterator[Row] = {
     val g = new TaskGraph
     rows.foreach { r =>
@@ -982,7 +983,7 @@ object DFGraphAlgs {
     * on Spark's own Decimal: a row exists iff a message or a restart
     * arrived, and rank = double(D(0.85 · double(Σ D(m))) + Σ D(0.15)),
     * D = [[dec15]], an absent side left out. */
-  private def pprTask(rows: Iterator[Row], iters: Int, seedType: DataType,
+  private def pprTask(rows: Iterator[InternalRow], iters: Int, seedType: DataType,
       idType: DataType): Iterator[Row] = {
     val g = new TaskGraph
     val mult = mutable.LinkedHashMap.empty[Int, Int]

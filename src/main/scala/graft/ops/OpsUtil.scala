@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, IntegerType, LongType,
-  ShortType, TimestampNTZType, TimestampType}
+  ShortType, StructType, TimestampNTZType, TimestampType}
 
 /** Shared helpers for oracle-comparable aggregates, and the one-task
   * rule every serving-sized call goes through (see [[oneTask]]).
@@ -136,8 +137,20 @@ object OpsUtil {
     narrow(df.queryExecution.withCachedData)
   }
 
-  /** `df` in one partition: a narrow coalesce over data already in
-    * memory ([[inMemory]]), a one-partition shuffle over a lineage. */
-  private[graft] def onePartition(df: DataFrame, narrow: Boolean): DataFrame =
-    if (narrow) df.coalesce(1) else df.repartition(1)
+  /** The name of the RDD a one-task kernel's rows come from; the
+    * `LogicalRDD` of the kernel's result frame carries it. */
+  private[graft] val OneTaskRdd = "graft.oneTask"
+
+  /** A one-task kernel's result: `kernel` over the rows of `df` in one
+    * partition — a narrow coalesce over data already in memory
+    * ([[inMemory]]), a one-partition shuffle over a lineage — read as
+    * Spark's own `InternalRow`s (no conversion to `Row`; a kept row must be
+    * copied, Spark reuses it), and its small result as a frame of
+    * `schema`. */
+  private[graft] def onePartition(df: DataFrame, narrow: Boolean, schema: StructType)(
+      kernel: Iterator[InternalRow] => Iterator[Row]): DataFrame = {
+    val one = if (narrow) df.coalesce(1) else df.repartition(1)
+    df.sparkSession.createDataFrame(
+      one.queryExecution.toRdd.mapPartitions(kernel).setName(OneTaskRdd), schema)
+  }
 }

@@ -196,6 +196,21 @@ class BenchContractSpec extends SparkSpec {
     val walking = Seq("BindReferences", "InterpretedOrdering", "queryExecution.analyzed")
       .filter(util.contains)
     assert(walking.isEmpty, s"OpsUtil walks plans: $walking")
+    // Every kernel reads Spark's InternalRow through OpsUtil.onePartition;
+    // a Row encoder at a one-task call site converts every input row.
+    val callers = scalaFiles("src/main").filter(f => code(f).exists(_.contains("onePartition(")))
+    assert(callers.map(_.getName).toSet ==
+      Set("OpsUtil.scala", "DFGraphAlgs.scala", "Similarity.scala"), s"callers: $callers")
+    val encoders = callers.filter(f => code(f).exists(_.contains("Encoders.row")))
+    assert(encoders.isEmpty, s"Encoders.row at a one-task call site: $encoders")
+    // The parameter rule is injected once, by GraftExtensions: a second
+    // hook would run it twice, a missing one would compile per request.
+    val rule = "ParamLiteralRule"
+    val uses = scalaFiles("src/main").filterNot(_.getName == s"$rule.scala").flatMap { f =>
+      code(f).filter(_.contains(rule)).map(l => (f.getName, l.trim))
+    }
+    assert(uses == Seq("GraftExtensions.scala" -> s"ext.injectColumnar(_ => $rule.columnar)"),
+      s"$rule used at $uses")
   }
 
   test("one WRatio scorer: src/main scores WRatio only through the native wratio node") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.MapPartitions
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Runs a serving call on both of its paths — the one-task path
   * (graft.ops.OpsUtil.oneTask) and the DataFrame plan it replaces — and
@@ -24,8 +24,12 @@ trait OneTaskPaths { self: SparkSpec =>
   /** `body` with the one-task path off: the DataFrame plan runs. */
   protected def offOneTask[T](body: => T): T = withConf(BroadcastThreshold, "-1")(body)
 
+  /** Whether `df` reads a one-task kernel's rows: its analyzed plan holds
+    * the `LogicalRDD` over the RDD named `OpsUtil.OneTaskRdd`. */
   protected def oneTaskPlan(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectFirst { case m: MapPartitions => m }.isDefined
+    df.queryExecution.analyzed.collectFirst {
+      case r: LogicalRDD if r.rdd.name == graft.ops.OpsUtil.OneTaskRdd => r
+    }.isDefined
 
   /** The rows of `df` as a multiset, doubles by their bits. */
   protected def bag(df: DataFrame): Map[Seq[Any], Int] =
